@@ -18,6 +18,10 @@ import org.apache.spark.sql.SparkSession
   * 15 queries' oracle SQL on the same parquet, all cores), the output also
   * carries per-query and total spark/duckdb ratios, making the "within 2×
   * of baseline" gate falsifiable.
+  *
+  * A query that throws gets no time: its name goes in the JSON's
+  * `failed` list, it is left out of the totals, and the run exits
+  * non-zero after printing.
   */
 object Bench {
 
@@ -100,15 +104,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // tuning knobs for local experiments; defaults are the shipped config.
-    // (History: rounds 3-5 shipped AQE always-on because the global range
-    // sorts sampled the materialized stage; the round-6 single-row-group
-    // finding and ingest layout changed the calculus — see below.)
-    // Size-derived execution policy (measured 2026-08-13 at sf0.1, best of
-    // the config sweep; each row = hot total / ratio vs DuckDB on the same
-    // session: shipped-r5 3.82/2.80 → ingest layout 3.23/2.37 → +AQE-off
-    // 2.96/2.18 → +shuffle=8 2.82/2.07 → +shuffle=4 2.26/1.66):
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Size-derived execution policy (GraftSession given the sf dir;
+    // measured 2026-08-13 at sf0.1, best of the config sweep; each row =
+    // hot total / ratio vs DuckDB on the same session: shipped-r5
+    // 3.82/2.80 → ingest layout 3.23/2.37 → +AQE-off 2.96/2.18 →
+    // +shuffle=8 2.82/2.07 → +shuffle=4 2.26/1.66):
     //  - adaptive execution ON above ~1 GB scanned input: runtime stats,
     //    skew splits and coalescing pay for their per-stage driver
     //    re-planning round trips only when stages move real data. Below
@@ -118,42 +119,14 @@ object Bench {
     //  - reduce-side parallelism ~4 MB of input per partition, floor 4,
     //    cap cpu count: at sf0.1 (~17 MB) that is 4 partitions — 32 tasks
     //    on a 17 MB shuffle is pure per-task overhead; at sf10+ the cap
-    //    engages and the AQE branch owns partition sizing via its 64 MB
-    //    advisory.
-    val inputMB = inputMb(sfDir)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE",
-      sizeDerivedAqe(inputMB).toString)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      sizeDerivedShuffle(inputMB, cpus.toInt).toString)
+    //    engages and the AQE branch owns partition sizing via Spark's
+    //    64 MB advisory (coalescing keeps cpu-count parallelism).
     val cache = sys.env.getOrElse("SPARK_GRAFT_CACHE", "false").toBoolean
     // best-of-N hot runs (DuckDB baseline is best-of-3; N=7 here because
     // this VM shows transient multi-second hypervisor stalls — the min is
     // the steady-state engine number, the stalls are not)
     val hotRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "7").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // parallelismFirst=true (Spark's default): AQE coalesces shuffle
-      // reads but never below cpu-count parallelism. Measured today:
-      // beats =false by ~30% at sf0.1 (600k-row window/agg stages stay
-      // parallel instead of collapsing to one 64MB-advisory partition);
-      // at cluster scale the per-partition floor (1MB) keeps tasks sane
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PF", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64MB"))
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // free-form config overrides for experiments:
-    // SPARK_GRAFT_CONF="spark.x=1;spark.y=2"
-    val spark = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";"))
-      .map(_.split("=", 2))
-      .collect { case Array(k, v) => (k.trim, v.trim) }
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: JIT + parquet footers, so cold timings reflect the
     // engine (planning + codegen + execution), not JVM startup
@@ -182,7 +155,7 @@ object Bench {
     // opt-in so headline numbers stay comparable across rounds
     val analyze = sys.env.getOrElse("SPARK_GRAFT_ANALYZE", "false").toBoolean
     val dataDir =
-      if (ingest) ingestLayout(spark, sfDir, cpus.toInt,
+      if (ingest) ingestLayout(spark, sfDir, cpus,
         bucketedFacts = layout == "bucketed", analyze = analyze)
       else sfDir
     Tables.all.foreach { t =>
@@ -193,11 +166,23 @@ object Bench {
       else df.limit(1).collect()
     }
 
-    def time(f: => Unit): Double = {
+    // a query that throws has no time: it is named in the artifact's
+    // "failed" list and the run exits non-zero after printing
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def time(name: String)(f: => Unit): Option[Double] = {
       val t0 = System.nanoTime()
-      try f catch { case e: Throwable =>
-        System.err.println(s"[bench] failed: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
+      try { f; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
+    }
+    // best of N steady-state repeats; None once any repeat fails
+    def best(name: String)(f: => Unit): Option[Double] = {
+      val ts = Iterator.fill(hotRuns)(time(name)(f))
+        .takeWhile(_.isDefined).flatten.toSeq
+      if (ts.length == hotRuns) Some(ts.min) else None
     }
 
     /** Hypervisor steal ticks from /proc/stat's aggregate cpu line (field
@@ -228,14 +213,17 @@ object Bench {
     val prepared = sys.env.getOrElse("SPARK_GRAFT_PREPARED", "true").toBoolean
     // cold = first run (planning + codegen + execution); hot = best of N
     // steady-state repeats — mirrors the DuckDB baseline's best-of-3
-    val results = SparkEntry.all.filter(_.bench)
-      .filter(d => only.forall(_.contains(d.name))).map { d =>
-      val cold = time(d.fn(spark, dataDir).collect())
-      def hotDf() =
-        if (prepared) PlanCache.prepared(spark, (dataDir, d.name))(d.fn(spark, dataDir))
-        else d.fn(spark, dataDir)
-      val hot = (1 to hotRuns).map(_ => time(hotDf().collect())).min
-      (d.name, cold, hot)
+    val benchDefs = SparkEntry.all.filter(_.bench)
+      .filter(d => only.forall(_.contains(d.name)))
+    def headlineHot(d: QueryDef): Option[Double] = best(d.name) {
+      if (prepared)
+        PlanCache.prepared(spark, (dataDir, d.name))(d.fn(spark, dataDir))
+          .collect()
+      else d.fn(spark, dataDir).collect()
+    }
+    val results = benchDefs.flatMap { d =>
+      for (cold <- time(d.name)(d.fn(spark, dataDir).collect());
+           hot <- headlineHot(d)) yield (d.name, cold, hot)
     }
 
     // ---- second recorded posture: DECLARED LAYOUTS for the window/as-of
@@ -256,7 +244,7 @@ object Bench {
     // posture hot-run closures + attempt-1 hots + JSON builder, exposed
     // for the quiet-run retry passes (VERDICT r16 #4) — set inside the
     // posture block below
-    var postureHot: Seq[(String, () => Double)] = Nil
+    var postureHot: Seq[(String, () => Option[Double])] = Nil
     var postureHots1: Seq[(String, Double)] = Nil
     var postureFragment: Seq[(String, Double)] => String = _ => ""
     if (posture2) try {
@@ -268,7 +256,7 @@ object Bench {
       graft.storage.LayoutCatalog.ingestBucketed(spark,
         Tables.load(spark, dataDir, "events"), dstB,
         graft.storage.LayoutCatalog.Layout("events", "user_id",
-          cpus.toInt, "bucketed_events"))
+          cpus, "bucketed_events"))
       val ev70Layout = graft.storage.LayoutCatalog.Layout(
         "ev70", Bitemporal.IID, 16, "ev70")
       graft.storage.LayoutCatalog.ingestBucketed(spark,
@@ -304,14 +292,13 @@ object Bench {
       // warm page cache/file indexes/JIT and make bucketed_cold_queries
       // incomparable with the headline cold numbers
       def hotOf(n: String, f: () => org.apache.spark.sql.DataFrame)
-          : Double = {
-        def hotDf() =
-          if (prepared) PlanCache.prepared(spark, (dstB, n))(f()) else f()
-        (1 to hotRuns).map(_ => time(hotDf().collect())).min
+          : Option[Double] = best(s"bucketed/$n") {
+        if (prepared) PlanCache.prepared(spark, (dstB, n))(f()).collect()
+        else f().collect()
       }
-      val bres = bdefs.map { case (n, f) =>
-        val cold = time(f().collect())
-        (n, cold, hotOf(n, f))
+      val bres = bdefs.flatMap { case (n, f) =>
+        for (cold <- time(s"bucketed/$n")(f().collect()); hot <- hotOf(n, f))
+          yield (n, cold, hot)
       }
       postureHot = bdefs.map { case (n, f) => (n, () => hotOf(n, f)) }
       postureHots1 = bres.map { case (n, _, h) => (n, h) }
@@ -365,15 +352,7 @@ object Bench {
     val backoffSec =
       sys.env.getOrElse("SPARK_GRAFT_QUIET_BACKOFF", "20").toInt
     def headlineHotPass(): Seq[(String, Double)] =
-      SparkEntry.all.filter(_.bench)
-        .filter(d => only.forall(_.contains(d.name))).map { d =>
-          def hotDf() =
-            if (prepared)
-              PlanCache.prepared(spark, (dataDir, d.name))(
-                d.fn(spark, dataDir))
-            else d.fn(spark, dataDir)
-          (d.name, (1 to hotRuns).map(_ => time(hotDf().collect())).min)
-        }
+      benchDefs.flatMap(d => headlineHot(d).map(d.name -> _))
     // attempt = (headline hots, posture hots, steal over the pass)
     var attempts: List[(Seq[(String, Double)], Seq[(String, Double)], Long)] =
       List((results.map { case (k, _, h) => (k, h) }, postureHots1,
@@ -386,7 +365,7 @@ object Bench {
       Thread.sleep(backoffSec * 1000L)
       val s0 = stealTicks()
       val hh = headlineHotPass()
-      val bh = postureHot.map { case (n, f) => (n, f()) }
+      val bh = postureHot.flatMap { case (n, f) => f().map(n -> _) }
       attempts = (hh, bh, stealTicks() - s0) :: attempts
     }
     val ordered = attempts.reverse // chronological
@@ -428,8 +407,9 @@ object Bench {
       s""","baseline":"duckdb","baseline_total":${fmt(baseTotal)}""" +
         s""","ratio_total":${fmt(hotTotal / baseTotal)},"ratios":$ratios"""
     } else ""
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     val json = s"""{"metric":"total","value":${fmt(hotTotal)},"unit":"sec",""" +
-      s""""queries":$qs,"cold_value":${fmt(coldTotal)},""" +
+      s""""queries":$qs,"failed":$failedJson,"cold_value":${fmt(coldTotal)},""" +
       s""""cold_queries":$qsCold$extra,"suspect_hot":$suspects,""" +
       s""""steal_ticks":$chosenSteal,"layout":"$layout",""" +
       s""""attempts":$attemptsJson,"attempt_chosen":${chosenIdx + 1}""" +
@@ -442,5 +422,6 @@ object Bench {
       java.nio.file.Paths.get("bench_out.json"), json + "\n")
     spark.stop()
     println(json)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -352,50 +352,57 @@ object Joins {
     }
   }
 
-  /** Literal period length in seconds when the frame defines `to` as
-    * some start column plus a CONSTANT interval (`withColumn("lt",
+  /** Literal period length in seconds when the frame defines `to` as its
+    * `from` column plus a CONSTANT interval (`withColumn("lt",
     * col("lf") + expr("INTERVAL 2 MINUTES"))` — the analyzed plan then
-    * carries `Alias(TimeAdd(_, Literal(interval)), to)`). Zero jobs,
-    * zero data reads — the same static-resolution discipline as the
-    * sidecar horizon. None when the period is not a literal width. */
-  private def literalPeriodSeconds(df: DataFrame, to: String)
+    * carries `Alias(TimeAdd(lf, Literal(interval)), to)`). The alias is
+    * found by the exprId `to` resolves to, and its non-literal operand
+    * must be `from` itself: a `to` built on another column (`lt =
+    * other_ts + INTERVAL …`) has a data-dependent period. Zero jobs, zero
+    * data reads — the same static-resolution discipline as the sidecar
+    * horizon. None when the period is not a literal width. */
+  private def literalPeriodSeconds(df: DataFrame, from: String, to: String)
       : Option[Long] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias,
-      AttributeReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Cast,
+      Expression, Literal}
     import org.apache.spark.sql.types.{CalendarIntervalType,
       DayTimeIntervalType}
-    df.queryExecution.analyzed.collect {
-      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        p.projectList
-    }.flatten.collectFirst {
-      case a: Alias if a.name == to => a.child
-    }.flatMap { e0 =>
-      // accept any add-shaped node whose DIRECT children are the start
-      // column and one literal interval (class-name-agnostic: Spark has
-      // renamed the timestamp+interval expression across releases), with
-      // implicit Casts stripped on both the node and its children
-      def strip(x: org.apache.spark.sql.catalyst.expressions.Expression)
-          : org.apache.spark.sql.catalyst.expressions.Expression = x match {
-        case c: org.apache.spark.sql.catalyst.expressions.Cast =>
-          strip(c.child)
-        case other => other
+    val plan = df.queryExecution.analyzed
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    def named(c: String) = plan.output.find(a => resolver(a.name, c))
+    // implicit Casts stripped on both the node and its operands
+    def strip(x: Expression): Expression = x match {
+      case c: Cast => strip(c.child)
+      case other => other
+    }
+    for {
+      toAttr <- named(to)
+      fromAttr <- named(from)
+      e0 <- plan.collect {
+        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+          p.projectList
+      }.flatten.collectFirst {
+        case a: Alias if a.exprId == toAttr.exprId => a.child
       }
-      val e = strip(e0)
-      val kids = e.children.map(strip)
-      val lits = kids.collect {
-        case Literal(ci: org.apache.spark.unsafe.types.CalendarInterval,
-            CalendarIntervalType) if ci.months == 0 && ci.days == 0 &&
-            ci.microseconds > 0 =>
-          ci.microseconds
-        case Literal(us: java.lang.Long, _: DayTimeIntervalType)
-            if us > 0 =>
-          us.longValue
+      // any add-shaped node whose DIRECT operands are `from` and one
+      // literal interval (class-name-agnostic: Spark has renamed the
+      // timestamp+interval expression across releases)
+      (lits, rest) = strip(e0).children.map(strip).partition {
+        case Literal(_, CalendarIntervalType | _: DayTimeIntervalType) => true
+        case _ => false
       }
-      val hasStartCol = kids.exists(_.isInstanceOf[AttributeReference])
-      if (lits.length == 1 && hasStartCol && kids.length <= 3)
-        Some(lits.head / 1000000L)
-      else None
-    }.filter(_ > 0)
+      us <- lits match {
+        case Seq(Literal(ci: org.apache.spark.unsafe.types.CalendarInterval,
+            CalendarIntervalType)) if ci.months == 0 && ci.days == 0 &&
+            ci.microseconds > 0 => Some(ci.microseconds)
+        case Seq(Literal(v: java.lang.Long, _: DayTimeIntervalType))
+            if v > 0 => Some(v.longValue)
+        case _ => None
+      }
+      if rest.length == 1 && rest.head.semanticEquals(fromAttr)
+      secs = us / 1000000L
+      if secs > 0
+    } yield secs
   }
 
   /** Width derivation (round 18): when BOTH sides carry the SAME literal
@@ -410,9 +417,10 @@ object Joins {
     * the period-table dialect queries) keep the caller's width: the
     * sweep evidence does not cover them. */
   private[graft] def derivedBucketSeconds(left: DataFrame, right: DataFrame,
-      leftTo: String, rightTo: String, fallback: Long): Long =
-    (literalPeriodSeconds(left, leftTo),
-      literalPeriodSeconds(right, rightTo)) match {
+      leftFrom: String, leftTo: String, rightFrom: String, rightTo: String,
+      fallback: Long): Long =
+    (literalPeriodSeconds(left, leftFrom, leftTo),
+      literalPeriodSeconds(right, rightFrom, rightTo)) match {
       case (Some(a), Some(b)) if a == b => math.max(1L, 4L * a)
       case _ => fallback
     }
@@ -527,7 +535,8 @@ object Joins {
     // rows verified identical across every sweep width).
     // deriveWidth=false pins the caller's width (the probe's sweep knob).
     val wSec = if (deriveWidth)
-      derivedBucketSeconds(leftW, rightW, leftTo, rightTo, bucketSeconds)
+      derivedBucketSeconds(leftW, rightW, leftFrom, leftTo, rightFrom,
+        rightTo, bucketSeconds)
     else bucketSeconds
     val w = wSec * 1000000L
     val horizon = ijHorizonBkt(leftW, rightW, leftFrom, rightFrom, w)
@@ -737,7 +746,8 @@ object Joins {
         (condition +: equi).reduce(_ && _), "left")
     // round 18: same symmetric literal-width derivation as intervalJoin
     val wSec = if (deriveWidth)
-      derivedBucketSeconds(leftW, rightW, leftTo, rightTo, bucketSeconds)
+      derivedBucketSeconds(leftW, rightW, leftFrom, leftTo, rightFrom,
+        rightTo, bucketSeconds)
     else bucketSeconds
     val w = wSec * 1000000L
     val nullLeft = leftW.filter(

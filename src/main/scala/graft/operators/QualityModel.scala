@@ -73,8 +73,10 @@ object QualityModel {
     // driver, exactly as before. Scale note: the driver combine is
     // partitions × (dims+2) doubles; beyond ~2^16 dims swap the
     // positional fold for a pairwise tree combine in the same order.
+    // a doc whose label is null has no training target: it is left out,
+    // so nDocs counts exactly the docs the loss and gradients cover
     val labeled = docs.select(col(idCol).as("doc_id"),
-      labelCol.cast("double").as("__y"))
+      labelCol.cast("double").as("__y")).filter(col("__y").isNotNull)
     val packed = features(docs, textCol, idCol, dims)
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("idx"), col("cnt"))))

@@ -212,11 +212,10 @@ object Extra {
 
     // ---- SQL-standard string/array functions from the reference's
     // expression catalog that Spark lacks under these names
-    // (expression.clj:1228-1311, 1579-1744, 2205-2250), registered via the
-    // function bridge and exercised through SQL text. ASCII fixtures make
-    // octet_position comparable to DuckDB's char-based position.
+    // (expression.clj:1228-1311, 1579-1744, 2205-2250), from the
+    // GraftExtensions catalog, exercised through SQL text. ASCII fixtures
+    // make octet_position comparable to DuckDB's char-based position.
     QueryDef("q102_string_array_fns", (s, dir) => {
-      _root_.graft.XtSql.registerFunctions(s)
       Tables.registerAll(s, dir)
       s.sql("""
         SELECT doc_id,

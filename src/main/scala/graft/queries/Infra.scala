@@ -1437,10 +1437,6 @@ object Infra {
     // unless the innermost join reads customer (and not lineitem). The
     // oracle replays the relation, which join order must not change.
     QueryDef("q137_file_join_reorder", (s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(_root_.graft.plans.GraftJoinReorder))
-        s.experimental.extraOptimizations ++=
-          Seq(_root_.graft.plans.GraftJoinReorder)
       Tables.registerAll(s, dir)
       val q = s.sql("""
         SELECT c_mktsegment AS mkt, count(*) AS n,

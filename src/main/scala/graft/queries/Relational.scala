@@ -476,10 +476,6 @@ object Relational {
     // The broadcast threshold is disabled only while THIS query
     // materializes (localCheckpoint pins the result before restore).
     QueryDef("q209_interval_join_rule", (s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(_root_.graft.plans.GraftIntervalJoin))
-        s.experimental.extraOptimizations ++=
-          Seq(_root_.graft.plans.GraftIntervalJoin)
       val ev = t(s, dir, "events")
       ev.filter(col("event_type") === "view")
         .select(col("event_id").as("lid"),
@@ -530,10 +526,6 @@ object Relational {
     // exact lf = rt / rf = lt boundary pairs, so the closed cover is
     // load-bearing, not vacuously equal to the strict result.
     QueryDef("q212_interval_join_inclusive_rule", (s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(_root_.graft.plans.GraftIntervalJoin))
-        s.experimental.extraOptimizations ++=
-          Seq(_root_.graft.plans.GraftIntervalJoin)
       val ev = t(s, dir, "events")
       ev.filter(col("event_type") === "view")
         .select(col("event_id").as("lid"),
@@ -615,10 +607,6 @@ object Relational {
     // rewrite runs the bucketed inner plan and synthesizes unmatched
     // rows with a null-safe whole-row anti join (multiset-exact).
     QueryDef("q226_interval_join_left_rule", (s, dir) => {
-      if (!s.experimental.extraOptimizations
-          .contains(_root_.graft.plans.GraftIntervalJoin))
-        s.experimental.extraOptimizations ++=
-          Seq(_root_.graft.plans.GraftIntervalJoin)
       val ev = t(s, dir, "events")
       ev.filter(col("event_type") === "error")
         .select(col("event_id").as("lid"),

@@ -1,6 +1,6 @@
 package graft.slt
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** CLI: run SLT files against the engine.
   * Usage: runMain graft.slt.SltMain <file-or-dir-or-@listfile> [maxQueriesPerFile]
@@ -12,42 +12,19 @@ object SltMain {
     val target = args.headOption
       .getOrElse("/root/reference/sqlite-test/select1.test")
     val maxQ = args.lift(1).map(_.toInt).getOrElse(Int.MaxValue)
-    if (target.startsWith("@")) {
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      var totPass = 0L; var totFail = 0L
-      scala.io.Source.fromFile(target.drop(1)).getLines()
-        .map(_.trim).filter(_.nonEmpty).foreach { path =>
-        val r = SltRunner.runFile(spark, path, maxQ)
-        totPass += r.passed; totFail += r.failed
-        println(s"SLT ${r.file}: ${r.passed}/${r.total} passed" +
-          (if (r.skipped > 0) s" (${r.skipped} skipped)" else ""))
-        r.failures.take(20).foreach(f => println(s"  FAIL: $f"))
-      }
-      println(s"SLT TOTAL: $totPass passed, $totFail failed")
-      spark.stop()
-      return
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val f = new java.io.File(target)
     val files =
-      if (f.isDirectory) {
+      if (target.startsWith("@"))
+        scala.io.Source.fromFile(target.drop(1)).getLines()
+          .map(_.trim).filter(_.nonEmpty).toSeq
+      else if (new java.io.File(target).isDirectory) {
         import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(f.toPath).iterator().asScala
-          .map(_.toString).filter(_.endsWith(".test")).toSeq.sorted
+        java.nio.file.Files.walk(java.nio.file.Paths.get(target)).iterator()
+          .asScala.map(_.toString).filter(_.endsWith(".test")).toSeq.sorted
       } else Seq(target)
-    var totPass = 0; var totFail = 0
+    val spark = GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    var totPass = 0L; var totFail = 0L
     files.foreach { path =>
       val r = SltRunner.runFile(spark, path, maxQ)
       totPass += r.passed; totFail += r.failed

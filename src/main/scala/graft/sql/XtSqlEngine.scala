@@ -1,6 +1,5 @@
 package graft.sql
 
-import graft.XtSql
 import graft.bitemporal.{Bitemporal, TxOp, TxSnapshot, XtDb}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,6 +17,10 @@ import org.apache.spark.sql.functions._
   * DML: every statement maps to a `TxOp` and runs through `submitTx`, so
   * a multi-statement transaction (`submitTxSql`) is atomic with one
   * system time, and later statements see earlier staged effects.
+  *
+  * The session must carry [[graft.GraftExtensions]] (every
+  * `graft.GraftSession` session does): the parser's rewrite targets —
+  * period predicates, JSON access, `generate_series` — live there.
   */
 class XtSqlEngine(spark: SparkSession, db: XtDb,
     clock: Option[java.sql.Timestamp] = None,
@@ -246,7 +249,6 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
           case other => throw SqlParseException(
             s"RETURNING is not valid on ${other.getClass.getSimpleName}")
         }
-        XtSql.registerFunctions(spark)
         // hidden-column semantics as in runQuery: meta columns only
         // survive into RETURNING * if the list names them
         val retRef = SqlLexer.tokenize(selectList)
@@ -369,7 +371,6 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
   }
 
   def runQuery(pq: ParsedQuery): DataFrame = {
-    XtSql.registerFunctions(spark)
     // snapshot_token() (reference temporal.clj:1783-1790): the query's
     // basis token as a string — constant within the query, so it plans as
     // a literal
@@ -590,7 +591,6 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
   /** ASSERT condition: tables resolve to the in-tx current snapshot, so a
     * multi-op tx can assert over its own staged effects. */
   private def assertDf(snap: TxSnapshot, cond: String): DataFrame = {
-    XtSql.registerFunctions(spark)
     snap.tables.foreach(t => snap.current(t).createOrReplaceTempView(t))
     spark.sql(s"SELECT ($cond) AS ok")
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 
 /** Where does a query's COLD time go? Splits the first run into
   * dataframe build (analysis), physical planning (optimizer + strategy),
@@ -15,22 +14,11 @@ object ColdProfile {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val inputMB = Bench.inputMb(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Bench.sizeDerivedShuffle(inputMB, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", Bench.sizeDerivedAqe(inputMB))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    val dataDir = Bench.ingestLayout(spark, sfDir, cpus.toInt)
+    val dataDir = Bench.ingestLayout(spark, sfDir, cpus)
     Tables.all.foreach(t => Tables.load(spark, dataDir, t).limit(1).collect())
     val d = SparkEntry.all.find(_.name == name)
       .getOrElse(sys.error(s"no query $name"))

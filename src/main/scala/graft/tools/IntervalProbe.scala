@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.Joins
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the bucketed interval join: the q203 (strict
@@ -17,13 +16,8 @@ object IntervalProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warm-up
 
@@ -39,9 +33,13 @@ object IntervalProbe {
     // shapes' bucketSeconds (comma list runs a width sweep);
     // SPARK_GRAFT_IJ_EXPLAIN=true dumps q203's formatted plan (the
     // whole-stage-codegen audit of the residual period predicate).
-    val widths: Seq[Long] = sys.env.get("SPARK_GRAFT_IJ_BUCKETS")
+    // A width given through either knob is measured as given; unset, the
+    // operator derives it from the literal period length.
+    val pinned = sys.env.get("SPARK_GRAFT_IJ_BUCKETS")
+    val pinnedLeft = sys.env.get("SPARK_GRAFT_IJ_BUCKETS_LEFT")
+    val widths: Seq[Long] = pinned
       .map(_.split(",").map(_.trim.toLong).toSeq).getOrElse(Seq(300L))
-    val w211s: Seq[Long] = sys.env.get("SPARK_GRAFT_IJ_BUCKETS_LEFT")
+    val w211s: Seq[Long] = pinnedLeft
       .map(_.split(",").map(_.trim.toLong).toSeq).getOrElse(Seq(60L))
     val w211: Long = w211s.head
 
@@ -51,7 +49,7 @@ object IntervalProbe {
         "lf", "lt", "rf", "rt",
         Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
         bucketSeconds = w, strategy = "bucket",
-        deriveWidth = widths.length <= 1)
+        deriveWidth = pinned.isEmpty)
       .groupBy("l_event_id")
       .agg(count(lit(1)).as("n"), max("r_event_id").as("m"))
 
@@ -61,7 +59,7 @@ object IntervalProbe {
         "lf", "lt", "rf", "rt",
         col("lf") <= col("rt") && col("rf") <= col("lt"),
         bucketSeconds = w, strategy = "bucket", inclusiveBounds = true,
-        deriveWidth = widths.length <= 1)
+        deriveWidth = pinned.isEmpty)
       .groupBy("l_event_id")
       .agg(count(lit(1)).as("n"), max("r_event_id").as("m"))
 
@@ -89,7 +87,7 @@ object IntervalProbe {
         "lf", "lt", "rf", "rt",
         Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
         bucketSeconds = w, leftId = "l_event_id", strategy = "bucket",
-        deriveWidth = w211s.length <= 1)
+        deriveWidth = pinnedLeft.isEmpty)
       .groupBy("l_event_id")
       .agg(count(col("r_event_id")).as("n"), max("r_event_id").as("m"))
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{PlanCache, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, PlanCache, SparkEntry, Tables}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -16,27 +15,13 @@ object NodeTimes {
     val name = args(0)
     val ingest = args.length < 2 || args(1).toBoolean
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // mirror Bench's size-derived policy exactly (shared helpers)
-    val inputMB = graft.Bench.inputMb(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          graft.Bench.sizeDerivedShuffle(inputMB, cpus.toInt).toString))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE",
-          graft.Bench.sizeDerivedAqe(inputMB).toString))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val dataDir =
-      if (ingest) graft.Bench.ingestLayout(spark, sfDir, cpus.toInt)
+      if (ingest) graft.Bench.ingestLayout(spark, sfDir, cpus)
       else sfDir
     Tables.all.foreach(t => Tables.load(spark, dataDir, t).limit(1).collect())
     @volatile var jobs = 0

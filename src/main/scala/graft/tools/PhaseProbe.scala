@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{PlanCache, SparkEntry, Tables}
+import graft.{GraftSession, PlanCache, SparkEntry, Tables}
 
 /** Diagnostic: per-query hot-path phase breakdown — how much of a prepared
   * re-execution is optimizer, physical planning, and actual execution.
@@ -14,15 +12,8 @@ import graft.{PlanCache, SparkEntry, Tables}
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val spark = GraftSession.builder(32)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry, Tables}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for every bench query (plus, optionally,
@@ -17,22 +16,12 @@ object PlanDump {
     val names: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val inputMB = Bench.inputMb(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Bench.sizeDerivedShuffle(inputMB, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", Bench.sizeDerivedAqe(inputMB))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val dataDir = Bench.ingestLayout(spark, sfDir, cpus.toInt)
+    val dataDir = Bench.ingestLayout(spark, sfDir, cpus)
     Tables.all.foreach(t => Tables.load(spark, dataDir, t).limit(1).collect())
     new java.io.File(outDir).mkdirs()
     val defs = SparkEntry.all
@@ -45,7 +34,7 @@ object PlanDump {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${d.name}_$suffix.txt"),
         s"== ${d.name} @ $sfDir (ingested layout, shuffle=" +
-          s"${Bench.sizeDerivedShuffle(inputMB, cpus.toInt)}, aqe=" +
+          s"${Bench.sizeDerivedShuffle(inputMB, cpus)}, aqe=" +
           s"${Bench.sizeDerivedAqe(inputMB)}) ==\n" + txt)
       println(s"[plandump] wrote ${d.name}_$suffix.txt")
     }

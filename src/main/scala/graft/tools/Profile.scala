@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiling harness: runs one named query repeatedly and breaks
   * hot time into analysis/optimization/physical-planning vs job execution,
@@ -10,24 +9,16 @@ import org.apache.spark.sql.SparkSession
   * floor is Catalyst planning or stage scheduling.
   *
   * Usage: runMain graft.tools.Profile <queryName> [runs]
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_AQE
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (Bench's size-derived
+  * execution policy applies).
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val runs = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     @volatile var jobs = 0
     @volatile var jobMs = 0L

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.{GraftSession, Tables}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Derive a larger, better-laid-out copy of the test data for scaling
@@ -23,11 +23,9 @@ object ScaleData {
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 5
     val files = if (args.length > 3) args(3).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

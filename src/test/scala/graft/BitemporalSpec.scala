@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * storage + resolve stack. */
 class BitemporalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def freshDb(): XtDb = {
     val dir = java.nio.file.Files.createTempDirectory("xtdb-spec").toString

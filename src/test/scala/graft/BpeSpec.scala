@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the trainer). */
 class BpeSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("encode/apply: sep-wrapped replacement merges within words only") {
     assert(Bpe.encode("ab c") == "/a//b// //c/")

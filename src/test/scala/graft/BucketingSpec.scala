@@ -22,12 +22,7 @@ class BucketingSpec extends AnyFunSuite {
   // across specs (getOrCreate), so builder configs from whichever spec ran
   // first would win — newSession gives this spec its own SQLConf
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val s = GraftSession.builder(4).getOrCreate().newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.adaptive.enabled", "false")

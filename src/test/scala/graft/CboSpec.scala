@@ -21,12 +21,7 @@ class CboSpec extends AnyFunSuite {
     .createTempDirectory("graft-cbo-warehouse").toString
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
+    val s = GraftSession.builder(4).getOrCreate().newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.cbo.enabled", "true")
     s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")

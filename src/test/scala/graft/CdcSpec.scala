@@ -18,12 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DirectMirror/PgIndexer apply semantics). */
 class CdcSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   // ---- wire-format encoder (what a real PG server sends) ----------------
 

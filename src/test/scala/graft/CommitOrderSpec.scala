@@ -16,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * refusal of a gen-ahead manifest artifact. */
 class CommitOrderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def newDb(tag: String): XtDb = new XtDb(spark,
     java.nio.file.Files.createTempDirectory(tag).toString)

@@ -17,12 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * base+levels → merged levels → escalated fresh base). */
 class CompactionFuzzSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("seeded op fuzz: maintained store ≡ never-compacted shadow at " +
       "every batch, through folds, level merges and escalations") {

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * keys via id.field, tombstones delete. */
 class ConnectSinkSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("record_key primitive: upserts then tombstone deletes") {
     import spark.implicits._

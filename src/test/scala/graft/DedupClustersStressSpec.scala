@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * last checkpoint may be pinned. */
 class DedupClustersStressSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("10^5-edge CC converges, correct labels, no cache leak") {
     import spark.implicits._

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * types.clj:142-146, 236-239). */
 class DynamicSchemaSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def freshDb(): XtDb = new XtDb(spark,
     java.nio.file.Files.createTempDirectory("xtdyn").toString)

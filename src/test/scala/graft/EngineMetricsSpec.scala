@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * SparkListener counters + tx-log tallies through the SQL engine. */
 class EngineMetricsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("xt_metrics reflects tx activity and cluster counters") {
     import spark.implicits._

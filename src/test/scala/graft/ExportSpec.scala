@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `COPY <table> TO '<path>'` single-table face. */
 class ExportSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def fresh(): (XtDb, XtSqlEngine, String) = {
     val root = java.nio.file.Files.createTempDirectory("graft_export").toString

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * actual compaction. */
 class HealthzSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def get(port: Int, path: String)
       : (Int, String, java.net.HttpURLConnection) = {

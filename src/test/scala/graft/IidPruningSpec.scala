@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * uncompacted appends it is a pushed parquet data filter. */
 class IidPruningSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
     case a: AdaptiveSparkPlanExec => scans(a.executedPlan)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{Explain, GraftIntervalJoin}
+import graft.plans.Explain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,17 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shapes, which route through the CLOSED bucket cover. */
 class IntervalJoinRuleSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    if (!s.experimental.extraOptimizations.contains(GraftIntervalJoin))
-      s.experimental.extraOptimizations ++= Seq(GraftIntervalJoin)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   /** Disable size-based broadcast for the body so the rule's smallness
     * guard doesn't skip the tiny fixtures — and RESTORE it after: the

@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * derived and the pinned width. */
 class IntervalWidthSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder(4).getOrCreate()
 
   private def side(idAs: String, f: String, t: String, mins: Int,
       n: Int, stepSec: Int) = {
@@ -34,13 +29,13 @@ class IntervalWidthSpec extends AnyFunSuite {
   test("symmetric literal periods derive width = 4x period") {
     val l = side("lid", "lf", "lt", 2, 50, 37)
     val r = side("rid", "rf", "rt", 2, 50, 53)
-    assert(Joins.derivedBucketSeconds(l, r, "lt", "rt", 300L) == 480L)
+    assert(Joins.derivedBucketSeconds(l, r, "lf", "lt", "rf", "rt", 300L) == 480L)
   }
 
   test("asymmetric literal periods keep the caller width") {
     val l = side("lid", "lf", "lt", 10, 50, 37)
     val r = side("rid", "rf", "rt", 1, 50, 53)
-    assert(Joins.derivedBucketSeconds(l, r, "lt", "rt", 600L) == 600L)
+    assert(Joins.derivedBucketSeconds(l, r, "lf", "lt", "rf", "rt", 600L) == 600L)
   }
 
   test("data-dependent periods keep the caller width") {
@@ -50,7 +45,28 @@ class IntervalWidthSpec extends AnyFunSuite {
         col("lid"))
       .drop("lt0")
     val r = side("rid", "rf", "rt", 2, 50, 53)
-    assert(Joins.derivedBucketSeconds(l, r, "lt", "rt", 300L) == 300L)
+    assert(Joins.derivedBucketSeconds(l, r, "lf", "lt", "rf", "rt", 300L) == 300L)
+  }
+
+  test("a literal period on another column keeps the caller width") {
+    // lt = other_ts + INTERVAL: a literal offset, but from a column that
+    // is not the join's `from`, so the period lt - lf is data-dependent
+    val l = side("lid", "lf", "lt0", 2, 50, 37)
+      .withColumn("other_ts", col("lf") - expr("INTERVAL 1 HOUR") *
+        (col("lid") % 5))
+      .withColumn("lt", col("other_ts") + expr("INTERVAL 2 HOURS"))
+      .drop("lt0")
+    val r = side("rid", "rf", "rt", 120, 50, 53)
+    assert(Joins.derivedBucketSeconds(l, r, "lf", "lt", "rf", "rt", 300L) ==
+      300L)
+    // the same frames joined: the caller's width holds every row's cover
+    val cond = Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt"))
+    def rows(derive: Boolean) = Joins.intervalJoin(
+        l.filter(col("lt") > col("lf")), r, "lf", "lt", "rf", "rt", cond,
+        bucketSeconds = 300, strategy = "bucket", deriveWidth = derive)
+      .select("lid", "rid").orderBy("lid", "rid")
+      .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+    assert(rows(derive = true) == rows(derive = false))
   }
 
   test("derived width returns identical rows to the pinned width") {

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact brute-force ground truth. */
 class IvfTrainingSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
   private val dims = 32

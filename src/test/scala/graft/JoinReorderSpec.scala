@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * joins, hints, 2-way, streaming) must no-op. */
 class JoinReorderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private lazy val dir = {
     val d = java.nio.file.Files.createTempDirectory("joinreorder").toString
@@ -38,13 +33,7 @@ class JoinReorderSpec extends AnyFunSuite {
     d
   }
 
-  private def install(): Unit = {
-    dir
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.GraftJoinReorder))
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.GraftJoinReorder)
-  }
+  private def fixture(): Unit = { dir; () }
 
   // chain shape fact—dim—tiny (tiny joins THROUGH dim): the written order
   // joins the 20k-row fact first; the only good order starts from the
@@ -58,7 +47,7 @@ class JoinReorderSpec extends AnyFunSuite {
     GROUP BY t_name"""
 
   test("worst-order chain is rebuilt smallest-first; results unchanged") {
-    install()
+    fixture()
     val q = spark.sql(worstOrder)
     val joins = q.queryExecution.optimizedPlan.collect { case j: Join => j }
     assert(joins.size == 2)
@@ -88,7 +77,7 @@ class JoinReorderSpec extends AnyFunSuite {
 
   test("NDV sidecars refine equality selectivity: ANALYZE flips the " +
       "greedy order, results unchanged") {
-    install()
+    fixture()
     val d = java.nio.file.Files.createTempDirectory("jr_ndv").toString
     // hi: 5000 rows, h_pad UNIQUE (ndv 5000) — an equality on it is
     // key-selective. lo: 4900 rows (slightly SMALLER file so the
@@ -137,7 +126,7 @@ class JoinReorderSpec extends AnyFunSuite {
   }
 
   test("rule is idempotent on its own output") {
-    install()
+    fixture()
     val optimized = spark.sql(worstOrder).queryExecution.optimizedPlan
     val again = graft.plans.GraftJoinReorder(optimized)
     assert(again.fastEquals(optimized),
@@ -145,7 +134,7 @@ class JoinReorderSpec extends AnyFunSuite {
   }
 
   test("outer joins, hinted joins, and 2-way chains are untouched") {
-    install()
+    fixture()
     // left outer: extractor must not flatten through it
     val outer = spark.sql("""
       SELECT t_name, f_id FROM jr_fact
@@ -168,7 +157,7 @@ class JoinReorderSpec extends AnyFunSuite {
   }
 
   test("self-join chain stays correct (attributes resolved by exprId)") {
-    install()
+    fixture()
     val q = spark.sql("""
       SELECT count(*) AS n
       FROM jr_tiny a

@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * jars, zero egress — acknowledged). */
 class KafkaWireSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("zigzag varints round-trip at the edges") {
     Seq(0L, 1L, -1L, 63L, 64L, 127L, 128L, -128L, 300L, -300L,

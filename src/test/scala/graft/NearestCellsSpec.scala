@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (sim DESC, cent_id ASC) tie order and nprobe truncation. */
 class NearestCellsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     // make Janino failures in NearestCells.doGenCode FATAL instead of a
     // silent interpreted fallback — these tests then prove the generated
     // code compiles, not just that eval agrees with the window

@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (one generation of read-lease). */
 class ObjectStoreSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def freshRoot(): (String, org.apache.hadoop.fs.FileSystem) = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * which is what BI tools need during schema sync. */
 class PgCatalogSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def fresh(): (XtDb, XtSqlEngine) = {
     val db = new XtDb(spark,

@@ -16,11 +16,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   */
 class PgWireSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("pgwire-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  private lazy val spark: SparkSession = GraftSession.builder(4)
+    .appName("pgwire-spec")
     .getOrCreate()
 
   private var db: XtDb = _

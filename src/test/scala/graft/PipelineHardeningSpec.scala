@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-table LSH recovers recall lost to finer bucketing. */
 class PipelineHardeningSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   import spark.implicits._
 
@@ -210,8 +205,7 @@ class PipelineHardeningSpec extends AnyFunSuite {
       .head
     assert(row.getDouble(0) == row.getDouble(1))
 
-    // SQL registration
-    graft.XtSql.registerFunctions(spark)
+    // SQL surface (GraftExtensions catalog)
     vecs.createOrReplaceTempView("__vd")
     val sqlv = spark.sql(
       "SELECT vec_dot(v, v) AS s FROM __vd WHERE id = 1").head.getDouble(0)

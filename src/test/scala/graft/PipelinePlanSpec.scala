@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so they are pinned here rather than prose-only. */
 class PipelinePlanSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * not. */
 class PlanCacheSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("prepared() caches the analyzed plan and hits on re-execution") {
     import spark.implicits._

@@ -23,11 +23,8 @@ class PsqlInteropSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val psqlBin = new java.io.File("/usr/bin/psql")
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]").appName("psql-interop-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  private lazy val spark: SparkSession = GraftSession.builder(4)
+    .appName("psql-interop-spec")
     .getOrCreate()
 
   private var db: XtDb = _

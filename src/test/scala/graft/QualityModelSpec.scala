@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scoring agrees with a driver-side replay. */
 class QualityModelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private lazy val docs = Tables
     .load(spark, "/root/testdata/sf0.001", "documents")
@@ -83,6 +78,20 @@ class QualityModelSpec extends AnyFunSuite {
     assert(perIter <= 8.0,
       f"expected <=8 jobs per training iteration, got $perIter%.1f " +
         s"(iters=1: $base, iters=4: $more)")
+  }
+
+  test("null labels are left out of training, not a task failure") {
+    // every third doc unlabeled: the model equals one trained on the
+    // labeled docs alone, and the loss is averaged over those docs
+    val unlabeled = col("doc_id") % 3 === 0
+    def weights(m: org.apache.spark.sql.DataFrame) =
+      m.orderBy("idx").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (withNulls, lossN) = QualityModel.train(docs, "text", "doc_id",
+      when(!unlabeled, label), dims = 32, iters = 5)
+    val (labeledOnly, lossL) = QualityModel.train(docs.filter(!unlabeled),
+      "text", "doc_id", label, dims = 32, iters = 5)
+    assert(weights(withNulls) == weights(labeledOnly))
+    assert(lossN == lossL)
   }
 
   test("scoreColumn (streaming path) equals score (relational path) on " +

@@ -16,12 +16,7 @@ class RegimeParitySpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", false)
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession.builder(4).getOrCreate()
 
   private def runWithThreshold(name: String, threshold: String) = {
     // restore the value captured BEFORE the test, not a hardcoded one —

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * management, and the forbidden-schemas DML guard. */
 class RoleAuthzSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def fresh(): (XtDb, XtSqlEngine) = {
     val root = java.nio.file.Files.createTempDirectory("graft_authz").toString

@@ -1,0 +1,42 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source guard for the one SQL surface: sessions are built only by
+  * `GraftSession`, and optimizer rules are installed only by
+  * `GraftExtensions` — never appended to a live session, where which
+  * rules a plan gets would depend on what ran before. */
+class SessionSurfaceSpec extends AnyFunSuite {
+
+  // split so this file does not match its own patterns
+  private val builderCall = "SparkSession" + ".builder("
+  private val extraRules = "extra" + "Optimizations"
+
+  private lazy val sources: Seq[(Path, String)] = {
+    val src = Paths.get(sys.props("user.dir"), "src")
+    assert(Files.isDirectory(src), s"no source tree at $src")
+    Files.walk(src).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => (p, new String(Files.readAllBytes(p), "UTF-8"))).toSeq
+  }
+
+  private def offenders(pattern: String, allowed: Path => Boolean) =
+    sources.collect {
+      case (p, text) if text.contains(pattern) && !allowed(p) => p.toString
+    }
+
+  test("SparkSession builders appear only in GraftSession.scala") {
+    assert(sources.nonEmpty)
+    val bad = offenders(builderCall,
+      _.getFileName.toString == "GraftSession.scala")
+    assert(bad.isEmpty, s"build sessions with GraftSession.builder: $bad")
+  }
+
+  test("no source touches the session's extra optimizations") {
+    val bad = offenders(extraRules, _ => false)
+    assert(bad.isEmpty, s"install rules through GraftExtensions: $bad")
+  }
+}

@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * generated probe code is proven to compile. */
 class SketchesSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.codegen.fallback", "false")
     .getOrCreate()
 

@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * prefix of each file to keep CI time sane. */
 class SltSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(8).getOrCreate()
 
   private val corpus = "/root/reference/sqlite-test"
 

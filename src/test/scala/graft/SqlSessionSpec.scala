@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * OFFSET/FETCH-FIRST → LIMIT/OFFSET rewrite. */
 class SqlSessionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 

@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * SOUND — a stale bound would silently drop interval-join pairs. */
 class StatsSidecarSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def tempDir(): java.io.File =
     java.nio.file.Files.createTempDirectory("sidecar_spec").toFile

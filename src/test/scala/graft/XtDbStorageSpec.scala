@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (reference Trie.kt partitioning + Compactor.kt). */
 class XtDbStorageSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   // Recursive count of the LIVE file set — after a rewrite the data sits
   // in a generation subdirectory (`g<N>/...`, iid-bucketed files) while

@@ -1,20 +1,16 @@
 package graft
 
 import graft.bitemporal.XtDb
+import graft.sql.XtSqlEngine
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Temporal SQL front door: FOR VALID_TIME / SYSTEM_TIME AS OF and FOR ALL
-  * VALID_TIME rewriting (reference Sql.g4:557-573), plus the SQL-registered
-  * graft function catalog. */
+  * VALID_TIME rewriting (reference Sql.g4:557-573), plus the graft function
+  * catalog every GraftSession carries. */
 class XtSqlSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   test("temporal clauses resolve to the right snapshots") {
     import spark.implicits._
@@ -22,27 +18,26 @@ class XtSqlSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("xtsql").toString)
     val t0 = db.putDocs("docs", Seq((1L, 0L)).toDF("_id", "version"))
     db.putDocs("docs", Seq((1L, 1L)).toDF("_id", "version"))
+    val eng = new XtSqlEngine(spark, db)
 
     // current snapshot (bare ref)
-    val cur = XtSql.sql(spark, db,
-      "SELECT version FROM docs", Seq("docs")).as[Long].collect()
+    val cur = eng.sql("SELECT version FROM docs").as[Long].collect()
     assert(cur.toSeq == Seq(1L))
 
     // system-time as-of t0
-    val past = XtSql.sql(spark, db,
-      s"SELECT version FROM docs FOR SYSTEM_TIME AS OF '$t0'",
-      Seq("docs")).as[Long].collect()
+    val past = eng.sql(
+      s"SELECT version FROM docs FOR SYSTEM_TIME AS OF '$t0'")
+      .as[Long].collect()
     assert(past.toSeq == Seq(0L))
 
     // all valid time: both versions' rectangles
-    val all = XtSql.sql(spark, db,
-      "SELECT version FROM docs FOR ALL VALID_TIME ORDER BY version",
-      Seq("docs")).as[Long].collect()
+    val all = eng.sql(
+      "SELECT version FROM docs FOR ALL VALID_TIME ORDER BY version")
+      .as[Long].collect()
     assert(all.length >= 2 && all.contains(0L) && all.contains(1L))
   }
 
   test("registered functions usable from SQL") {
-    XtSql.registerFunctions(spark)
     val r = spark.sql("""
       SELECT iid_hex(42) AS iid,
              date_bin_secs(900, TIMESTAMP '2024-01-01 00:22:33') AS bin,
@@ -57,7 +52,6 @@ class XtSqlSpec extends AnyFunSuite {
   }
 
   test("theta sketch SQL surface: sketch/estimate/intersect/difference") {
-    XtSql.registerFunctions(spark)
     val r = spark.sql("""
       WITH t(g, v) AS (SELECT CASE WHEN id < 600 THEN 'A' ELSE 'B' END,
                               CASE WHEN id < 600 THEN id ELSE id - 300 END
@@ -74,7 +68,6 @@ class XtSqlSpec extends AnyFunSuite {
   }
 
   test("period() rejects from >= to like the reference; null endpoints legal") {
-    XtSql.registerFunctions(spark)
     // reference temporal.clj:1907 throws :xtdb/invalid-period on from >= to
     def messages(t: Throwable): String =
       if (t == null) "" else s"${t.getMessage} ${messages(t.getCause)}"
