@@ -3312,7 +3312,7 @@ class XtDb(spark: SparkSession, val root: String) {
     }
     val cur = txsGen
     val next = cur.getOrElse(0) + 1
-    spark.read.parquet(txsLiveDir)
+    spark.read.schema(XtDb.TxLogSchema).parquet(txsLiveDir)
       .coalesce(baseFiles.toInt)
       .write.mode("overwrite").parquet(s"$root/_txs/_g$next")
     conditionalPut(txsGenPath, next.toString.getBytes("UTF-8"), txsV,
@@ -3349,9 +3349,19 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** The `xt.txs` transaction-log table: one row per DML op, including
-    * aborted ASSERTs. */
+    * aborted ASSERTs. Read with the schema `logTx` writes, so no job runs
+    * to infer it; empty before the first transaction. */
   def txs: DataFrame =
-    spark.read.parquet(txsLiveDir).orderBy("tx_id")
+    systemLog(txsLiveDir, XtDb.TxLogSchema).orderBy("tx_id")
+
+  /** A system log (`_txs`, `_roles`) read with the fixed schema its writer
+    * uses: no job runs to infer it, and a log not yet written reads as
+    * empty. Any other read failure propagates. */
+  private def systemLog(dir: String, schema: StructType): DataFrame =
+    if (hadoopFs.exists(new org.apache.hadoop.fs.Path(dir)))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** SQL UPDATE — plan = query producing new row versions, appended as puts
     * (reference prepareTxSql, query.clj:478-495): read the current
@@ -3624,6 +3634,9 @@ class XtDb(spark: SparkSession, val root: String) {
       .write.mode("append").parquet(s"$root/_roles")
   }
 
+  private def rolesLog: DataFrame =
+    systemLog(s"$root/_roles", XtDb.RolesLogSchema)
+
   /** Current grants: latest action per (what, grantee) is `grant`. */
   def roleGrants: DataFrame = roleGrantsAsOf(None)
 
@@ -3634,7 +3647,7 @@ class XtDb(spark: SparkSession, val root: String) {
   def roleGrantsAsOf(at: Option[java.sql.Timestamp]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("what", "grantee").orderBy(col("at").desc)
-    val log = spark.read.parquet(s"$root/_roles")
+    val log = rolesLog
     at.map(t => log.filter(col("at") <= lit(t))).getOrElse(log)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1 && col("action") === "grant")
@@ -3644,7 +3657,7 @@ class XtDb(spark: SparkSession, val root: String) {
   /** Full membership history (user, role, granted, system_from) — the
     * audit face of the same log. */
   def roleMembershipHistory: DataFrame =
-    spark.read.parquet(s"$root/_roles")
+    rolesLog
       .select(col("grantee").as("user"), col("what").as("role"),
         (col("action") === "grant").as("granted"),
         col("at").as("system_from"))
@@ -3723,6 +3736,15 @@ class XtDb(spark: SparkSession, val root: String) {
 }
 
 object XtDb {
+  /** The `_txs` log's columns, as `logTx` writes them. */
+  val TxLogSchema: StructType = StructType.fromDDL(
+    "tx_id BIGINT, system_time TIMESTAMP, tx_table STRING, tx_op STRING, " +
+      "committed BOOLEAN, error STRING")
+
+  /** The `_roles` log's columns, as `recordGrant` writes them. */
+  val RolesLogSchema: StructType = StructType.fromDDL(
+    "at TIMESTAMP, action STRING, what STRING, grantee STRING")
+
   /** Test-only hook invoked immediately before a generation-pointer CAS
     * (both rewrite paths) — lets a spec interleave a competing flip
     * deterministically and pin that the loser fails LOUDLY at the CAS.

@@ -280,36 +280,40 @@ object PgCatalog {
     }.toDF("roleid", "member", "grantor", "admin_option")
   }
 
-  /** Register every pg_catalog view as a temp view under its bare name —
-    * pg_catalog is on the default search path in the reference, so
-    * unqualified `pg_tables` resolves (information_schema.clj:204). */
-  def registerAll(spark: SparkSession,
-      schemas: Seq[(String, StructType)],
-      membership: Seq[(String, String)] = Nil): Unit = {
-    val tables = schemas.map { case (t, _) => ("public", t) }
-    val cols = colRows(schemas)
-    pgNamespace(spark).createOrReplaceTempView("pg_namespace")
-    pgTables(spark, tables).createOrReplaceTempView("pg_tables")
-    pgClass(spark, tables).createOrReplaceTempView("pg_class")
-    pgAttribute(spark, cols).createOrReplaceTempView("pg_attribute")
-    pgType(spark).createOrReplaceTempView("pg_type")
-    pgAm(spark).createOrReplaceTempView("pg_am")
-    pgRange(spark).createOrReplaceTempView("pg_range")
-    pgDatabase(spark).createOrReplaceTempView("pg_database")
-    pgSettings(spark).createOrReplaceTempView("pg_settings")
-    pgUser(spark).createOrReplaceTempView("pg_user")
-    pgRoles(spark, membership).createOrReplaceTempView("pg_roles")
-    pgProc(spark).createOrReplaceTempView("pg_proc")
-    pgStatUserTables(spark, tables)
-      .createOrReplaceTempView("pg_stat_user_tables")
-    pgViews(spark).createOrReplaceTempView("pg_views")
-    pgMatviews(spark).createOrReplaceTempView("pg_matviews")
-    pgDescription(spark).createOrReplaceTempView("pg_description")
-    pgEnum(spark).createOrReplaceTempView("pg_enum")
-    pgConstraint(spark).createOrReplaceTempView("pg_constraint")
-    pgExtension(spark).createOrReplaceTempView("pg_extension")
-    pgAttrdef(spark).createOrReplaceTempView("pg_attrdef")
-    pgIndex(spark).createOrReplaceTempView("pg_index")
-    pgAuthMembers(spark, membership).createOrReplaceTempView("pg_auth_members")
+  /** Every pg_catalog view as (bare name → builder). pg_catalog is on the
+    * default search path in the reference, so unqualified `pg_tables`
+    * resolves (information_schema.clj:204); the SQL engine registers a
+    * view as a temp view, per statement, only when the statement names
+    * it, so a `pg_class` query never builds `pg_proc`. `schemas` (column
+    * catalog, for `pg_attribute`) and `membership` (role grants) are read
+    * only by the builders that need them. */
+  def views(spark: SparkSession, tables: Seq[String],
+      schemas: => Seq[(String, StructType)],
+      membership: => Seq[(String, String)])
+      : Seq[(String, () => DataFrame)] = {
+    val pub = tables.map(t => ("public", t))
+    Seq(
+      "pg_namespace" -> (() => pgNamespace(spark)),
+      "pg_tables" -> (() => pgTables(spark, pub)),
+      "pg_class" -> (() => pgClass(spark, pub)),
+      "pg_attribute" -> (() => pgAttribute(spark, colRows(schemas))),
+      "pg_type" -> (() => pgType(spark)),
+      "pg_am" -> (() => pgAm(spark)),
+      "pg_range" -> (() => pgRange(spark)),
+      "pg_database" -> (() => pgDatabase(spark)),
+      "pg_settings" -> (() => pgSettings(spark)),
+      "pg_user" -> (() => pgUser(spark)),
+      "pg_roles" -> (() => pgRoles(spark, membership)),
+      "pg_proc" -> (() => pgProc(spark)),
+      "pg_stat_user_tables" -> (() => pgStatUserTables(spark, pub)),
+      "pg_views" -> (() => pgViews(spark)),
+      "pg_matviews" -> (() => pgMatviews(spark)),
+      "pg_description" -> (() => pgDescription(spark)),
+      "pg_enum" -> (() => pgEnum(spark)),
+      "pg_constraint" -> (() => pgConstraint(spark)),
+      "pg_extension" -> (() => pgExtension(spark)),
+      "pg_attrdef" -> (() => pgAttrdef(spark)),
+      "pg_index" -> (() => pgIndex(spark)),
+      "pg_auth_members" -> (() => pgAuthMembers(spark, membership)))
   }
 }

@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   * Queries: temporal table refs become temp views over
   * `Bitemporal.resolve` snapshots and the rest of the text is handed to
   * Spark's parser/Catalyst verbatim — predicate pushdown, join planning,
-  * AQE all apply to the resolved views.
+  * AQE all apply to the resolved views. Store tables, attached-store refs,
+  * the system tables and the pg_catalog views are registered per
+  * statement, and only those the statement's text names: a point read
+  * builds one view and runs no job before it executes.
   *
   * DML: every statement maps to a `TxOp` and runs through `submitTx`, so
   * a multi-statement transaction (`submitTxSql`) is atomic with one
@@ -406,75 +409,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
             graft.functions.Periods.period(col(fc), col(tc)))
         else d
       }.drop(dropMeta: _*)
-    // bare table refs resolve under the query's default specs (views are
-    // lazy — registering every store table costs nothing). A query at the
-    // plain current point (no temporal clause, no frozen clock) reads a
-    // table's bucketed current snapshot when one is valid — the
-    // declared-layout zero-exchange join path (XtDb.declareLayout);
-    // anything temporal resolves live from the event log.
-    db.tables.foreach { t =>
-      val atCurrent = pq.defaultValid == SpecAst.Current &&
-        pq.defaultSystem == SpecAst.Current && clock.isEmpty
-      val resolved =
-        (if (atCurrent) db.currentSnapshotIfValid(t) else None)
-          .getOrElse(Bitemporal.resolve(db.events(t),
-            toSpec(pq.defaultValid), toSpec(pq.defaultSystem)))
-      visible(resolved).createOrReplaceTempView(t)
-    }
-    // attached databases: every qualified ref was folded to
-    // __db_<name>__<table> by the parser — register those views under the
-    // default specs (xtdb.t aliases the primary)
-    (attachedDbs.toSeq :+ ("xtdb" -> db)).foreach { case (name, d) =>
-      d.tables.foreach { t =>
-        visible(Bitemporal.resolve(d.events(t),
-          toSpec(pq.defaultValid), toSpec(pq.defaultSystem)))
-          .createOrReplaceTempView(s"__db_${name}__$t")
-      }
-    }
-    // system tables (reference xt.txs / information_schema; dots are not
-    // legal in Spark temp-view names, so the xt/info schemas flatten to _)
-    try db.txs.createOrReplaceTempView("xt_txs")
-    catch { case _: Exception => () } // no tx yet
-    // live engine counters (reference monitoring module): snapshotting
-    // tallies the tx log, so only materialize when the query asks for it
-    if (referenced.contains("xt_metrics"))
-      graft.tools.EngineMetrics.snapshot(spark, Some(db))
-        .createOrReplaceTempView("xt_metrics")
-    val infoTables = db.tables
-    if (infoTables.nonEmpty) {
-      graft.sources.InformationSchema.tablesFor(db, spark, infoTables)
-        .createOrReplaceTempView("information_schema_tables")
-      graft.sources.InformationSchema.columnsFor(db, spark, infoTables)
-        .createOrReplaceTempView("information_schema_columns")
-    }
-    // declared layouts (+ live snapshot validity): the validity column
-    // stats storage per table, so materialize only when asked for
-    if (referenced.contains("information_schema_table_layouts"))
-      graft.sources.InformationSchema.layoutsFor(db, spark, infoTables)
-        .createOrReplaceTempView("information_schema_table_layouts")
-    // pg_catalog views under bare names (reference puts pg_catalog on the
-    // default search path, information_schema.clj:204) — BI tools schema-sync
-    // against these over the JDBC front door
-    // role membership (reference xt.role_membership + pg_auth_members):
-    // collected only when referenced — it's a tiny driver-side catalog read
-    val wantsRoles = Seq("pg_roles", "pg_auth_members", "xt_role_membership",
-      "xt_role_membership_history").exists(referenced.contains)
-    val membership: Seq[(String, String)] =
-      if (!wantsRoles) Nil
-      else try db.roleGrants.select("what", "grantee").collect().toSeq
-        .map(r => (r.getString(0), r.getString(1)))
-      catch { case _: Exception => Nil } // no grant yet
-    if (wantsRoles) {
-      import spark.implicits._
-      membership.map { case (role, user) => (user, role) }
-        .toDF("user", "role")
-        .createOrReplaceTempView("xt_role_membership")
-      try db.roleMembershipHistory
-        .createOrReplaceTempView("xt_role_membership_history")
-      catch { case _: Exception => () }
-    }
-    graft.sources.PgCatalog.registerAll(spark,
-      infoTables.map(t => t -> db.events(t).schema), membership)
+    // each temporal ref becomes its own view, spliced into the text
     val reps = pq.refs.zipWithIndex.map { case (r, i) =>
       val view = s"__xt_${r.table}_$i"
       // a temporal clause on a qualified ref resolves against the
@@ -487,7 +422,74 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
         .createOrReplaceTempView(view)
       (r.start, r.end, view)
     }
-    spark.sql(SqlLexer.splice(pq.text, reps))
+    val text = SqlLexer.splice(pq.text, reps)
+    // Session relations are built per statement, and only the ones the
+    // text Spark will parse names: a relation is registered when its
+    // lowercased name is an identifier-shaped word of that text. That is a
+    // superset of what Spark will resolve — quoted identifiers count, and a
+    // word inside a literal costs one unused registration. Nothing else is
+    // built, so a point read pays neither for the catalogs nor for unnamed
+    // tables, and a temporal ref only for its own view.
+    val words = XtSqlEngine.Word
+      .findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSet
+    def atDefault(d: XtDb, t: String): DataFrame =
+      visible(Bitemporal.resolve(d.events(t),
+        toSpec(pq.defaultValid), toSpec(pq.defaultSystem)))
+    val tables = db.tables
+    // A query at the plain current point (no temporal clause, no frozen
+    // clock) reads a table's bucketed current snapshot when one is valid —
+    // the declared-layout zero-exchange join path (XtDb.declareLayout);
+    // anything temporal resolves live from the event log.
+    val atCurrent = pq.defaultValid == SpecAst.Current &&
+      pq.defaultSystem == SpecAst.Current && clock.isEmpty
+    val storeTables = tables.map { t =>
+      t -> (() => (if (atCurrent) db.currentSnapshotIfValid(t) else None)
+        .map(visible).getOrElse(atDefault(db, t)))
+    }
+    // attached databases: the parser folded every qualified ref to
+    // __db_<name>__<table>, resolved under the default specs (xtdb.t
+    // aliases the primary); other stores are listed only when one is named
+    val qualified =
+      if (!words.exists(_.startsWith("__db_"))) Nil
+      else (attachedDbs.toSeq :+ ("xtdb" -> db)).flatMap { case (name, d) =>
+        (if (d eq db) tables else d.tables).map(t =>
+          s"__db_${name}__$t" -> (() => atDefault(d, t)))
+      }
+    // role membership (reference xt.role_membership + pg_auth_members): a
+    // tiny driver-side catalog read, shared by the views that show it
+    lazy val membership: Seq[(String, String)] =
+      db.roleGrants.select("what", "grantee").collect().toSeq
+        .map(r => (r.getString(0), r.getString(1)))
+    lazy val schemas = tables.map(t => t -> db.events(t).schema)
+    // system tables (reference xt.txs / information_schema; dots are not
+    // legal in Spark temp-view names, so the xt/info schemas flatten to _);
+    // pg_catalog views under bare names (the reference puts pg_catalog on
+    // the default search path, information_schema.clj:204) — BI tools
+    // schema-sync against these over the JDBC front door
+    val system: Seq[(String, () => DataFrame)] = Seq(
+      "xt_txs" -> (() => db.txs),
+      // live engine counters (reference monitoring module)
+      "xt_metrics" -> (() =>
+        graft.tools.EngineMetrics.snapshot(spark, Some(db))),
+      "information_schema_tables" -> (() =>
+        graft.sources.InformationSchema.tablesFor(db, spark, tables)),
+      "information_schema_columns" -> (() =>
+        graft.sources.InformationSchema.columnsFor(db, spark, tables)),
+      // declared layouts (+ live snapshot validity, which stats storage)
+      "information_schema_table_layouts" -> (() =>
+        graft.sources.InformationSchema.layoutsFor(db, spark, tables)),
+      "xt_role_membership" -> { () =>
+        import spark.implicits._
+        membership.map { case (role, user) => (user, role) }
+          .toDF("user", "role")
+      },
+      "xt_role_membership_history" -> (() => db.roleMembershipHistory)) ++
+      graft.sources.PgCatalog.views(spark, tables, schemas, membership)
+    (storeTables ++ qualified ++ system).foreach { case (name, build) =>
+      if (words(name.toLowerCase(java.util.Locale.ROOT)))
+        build().createOrReplaceTempView(name)
+    }
+    spark.sql(text)
   }
 
   private def runQueryText(text: String): DataFrame =
@@ -594,4 +596,9 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
     snap.tables.foreach(t => snap.current(t).createOrReplaceTempView(t))
     spark.sql(s"SELECT ($cond) AS ok")
   }
+}
+
+object XtSqlEngine {
+  /** An identifier-shaped word: the unit a statement names a relation by. */
+  private val Word = "(?U)\\w+".r
 }

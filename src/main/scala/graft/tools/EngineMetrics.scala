@@ -93,19 +93,17 @@ object EngineMetrics {
 
   /** Current metrics as a (metric, value) relation: cluster-side counters
     * plus the store's tx-log tallies. Built fresh on every call — the
-    * engine re-registers it per query, so `SELECT * FROM xt_metrics` always
-    * reads the live values. */
+    * engine rebuilds it for every statement that names `xt_metrics`, so
+    * `SELECT * FROM xt_metrics` always reads the live values. */
   def snapshot(spark: SparkSession, db: Option[XtDb]): DataFrame = {
     import spark.implicits._
     val c = install(spark)
     val txRows: Seq[(String, Long)] = db.map { d =>
-      val (committed, aborted) =
-        try {
-          val rows = d.txs.groupBy("committed").count().collect()
-          def n(flag: Boolean) = rows.find(_.getBoolean(0) == flag)
-            .map(_.getLong(1)).getOrElse(0L)
-          (n(true), n(false))
-        } catch { case _: Exception => (0L, 0L) } // no tx yet
+      // `txs` is empty before the first tx; an unreadable log throws
+      val rows = d.txs.groupBy("committed").count().collect()
+      def n(flag: Boolean) = rows.find(_.getBoolean(0) == flag)
+        .map(_.getLong(1)).getOrElse(0L)
+      val (committed, aborted) = (n(true), n(false))
       // storage-maintenance gauges (round 13): uncompacted backlog files,
       // live level dirs and bucketed-base tables across the store — the
       // operator-facing face of the incremental-compaction machinery
@@ -142,22 +140,33 @@ object EngineMetrics {
       .toDF("metric", "value")
   }
 
-  /** HTTP scrape endpoint in the Prometheus text exposition format
-    * (reference monitoring module: modules/kafka/.../prometheus.yml scrapes
-    * an HTTP target; the format spec is public Prometheus documentation).
-    * JDK-built-in httpserver — no extra dependency; counters are gauges
-    * from `snapshot`, rendered per scrape. Returns the server for
-    * `stop()`; port 0 binds an ephemeral port (`getAddress.getPort`). */
+  /** The `snapshot` metrics that only ever grow since the process (or the
+    * store) started; every other metric is a level that can go down. */
+  private val monotonic: Set[String] = Set("jobs", "tasks", "shuffle_read_bytes",
+    "shuffle_write_bytes", "input_records", "executor_run_ms",
+    "manifest_reads", "manifest_cache_hits", "txs_committed", "txs_aborted")
+
   /** The Prometheus scrape body — shared by [[serveHttp]] and the
-    * healthz surface ([[Healthz]]). */
+    * healthz surface ([[Healthz]]). A monotonic metric is a `counter`
+    * named `graft_<metric>_total`; the rest are `gauge`s named
+    * `graft_<metric>`. */
   def prometheusBody(spark: SparkSession, db: Option[XtDb]): String =
     try {
       snapshot(spark, db).collect().map { r =>
-        val name = s"graft_${r.getString(0)}"
-        s"# TYPE $name gauge\n$name ${r.getLong(1)}"
+        val metric = r.getString(0)
+        val (name, kind) =
+          if (monotonic(metric)) (s"graft_${metric}_total", "counter")
+          else (s"graft_$metric", "gauge")
+        s"# TYPE $name $kind\n$name ${r.getLong(1)}"
       }.mkString("", "\n", "\n")
     } catch { case e: Exception => s"# scrape failed: ${e.getMessage}\n" }
 
+  /** HTTP scrape endpoint in the Prometheus text exposition format
+    * (reference monitoring module: modules/kafka/.../prometheus.yml scrapes
+    * an HTTP target; the format spec is public Prometheus documentation).
+    * JDK-built-in httpserver — no extra dependency; the body is
+    * [[prometheusBody]], rendered per scrape. Returns the server for
+    * `stop()`; port 0 binds an ephemeral port (`getAddress.getPort`). */
   def serveHttp(spark: SparkSession, db: Option[XtDb], port: Int = 0)
       : com.sun.net.httpserver.HttpServer = {
     val server = com.sun.net.httpserver.HttpServer.create(

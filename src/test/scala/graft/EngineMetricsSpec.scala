@@ -56,9 +56,33 @@ class EngineMetricsSpec extends AnyFunSuite {
       assert(conn.getResponseCode == 200)
       assert(conn.getContentType.startsWith("text/plain"))
       // exposition format: TYPE comment + `name value` lines
-      assert(body.contains("# TYPE graft_jobs gauge"))
-      assert(body.linesIterator.exists(_.matches("graft_tasks \\d+")))
-      assert(body.linesIterator.exists(_.matches("graft_txs_committed [1-9]\\d*")))
+      // monotonic metrics are counters named `_total`, levels are gauges
+      assert(body.contains("# TYPE graft_jobs_total counter"))
+      assert(body.linesIterator.exists(_.matches("graft_tasks_total \\d+")))
+      assert(body.linesIterator
+        .exists(_.matches("graft_txs_committed_total [1-9]\\d*")))
+      assert(body.contains("# TYPE graft_tables gauge"))
+      assert(body.linesIterator.exists(_.matches("graft_tables 1")))
+      assert(!body.contains("# TYPE graft_jobs gauge"))
     } finally server.stop(0)
+  }
+
+  test("a store with no tx log reads zero txs; an unreadable log fails loudly") {
+    val root = java.nio.file.Files.createTempDirectory("metrics_txlog")
+    val db = new XtDb(spark, root.toString)
+    val eng = new XtSqlEngine(spark, db)
+    def metric(name: String): Long = graft.tools.EngineMetrics
+      .snapshot(spark, Some(db)).collect()
+      .collectFirst { case r if r.getString(0) == name => r.getLong(1) }.get
+    assert(metric("txs_committed") == 0L)
+    assert(eng.sql("SELECT count(*) FROM xt_txs").head.getLong(0) == 0L)
+    eng.sql("INSERT INTO ml RECORDS {_id: 1}")
+    assert(metric("txs_committed") == 1L)
+    // a damaged part file must not read as an idle store
+    java.nio.file.Files.write(root.resolve("_txs").resolve("damaged.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    intercept[Exception](metric("txs_committed"))
+    assert(graft.tools.EngineMetrics.prometheusBody(spark, Some(db))
+      .startsWith("# scrape failed"))
   }
 }

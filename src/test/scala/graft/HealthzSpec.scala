@@ -52,9 +52,10 @@ class HealthzSpec extends AnyFunSuite {
       })
 
       val (mc, mbody, _) = get(port, "/metrics")
-      assert(mc == 200 && mbody.contains("# TYPE graft_jobs gauge"))
+      assert(mc == 200 && mbody.contains("# TYPE graft_jobs_total counter"))
       assert(mbody.linesIterator
-        .exists(_.matches("graft_txs_committed [1-9]\\d*")))
+        .exists(_.matches("graft_txs_committed_total [1-9]\\d*")))
+      assert(mbody.contains("# TYPE graft_event_backlog_files gauge"))
 
       // alive: 8 appends − 1 = block lag 7 > 5 → 503 with the per-table
       // lag in the body and the checked/unhealthy headers

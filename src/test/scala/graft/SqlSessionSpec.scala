@@ -199,4 +199,92 @@ class SqlSessionSpec extends AnyFunSuite {
       "SELECT _id FROM d ORDER BY _id OFFSET 1 ROWS FETCH NEXT 2 ROWS ONLY")
       == Seq(2L, 3L))
   }
+
+  // Session relations are built per statement, only when the statement
+  // names them. These run on a fresh session, so no view an earlier suite
+  // left registered can stand in for one the engine failed to build.
+
+  /** Spark jobs started while `body` runs. A marker job runs after it; the
+    * listener bus delivers events in order, so once the marker's start
+    * has arrived, so has every earlier one. */
+  private def jobsDuring[A](s: SparkSession)(body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "jobsDuring-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(p =>
+            p.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      s.sparkContext.setJobDescription(marker)
+      try s.sparkContext.parallelize(Seq(1), 1).count()
+      finally s.sparkContext.setJobDescription(null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally s.sparkContext.removeSparkListener(listener)
+  }
+
+  private def freshSession(): (SparkSession, XtSqlEngine) = {
+    val s = spark.newSession()
+    val db = new XtDb(s,
+      java.nio.file.Files.createTempDirectory("xtsqlnamed").toString)
+    val eng = new XtSqlEngine(s, db)
+    eng.sql("INSERT INTO orders RECORDS {_id: 1, v: 10}, {_id: 2, v: 20}")
+    eng.sql("INSERT INTO customer RECORDS {_id: 7, name: 'c'}")
+    (s, eng)
+  }
+
+  test("a point read builds only the relations it names and runs no job") {
+    val (s, eng) = freshSession()
+    // a temporal ref is served by its own view alone
+    assert(eng.sql("""SELECT v FROM orders
+        FOR SYSTEM_TIME AS OF TIMESTAMP '2999-01-01 00:00:00' WHERE _id = 1""")
+      .collect().map(_.getAs[Number](0).longValue).toSeq == Seq(10L))
+    assert(!s.catalog.tableExists("orders"))
+    val (df, jobs) =
+      jobsDuring(s)(eng.sql("SELECT v FROM orders WHERE _id = 1"))
+    assert(jobs == 0, s"building the point read ran $jobs job(s)")
+    Seq("pg_class", "information_schema_columns", "xt_txs", "customer")
+      .foreach(v => assert(!s.catalog.tableExists(v), s"$v was registered"))
+    assert(df.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(10L))
+  }
+
+  test("relations named by quoted, qualified and catalog refs still resolve") {
+    val (s, eng) = freshSession()
+    def longs(q: String): Seq[Long] =
+      eng.sql(q).collect().map(_.getAs[Number](0).longValue).toSeq
+    def strings(q: String): Seq[String] =
+      eng.sql(q).collect().map(_.getString(0)).toSeq
+    // a quoted identifier is no lexer Ident; the engine must still see it
+    assert(longs("SELECT v FROM `ORDERS` WHERE _id = 1") == Seq(10L))
+    assert(longs("""SELECT o.v FROM `orders` o
+        JOIN customer c ON c._id = o._id + 5 WHERE o._id = 2""") == Seq(20L))
+
+    val otherRoot = java.nio.file.Files
+      .createTempDirectory("xtsqlnamed2").toString
+    new XtSqlEngine(s, new XtDb(s, otherRoot))
+      .sql("INSERT INTO orders RECORDS {_id: 1, v: 99}")
+    eng.sql(s"ATTACH DATABASE db2 WITH 'path: $otherRoot'")
+    assert(longs("SELECT v FROM db2.orders WHERE _id = 1") == Seq(99L))
+
+    assert(strings("""SELECT c.relname FROM pg_class c
+        JOIN pg_namespace n ON c.relnamespace = n.oid
+        WHERE n.nspname = 'public' ORDER BY c.relname""") ==
+      Seq("customer", "orders"))
+    assert(strings("""SELECT column_name FROM information_schema_columns
+        WHERE table_name = 'orders' AND column_name IN ('_id', 'v')
+        ORDER BY column_name""") == Seq("_id", "v"))
+    assert(longs("SELECT count(*) FROM xt_txs WHERE committed") == Seq(2L))
+
+    assert(strings("EXPLAIN SELECT v FROM orders WHERE _id = 1")
+      .mkString("\n").nonEmpty)
+    eng.sql("PREPARE point AS SELECT v FROM orders WHERE _id = ?")
+    assert(longs("EXECUTE point (2)") == Seq(20L))
+  }
 }
