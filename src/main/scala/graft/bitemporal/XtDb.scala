@@ -89,14 +89,7 @@ trait TxSnapshot {
 class XtDb(spark: SparkSession, val root: String) {
 
   import Bitemporal._
-
-  // Legacy-read compat: pre-round-12 tables stored `_bucket` as a hex-char
-  // PARTITION dir; without this, a table whose buckets happen to all be
-  // digits reads back as int and LUB-unions with string on the next
-  // append. Round-12 storage writes `_bucket` as a data column (the
-  // generation itself is iid-bucketed), so this only affects old dirs.
-  spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-    "false")
+  import XtDb.{SidecarJson, WritePoint, corruptSidecar}
 
   private def tableDir(table: String) = s"$root/$table"
 
@@ -124,17 +117,17 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** Adopt the persisted tx-log head as the monotonicity floor (cold
-    * start on an existing store). Best-effort: an unreadable/absent log
-    * leaves the floor at wall clock. */
-  private def adoptPersistedHead(): Unit =
-    try {
-      val m = txs.agg(max(col("system_time"))).collect().head
-      if (!m.isNullAt(0)) {
-        val t = m.getTimestamp(0).toInstant
-        lastSystemMicros = math.max(lastSystemMicros,
-          t.getEpochSecond * 1000000L + t.getNano / 1000L)
-      }
-    } catch { case _: Exception => () }
+    * start on an existing store). An absent log leaves the floor at wall
+    * clock; an unreadable one throws — guessing the floor could reorder
+    * bitemporal history. */
+  private def adoptPersistedHead(): Unit = {
+    val m = txs.agg(max(col("system_time"))).collect().head
+    if (!m.isNullAt(0)) {
+      val t = m.getTimestamp(0).toInstant
+      lastSystemMicros = math.max(lastSystemMicros,
+        t.getEpochSecond * 1000000L + t.getNano / 1000L)
+    }
+  }
 
   // ---- schema registry: the table's current LUB schema, persisted as a
   // sidecar so reads don't need parquet footer merging (which cannot widen
@@ -147,7 +140,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * carry null payload columns by construction, so a registered schema
     * inheriting non-nullability from a first put (literals, ranges) would
     * lie to codegen and NPE the first window/sort over a mixed log.
-    * Normalized at save AND load so pre-round-14 sidecars heal. */
+    * Normalized at save; a loaded schema is what was saved. */
   private def nullableize(
       dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = dt match {
@@ -161,27 +154,46 @@ class XtDb(spark: SparkSession, val root: String) {
     case other => other
   }
 
-  private def saveSchema(table: String, st: StructType): Unit = {
+  private def saveSchema(table: String, st: StructType): Unit =
+    writeSidecar(schemaPath(table), nullableize(st).json)
+
+  private def loadSchema(table: String): Option[StructType] =
+    schemaSidecar(schemaPath(table))
+
+  // ---- sidecars: the small metadata files next to the data (`_gen`,
+  // `_evmeta*.json`, `_snapmeta.json`, `_snapschema.json`, `_layout.json`,
+  // `_compact_progress.json`, `_schemas/<t>.json`, `_txs/_gen`). The store
+  // has ONE format: every writer writes every field, so a sidecar missing
+  // one is corrupt or from an unknown format, and reading it fails loudly
+  // and names the file — never a quiet fallback to a weaker read.
+
+  /** A sidecar's content; None when the file is absent. Any other
+    * failure propagates. */
+  private def readSidecar(p: org.apache.hadoop.fs.Path): Option[String] = {
     val fs = hadoopFs
-    val out = fs.create(schemaPath(table), true)
-    try out.write(nullableize(st).asInstanceOf[StructType]
-      .json.getBytes("UTF-8")) finally out.close()
+    val len = try fs.getFileStatus(p).getLen
+      catch { case _: java.io.FileNotFoundException => return None }
+    val in = fs.open(p)
+    try {
+      val bytes = new Array[Byte](len.toInt)
+      in.readFully(bytes)
+      Some(new String(bytes, "UTF-8"))
+    } finally in.close()
   }
 
-  private def loadSchema(table: String): Option[StructType] = {
-    val fs = hadoopFs
-    val p = schemaPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(nullableize(org.apache.spark.sql.types.DataType
-          .fromJson(new String(bytes, "UTF-8")).asInstanceOf[StructType])
-          .asInstanceOf[StructType])
-      } finally in.close()
-    }
+  private def jsonSidecar(p: org.apache.hadoop.fs.Path): Option[SidecarJson] =
+    readSidecar(p).map(new SidecarJson(p, _))
+
+  private def schemaSidecar(p: org.apache.hadoop.fs.Path): Option[StructType] =
+    readSidecar(p).map(s =>
+      try org.apache.spark.sql.types.DataType.fromJson(s)
+        .asInstanceOf[StructType]
+      catch { case scala.util.control.NonFatal(e) =>
+        corruptSidecar(p, e.toString, s) })
+
+  private def writeSidecar(p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = hadoopFs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Raw event log for a table — served as ONE iid-BUCKETED relation over
@@ -258,8 +270,8 @@ class XtDb(spark: SparkSession, val root: String) {
   // (modules/aws/src/main/kotlin/xtdb/aws — put/list/delete only).
   //
   // Layout: a committed generation holds the compacted event log as an
-  // iid-BUCKETED file set (Spark bucket ids in the file names, re-attached
-  // through the session catalog); per-tx appends accumulate as plain
+  // iid-BUCKETED file set (Spark bucket ids in the file names, served from
+  // the manifest's file list); per-tx appends accumulate as plain
   // parquet parts in the same live directory ("generation 0" is the table
   // root before any rewrite). GC is lazy by one generation: `g<N-1>` is
   // deleted only when `g<N+1>` commits, so a reader that resolved the
@@ -269,26 +281,18 @@ class XtDb(spark: SparkSession, val root: String) {
   private def genPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_gen")
 
-  /** Pointer content: `<n>` (legacy — resolves to dir `g<n>`) or
-    * `<n>:<dirname>` (round 15 — the generation DIR NAME rides in the
-    * pointer, so every rewrite writes into a fresh uniquely-suffixed dir
-    * `g<n>_<suffix>`: two RACING full compactions can never interleave
+  /** Pointer content: `<n>:<dirname>` — the generation DIR NAME rides in
+    * the pointer, so every rewrite writes into a fresh uniquely-suffixed
+    * dir `g<n>_<suffix>`: two RACING full compactions can never interleave
     * files in a shared directory; the CAS on the pointer picks the
-    * winner and the loser's whole dir is an inert orphan). */
+    * winner and the loser's whole dir is an inert orphan. */
   private def currentGenInfo(table: String): Option[(Int, String)] = {
-    val fs = hadoopFs
     val p = genPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        val s = new String(bytes, "UTF-8").trim
-        val i = s.indexOf(':')
-        if (i < 0) Some((s.toInt, s"g$s"))
-        else Some((s.substring(0, i).toInt, s.substring(i + 1)))
-      } finally in.close()
+    readSidecar(p).map { raw =>
+      raw.trim match {
+        case XtDb.GenPointer(n, dir) => (n.toInt, dir)
+        case other => corruptSidecar(p, "expected <n>:<dir>", other)
+      }
     }
   }
 
@@ -379,8 +383,8 @@ class XtDb(spark: SparkSession, val root: String) {
         case None => listRootParquet(table).map(_.getPath.getName)
       }
     writeBucketedFiles(df, gdir, nb)
-    XtDb.testBeforeFlipHook()
-    conditionalPut(genPath(table), s"$next:$gname".getBytes("UTF-8"), genV,
+    XtDb.writePointHook(WritePoint.BeforeFlip(table))
+    conditionalPut(genPath(table), s"$next:$gname", genV,
       s"generation pointer of '$table'")
     // the manifest write is a SUPERSEDE for the new generation, not a
     // read-modify-write of the old one — unconditional by design
@@ -484,23 +488,20 @@ class XtDb(spark: SparkSession, val root: String) {
     * instead of last-write-wins silently corrupting the manifest chain.
     * On plain filesystems the single-writer discipline remains the
     * documented contract and the write is unconditional. */
-  private def writeEvMeta(table: String, m: EvMeta,
+  private[graft] def writeEvMeta(table: String, m: EvMeta,
       expectVersion: Long = -1L): Unit = {
     require((m.levels ++ m.consumed ++ m.retired ++ m.excluded ++
         m.sweepDirs ++ m.chunks)
         .forall(n => !n.exists(c => c == '"' || c == '\\' || c == '\n')),
       "manifest entries must be plain file/dir names")
-    val json = evMetaJson(table, m)
-    val p = evMetaPath(table)
-    conditionalPut(p, json.getBytes("UTF-8"), expectVersion,
+    conditionalPut(evMetaPath(table), evMetaJson(m), expectVersion,
       s"event manifest of '$table'")
     evMetaCache.remove(table)
     ()
   }
 
-  private def evMetaJson(table: String, m: EvMeta): String = {
-    val (fc, fm) = eventFingerprint(table)
-    s"""{"v":2,"gen":${m.gen},"files":$fc,"mtime":$fm,""" +
+  private def evMetaJson(m: EvMeta): String =
+    s"""{"v":2,"gen":${m.gen},""" +
       s""""buckets":${m.buckets},"levels":${jsonArr(m.levels)},""" +
       s""""consumed":${jsonArr(m.consumed)},""" +
       s""""retired":${jsonArr(m.retired)},"lvseq":${m.lvseq},""" +
@@ -508,74 +509,35 @@ class XtDb(spark: SparkSession, val root: String) {
       s""""sweep":${jsonArr(m.sweepDirs)},""" +
       s""""ebk":[${m.eraseBuckets.toSeq.sorted.mkString(",")}],""" +
       s""""emsf":${m.eraseMaxSf},"chunks":${jsonArr(m.chunks)}}"""
-  }
 
   /** CAS-if-available PUT (see [[writeEvMeta]]). */
   private def conditionalPut(p: org.apache.hadoop.fs.Path,
-      bytes: Array[Byte], expectVersion: Long, what: String): Unit =
+      text: String, expectVersion: Long, what: String): Unit =
     hadoopFs match {
       case cas: graft.storage.VersionedPut if expectVersion >= 0L =>
-        if (!cas.putIfVersion(p, bytes, expectVersion))
+        if (!cas.putIfVersion(p, text.getBytes("UTF-8"), expectVersion))
           throw new java.util.ConcurrentModificationException(
             s"lost commit race on $what ($p): another writer advanced " +
               s"it past version $expectVersion — this mutation is " +
               "abandoned; re-read and retry")
-      case fs =>
-        val out = fs.create(p, true)
-        try out.write(bytes) finally out.close()
+      case _ => writeSidecar(p, text)
     }
 
-  /** Parse the manifest. A v2 manifest that fails to parse is a LOUD
-    * error: once levels/consumed exist the manifest is correctness-
-    * bearing (it excludes consumed duplicates and includes hidden level
-    * dirs), so a silent flat fallback would serve wrong rows — contrast
-    * the pre-round-13 meta, which was optimization-only. A LEGACY meta
-    * (no "v" key) still fails soft to the flat path. */
-  private def readEvMeta(table: String): Option[EvMeta] =
-    readEvMetaAt(table, evMetaPath(table))
+  /** Parse the manifest. A manifest that fails to parse is a LOUD error:
+    * it is correctness-bearing (it excludes consumed duplicates and
+    * includes hidden level dirs), so a silent flat fallback would serve
+    * wrong rows. */
+  private[graft] def readEvMeta(table: String): Option[EvMeta] =
+    readEvMetaAt(evMetaPath(table))
 
-  private def readEvMetaAt(table: String,
-      p: org.apache.hadoop.fs.Path): Option[EvMeta] = {
-    val fs = hadoopFs
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        val s = new String(bytes, "UTF-8")
-        def num(k: String) = (s""""$k"\\s*:\\s*(-?\\d+)""").r
-          .findFirstMatchIn(s).map(_.group(1).toLong)
-        def arr(k: String): Option[Seq[String]] =
-          (s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-            .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1))
-              .map(_.group(1)).toSeq)
-        def intArr(k: String): Option[Set[Int]] =
-          (s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-            .map(m => m.group(1).split(",").filter(_.trim.nonEmpty)
-              .map(_.trim.toInt).toSet)
-        if (num("v").contains(2L)) {
-          val parsed = for {
-            g <- num("gen"); b <- num("buckets"); q <- num("lvseq")
-            lv <- arr("levels"); cn <- arr("consumed"); rt <- arr("retired")
-          } yield EvMeta(g.toInt, b.toInt, lv, cn.toSet, rt, q.toInt,
-            // absent in pre-round-14 manifests: no erase pending/exclusions
-            num("ecyc").map(_.toInt).getOrElse(0),
-            arr("excl").map(_.toSet).getOrElse(Set.empty),
-            arr("sweep").getOrElse(Nil),
-            // absent pre-round-15: erase discovery falls back to the scan
-            intArr("ebk").getOrElse(Set.empty),
-            num("emsf").getOrElse(0L),
-            // absent pre-round-17: no chunk fence (chunk dirs untagged)
-            arr("chunks").getOrElse(Nil))
-          Some(parsed.getOrElse(throw new IllegalStateException(
-            s"corrupt event manifest for '$table' at $p: $s")))
-        } else
-          for { g <- num("gen"); b <- num("buckets") }
-            yield EvMeta(g.toInt, b.toInt, Nil, Set.empty, Nil, 0)
-      } finally in.close()
+  private def readEvMetaAt(p: org.apache.hadoop.fs.Path): Option[EvMeta] =
+    jsonSidecar(p).map { j =>
+      j.requireVersion(2)
+      EvMeta(j.int("gen"), j.int("buckets"), j.strs("levels"),
+        j.strs("consumed").toSet, j.strs("retired"), j.int("lvseq"),
+        j.int("ecyc"), j.strs("excl").toSet, j.strs("sweep"),
+        j.ints("ebk"), j.long("emsf"), j.strs("chunks"))
     }
-  }
 
   // ---- staged (gen-qualified) manifest — the aligned-commit fix ---------
   //
@@ -620,7 +582,7 @@ class XtDb(spark: SparkSession, val root: String) {
       case Some(mm) if mm.gen == curGen => (m, ver)
       case other =>
         val staged = currentGenDirName(table)
-          .flatMap(d => try readEvMetaAt(table, stagedEvMetaPath(table, d))
+          .flatMap(d => try readEvMetaAt(stagedEvMetaPath(table, d))
             catch { case scala.util.control.NonFatal(_) => None })
           .filter(_.gen == curGen)
         staged match {
@@ -850,39 +812,6 @@ class XtDb(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Register-or-reuse `name` as a bucketed external table at `path` with
-    * the given key/buckets. Verifies an EXISTING registration still points
-    * at `path` — a generation flip by another instance re-uses the same
-    * root-hashed name, so a stale location must be dropped, not served —
-    * and treats a concurrent-registration race as success. */
-  private def attachBucketedTable(name: String, path: String, key: String,
-      buckets: Int): DataFrame = {
-    require(!path.contains("'"),
-      s"bucketed table path '$path' must not contain a single quote " +
-        "(spliced into LOCATION)")
-    val qualify = (p: String) =>
-      hadoopFs.makeQualified(new org.apache.hadoop.fs.Path(p)).toString
-    if (spark.catalog.tableExists(name)) {
-      val loc = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
-        .location.toString
-      if (qualify(loc) != qualify(path)) spark.sql(s"DROP TABLE $name")
-    }
-    if (!spark.catalog.tableExists(name)) {
-      val schema = spark.read.parquet(path).schema
-      try spark.sql(
-        s"""CREATE TABLE $name (${schema.toDDL}) USING PARQUET
-           |CLUSTERED BY (`$key`) SORTED BY (`$key`)
-           |INTO $buckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException
-            if spark.catalog.tableExists(name) => ()
-      }
-    }
-    spark.table(name)
-  }
-
   /** The iid-bucketed event log, iff the manifest's live set has NO
     * pending flat backlog: any append from any instance shows up in the
     * live-dir listing as an un-consumed flat file and flips readers to
@@ -932,35 +861,11 @@ class XtDb(spark: SparkSession, val root: String) {
       .withColumn(BUCKET, substring(col(IID), 1, 1))
   }
 
-  /** Pre-round-12 stores partitioned every append into `_bucket=<c>/`
-    * dirs; a flat append into such a directory would break Spark's
-    * partition discovery (root-level files + partition dirs mixed) for
-    * every later read. Detect the legacy layout on write and fold it
-    * into an iid-bucketed generation first — a one-time migration
-    * rewrite, after which this table appends flat like any other. The
-    * check itself runs ONCE per table per instance (only pre-round-12
-    * code ever created the legacy dirs, so a clean verdict can never
-    * regress) — no per-put LIST on the hot write path. */
-  private val legacyChecked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def migrateLegacyLayoutIfAny(table: String): Unit = {
-    if (legacyChecked.contains(table)) return
-    val fs = hadoopFs
-    val dir = new org.apache.hadoop.fs.Path(dataDir(table))
-    if (fs.exists(dir) &&
-        fs.listStatus(dir).exists(_.getPath.getName.startsWith(s"$BUCKET=")))
-      compact(table)
-    legacyChecked.add(table)
-    ()
-  }
-
   private def appendEvents(table: String, docs: DataFrame, op: String,
       validFrom: Option[Column], validTo: Option[Column]): java.sql.Timestamp = {
     val sysTime = nextSystemTime()
     val withMeta = buildEvents(docs, op, validFrom, validTo, sysTime,
       monotonically_increasing_id())
-    migrateLegacyLayoutIfAny(table)
     val conformed = evolveSchema(table, withMeta)
     val obs = if (op == "erase") eraseObservation(table) else None
     obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
@@ -1210,7 +1115,6 @@ class XtDb(spark: SparkSession, val root: String) {
         val lubbed = parts.map(_.schema).reduce(DynamicSchema.mergeSchemas)
         val df = parts.map(DynamicSchema.conform(_, lubbed))
           .reduce(_.unionByName(_, allowMissingColumns = true))
-        migrateLegacyLayoutIfAny(table)
         val conformed = evolveSchema(table, df)
         val obs =
           if (eraseTables.contains(table)) eraseObservation(table) else None
@@ -1384,7 +1288,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * heartbeat. A resume finding a FOREIGN token within the lease treats
     * the attempt as live and starts a fresh suffixed attempt instead of
     * collaborating on (and thrashing) a live compactor's sidecar; an
-    * expired or legacy (pre-round-16, empty-owner) token is taken over —
+    * expired or released (empty-owner) token is taken over —
     * atomically via the store's CAS surface where one exists, by
     * write-then-verify on plain filesystems — resuming the dead
     * attempt's dir, done set and chunk dirs.
@@ -1403,63 +1307,27 @@ class XtDb(spark: SparkSession, val root: String) {
     * dirs, and the committed manifest's `chunks` list fences reads to
     * the winner's dirs — a paused loser's late-landing part files are
     * never served (they previously mixed into the shared `c<lo>` dir as
-    * duplicate base rows). Absent in pre-round-17 sidecars: synthesized
-    * as the legacy untagged `c<lo>` names. */
-  private final case class CompactProgress(gen: Int, buckets: Int,
+    * duplicate base rows). */
+  private[graft] final case class CompactProgress(gen: Int, buckets: Int,
       fp: String, done: Set[Int], chunk: Int, dir: String,
-      owner: String = "", hb: Long = 0L,
-      dirs: Map[Int, String] = Map.empty)
+      owner: String, hb: Long, dirs: Map[Int, String] = Map.empty)
 
   private def compactProgressPath(table: String) =
     new org.apache.hadoop.fs.Path(
       s"${tableDir(table)}/_compact_progress.json")
 
-  private def readCompactProgress(table: String): Option[CompactProgress] = {
-    val fs = hadoopFs
-    val p = compactProgressPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val s = new String({
-          val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes); bytes
-        }, "UTF-8")
-        def num(k: String) = (s""""$k"\\s*:\\s*(-?\\d+)""").r
-          .findFirstMatchIn(s).map(_.group(1).toInt)
-        for {
-          g <- num("gen"); b <- num("buckets")
-          f <- (s""""fp"\\s*:\\s*"([^"]*)"""").r.findFirstMatchIn(s)
-            .map(_.group(1))
-          d <- (s""""done"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-            .map(m => m.group(1).split(",").filter(_.trim.nonEmpty)
-              .map(_.trim.toInt).toSet)
-          // chunk stride + output dir persisted with the progress: `done`
-          // keys chunk-START bucket ids, so a resume under a DIFFERENT
-          // stride would skip/rewrite overlapping bucket ranges and serve
-          // rows twice (ADVICE r14 #2) — absent or different ⇒ restart
-          c <- num("chunk")
-          dir <- (s""""dir"\\s*:\\s*"([^"]*)"""").r.findFirstMatchIn(s)
-            .map(_.group(1))
-        } yield CompactProgress(g, b, f, d, c, dir,
-          (s""""owner"\\s*:\\s*"([^"]*)"""").r.findFirstMatchIn(s)
-            .map(_.group(1)).getOrElse(""),
-          (s""""hb"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(s)
-            .map(_.group(1).toLong).getOrElse(0L),
-          (s""""dirv"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-            .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1))
-              .map(_.group(1))
-              .flatMap { e =>
-                val i = e.indexOf(':')
-                if (i <= 0) None
-                else scala.util.Try(
-                  e.substring(0, i).toInt -> e.substring(i + 1)).toOption
-              }.toMap)
-            // pre-round-17 sidecar: chunks were written untagged
-            .getOrElse(d.map(lo => lo -> s"c$lo").toMap))
-      } finally in.close()
+  // `chunk` (stride) and `dir` (output dir) ride with `done`: `done`
+  // keys chunk-START bucket ids, so a resume under a DIFFERENT stride
+  // would skip/rewrite overlapping bucket ranges and serve rows twice
+  // (ADVICE r14 #2) — a different stride restarts the merge
+  private[graft] def readCompactProgress(
+      table: String): Option[CompactProgress] =
+    jsonSidecar(compactProgressPath(table)).map { j =>
+      CompactProgress(j.int("gen"), j.int("buckets"), j.str("fp"),
+        j.ints("done"), j.int("chunk"), j.str("dir"), j.str("owner"),
+        j.long("hb"), j.pairs("dirv").map { case (lo, d) =>
+          j.toInt(lo) -> d }.toMap)
     }
-  }
 
   private def compactProgressJson(p: CompactProgress): String =
     s"""{"gen":${p.gen},"buckets":${p.buckets},""" +
@@ -1471,12 +1339,9 @@ class XtDb(spark: SparkSession, val root: String) {
 
   /** Unconditional sidecar write (plain-FS path; versioned stores go
     * through the owner's CAS chain in [[alignedRewrite]]). */
-  private def writeCompactProgress(table: String,
-      p: CompactProgress): Unit = {
-    val out = hadoopFs.create(compactProgressPath(table), true)
-    try out.write(compactProgressJson(p).getBytes("UTF-8"))
-    finally out.close()
-  }
+  private[graft] def writeCompactProgress(table: String,
+      p: CompactProgress): Unit =
+    writeSidecar(compactProgressPath(table), compactProgressJson(p))
 
   /** The aligned full compaction, if its preconditions hold: a
     * gen-matching manifest with a bucketed base, and a re-derived fanout
@@ -1623,7 +1488,7 @@ class XtDb(spark: SparkSession, val root: String) {
             // it; our fresh dir stays orphaned (lazy GC) if it wins
             (freshDir(), Set.empty[Int], Map.empty[Int, String], false)
           else {
-            // dead (or pre-round-16 legacy) attempt: take the lease,
+            // dead (or released) attempt: take the lease,
             // resuming its dir, done set and completed chunk dirs
             val stamped = p.copy(owner = attempt,
               hb = System.currentTimeMillis())
@@ -1686,8 +1551,8 @@ class XtDb(spark: SparkSession, val root: String) {
         Thread.currentThread().interrupt() }
       ()
     }
-    // a GRACEFUL failure (any exception — the injected crash knobs
-    // included) releases the attempt lease on the way out, so a quick
+    // a GRACEFUL failure (any exception — an injected crash at a write
+    // point included) releases the attempt lease on the way out, so a quick
     // restart resumes the done chunks immediately; only a hard kill
     // (SIGKILL/power loss) leaves the lease to age out. Routed through
     // the CAS chain: a taker-over's sidecar is never clobbered.
@@ -1707,10 +1572,6 @@ class XtDb(spark: SparkSession, val root: String) {
           s"(now '$who') after $after chunks — another compactor took " +
           "over the sidecar; this attempt stops")
     }
-    // fault injection for the kill-and-resume spec: fail loudly after K
-    // chunks have landed this invocation (-1 = never; never set in prod)
-    val failAfter = spark.conf
-      .get("spark.graft.test.failAfterChunks", "-1").toInt
     var landed = 0
     (0 until nb by chunkSz).foreach { lo =>
       val hi = math.min(nb, lo + chunkSz)
@@ -1731,7 +1592,7 @@ class XtDb(spark: SparkSession, val root: String) {
           dirs += (lo -> cdir)
         }
         done += lo
-        XtDb.testAfterChunkHook(lo)
+        XtDb.writePointHook(WritePoint.ChunkLanded(table, lo))
         if (persistProgress &&
             !ownerPut(CompactProgress(next, nb, fingerprint,
               done, chunkSz, gname, attempt, System.currentTimeMillis(),
@@ -1741,9 +1602,7 @@ class XtDb(spark: SparkSession, val root: String) {
           // write itself (ADVICE r16 #1)
           lostLease(landed)
         landed += 1
-        if (failAfter >= 0 && landed >= failAfter)
-          throw new IllegalStateException(
-            s"injected compaction crash after $landed chunks (test knob)")
+        XtDb.writePointHook(WritePoint.ChunkDurable(table, landed))
       }
     }
     // every chunk durable; the commit phase is short — stop refreshing
@@ -1771,24 +1630,13 @@ class XtDb(spark: SparkSession, val root: String) {
         curInfo.map(_._2).toSeq else Nil,
       chunks = dirs.values.toSeq.sorted)
     val stagedP = stagedEvMetaPath(table, gname)
-    val outS = fs.create(stagedP, true)
-    try outS.write(evMetaJson(table, newMeta).getBytes("UTF-8"))
-    finally outS.close()
-    // test knob: crash between the staged manifest and the pointer flip —
-    // the window the pre-round-15 order corrupted (never set in prod)
-    if (spark.conf.get("spark.graft.test.failBeforePointerFlip", "false")
-        .toBoolean)
-      throw new IllegalStateException(
-        "injected compaction crash before the pointer flip (test knob)")
-    XtDb.testBeforeFlipHook()
-    conditionalPut(genPath(table), s"$next:$gname".getBytes("UTF-8"), genV,
+    writeSidecar(stagedP, evMetaJson(newMeta))
+    XtDb.writePointHook(WritePoint.BeforeFlip(table))
+    conditionalPut(genPath(table), s"$next:$gname", genV,
       s"generation pointer of '$table'")
-    // test knob: crash between the flip and the promote — readers must
-    // resolve the staged manifest through the pointer
-    if (spark.conf.get("spark.graft.test.failBeforePromote", "false")
-        .toBoolean)
-      throw new IllegalStateException(
-        "injected compaction crash before the manifest promote (test knob)")
+    // between the flip and the promote, readers resolve the staged
+    // manifest through the pointer
+    XtDb.writePointHook(WritePoint.BeforePromote(table))
     // promote: supersede `_evmeta.json` for the new generation. Armed
     // with the version read at entry so a racing fold's manifest write
     // (a single-writer-discipline violation) still fails LOUDLY — the
@@ -1877,10 +1725,8 @@ class XtDb(spark: SparkSession, val root: String) {
             s"declareLayout($table): key '$key' is not a column " +
               s"(${cols.mkString(", ")})"))
       }
-    val out = hadoopFs.create(layoutPath(table), true)
-    try out.write(
-      s"""{"key":"$canonicalKey","buckets":$buckets}""".getBytes("UTF-8"))
-    finally out.close()
+    writeSidecar(layoutPath(table),
+      s"""{"key":"$canonicalKey","buckets":$buckets}""")
     noSnapshot.remove(table)
   }
 
@@ -1897,85 +1743,43 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** The table's declared layout, if any. */
-  def layoutOf(table: String): Option[TableLayout] = {
-    val fs = hadoopFs
-    val p = layoutPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        val s = new String(bytes, "UTF-8")
-        for {
-          k <- """"key"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-          b <- """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
-        } yield TableLayout(k, b)
-      } finally in.close()
-    }
-  }
+  def layoutOf(table: String): Option[TableLayout] =
+    jsonSidecar(layoutPath(table))
+      .map(j => TableLayout(j.str("key"), j.int("buckets")))
 
   /** Snapshot validity is verified against STORAGE at every serve, not
-    * trusted from instance memory: the snapshot's meta file records the
-    * generation, an event-file fingerprint (count + max mtime, the
-    * StatsSidecar freshness contract), and the earliest FUTURE
-    * valid-time boundary. A serve re-checks all three — so a write from
-    * ANY instance over the same root (not just this one) invalidates,
-    * and a fresh instance can keep serving a still-valid snapshot
-    * across restarts. `expiresMicros` guards VALID-TIME transitions:
-    * `current` is a moving point, and a put whose valid_from/valid_to
-    * lies in the future changes the current state with no write
-    * happening. The in-memory set is only a negative cache of tables
-    * known to have no snapshot (avoids a meta-file stat per query on
-    * never-compacted tables); it is only ever ADDED TO on a miss and
-    * cleared by compact, so it can never hold a stale "valid". */
+    * trusted from instance memory: the snapshot manifest records the
+    * generation, the event manifest's `lvseq` it was built against, and
+    * the earliest FUTURE valid-time boundary per iid-bucket. A serve
+    * re-checks them, plus an empty event backlog — so a write from ANY
+    * instance over the same root (not just this one) invalidates, and a
+    * fresh instance can keep serving a still-valid snapshot across
+    * restarts. The expiry guards VALID-TIME transitions: `current` is a
+    * moving point, and a put whose valid_from/valid_to lies in the future
+    * changes the current state with no write happening. The in-memory
+    * set is only a negative cache of tables known to have no snapshot
+    * (avoids a meta-file stat per query on never-compacted tables); it is
+    * only ever ADDED TO on a miss and cleared by compact, so it can never
+    * hold a stale "valid". */
   private val noSnapshot =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Event-file freshness fingerprint of the table's live data dir:
-    * (file count, max mtime) over VISIBLE `.parquet` data files — the
-    * same counting rule as [[listRootParquet]] and [[blockLag]] (one
-    * rule everywhere, so a stray non-parquet file can never desync the
-    * healthz surface from the snapshot-validity check). */
-  private def eventFingerprint(table: String): (Long, Long) = {
-    val files = listRootParquet(table)
-    (files.size.toLong,
-      files.foldLeft(-1L)((m, f) => math.max(m, f.getModificationTime)))
-  }
-
-  /** Session-catalog name for the table's bucketed current snapshot —
-    * scoped by store root so two XtDb instances in one JVM never collide. */
-  private def snapshotTableName(table: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$root/$table".getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    s"graft_cur_${table.replaceAll("[^A-Za-z0-9_]", "_")}_$h"
-  }
-
-  /** Round-14 snapshot manifest (v2): the declared-layout current-state
+  /** Snapshot manifest (format `"v":2`): the declared-layout current-state
     * snapshot is maintained INCREMENTALLY ([[foldSnapshot]]) — validity
     * is structural (generation + manifest lvseq + empty backlog), the
     * `watermark` records the highest `_system_from` incorporated, and
     * `files` is the live per-bucket file list (copy-on-write: a fold
     * replaces only touched buckets' files; `retired` leases the replaced
-    * ones for one cycle). Pre-round-14 v1 metas (fingerprint + dir) keep
-    * their legacy serve path until the next full compaction upgrades
-    * them. */
-  private final case class SnapMeta(gen: Int, files: Long, mtime: Long,
-      expires: Long, key: String, buckets: Int, dir: String)
-
-  /** v2 snapshot manifest. Round 15 adds the per-iid-bucket FUTURE
-    * valid-time boundary minimum (`bmins`, keyed at the EVENT log's
-    * fanout `bfan`): the global expiry is `min(bmins)`, and after a
-    * boundary crossing only the buckets whose stored min actually
-    * passed need re-scanning — the expiry recompute is metadata-driven
-    * instead of an O(event-log) scan. `bfan` = 0 marks a legacy meta
-    * (pre-round-15, or written under a different fanout): the fold then
-    * falls back to the full-scan recompute once and upgrades. */
-  private final case class SnapMeta2(gen: Int, lvseq: Int, watermark: Long,
-      expires: Long, key: String, buckets: Int, seq: Int,
+    * ones for one cycle). `bmins` holds the per-iid-bucket FUTURE
+    * valid-time boundary minimum, keyed at the EVENT log's fanout `bfan`
+    * (always the generation's manifest fanout): the global expiry is
+    * `min(bmins)`, and after a boundary crossing only the buckets whose
+    * stored min actually passed need re-scanning — the expiry recompute
+    * is metadata-driven instead of an O(event-log) scan. */
+  private[graft] final case class SnapMeta2(gen: Int, lvseq: Int,
+      watermark: Long, expires: Long, key: String, buckets: Int, seq: Int,
       files: Seq[String], retired: Seq[String],
-      bfan: Int = 0, bmins: Map[Int, Long] = Map.empty)
+      bfan: Int, bmins: Map[Int, Long])
 
   // snapshot manifest file entries are "relpath|length": the recorded
   // length lets the serve construct FileStatus objects with ZERO
@@ -1983,14 +1787,10 @@ class XtDb(spark: SparkSession, val root: String) {
   // the length; the files are immutable once listed)
   private def snapEntry(relPath: String, len: Long): String =
     s"$relPath|$len"
-  private def snapEntryPath(e: String): String = {
-    val i = e.lastIndexOf('|')
-    if (i < 0) e else e.substring(0, i)
-  }
-  private def snapEntryLen(e: String): Long = {
-    val i = e.lastIndexOf('|')
-    if (i < 0) -1L else e.substring(i + 1).toLong
-  }
+  private def snapEntryPath(e: String): String =
+    e.substring(0, e.lastIndexOf('|'))
+  private def snapEntryLen(e: String): Long =
+    e.substring(e.lastIndexOf('|') + 1).toLong
 
   private def snapMetaPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_snapmeta.json")
@@ -1998,64 +1798,20 @@ class XtDb(spark: SparkSession, val root: String) {
   private def snapSchemaPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_snapschema.json")
 
-  private def readSnapJson(table: String): Option[String] = {
-    val fs = hadoopFs
-    val p = snapMetaPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  private def readSnapMeta(table: String): Option[SnapMeta] =
-    readSnapJson(table).flatMap { s =>
-      def num(k: String) = (s""""$k"\\s*:\\s*(-?\\d+)""").r
-        .findFirstMatchIn(s).map(_.group(1).toLong)
-      def str(k: String) = (s""""$k"\\s*:\\s*"([^"]+)"""").r
-        .findFirstMatchIn(s).map(_.group(1))
-      if (num("v").contains(2L)) None
-      else for {
-        g <- num("gen"); f <- num("files"); m <- num("mtime")
-        e <- num("expires"); k <- str("key"); b <- num("buckets")
-        d <- str("dir")
-      } yield SnapMeta(g.toInt, f, m, e, k, b.toInt, d)
+  private[graft] def readSnapMeta2(table: String): Option[SnapMeta2] =
+    jsonSidecar(snapMetaPath(table)).map { j =>
+      j.requireVersion(2)
+      val files = j.strs("files")
+      files.find(!_.matches(".+\\|\\d+")).foreach(e =>
+        j.corrupt(s"file entry '$e' has no |length"))
+      SnapMeta2(j.int("gen"), j.int("lvseq"), j.long("wm"),
+        j.long("expires"), j.str("key"), j.int("buckets"), j.int("seq"),
+        files, j.strs("retired"), j.int("bfan"),
+        j.pairs("bmins").map { case (b, v) => j.toInt(b) -> j.toLong(v) }
+          .toMap)
     }
 
-  private def readSnapMeta2(table: String): Option[SnapMeta2] =
-    readSnapJson(table).flatMap { s =>
-      def num(k: String) = (s""""$k"\\s*:\\s*(-?\\d+)""").r
-        .findFirstMatchIn(s).map(_.group(1).toLong)
-      def str(k: String) = (s""""$k"\\s*:\\s*"([^"]+)"""").r
-        .findFirstMatchIn(s).map(_.group(1))
-      def arr(k: String): Option[Seq[String]] =
-        (s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(s)
-          .map(m => """"([^"]*)"""".r.findAllMatchIn(m.group(1))
-            .map(_.group(1)).toSeq)
-      if (!num("v").contains(2L)) None
-      else {
-        val parsed = for {
-          g <- num("gen"); q <- num("lvseq"); w <- num("wm")
-          e <- num("expires"); k <- str("key"); b <- num("buckets")
-          sq <- num("seq"); fl <- arr("files"); rt <- arr("retired")
-        } yield SnapMeta2(g.toInt, q.toInt, w, e, k, b.toInt, sq.toInt,
-          fl, rt,
-          // absent pre-round-15: bfan 0 ⇒ full-scan expiry fallback
-          num("bfan").map(_.toInt).getOrElse(0),
-          arr("bmins").map(_.map { kv =>
-            val i = kv.indexOf(':')
-            kv.substring(0, i).toInt -> kv.substring(i + 1).toLong
-          }.toMap).getOrElse(Map.empty))
-        Some(parsed.getOrElse(throw new IllegalStateException(
-          s"corrupt snapshot manifest for '$table': $s")))
-      }
-    }
-
-  private def writeSnapMeta2(table: String, m: SnapMeta2): Unit = {
+  private[graft] def writeSnapMeta2(table: String, m: SnapMeta2): Unit = {
     require((m.files ++ m.retired)
         .forall(n => !n.exists(c => c == '"' || c == '\\' || c == '\n')),
       "snapshot manifest entries must be plain relative paths")
@@ -2066,38 +1822,29 @@ class XtDb(spark: SparkSession, val root: String) {
       s""""files":${jsonArr(m.files)},"retired":${jsonArr(m.retired)},""" +
       s""""bfan":${m.bfan},"bmins":${jsonArr(
         m.bmins.toSeq.sortBy(_._1).map { case (b, v) => s"$b:$v" })}}"""
-    val out = hadoopFs.create(snapMetaPath(table), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    writeSidecar(snapMetaPath(table), json)
   }
 
-  private def writeSnapSchema(table: String, st: StructType): Unit = {
-    val out = hadoopFs.create(snapSchemaPath(table), true)
-    try out.write(st.json.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeSnapSchema(table: String, st: StructType): Unit =
+    writeSidecar(snapSchemaPath(table), st.json)
 
-  private def loadSnapSchema(table: String): Option[StructType] = {
-    val fs = hadoopFs
-    val p = snapSchemaPath(table)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(org.apache.spark.sql.types.DataType
-          .fromJson(new String(bytes, "UTF-8")).asInstanceOf[StructType])
-      } finally in.close()
-    }
-  }
+  private def loadSnapSchema(table: String): Option[StructType] =
+    schemaSidecar(snapSchemaPath(table))
 
   /** Write the resolved current state bucketed by the declared key into
     * the current generation dir (underscore prefix keeps it invisible to
-    * the event-log parquet listing; it is swept with its generation),
-    * register it in the session catalog, and persist the validity meta
-    * (generation + event-file fingerprint + valid-time expiry + layout)
-    * that every serve re-verifies. Called by [[compact]]. */
+    * the event-log parquet listing; it is swept with its generation) and
+    * persist the snapshot manifest (generation + manifest lvseq +
+    * per-bucket valid-time expiry + layout) that every serve re-verifies.
+    * Called by [[compact]] and the purge's repair, both of which run only
+    * once the current generation's event manifest is committed. */
   private def materializeCurrentSnapshot(table: String,
       l: TableLayout): Unit = {
+    val ev = cachedResolvedEvMeta(table)
+      .filter(_.gen == currentGen(table).getOrElse(0))
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot of '$table': no event manifest for the current " +
+          "generation"))
     val cur = Bitemporal.resolve(events(table),
       Bitemporal.TemporalSpec.Current, Bitemporal.TemporalSpec.Current)
     require(cur.columns.contains(l.key),
@@ -2134,51 +1881,28 @@ class XtDb(spark: SparkSession, val root: String) {
     // re-scans only the buckets whose boundary actually passed.
     def micros(i: java.time.Instant): Long =
       i.getEpochSecond * 1000000L + i.getNano / 1000L
-    val evFan = cachedResolvedEvMeta(table)
-      .filter(_.gen == currentGen(table).getOrElse(0))
-      .map(_.buckets).getOrElse(0)
-    val (watermark, expires, bfan, bmins) =
-      if (evFan > 0) {
-        val rows = events(table)
-          .groupBy(pmod(hash(col(IID)), lit(evFan)).cast("int").as("bk"))
-          .agg(least(
-            min(when(col(VF) > lit(nowTs), col(VF))),
-            min(when(col(VT) > lit(nowTs), col(VT)))).as("b"),
-            max(col(SF)).as("wm"))
-          .collect()
-        val mins = rows.flatMap(r =>
-          if (r.isNullAt(1)) None
-          else Some(r.getInt(0) -> micros(r.getTimestamp(1).toInstant)))
-          .toMap
-        val wm = rows.flatMap(r =>
-          if (r.isNullAt(2)) None
-          else Some(micros(r.getTimestamp(2).toInstant)))
-          .foldLeft(0L)(math.max)
-        (wm, if (mins.isEmpty) Long.MaxValue else mins.values.min,
-          evFan, mins)
-      } else {
-        val agg = events(table)
-          .select(least(
-            min(when(col(VF) > lit(nowTs), col(VF))),
-            min(when(col(VT) > lit(nowTs), col(VT)))).as("b"),
-            max(col(SF)).as("wm"))
-          .head()
-        (if (agg.isNullAt(1)) 0L else micros(agg.getTimestamp(1).toInstant),
-          if (agg.isNullAt(0)) Long.MaxValue
-          else micros(agg.getTimestamp(0).toInstant),
-          0, Map.empty[Int, Long])
-      }
-    val fs = hadoopFs
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+    val rows = events(table)
+      .groupBy(pmod(hash(col(IID)), lit(ev.buckets)).cast("int").as("bk"))
+      .agg(least(
+        min(when(col(VF) > lit(nowTs), col(VF))),
+        min(when(col(VT) > lit(nowTs), col(VT)))).as("b"),
+        max(col(SF)).as("wm"))
+      .collect()
+    val bmins = rows.flatMap(r =>
+      if (r.isNullAt(1)) None
+      else Some(r.getInt(0) -> micros(r.getTimestamp(1).toInstant)))
+      .toMap
+    val watermark = rows.flatMap(r =>
+      if (r.isNullAt(2)) None
+      else Some(micros(r.getTimestamp(2).toInstant)))
+      .foldLeft(0L)(math.max)
+    val files = hadoopFs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(f => snapEntry(s"$relDir/${f.getPath.getName}", f.getLen)).toSeq
-    val lvseq = cachedResolvedEvMeta(table)
-      .filter(_.gen == currentGen(table).getOrElse(0))
-      .map(_.lvseq).getOrElse(0)
     writeSnapSchema(table, cur.schema)
-    writeSnapMeta2(table, SnapMeta2(currentGen(table).getOrElse(0), lvseq,
-      watermark, expires, l.key, l.buckets, seq, files, prior.distinct,
-      bfan, bmins))
+    writeSnapMeta2(table, SnapMeta2(ev.gen, ev.lvseq, watermark,
+      if (bmins.isEmpty) Long.MaxValue else bmins.values.min,
+      l.key, l.buckets, seq, files, prior.distinct, ev.buckets, bmins))
     noSnapshot.remove(table)
   }
 
@@ -2223,18 +1947,18 @@ class XtDb(spark: SparkSession, val root: String) {
     * compactions. */
   private def foldSnapshot(table: String): Unit = layoutOf(table) match {
     case None => ()
-    case Some(_) if spark.conf
-        .get("spark.graft.test.failSnapshotFold", "false").toBoolean =>
-      // test knob: simulate the swallowed fold failure the purge's
-      // watermark check must repair (ADVICE r14 #3); never set in prod
-      throw new IllegalStateException(
-        "injected snapshot-fold failure (test knob)")
-    case Some(l) => readSnapMeta2(table) match {
-      case None => () // no v2 snapshot yet: the next full compact builds it
+    case Some(l) =>
+      XtDb.writePointHook(WritePoint.Fold(table))
+      readSnapMeta2(table) match {
+      case None => () // no snapshot yet: the next full compact builds it
       case Some(sm0) =>
         if (sm0.key != l.key || sm0.buckets != l.buckets) return
         val s = liveFileSets(table).getOrElse(return)
         if (s.meta.gen != sm0.gen || s.backlog.nonEmpty) return
+        // a snapshot is built against its generation's event fanout
+        if (sm0.bfan != s.meta.buckets)
+          corruptSidecar(snapMetaPath(table), "bfan is not the event fanout",
+            s"bfan=${sm0.bfan}, fanout=${s.meta.buckets}")
         val nowMicros = {
           val i = java.time.Instant.now()
           i.getEpochSecond * 1000000L + i.getNano / 1000L
@@ -2257,8 +1981,6 @@ class XtDb(spark: SparkSession, val root: String) {
         }
         val live = s.base ++ s.levelFiles
         val evFan = s.meta.buckets
-        // per-bucket boundary mins valid only when kept at THIS fanout
-        val bminsOk = sm.bfan == evFan && sm.bfan > 0
         def relOver(files: Seq[org.apache.hadoop.fs.FileStatus]) =
           (try bucketedRelation(table, files, evFan)
            catch { case scala.util.control.NonFatal(_) =>
@@ -2273,13 +1995,10 @@ class XtDb(spark: SparkSession, val root: String) {
         // event whose _valid_from/_valid_to lies in [expires, now]
         // flipped current-ness, and (round 15) it lives in a bucket
         // whose stored per-bucket boundary minimum has passed. One
-        // pushed-range scan over ONLY those buckets' files names the
-        // ids; the full-file scan remains as the legacy-meta fallback.
+        // pushed-range scan over ONLY those buckets' files names the ids.
         val crossedBuckets: Set[Int] =
           if (!expired) Set.empty
-          else if (bminsOk)
-            sm.bmins.filter(_._2 <= nowMicros).keySet
-          else live.map(f => bucketIdOf(f.getPath.getName)).toSet
+          else sm.bmins.filter(_._2 <= nowMicros).keySet
         val boundaryIds: Option[DataFrame] =
           if (!expired) None
           else {
@@ -2362,29 +2081,18 @@ class XtDb(spark: SparkSession, val root: String) {
         // `bks` = buckets whose carried min must be re-derived from their
         // FILES (a crossing consumed it); everything else carries, with
         // the delta's mins folded in bucket-wise
-        def rebucketedMins(bks: Set[Int]): (Long, Int, Map[Int, Long]) = {
-          val merged =
-            if (!bminsOk) {
-              // legacy meta / fanout change: one full upgrade recompute
-              if (live.isEmpty) Map.empty[Int, Long]
-              else perBucketMins(relOver(live))
-            } else {
-              val fresh =
-                if (bks.isEmpty) Map.empty[Int, Long]
-                else {
-                  val files = filesOfBuckets(bks)
-                  if (files.isEmpty) Map.empty[Int, Long]
-                  else perBucketMins(relOver(files))
-                }
-              val base = (sm.bmins -- bks) ++ fresh
-              deltaMins.foldLeft(base) { case (m, (b, v)) =>
-                // recomputed buckets' files already include the delta
-                if (bks.contains(b)) m
-                else m.updated(b, math.min(m.getOrElse(b, Long.MaxValue), v))
-              }
-            }
-          (if (merged.isEmpty) Long.MaxValue else merged.values.min,
-            evFan, merged)
+        def rebucketedMins(bks: Set[Int]): (Long, Map[Int, Long]) = {
+          val files = filesOfBuckets(bks)
+          val fresh =
+            if (files.isEmpty) Map.empty[Int, Long]
+            else perBucketMins(relOver(files))
+          val merged = deltaMins.foldLeft((sm.bmins -- bks) ++ fresh) {
+            case (m, (b, v)) =>
+              // recomputed buckets' files already include the delta
+              if (bks.contains(b)) m
+              else m.updated(b, math.min(m.getOrElse(b, Long.MaxValue), v))
+          }
+          (if (merged.isEmpty) Long.MaxValue else merged.values.min, merged)
         }
         val changed0 = (delta.filterNot(_ => deltaEmpty).toSeq ++
             boundaryIds.toSeq.map(identity))
@@ -2394,9 +2102,9 @@ class XtDb(spark: SparkSession, val root: String) {
           .getOrElse {
             // expired but the boundary event is gone (purged/erased):
             // just re-stamp with the recomputed expiry
-            val (e2, f2, m2) = rebucketedMins(crossedBuckets)
+            val (e2, m2) = rebucketedMins(crossedBuckets)
             writeSnapMeta2(table, sm.copy(lvseq = s.meta.lvseq,
-              expires = e2, bfan = f2, bmins = m2))
+              expires = e2, bmins = m2))
             noSnapshot.remove(table)
             return
           }
@@ -2427,9 +2135,9 @@ class XtDb(spark: SparkSession, val root: String) {
             }
           val changedCount = changedByBucket.map(_._2).sum
           if (changedCount == 0) {
-            val (e2, f2, m2) = rebucketedMins(crossedBuckets)
+            val (e2, m2) = rebucketedMins(crossedBuckets)
             writeSnapMeta2(table, sm.copy(lvseq = s.meta.lvseq,
-              watermark = newWm, expires = e2, bfan = f2, bmins = m2))
+              watermark = newWm, expires = e2, bmins = m2))
             noSnapshot.remove(table)
             return
           }
@@ -2472,34 +2180,14 @@ class XtDb(spark: SparkSession, val root: String) {
           // few iid-buckets beats a full snapshot scan), for crossed
           // valid-time boundaries (the new winner may be a pre-watermark
           // event that is in NEITHER the snapshot nor the delta), for
-          // legacy-meta upgrades, and as the verified fallback
-          // (`resolveMode=event`). Chosen by measured bytes: the pruned
-          // event read vs one snapshot scan.
+          // and as the verified fallback (`resolveMode=event`). Chosen by
+          // measured bytes: the pruned event read vs one snapshot scan.
           val resolveMode = spark.conf
             .get("spark.graft.snapshotFold.resolveMode", "auto")
           val snapSchemaOpt = loadSnapSchema(table)
-          // total snapshot bytes for the path heuristic. Legacy manifest
-          // entries without a |len suffix fall back to one getFileStatus
-          // each (ADVICE r16 #3 — silently dropping them undercounted the
-          // snapshot and could wrongly steer a small point delta onto the
-          // full-snapshot-scan path); an unstat-able entry means the
-          // snapshot scan itself would fail, so None steers to the event
-          // path.
-          def snapBytes: Option[Long] = {
-            var total = 0L
-            val it = sm.files.iterator
-            while (it.hasNext) {
-              val n = it.next()
-              val len = snapEntryLen(n)
-              val l =
-                if (len >= 0L) len
-                else try fs.getFileStatus(new org.apache.hadoop.fs.Path(
-                  s"$dd/${snapEntryPath(n)}")).getLen
-                catch { case scala.util.control.NonFatal(_) => return None }
-              total += l
-            }
-            Some(total)
-          }
+          // total snapshot bytes for the path heuristic, from the
+          // manifest's recorded lengths (zero filesystem calls)
+          def snapBytes: Long = sm.files.map(snapEntryLen).sum
           // MIXED-MODE crossings (round 17, VERDICT r16 #5): a crossed
           // valid-time boundary no longer flips the whole fold to the
           // event path — only the CROSSED buckets' ids resolve from
@@ -2518,13 +2206,12 @@ class XtDb(spark: SparkSession, val root: String) {
               snapSchemaOpt.exists(_.fields.find(_.name == l.key)
                 .exists(_.dataType == f.dataType))))
           val useSnapDelta = resolveMode != "event" &&
-            bminsOk && !deltaEmpty && delta.isDefined &&
+            !deltaEmpty && delta.isDefined &&
             snapSchemaOpt.isDefined &&
             (!expired || evKeyTypeOk) &&
             (resolveMode == "snapshot" ||
-              snapBytes.exists(sb =>
-                resolveFiles.map(_.getLen).sum >
-                  sb + crossedResolve.map(_.getLen).sum))
+              resolveFiles.map(_.getLen).sum >
+                snapBytes + crossedResolve.map(_.getLen).sum)
           var snapScan: Option[DataFrame] = None
           try {
           val (newCur, keep, touched, snapSchema) =
@@ -2669,28 +2356,28 @@ class XtDb(spark: SparkSession, val root: String) {
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
             .map(f => snapEntry(s"$outDir/${f.getPath.getName}", f.getLen))
             .toSeq
-          val (newExpires, nbfan, nbmins) = rebucketedMins(crossedBuckets)
+          val (newExpires, nbmins) = rebucketedMins(crossedBuckets)
           writeSnapSchema(table, lub)
           writeSnapMeta2(table, SnapMeta2(sm.gen, s.meta.lvseq, newWm,
             newExpires, l.key, l.buckets, sm.seq + 1,
             untouched ++ newFiles,
             retiredCarry ++ oldTouched.map(snapEntryPath),
-            nbfan, nbmins))
+            evFan, nbmins))
           noSnapshot.remove(table)
           } finally snapScan.foreach(_.unpersist())
         } finally changed.unpersist()
-    }
+      }
   }
 
   /** The bucketed current-state snapshot, iff STORAGE still vouches for
-    * it. v2 validity is STRUCTURAL: same generation, same manifest
+    * it. Validity is STRUCTURAL: same generation, same manifest
     * lvseq (every fold/purge re-stamps it), empty backlog (so a write
     * from ANY instance invalidates), declared layout unchanged, no
     * future valid-time boundary crossed — and serving is catalog-free
     * (explicit-file bucketed relation on the declared key), so a fresh
     * session/instance serves a still-valid snapshot straight from
-    * storage. v1 metas keep the legacy fingerprint + registration path.
-    * Callers fall back to live resolution on None. */
+    * storage. Callers fall back to live resolution on None; a snapshot
+    * manifest in an unknown format throws. */
   def currentSnapshotIfValid(table: String): Option[DataFrame] = {
     if (noSnapshot.contains(table)) return None
     val nowMicros = {
@@ -2706,37 +2393,20 @@ class XtDb(spark: SparkSession, val root: String) {
           case Some(s) if s.meta.gen == m.gen &&
               s.meta.lvseq == m.lvseq && s.backlog.isEmpty =>
             try {
-              val fs = hadoopFs
               val dd = dataDir(table)
-              val files = m.files.map { n =>
-                val p = new org.apache.hadoop.fs.Path(
-                  s"$dd/${snapEntryPath(n)}")
-                val len = snapEntryLen(n)
-                if (len >= 0L)
-                  // zero-RPC serve: length from the manifest (immutable
-                  // files), mtime immaterial to split/footer reading
-                  new org.apache.hadoop.fs.FileStatus(len, false, 1,
-                    128L * 1024 * 1024, 0L, p)
-                else fs.getFileStatus(p)
-              }
+              // zero-RPC serve: length from the manifest (immutable
+              // files), mtime immaterial to split/footer reading
+              val files = m.files.map(n =>
+                new org.apache.hadoop.fs.FileStatus(snapEntryLen(n), false,
+                  1, 128L * 1024 * 1024, 0L,
+                  new org.apache.hadoop.fs.Path(s"$dd/${snapEntryPath(n)}")))
               loadSnapSchema(table).map(st =>
                 bucketedRelationFor(files, m.buckets, m.key, st,
                   sortCols = Seq(m.key)))
             } catch { case scala.util.control.NonFatal(_) => None }
           case _ => None
         }
-      case None => readSnapMeta(table) match {
-        case None => noSnapshot.add(table); None
-        case Some(m) =>
-          val layoutOk = layoutOf(table)
-            .exists(l => l.key == m.key && l.buckets == m.buckets)
-          lazy val (fc, fm) = eventFingerprint(table)
-          if (!layoutOk || nowMicros >= m.expires ||
-              currentGen(table).getOrElse(0) != m.gen ||
-              fc != m.files || fm != m.mtime) None
-          else Some(attachBucketedTable(snapshotTableName(table), m.dir,
-            m.key, m.buckets))
-      }
+      case None => noSnapshot.add(table); None
     }
   }
 
@@ -3032,7 +2702,7 @@ class XtDb(spark: SparkSession, val root: String) {
           .filter { st =>
             val n = st.getPath.getName
             st.isFile && n.startsWith("_evmeta.") && n != "_evmeta.json" &&
-              (try readEvMetaAt(table, st.getPath).exists(_.gen <= m.gen)
+              (try readEvMetaAt(st.getPath).exists(_.gen <= m.gen)
                catch { case scala.util.control.NonFatal(_) => false })
           }
           .foreach(st => fs.delete(st.getPath, false))
@@ -3072,9 +2742,10 @@ class XtDb(spark: SparkSession, val root: String) {
     }
     // the erased iids' bucket ids + the newest erase's system-time. The
     // manifest already knows both (recorded at the erase append and at
-    // every fold — round 15), so the common path runs NO discovery job;
-    // the scan remains only for manifests written before the addressing
-    // existed (ebk empty with a pending clock).
+    // every fold — round 15), so the common path runs NO discovery job.
+    // The scan is the safety net for a pending clock with no addressing:
+    // a schema-flip rewrite carries the clock into a new generation (at
+    // a possibly different fanout) without any bucket ids.
     val (erased, maxEraseSf) =
       if (m.eraseBuckets.nonEmpty) {
         graft.tools.EngineMetrics.lastPurgeUsedManifest = true
@@ -3169,8 +2840,7 @@ class XtDb(spark: SparkSession, val root: String) {
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
         .toSeq
       readSnapMeta2(table)
-        .filter(sm => sm.gen == m.gen && sm.bfan == m.buckets &&
-          sm.bfan > 0 && erased.exists(sm.bmins.contains))
+        .filter(sm => sm.gen == m.gen && erased.exists(sm.bmins.contains))
         .foreach { sm =>
           val nowTs = java.sql.Timestamp.from(java.time.Instant.now())
           def us(t: java.sql.Timestamp): Long = {
@@ -3217,7 +2887,7 @@ class XtDb(spark: SparkSession, val root: String) {
     true
   }
 
-  /** Drop the v2 snapshot meta AND its data files (they may hold erased
+  /** Drop the snapshot manifest AND its data files (they may hold erased
     * payload — an invalidated snapshot must not leave orphans nothing
     * will ever sweep). Serving falls back to live resolution; the next
     * full compaction rebuilds. Last-resort path — see the purge. */
@@ -3272,19 +2942,11 @@ class XtDb(spark: SparkSession, val root: String) {
 
   private def txsGenPath = new org.apache.hadoop.fs.Path(s"$root/_txs/_gen")
 
-  private def txsGen: Option[Int] = {
-    val fs = hadoopFs
-    if (!fs.exists(txsGenPath)) None
-    else {
-      val in = fs.open(txsGenPath)
-      try {
-        val bytes = new Array[Byte](
-          fs.getFileStatus(txsGenPath).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8").trim.toInt)
-      } finally in.close()
+  private def txsGen: Option[Int] =
+    readSidecar(txsGenPath).map(_.trim).map { s =>
+      if (s.matches("\\d+")) s.toInt
+      else corruptSidecar(txsGenPath, "expected <n>", s)
     }
-  }
 
   private def txsLiveDir: String = txsGen match {
     case Some(n) => s"$root/_txs/_g$n"
@@ -3315,7 +2977,7 @@ class XtDb(spark: SparkSession, val root: String) {
     spark.read.schema(XtDb.TxLogSchema).parquet(txsLiveDir)
       .coalesce(baseFiles.toInt)
       .write.mode("overwrite").parquet(s"$root/_txs/_g$next")
-    conditionalPut(txsGenPath, next.toString.getBytes("UTF-8"), txsV,
+    conditionalPut(txsGenPath, next.toString, txsV,
       "tx-log generation pointer")
     // lazy-by-one GC: drop the generation BEFORE the one just superseded
     // (in-flight readers of the superseded one finish undisturbed)
@@ -3745,15 +3407,68 @@ object XtDb {
   val RolesLogSchema: StructType = StructType.fromDDL(
     "at TIMESTAMP, action STRING, what STRING, grantee STRING")
 
-  /** Test-only hook invoked immediately before a generation-pointer CAS
-    * (both rewrite paths) — lets a spec interleave a competing flip
-    * deterministically and pin that the loser fails LOUDLY at the CAS.
-    * A no-op in production. */
-  @volatile private[graft] var testBeforeFlipHook: () => Unit = () => ()
+  /** A named write point of the commit, fold and compaction paths —
+    * where a crash leaves storage in a distinct intermediate state. */
+  sealed trait WritePoint
+  object WritePoint {
+    /** A declared-layout snapshot fold is about to start. */
+    final case class Fold(table: String) extends WritePoint
+    /** An aligned-compaction chunk (start bucket `lo`) has landed; its
+      * progress is not yet durable. */
+    final case class ChunkLanded(table: String, lo: Int) extends WritePoint
+    /** The `landed`-th chunk of this attempt has its progress durable. */
+    final case class ChunkDurable(table: String, landed: Int)
+      extends WritePoint
+    /** A rewrite's files (and staged manifest) are written; the
+      * generation pointer is not yet flipped. */
+    final case class BeforeFlip(table: String) extends WritePoint
+    /** The aligned rewrite's pointer has flipped; `_evmeta.json` is not
+      * yet promoted. */
+    final case class BeforePromote(table: String) extends WritePoint
+  }
 
-  /** Test-only hook invoked after each aligned-compaction chunk lands
-    * (before its progress write) — lets a spec interleave a foreign
-    * sidecar write / lease takeover mid-run and pin that the owner's
-    * next write surfaces the lost lease. A no-op in production. */
-  @volatile private[graft] var testAfterChunkHook: Int => Unit = _ => ()
+  /** Called at every [[WritePoint]]. A no-op in production; a spec sets
+    * it to interleave a competing writer or to throw (an injected crash)
+    * at one point, and resets it afterwards. */
+  @volatile private[graft] var writePointHook: WritePoint => Unit = _ => ()
+
+  /** `_gen` pointer content: `<n>:<dir>`. */
+  private val GenPointer = """(\d+):(\S+)""".r
+
+  private def corruptSidecar(p: org.apache.hadoop.fs.Path, why: String,
+      text: String): Nothing =
+    throw new IllegalStateException(
+      s"corrupt or unknown-format store file $p ($why): '$text' — a store " +
+        "written by another format must be regenerated")
+
+  /** The flat JSON a sidecar writer emits, read field by field. Every
+    * field is required: a missing or malformed one throws, naming the
+    * file. */
+  private final class SidecarJson(p: org.apache.hadoop.fs.Path, text: String) {
+    def corrupt(why: String): Nothing = corruptSidecar(p, why, text)
+    private def field(k: String, value: String): String =
+      (s""""$k"\\s*:\\s*$value""").r.findFirstMatchIn(text)
+        .map(_.group(1)).getOrElse(corrupt(s"""no "$k" field"""))
+    def toLong(v: String): Long =
+      v.trim.toLongOption.getOrElse(corrupt(s"'$v' is not a number"))
+    def toInt(v: String): Int =
+      v.trim.toIntOption.getOrElse(corrupt(s"'$v' is not a number"))
+    def long(k: String): Long = toLong(field(k, "(-?\\d+)"))
+    def int(k: String): Int = toInt(field(k, "(-?\\d+)"))
+    def str(k: String): String = field(k, "\"([^\"]*)\"")
+    def strs(k: String): Seq[String] =
+      "\"([^\"]*)\"".r.findAllMatchIn(field(k, "\\[([^\\]]*)\\]"))
+        .map(_.group(1)).toSeq
+    def ints(k: String): Set[Int] =
+      field(k, "\\[([^\\]]*)\\]").split(",").filter(_.trim.nonEmpty)
+        .map(toInt).toSet
+    /** `"k":["a:b",…]` entries, split at the first ':'. */
+    def pairs(k: String): Seq[(String, String)] = strs(k).map { e =>
+      val i = e.indexOf(':')
+      if (i <= 0) corrupt(s"$k entry '$e' is not <key>:<value>")
+      (e.substring(0, i), e.substring(i + 1))
+    }
+    def requireVersion(v: Int): Unit =
+      if (long("v") != v) corrupt(s"format version is not $v")
+  }
 }

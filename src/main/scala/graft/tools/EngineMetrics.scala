@@ -107,21 +107,19 @@ object EngineMetrics {
       // storage-maintenance gauges (round 13): uncompacted backlog files,
       // live level dirs and bucketed-base tables across the store — the
       // operator-facing face of the incremental-compaction machinery
-      // (metadata-only listings, same measures the policy itself reads)
+      // (metadata-only listings, same measures the policy itself reads).
+      // A damaged store fails the snapshot, never reads as an idle one.
       val (backlog, levels, bucketedTables) =
-        try {
-          d.tables.map(d.storageStats).foldLeft((0L, 0L, 0L)) {
-            case ((b, l, n), (lag, lv, _, buckets)) =>
-              (b + lag, l + lv, n + (if (buckets > 0) 1L else 0L))
-          }
-        } catch { case _: Exception => (0L, 0L, 0L) }
+        d.tables.map(d.storageStats).foldLeft((0L, 0L, 0L)) {
+          case ((b, l, n), (lag, lv, _, buckets)) =>
+            (b + lag, l + lv, n + (if (buckets > 0) 1L else 0L))
+        }
       // the GDPR clock: tables carrying an unpurged erase (the purge
       // fires at spark.graft.erasePurge.maxCycles — this should read 0
       // in steady state; a stuck nonzero means maintenance is not
       // running)
       val erasePending =
-        try d.tables.count(t => d.erasePendingCycles(t) > 0).toLong
-        catch { case _: Exception => 0L }
+        d.tables.count(t => d.erasePendingCycles(t) > 0).toLong
       Seq("txs_committed" -> committed, "txs_aborted" -> aborted,
         "tables" -> d.tables.length.toLong,
         "event_backlog_files" -> backlog,

@@ -1,5 +1,6 @@
 package graft
 
+import graft.WritePoints._
 import graft.bitemporal.XtDb
 import graft.plans.Explain
 import graft.tools.EngineMetrics
@@ -88,10 +89,10 @@ class AlignedCompactionSpec extends AnyFunSuite {
       assert(db.compactIncremental("r"))
       val expect = db.asOf("r").count()
 
-      spark.conf.set("spark.graft.test.failAfterChunks", "2")
-      val crash = intercept[IllegalStateException] { db.compact("r") }
+      val crash = intercept[IllegalStateException] {
+        crashAt(afterChunks(2))(db.compact("r"))
+      }
       assert(crash.getMessage.contains("injected"))
-      spark.conf.unset("spark.graft.test.failAfterChunks")
 
       // crashed mid-merge: pointer NOT flipped, reads correct on old gen
       assert(db.dataDir("r") === gen1,
@@ -125,7 +126,6 @@ class AlignedCompactionSpec extends AnyFunSuite {
       assert(Explain.report(db.asOf("r")).shuffleExchanges === 0)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.test.failAfterChunks")
     }
   }
 
@@ -141,9 +141,9 @@ class AlignedCompactionSpec extends AnyFunSuite {
       db.compact("s")
       db.putDocs("s", spark.range(501, 521).selectExpr("id AS _id", "id AS v"))
       assert(db.compactIncremental("s"))
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("s") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("s"))
+      }
       // new data lands and folds — the crashed attempt's inputs are stale
       db.putDocs("s", spark.range(521, 541).selectExpr("id AS _id", "id AS v"))
       assert(db.compactIncremental("s"))
@@ -153,7 +153,6 @@ class AlignedCompactionSpec extends AnyFunSuite {
       assert(db.asOf("s").select(max(col("_id"))).as[Long].head() === 540L)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.test.failAfterChunks")
     }
   }
 

@@ -1,6 +1,8 @@
 package graft
 
+import graft.WritePoints._
 import graft.bitemporal.XtDb
+import graft.bitemporal.XtDb.WritePoint
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,9 +67,7 @@ class CommitOrderSpec extends AnyFunSuite {
     val metaBefore = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"${db.root}/t/_evmeta.json")), "UTF-8")
 
-    spark.conf.set("spark.graft.test.failBeforePointerFlip", "true")
-    try intercept[IllegalStateException] { db.compact("t") }
-    finally spark.conf.unset("spark.graft.test.failBeforePointerFlip")
+    intercept[IllegalStateException] { crashAt(beforeFlip)(db.compact("t")) }
 
     // the pointer never flipped and `_evmeta.json` is BYTE-IDENTICAL:
     // the old generation's live set (levels + consumed exclusions) is
@@ -97,9 +97,9 @@ class CommitOrderSpec extends AnyFunSuite {
     val expect = levelsAndLeases(db, "t")
     val gen1 = db.dataDir("t")
 
-    spark.conf.set("spark.graft.test.failBeforePromote", "true")
-    try intercept[IllegalStateException] { db.compact("t") }
-    finally spark.conf.unset("spark.graft.test.failBeforePromote")
+    intercept[IllegalStateException] {
+      crashAt(beforePromote)(db.compact("t"))
+    }
 
     // pointer flipped; _evmeta.json still describes the OLD generation;
     // the staged manifest must carry the reads
@@ -140,9 +140,9 @@ class CommitOrderSpec extends AnyFunSuite {
       db.putDocs("s", spark.range(1001, 1051)
         .selectExpr("id AS _id", "id AS v"))
       assert(db.compactIncremental("s"))
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("s") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("s"))
+      }
       // ops lowers the chunk size before retrying — the wide chunk c0
       // (buckets 0-7) is already on disk; a naive resume at stride 4
       // would skip lo=0 but rewrite buckets 4-7 again under c4
@@ -156,7 +156,6 @@ class CommitOrderSpec extends AnyFunSuite {
       assert(db.asOf("s").select(max(col("_id"))).as[Long].head() === 1050L)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.test.failAfterChunks")
     }
   }
 
@@ -274,9 +273,9 @@ class CommitOrderSpec extends AnyFunSuite {
       // crash after chunk 1: a GRACEFUL failure releases the attempt
       // lease on the way out (quick restarts resume immediately; only a
       // hard kill leaves the lease to age)
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("r") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("r"))
+      }
       val scPath = java.nio.file.Paths.get(
         s"${db.root}/r/_compact_progress.json")
       val sc0 = new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8")
@@ -311,16 +310,14 @@ class CommitOrderSpec extends AnyFunSuite {
       // winner's lazy GC's to collect — the doomed attempt fails
       // loudly at its own CAS either way)
       @volatile var atFlip: Option[(Boolean, Long, String)] = None
-      graft.bitemporal.XtDb.testBeforeFlipHook = () => {
+      withHook { case _: WritePoint.BeforeFlip =>
         val sc = new String(
           java.nio.file.Files.readAllBytes(scPath), "UTF-8")
         atFlip = Some((java.nio.file.Files.exists(c0),
           if (java.nio.file.Files.exists(c0))
             java.nio.file.Files.list(c0).count() else -1L,
           sc))
-      }
-      try db.compact("r")
-      finally graft.bitemporal.XtDb.testBeforeFlipHook = () => ()
+      }(db.compact("r"))
       assert(db.asOf("r").count() === 1050L)
       val committedDir = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"${db.root}/r/_gen")), "UTF-8")
@@ -339,9 +336,9 @@ class CommitOrderSpec extends AnyFunSuite {
       db.putDocs("r", spark.range(1051, 1101)
         .selectExpr("id AS _id", "id AS v"))
       assert(db.compactIncremental("r"))
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("r") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("r"))
+      }
       rewriteSidecar("foreign-dead-attempt", 1L)
       val dir2 = """"dir"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(
         new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8"))
@@ -370,9 +367,9 @@ class CommitOrderSpec extends AnyFunSuite {
       db.putDocs("r", spark.range(1101, 1151)
         .selectExpr("id AS _id", "id AS v"))
       assert(db.compactIncremental("r"))
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("r") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("r"))
+      }
       val dir3 = """"dir"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(
         new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8"))
         .get.group(1)
@@ -384,17 +381,15 @@ class CommitOrderSpec extends AnyFunSuite {
       val d3 = java.nio.file.Paths.get(s"${db.root}/r/$dir3")
       assert(java.nio.file.Files.exists(d3))
       @volatile var d3AtFlip = false
-      graft.bitemporal.XtDb.testBeforeFlipHook =
-        () => d3AtFlip = java.nio.file.Files.exists(d3)
-      try db.compact("r")
-      finally graft.bitemporal.XtDb.testBeforeFlipHook = () => ()
+      withHook { case _: WritePoint.BeforeFlip =>
+        d3AtFlip = java.nio.file.Files.exists(d3)
+      }(db.compact("r"))
       assert(d3AtFlip,
         "a LIVE foreign attempt's dir must not be deleted by the " +
           "stale-progress cleanup, even when its fingerprint mismatches")
       assert(db.asOf("r").count() === 1200L)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.test.failAfterChunks")
     }
   }
 
@@ -421,27 +416,24 @@ class CommitOrderSpec extends AnyFunSuite {
       // the background timer (period = lease/3) must have refreshed it
       @volatile var hbAge: Long = Long.MaxValue
       @volatile var fired = false
-      graft.bitemporal.XtDb.testAfterChunkHook = _ =>
-        if (!fired) {
-          fired = true
-          Thread.sleep(1800)
-          // the background timer REWRITES the sidecar concurrently and a
-          // plain-FS write is not atomic — retry a torn/mid-write read
-          // (reading later only sees a FRESHER heartbeat, so the age
-          // bound below stays meaningful)
-          var hb: Option[Long] = None
-          val deadline = System.currentTimeMillis() + 2000
-          while (hb.isEmpty && System.currentTimeMillis() < deadline) {
-            val sc = new String(
-              java.nio.file.Files.readAllBytes(scPath), "UTF-8")
-            hb = """"hb"\s*:\s*(-?\d+)""".r.findFirstMatchIn(sc)
-              .map(_.group(1).toLong)
-            if (hb.isEmpty) Thread.sleep(20)
-          }
-          hbAge = System.currentTimeMillis() - hb.get
+      withHook { case _: WritePoint.ChunkLanded if !fired =>
+        fired = true
+        Thread.sleep(1800)
+        // the background timer REWRITES the sidecar concurrently and a
+        // plain-FS write is not atomic — retry a torn/mid-write read
+        // (reading later only sees a FRESHER heartbeat, so the age
+        // bound below stays meaningful)
+        var hb: Option[Long] = None
+        val deadline = System.currentTimeMillis() + 2000
+        while (hb.isEmpty && System.currentTimeMillis() < deadline) {
+          val sc = new String(
+            java.nio.file.Files.readAllBytes(scPath), "UTF-8")
+          hb = """"hb"\s*:\s*(-?\d+)""".r.findFirstMatchIn(sc)
+            .map(_.group(1).toLong)
+          if (hb.isEmpty) Thread.sleep(20)
         }
-      try db.compact("h")
-      finally graft.bitemporal.XtDb.testAfterChunkHook = _ => ()
+        hbAge = System.currentTimeMillis() - hb.get
+      }(db.compact("h"))
       assert(fired)
       // refreshed-on-chunk-commit-only would leave the heartbeat at
       // least sleep(1800ms) + chunk-0-job-duration old here; the
@@ -455,7 +447,6 @@ class CommitOrderSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
       spark.conf.unset("spark.graft.fullCompact.ownerLeaseMs")
-      graft.bitemporal.XtDb.testAfterChunkHook = _ => ()
     }
   }
 

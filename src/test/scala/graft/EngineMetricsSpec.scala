@@ -84,5 +84,17 @@ class EngineMetricsSpec extends AnyFunSuite {
     intercept[Exception](metric("txs_committed"))
     assert(graft.tools.EngineMetrics.prometheusBody(spark, Some(db))
       .startsWith("# scrape failed"))
+    // nor may a damaged event manifest read as an idle table's gauges
+    java.nio.file.Files.delete(root.resolve("_txs").resolve("damaged.parquet"))
+    db.compact("ml")
+    assert(metric("event_backlog_files") == 0L)
+    val meta = root.resolve("ml").resolve("_evmeta.json")
+    val js = java.nio.file.Files.readAllBytes(meta)
+    java.nio.file.Files.deleteIfExists(
+      root.resolve("ml").resolve("._evmeta.json.crc"))
+    java.nio.file.Files.write(meta, js.take(js.length / 2))
+    intercept[Exception](eng.sql("SELECT * FROM xt_metrics").collect())
+    assert(graft.tools.EngineMetrics.prometheusBody(spark, Some(db))
+      .startsWith("# scrape failed"))
   }
 }

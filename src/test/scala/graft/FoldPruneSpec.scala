@@ -1,5 +1,6 @@
 package graft
 
+import graft.WritePoints._
 import graft.bitemporal.XtDb
 import graft.tools.EngineMetrics
 import org.apache.spark.sql.SparkSession
@@ -153,10 +154,10 @@ class FoldPruneSpec extends AnyFunSuite {
 
     // every snapshot fold FAILS (swallowed, as in prod) while the erase
     // lands and folds — the snapshot watermark now predates the erase
-    spark.conf.set("spark.graft.test.failSnapshotFold", "true")
-    db.eraseDocs("w", Seq(Tuple1(77L)).toDF("_id"))
-    assert(db.compactIncremental("w"))
-    spark.conf.unset("spark.graft.test.failSnapshotFold")
+    crashAt(snapshotFold) {
+      db.eraseDocs("w", Seq(Tuple1(77L)).toDF("_id"))
+      assert(db.compactIncremental("w"))
+    }
 
     // the purge detects watermark < max erase _system_from and folds
     // first — the re-stamp can no longer resurrect the erased row
@@ -184,8 +185,7 @@ class FoldPruneSpec extends AnyFunSuite {
       .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
         s"CASE WHEN id = 55 THEN '$secret' ELSE concat('r', id) END AS data"))
     db.compact("x")
-    spark.conf.set("spark.graft.test.failSnapshotFold", "true")
-    try {
+    crashAt(snapshotFold) {
       db.eraseDocs("x", Seq(Tuple1(55L)).toDF("_id"))
       assert(db.compactIncremental("x"))
       // fold still failing: the purge rebuilds the snapshot from the
@@ -196,7 +196,7 @@ class FoldPruneSpec extends AnyFunSuite {
       assert(snap.get.filter(col("_id") === 55L).isEmpty,
         "the erased row must NOT survive the rebuild")
       assert(snap.get.count() === 999L)
-    } finally spark.conf.unset("spark.graft.test.failSnapshotFold")
+    }
     // payload physically dies within the lease bound
     db.compactIfLagged("x", 5); db.compactIfLagged("x", 5)
     db.compactIfLagged("x", 5)
@@ -387,12 +387,11 @@ class FoldPruneSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$dd/$n")))
     assert(allExist(before))
     // force the purge's mid-generation REBUILD path (fold kept failing)
-    spark.conf.set("spark.graft.test.failSnapshotFold", "true")
-    try {
+    crashAt(snapshotFold) {
       db.eraseDocs("f", Seq(Tuple1(7L)).toDF("_id"))
       assert(db.compactIncremental("f"))
       assert(db.purgeErasedBuckets("f"))
-    } finally spark.conf.unset("spark.graft.test.failSnapshotFold")
+    }
     val after = metaFiles()
     assert(after.nonEmpty && allExist(after),
       s"rebuilt manifest must reference only existing files: $after")

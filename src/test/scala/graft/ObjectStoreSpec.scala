@@ -1,6 +1,8 @@
 package graft
 
+import graft.WritePoints._
 import graft.bitemporal.{Bitemporal, TxOp, XtDb}
+import graft.bitemporal.XtDb.WritePoint
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -333,22 +335,16 @@ class ObjectStoreSpec extends AnyFunSuite {
     // attempt runs under a different unique dir (A's in-flight inputs no
     // longer match), so no file of A's attempt is ever mixed into B's
     var fired = false
-    XtDb.testBeforeFlipHook = () => {
-      if (!fired) {
+    val e = intercept[java.util.ConcurrentModificationException] {
+      withHook { case _: WritePoint.BeforeFlip if !fired =>
         fired = true
-        XtDb.testBeforeFlipHook = () => ()
         b.putDocs("docs", Seq((999L, 1998L)).toDF("_id", "v"))
         assert(b.compactIncremental("docs"))
         b.compact("docs")
-      }
+      }(a.compact("docs"))
     }
-    try {
-      val e = intercept[java.util.ConcurrentModificationException] {
-        a.compact("docs")
-      }
-      assert(e.getMessage.contains("lost commit race"),
-        s"loser must fail loudly at the CAS: ${e.getMessage}")
-    } finally XtDb.testBeforeFlipHook = () => ()
+    assert(e.getMessage.contains("lost commit race"),
+      s"loser must fail loudly at the CAS: ${e.getMessage}")
 
     // B won: the live generation is B's unique dir, complete and correct
     // (including B's row); A's mutation is fully abandoned
@@ -383,9 +379,9 @@ class ObjectStoreSpec extends AnyFunSuite {
       db.putDocs("docs", spark.range(1001, 1051)
         .select(col("id").as("_id"), (col("id") * 2).as("v")))
       assert(db.compactIncremental("docs"))
-      spark.conf.set("spark.graft.test.failAfterChunks", "1")
-      intercept[IllegalStateException] { db.compact("docs") }
-      spark.conf.unset("spark.graft.test.failAfterChunks")
+      intercept[IllegalStateException] {
+        crashAt(afterChunks(1))(db.compact("docs"))
+      }
       // stamp a FOREIGN owner with an ancient heartbeat (the graceful
       // release left owner empty — craft the dead-foreign artifact)
       val scP = new org.apache.hadoop.fs.Path(
@@ -421,7 +417,6 @@ class ObjectStoreSpec extends AnyFunSuite {
         .filter(col("count") > 1).count() === 0L)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.test.failAfterChunks")
     }
   }
 
@@ -447,8 +442,8 @@ class ObjectStoreSpec extends AnyFunSuite {
       // "foreign compactor" overwrites the sidecar — any PUT bumps the
       // object version, so the owner's chained CAS must lose
       @volatile var fired = false
-      graft.bitemporal.XtDb.testAfterChunkHook = _ =>
-        if (!fired) {
+      val e = intercept[IllegalStateException] {
+        withHook { case _: WritePoint.ChunkLanded if !fired =>
           fired = true
           val foreign =
             """{"gen":99,"buckets":16,"fp":"x","chunk":8,"dir":"gX",""" +
@@ -458,9 +453,8 @@ class ObjectStoreSpec extends AnyFunSuite {
           val out = fs.create(scP, true)
           try out.write(foreign.getBytes("UTF-8"))
           finally out.close()
-        }
-      val e = try intercept[IllegalStateException] { db.compact("docs") }
-        finally graft.bitemporal.XtDb.testAfterChunkHook = _ => ()
+        }(db.compact("docs"))
+      }
       assert(fired)
       assert(e.getMessage.contains("lost its attempt lease"),
         s"the chain break must surface as a lost lease: ${e.getMessage}")
@@ -472,7 +466,6 @@ class ObjectStoreSpec extends AnyFunSuite {
         .filter(col("count") > 1).count() === 0L)
     } finally {
       spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      graft.bitemporal.XtDb.testAfterChunkHook = _ => ()
     }
   }
 }

@@ -8,12 +8,15 @@ import scala.jdk.CollectionConverters._
 /** Source guard for the one SQL surface: sessions are built only by
   * `GraftSession`, and optimizer rules are installed only by
   * `GraftExtensions` — never appended to a live session, where which
-  * rules a plan gets would depend on what ran before. */
+  * rules a plan gets would depend on what ran before. Fault injection
+  * goes through the store's one write-point hook, never a user-settable
+  * option. */
 class SessionSurfaceSpec extends AnyFunSuite {
 
   // split so this file does not match its own patterns
   private val builderCall = "SparkSession" + ".builder("
   private val extraRules = "extra" + "Optimizations"
+  private val testConf = "spark.graft." + "test."
 
   private lazy val sources: Seq[(Path, String)] = {
     val src = Paths.get(sys.props("user.dir"), "src")
@@ -38,5 +41,12 @@ class SessionSurfaceSpec extends AnyFunSuite {
   test("no source touches the session's extra optimizations") {
     val bad = offenders(extraRules, _ => false)
     assert(bad.isEmpty, s"install rules through GraftExtensions: $bad")
+  }
+
+  test("production code reads no test-only option") {
+    val main = Paths.get(sys.props("user.dir"), "src", "main")
+    val bad = offenders(testConf, !_.startsWith(main))
+    assert(bad.isEmpty,
+      s"inject faults through XtDb.writePointHook, not a conf key: $bad")
   }
 }

@@ -69,47 +69,6 @@ class XtDbStorageSpec extends AnyFunSuite {
     assert(db.history("items").filter(col("_id") === 5L).count() >= 2)
   }
 
-  test("pre-round-12 legacy `_bucket=` partition layout: the first write " +
-      "migrates it into a bucketed generation instead of mixing flat " +
-      "files into a partitioned directory") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("xtlegacy").toString
-    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    // simulate the old storage shape: events dir-partitioned by _bucket
-    val ev = Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("_id", "v")
-      .withColumn("_iid", graft.functions.Ids.iidHex(col("_id")))
-      .withColumn("_valid_from", lit(ts))
-      .withColumn("_valid_to", lit(null).cast("timestamp"))
-      .withColumn("_system_from", lit(ts))
-      .withColumn("_seq", lit(0L))
-      .withColumn("_op", lit("put"))
-      .withColumn("_bucket", substring(col("_iid"), 1, 1))
-    ev.write.partitionBy("_bucket").parquet(s"$root/legacy")
-    assert(new java.io.File(s"$root/legacy").listFiles
-      .exists(_.getName.startsWith("_bucket=")), "fixture sanity")
-
-    val db = new graft.bitemporal.XtDb(spark, root)
-    assert(graft.bitemporal.Bitemporal.current(db.events("legacy"))
-      .count() == 3, "legacy layout must read as-is")
-    // the write that would have mixed a flat file into the partitioned
-    // dir migrates first (one-time rewrite into a bucketed generation)
-    db.putDocs("legacy", Seq((4L, 40L)).toDF("_id", "v"))
-    val cur = graft.bitemporal.Bitemporal.current(db.events("legacy"))
-      .select("_id", "v").as[(Long, Long)].collect().toMap
-    assert(cur == Map(1L -> 10L, 2L -> 20L, 3L -> 30L, 4L -> 40L))
-    // live data dir is a generation now; no partition dirs left in it
-    assert(db.dataDir("legacy").contains("/g"),
-      "migration must flip to a generation dir")
-    assert(!new java.io.File(db.dataDir("legacy")).listFiles
-      .exists(_.getName.startsWith("_bucket=")),
-      "the live generation must not contain legacy partition dirs")
-    // and subsequent writes/reads behave like any round-12 table
-    db.compact("legacy")
-    assert(db.bucketedEventsIfValid("legacy").isDefined)
-    assert(graft.bitemporal.Bitemporal.current(db.events("legacy"))
-      .count() == 4)
-  }
-
   test("event serving is CATALOG-FREE (round 13): no graft_ev_* " +
       "registration exists to go stale — a generation flip by another " +
       "instance is picked up from the storage manifest alone") {
