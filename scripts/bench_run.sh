@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run graft.Bench directly with java (no sbt startup): one invocation, one
-# JSON line on stdout. Knobs via SPARK_GRAFT_* env vars. Usage:
+# JSON line on stdout. Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS. Usage:
 #   scripts/bench_run.sh [outfile]
 # Compile first with `sbt compile`.
 cd "$(dirname "$0")/.." || exit 1

@@ -35,7 +35,7 @@ object Bench {
   }
 
   /** Total on-disk size of the driver tables, in MB — the input to the
-    * size-derived execution policy (shared with tools.NodeTimes). */
+    * size-derived execution policy. */
   def inputMb(sfDir: String): Long =
     Tables.all.map(tableBytes(sfDir, _)).sum / (1024 * 1024)
 
@@ -47,21 +47,8 @@ object Bench {
   /** One-time ingest of the driver parquet into a size-proportional
     * multi-file layout (~1.5 MB/file, small tables stay whole) under a
     * temp dir that a shutdown hook removes recursively (File.deleteOnExit
-    * is a no-op on non-empty directories). Shared with tools.NodeTimes.
-    *
-    * `bucketedFacts`: additionally write lineitem + orders CO-BUCKETED on
-    * the orderkey (same bucket count, one file per bucket, sorted within)
-    * and register them in the session catalog — every
-    * lineitem⋈orders join then plans with ZERO exchange on the fact
-    * side (Catalyst recognizes the matching HashPartitioning from the
-    * bucket spec). This is the write-once/join-forever layout a 100 TB
-    * deployment uses for its dominant join key; the flat layout re-pays
-    * that shuffle per query. The declaration is persisted as a
-    * LayoutCatalog sidecar in the ingest directory, so Tables.load
-    * routes these two names through the catalog bucketed tables —
-    * scoped to this directory, in this session or any later one. */
-  def ingestLayout(spark: SparkSession, sfDir: String, cpus: Int,
-      bucketedFacts: Boolean = false, analyze: Boolean = false): String = {
+    * is a no-op on non-empty directories). */
+  def ingestLayout(spark: SparkSession, sfDir: String, cpus: Int): String = {
     val dst = java.nio.file.Files.createTempDirectory("graft_bench_store")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(f: java.io.File): Unit = {
@@ -70,36 +57,55 @@ object Bench {
       }
       rm(dst.toFile)
     }, "graft-bench-store-cleanup"))
-    val bucketKeys = Map("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
     Tables.all.foreach { t =>
       // file count ∝ bytes (~1.5 MB each, capped at cpu count): big
       // tables decode in parallel, small tables stay one file — a
       // 32-way split of a 0.5 MB table is 32 tasks of pure overhead
       val files = math.max(1L, math.min(cpus.toLong,
         tableBytes(sfDir, t) / (1500L * 1024))).toInt
-      if (bucketedFacts && bucketKeys.contains(t)) {
-        // same bucket count on BOTH fact tables (co-location contract);
-        // LayoutCatalog persists the declaration as a sidecar in dst, so
-        // Tables.load routes through the registered bucketed table — in
-        // this session and in any later one over the same directory
-        graft.storage.LayoutCatalog.ingestBucketed(spark,
-          Tables.load(spark, sfDir, t), dst.toString,
-          graft.storage.LayoutCatalog.Layout(t, bucketKeys(t), cpus,
-            s"bucketed_$t"))
-      } else
-        Tables.load(spark, sfDir, t)
-          .repartition(files)
-          .write.mode("overwrite").parquet(s"$dst/$t.parquet")
-    }
-    // write-time ANALYZE: stats ride with the table (the reference indexes
-    // HLL + min/max at ingest the same way) — join reorder gets NDVs and
-    // the interval-join horizon goes fully job-free for these tables
-    if (analyze) Tables.all.foreach { t =>
-      val path = if (bucketedFacts && bucketKeys.contains(t))
-        s"$dst/bucketed_$t" else s"$dst/$t.parquet"
-      graft.plans.StatsSidecar.analyze(spark, path)
+      Tables.load(spark, sfDir, t)
+        .repartition(files)
+        .write.mode("overwrite").parquet(s"$dst/$t.parquet")
     }
     dst.toString
+  }
+
+  /** Best-of-N hot runs (DuckDB baseline is best-of-3; N=7 here because
+    * virtualized hosts show transient multi-second hypervisor stalls — the
+    * min is the steady-state engine number, the stalls are not). */
+  private val HotRuns = 7
+
+  /** Quiet-run protocol thresholds: an attempt whose timed section met
+    * more steal ticks than this re-runs its hot passes after a backoff,
+    * up to the attempt cap. */
+  private val StealMax = 500L
+  private val MaxAttempts = 3
+  private val BackoffSec = 20
+
+  /** The one writer for Bench's JSON artifact. A value is a Double
+    * (printed with 3 decimals), a Long/Int, a Boolean, a String, a
+    * [[Json.Obj]] (keys kept in order) or a Seq (an array). */
+  private object Json {
+    final case class Obj(fields: Seq[(String, Any)])
+
+    def render(v: Any): String = v match {
+      case d: Double => f"$d%.3f"
+      case n @ (_: Long | _: Int | _: Boolean) => n.toString
+      case s: String => quote(s)
+      case o: Obj => o.fields
+        .map { case (k, x) => s"${quote(k)}:${render(x)}" }
+        .mkString("{", ",", "}")
+      case xs: Seq[_] => xs.map(render).mkString("[", ",", "]")
+      case other => throw new IllegalArgumentException(
+        s"no JSON form for ${other.getClass.getName}")
+    }
+
+    private def quote(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
   }
 
   def main(args: Array[String]): Unit = {
@@ -121,11 +127,6 @@ object Bench {
     //    on a 17 MB shuffle is pure per-task overhead; at sf10+ the cap
     //    engages and the AQE branch owns partition sizing via Spark's
     //    64 MB advisory (coalescing keeps cpu-count parallelism).
-    val cache = sys.env.getOrElse("SPARK_GRAFT_CACHE", "false").toBoolean
-    // best-of-N hot runs (DuckDB baseline is best-of-3; N=7 here because
-    // this VM shows transient multi-second hypervisor stalls — the min is
-    // the steady-state engine number, the stalls are not)
-    val hotRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "7").toInt
     val spark = GraftSession.builder(cpus, Some(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warm-up: JIT + parquet footers, so cold timings reflect the
@@ -144,27 +145,9 @@ object Bench {
     // into its own trie storage before its benchmarks — SURVEY §3) owns
     // its storage layout. So Bench ingests once, untimed, into a
     // cpu-count-file layout of the SAME rows, and measures steady-state
-    // reads from it. Disable with SPARK_GRAFT_INGEST=false to measure the
-    // raw driver files.
-    val ingest = sys.env.getOrElse("SPARK_GRAFT_INGEST", "true").toBoolean
-    // SPARK_GRAFT_LAYOUT=bucketed co-buckets lineitem+orders on orderkey
-    // at ingest (zero-exchange fact joins); default "flat" is the shipped
-    // multi-file layout — BASELINE.md carries the measured 25× comparison
-    val layout = sys.env.getOrElse("SPARK_GRAFT_LAYOUT", "flat")
-    // SPARK_GRAFT_ANALYZE=true writes stats sidecars at ingest (untimed) —
-    // opt-in so headline numbers stay comparable across rounds
-    val analyze = sys.env.getOrElse("SPARK_GRAFT_ANALYZE", "false").toBoolean
-    val dataDir =
-      if (ingest) ingestLayout(spark, sfDir, cpus,
-        bucketedFacts = layout == "bucketed", analyze = analyze)
-      else sfDir
-    Tables.all.foreach { t =>
-      val df = Tables.load(spark, dataDir, t)
-      // cache(): later Tables.load plans canonically match the cached
-      // relation, so CacheManager substitutes the in-memory columnar scan
-      if (cache) { df.cache(); df.count() }
-      else df.limit(1).collect()
-    }
+    // reads from it.
+    val dataDir = ingestLayout(spark, sfDir, cpus)
+    Tables.all.foreach(t => Tables.load(spark, dataDir, t).limit(1).collect())
 
     // a query that throws has no time: it is named in the artifact's
     // "failed" list and the run exits non-zero after printing
@@ -180,9 +163,9 @@ object Bench {
     }
     // best of N steady-state repeats; None once any repeat fails
     def best(name: String)(f: => Unit): Option[Double] = {
-      val ts = Iterator.fill(hotRuns)(time(name)(f))
+      val ts = Iterator.fill(HotRuns)(time(name)(f))
         .takeWhile(_.isDefined).flatten.toSeq
-      if (ts.length == hotRuns) Some(ts.min) else None
+      if (ts.length == HotRuns) Some(ts.min) else None
     }
 
     /** Hypervisor steal ticks from /proc/stat's aggregate cpu line (field
@@ -197,10 +180,6 @@ object Bench {
       } catch { case _: Throwable => -1L }
     val steal0 = stealTicks()
 
-    // optional comma-separated name filter for local iteration (driver
-    // runs never set it)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     // Hot runs execute PREPARED: the analyzed+optimized logical plan is
     // cached per query (PlanCache — the reference's Caffeine plan+emit
     // cache analogue, query.clj:305-328, which caches the *compiled* plan)
@@ -210,16 +189,12 @@ object Bench {
     // PREPARE'd statement in the reference or DuckDB — while the earlier
     // concern (re-collecting the same Dataset skips whole stages via
     // shuffle reuse) does not apply to a fresh execution.
-    val prepared = sys.env.getOrElse("SPARK_GRAFT_PREPARED", "true").toBoolean
     // cold = first run (planning + codegen + execution); hot = best of N
     // steady-state repeats — mirrors the DuckDB baseline's best-of-3
     val benchDefs = SparkEntry.all.filter(_.bench)
-      .filter(d => only.forall(_.contains(d.name)))
     def headlineHot(d: QueryDef): Option[Double] = best(d.name) {
-      if (prepared)
-        PlanCache.prepared(spark, (dataDir, d.name))(d.fn(spark, dataDir))
-          .collect()
-      else d.fn(spark, dataDir).collect()
+      PlanCache.prepared(spark, (dataDir, d.name))(d.fn(spark, dataDir))
+        .collect()
     }
     val results = benchDefs.flatMap { d =>
       for (cold <- time(d.name)(d.fn(spark, dataDir).collect());
@@ -239,15 +214,13 @@ object Bench {
     // The bucketing shuffle is paid once at ingest (reported untimed as
     // bucketed_prep); every posture query is verified row-equal to its
     // flat twin (count + order-independent xxhash64 sum) before timing.
-    val posture2 = sys.env.getOrElse("SPARK_GRAFT_POSTURE2", "true").toBoolean
-    def fmt2(v: Double) = f"$v%.3f"
-    // posture hot-run closures + attempt-1 hots + JSON builder, exposed
+    // posture hot-run closures + attempt-1 hots + JSON fields, exposed
     // for the quiet-run retry passes (VERDICT r16 #4) — set inside the
     // posture block below
     var postureHot: Seq[(String, () => Option[Double])] = Nil
     var postureHots1: Seq[(String, Double)] = Nil
-    var postureFragment: Seq[(String, Double)] => String = _ => ""
-    if (posture2) try {
+    var postureFields: Seq[(String, Double)] => Seq[(String, Any)] = _ => Nil
+    try {
       import org.apache.spark.sql.functions._
       import graft.bitemporal.Bitemporal
       val prep0 = System.nanoTime()
@@ -293,8 +266,7 @@ object Bench {
       // incomparable with the headline cold numbers
       def hotOf(n: String, f: () => org.apache.spark.sql.DataFrame)
           : Option[Double] = best(s"bucketed/$n") {
-        if (prepared) PlanCache.prepared(spark, (dstB, n))(f()).collect()
-        else f().collect()
+        PlanCache.prepared(spark, (dstB, n))(f()).collect()
       }
       val bres = bdefs.flatMap { case (n, f) =>
         for (cold <- time(s"bucketed/$n")(f().collect()); hot <- hotOf(n, f))
@@ -307,22 +279,18 @@ object Bench {
         if (!ok) System.err.println(s"[bench] bucketed posture MISMATCH: $n")
         ok
       }
-      val bqc = bres.map { case (k, c, _) => s""""$k":${fmt2(c)}""" }
-        .mkString("{", ",", "}")
-      postureFragment = hots => {
-        val bq = hots.map { case (k, h) => s""""$k":${fmt2(h)}""" }
-          .mkString("{", ",", "}")
-        s""","bucketed_prep":${fmt2(prepSec)},""" +
-          s""""bucketed_verified":$verified,""" +
-          s""""bucketed_value":${fmt2(hots.map(_._2).sum)},""" +
-          s""""bucketed_queries":$bq,"bucketed_cold_queries":$bqc"""
-      }
+      postureFields = hots => Seq(
+        "bucketed_prep" -> prepSec,
+        "bucketed_verified" -> verified,
+        "bucketed_value" -> hots.map(_._2).sum,
+        "bucketed_queries" -> Json.Obj(hots),
+        "bucketed_cold_queries" ->
+          Json.Obj(bres.map { case (k, c, _) => k -> c }))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] bucketed posture failed: ${e.getMessage}")
-        val msg = Option(e.getMessage).getOrElse("?")
-          .replaceAll("[\"\\\\\\n\\r]", " ").take(160)
-        postureFragment = _ => s""","bucketed_error":"$msg""""
+        val msg = Option(e.getMessage).getOrElse("?").take(160)
+        postureFields = _ => Seq("bucketed_error" -> msg)
     }
 
     val baseline: Map[String, Double] = {
@@ -336,33 +304,27 @@ object Bench {
     }
 
     val steal1 = stealTicks()
-    def fmt(v: Double) = f"$v%.3f"
 
     // ---- quiet-run protocol (VERDICT r16 #4): if attempt 1's timed
     // section ran under hypervisor noise (steal_ticks past the
     // documented threshold), re-run the HOT passes (headline +
     // bucketed posture; cold numbers stay attempt 1's) with a backoff,
-    // up to N attempts, and report the quietest attempt — recording
+    // up to MaxAttempts, and report the quietest attempt — recording
     // every attempt in the artifact so the selection is auditable.
     // On a quiet machine this is a no-op: one attempt, same protocol
     // as every prior round.
-    val stealMax = sys.env.getOrElse("SPARK_GRAFT_STEAL_MAX", "500").toLong
-    val maxAttempts =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_QUIET_ATTEMPTS", "3").toInt)
-    val backoffSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUIET_BACKOFF", "20").toInt
     def headlineHotPass(): Seq[(String, Double)] =
       benchDefs.flatMap(d => headlineHot(d).map(d.name -> _))
     // attempt = (headline hots, posture hots, steal over the pass)
     var attempts: List[(Seq[(String, Double)], Seq[(String, Double)], Long)] =
       List((results.map { case (k, _, h) => (k, h) }, postureHots1,
         steal1 - steal0))
-    while (attempts.head._3 > stealMax && attempts.length < maxAttempts &&
+    while (attempts.head._3 > StealMax && attempts.length < MaxAttempts &&
         stealTicks() >= 0L) {
       System.err.println(s"[bench] attempt ${attempts.length} ran at " +
-        s"steal_ticks ${attempts.head._3} > $stealMax — backing off " +
-        s"${backoffSec}s and re-running the hot passes")
-      Thread.sleep(backoffSec * 1000L)
+        s"steal_ticks ${attempts.head._3} > $StealMax — backing off " +
+        s"${BackoffSec}s and re-running the hot passes")
+      Thread.sleep(BackoffSec * 1000L)
       val s0 = stealTicks()
       val hh = headlineHotPass()
       val bh = postureHot.flatMap { case (n, f) => f().map(n -> _) }
@@ -372,19 +334,12 @@ object Bench {
     val chosenIdx = ordered.zipWithIndex.minBy(_._1._3)._2
     val (chosenHots, chosenBHots, chosenSteal) = ordered(chosenIdx)
     val attemptsJson = ordered.map { case (hh, bh, st) =>
-      s"""{"steal_ticks":$st,"value":${fmt(hh.map(_._2).sum)}""" +
-        (if (bh.nonEmpty)
-          s""","bucketed_value":${fmt(bh.map(_._2).sum)}}"""
-        else "}")
-    }.mkString("[", ",", "]")
+      Json.Obj(Seq("steal_ticks" -> st, "value" -> hh.map(_._2).sum) ++
+        (if (bh.nonEmpty) Seq("bucketed_value" -> bh.map(_._2).sum) else Nil))
+    }
 
-    val qs = chosenHots.map { case (k, hot) => s""""$k":${fmt(hot)}""" }
-      .mkString("{", ",", "}")
-    val qsCold = results.map { case (k, cold, _) => s""""$k":${fmt(cold)}""" }
-      .mkString("{", ",", "}")
     val hotTotal = chosenHots.map(_._2).sum
     val coldTotal = results.map(_._2).sum
-    val bucketedExtra = postureFragment(chosenBHots)
     // trust guard: a hot run that is BOTH far below its cold run and
     // absurd in absolute terms (< 20 ms — no query here schedules tasks
     // and materializes rows that fast) means the "hot" number skipped
@@ -396,24 +351,26 @@ object Bench {
     val coldByName = results.map { case (k, c, _) => k -> c }.toMap
     val suspects = chosenHots.collect {
       case (k, hot) if coldByName.getOrElse(k, 0.0) > 0.05 &&
-          hot < 0.2 * coldByName(k) && hot < 0.02 =>
-        s""""$k""""
-    }.mkString("[", ",", "]")
-    val extra = if (baseline.nonEmpty) {
+          hot < 0.2 * coldByName(k) && hot < 0.02 => k
+    }
+    val baselineFields = if (baseline.nonEmpty) {
       val baseTotal = chosenHots.flatMap(r => baseline.get(r._1)).sum
-      val ratios = chosenHots.collect {
-        case (k, hot) if baseline.contains(k) =>
-          s""""$k":${fmt(hot / baseline(k))}""" }.mkString("{", ",", "}")
-      s""","baseline":"duckdb","baseline_total":${fmt(baseTotal)}""" +
-        s""","ratio_total":${fmt(hotTotal / baseTotal)},"ratios":$ratios"""
-    } else ""
-    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":${fmt(hotTotal)},"unit":"sec",""" +
-      s""""queries":$qs,"failed":$failedJson,"cold_value":${fmt(coldTotal)},""" +
-      s""""cold_queries":$qsCold$extra,"suspect_hot":$suspects,""" +
-      s""""steal_ticks":$chosenSteal,"layout":"$layout",""" +
-      s""""attempts":$attemptsJson,"attempt_chosen":${chosenIdx + 1}""" +
-      s"""$bucketedExtra,"sf":"$sfDir"}"""
+      Seq("baseline" -> "duckdb", "baseline_total" -> baseTotal,
+        "ratio_total" -> hotTotal / baseTotal,
+        "ratios" -> Json.Obj(chosenHots.collect {
+          case (k, hot) if baseline.contains(k) => k -> hot / baseline(k)
+        }))
+    } else Nil
+    val json = Json.render(Json.Obj(
+      Seq("metric" -> "total", "value" -> hotTotal, "unit" -> "sec",
+        "queries" -> Json.Obj(chosenHots), "failed" -> failed.toSeq,
+        "cold_value" -> coldTotal,
+        "cold_queries" -> Json.Obj(results.map { case (k, c, _) => k -> c })) ++
+      baselineFields ++
+      Seq("suspect_hot" -> suspects, "steal_ticks" -> chosenSteal,
+        "layout" -> "flat", "attempts" -> attemptsJson,
+        "attempt_chosen" -> (chosenIdx + 1)) ++
+      postureFields(chosenBHots) :+ ("sf" -> sfDir)))
     // Belt and braces for the driver's extractor (BENCH_r05 recorded
     // "parsed": null because the JSON sat mid-log): persist the line to a
     // known file AND print it after spark.stop(), so it is the final

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, GraftPreparedExec, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPreparedExec, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Prepared-plan cache — the engine analogue of the reference's bounded
@@ -73,26 +73,6 @@ object PlanCache {
         e
     }
     GraftPreparedExec.ofOptimized(spark, entry.analyzed, entry.optimized)
-  }
-
-  /** Execute from the analyzed plan only (optimizer re-runs): for callers
-    * that want prepare semantics but need post-prepare cache() substitution
-    * or fresh optimizer-time constant folding. */
-  def preparedAnalyzed(spark: SparkSession, key: AnyRef)(build: => DataFrame)
-      : DataFrame = {
-    val k = (spark, key)
-    val cached = lock.synchronized(Option(plans.get(k)))
-    val entry = cached match {
-      case Some(e) => hitCount.incrementAndGet(); e
-      case None =>
-        missCount.incrementAndGet()
-        val df = build
-        val e = Entry(df.queryExecution.analyzed,
-          GraftPreparedExec.optimizedPlanOf(df))
-        lock.synchronized(plans.put(k, e))
-        e
-    }
-    GraftColumnBridge.ofRows(spark, entry.analyzed)
   }
 
   /** Drop every entry for `spark` (tests / session teardown). */

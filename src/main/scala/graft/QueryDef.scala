@@ -28,8 +28,6 @@ object QueryDef {
   implicit class PresentOps(private val df: DataFrame) extends AnyVal {
     def presentSorted(cols: String*): DataFrame =
       df.repartition(1).sortWithinPartitions(cols.head, cols.tail: _*)
-    def presentSortedBy(cols: org.apache.spark.sql.Column*): DataFrame =
-      df.repartition(1).sortWithinPartitions(cols: _*)
 
     /** Presentation sort fused into the tail stage via `coalesce(1)` — for
       * BOUNDED-GROUP aggregate tails only: the final merge of partial

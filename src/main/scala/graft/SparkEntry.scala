@@ -40,7 +40,4 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.flatMap(d => d.oracle.map(o => d.name -> o.trim)).toMap
-
-  /** Headline subset run by Bench at sf0.1. */
-  def benchQueries: Seq[String] = all.filter(_.bench).map(_.name)
 }

@@ -146,14 +146,6 @@ object Bitemporal {
       }(Encoders.row(outSchema))
   }
 
-  /** Valid-time-range query: rectangles overlapping [from, to) at the given
-    * system snapshot. */
-  def validTimeBetween(events: DataFrame, from: Column, to: Column,
-      systemAt: Column): DataFrame = {
-    history(events.filter(col(SF) <= systemAt))
-      .filter((col(VT).isNull || col(VT) > from) && col(VF) < to)
-  }
-
   /** One dimension of a table-ref's temporal filter (reference grammar
     * Sql.g4:557-573: `FOR (VALID_TIME|SYSTEM_TIME)
     * (AS OF t | ALL | FROM a TO b | BETWEEN a AND b)`). */

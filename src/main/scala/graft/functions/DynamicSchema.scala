@@ -74,10 +74,6 @@ object DynamicSchema {
         c.cast("string").as("utf8"), lit(null).cast("boolean").as("bool"))
   }
 
-  /** Null union value (for rows that never had the column). */
-  def nullUnion: Column =
-    lit(null).cast(unionType)
-
   /** Total order across union legs for ORDER BY / compare on polymorphic
     * columns (reference expression/comparator.clj: cross-type total order;
     * we use bool < numbers < strings, numbers comparing numerically across

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Identity + document-merge helpers.
+/** Identity helpers.
   *
   * `_iid` in the reference is a 128-bit hash of `_id` used as the internal
   * row-identity key for joins and point lookups (reference:
@@ -19,11 +19,4 @@ object Ids {
 
   /** 16-byte binary `_iid` (the form stored in bitemporal event tables). */
   def iid(id: Column): Column = unhex(md5(id.cast("string")))
-
-  /** `_patch` struct merge — field-wise coalesce of `patch` over `doc`
-    * (reference: expression.clj:2095 `_patch`; used by PATCH DML). Both
-    * structs must share the given field names. */
-  def patchStruct(doc: Column, patch: Column, fields: Seq[String]): Column =
-    struct(fields.map(fd =>
-      coalesce(patch.getField(fd), doc.getField(fd)).as(fd)): _*)
 }

@@ -15,8 +15,8 @@ object Joins {
 
   /** Stats-greedy broadcast decision (the reference's `:mega-join` orders
     * relations by stats before picking build sides, join.clj:599-736,
-    * `determine-build-side` 435-441): hint `derived` for broadcast when the
-    * BASE scan it was built from fits the session broadcast threshold.
+    * `determine-build-side` 435-441): does the BASE scan a derived side
+    * was built from fit the session broadcast threshold?
     *
     * Why this exists: without catalog stats, Catalyst's planning-time size
     * estimate for a join chain is a product over the children, which rules
@@ -29,13 +29,9 @@ object Joins {
     * fact-side shuffle entirely. At scale the base outgrows the threshold
     * and the shuffle plan stands untouched; the decision adapts per
     * dataset exactly like the reference's stats-greedy ordering.
-    */
-  def broadcastIfBaseSmall(base: DataFrame, derived: DataFrame): DataFrame =
-    if (baseSmall(base)) broadcast(derived) else derived
-
-  /** The [[broadcastIfBaseSmall]] decision as a predicate: does `base`'s
-    * scan fit the session broadcast threshold? Exposed so a query can pick
-    * a different JOIN SHAPE per regime, not just hint one side:
+    *
+    * A query can also pick a different JOIN SHAPE per regime, not just
+    * hint one side:
     * in the broadcast regime a deep selective-first chain of nested
     * broadcast builds executes as a SEQUENCE of driver jobs (each build
     * waits for the build below it — measured round 17: q05's four-level
@@ -533,7 +529,8 @@ object Joins {
     // the period — see derivedBucketSeconds); the caller's width is the
     // fallback. Results are width-independent (canonical-bucket proof;
     // rows verified identical across every sweep width).
-    // deriveWidth=false pins the caller's width (the probe's sweep knob).
+    // deriveWidth=false pins the caller's width (IntervalWidthSpec's
+    // reference for the derived one).
     val wSec = if (deriveWidth)
       derivedBucketSeconds(leftW, rightW, leftFrom, leftTo, rightFrom,
         rightTo, bucketSeconds)
@@ -548,144 +545,7 @@ object Joins {
       ijFdiv(greatest(ijEp(col(leftFrom)), ijEp(col(rightFrom))), w)
     val cond = (Seq(lB("__bkt_l") === rB("__bkt_r")) ++ equi ++
       Seq(condition, canonical)).reduce(_ && _)
-    // probe knob (round-17 join-strategy A/B): SPARK_GRAFT_IJ_SHJ=left|right
-    // hints a shuffled-hash build on that exploded side instead of the
-    // default sort-merge — measurement only, results identical either way.
-    // MEASURED round 17 (25×, analyzed, best-of-5, same session):
-    // build=left ties SMJ within noise (q203 1.367 vs 1.440, q213 1.564
-    // vs 1.543, q211 2.483 vs 2.443), build=right loses 25-40% (the probe
-    // side streams, so building the larger exploded side pays). The
-    // family constant is not the sort — falsification record, joins
-    // the sweep/width/codegen entries in BASELINE.md.
-    val shj = sys.env.get("SPARK_GRAFT_IJ_SHJ")
-    val lS = if (shj.contains("left")) lB.hint("shuffle_hash") else lB
-    val rS = if (shj.contains("right")) rB.hint("shuffle_hash") else rB
-    lS.join(rS, cond).drop("__bkt_l", "__bkt_r")
-  }
-
-  /** Plane-sweep execution of the bucketed interval join: identical
-    * semantics and shuffle shape to [[intervalJoin]] (strategy="bucket",
-    * no equi keys), different in-partition algorithm — the per-bucket
-    * IEJoin idea. Both sides explode into the same bucket covers and
-    * shuffle ONCE on the bucket; within each partition the union of the
-    * two sides is sorted by (bucket, period-start) and a single forward
-    * sweep emits exactly the intersecting pairs: each arriving row scans
-    * the other side's ACTIVE list (periods whose end has not passed this
-    * row's start), so pairs that cannot intersect are never enumerated —
-    * the explode+SMJ plan enumerates every same-bucket pair and filters.
-    * Canonical-bucket dedup is the arriving row's start lying in the
-    * current bucket (the arriving row holds the pair's later start, so
-    * this is greatest(lf, rf)'s bucket, same rule as intervalJoin).
-    * Dead active entries are compacted in the same scan, so active
-    * memory is bounded by per-bucket concurrent-interval occupancy.
-    *
-    * Trade: the sweep is a fused row-at-a-time loop (mapPartitions, no
-    * codegen) where the bucketed plan keeps whole-stage codegen but
-    * enumerates all same-bucket pairs. MEASURED VERDICT (round 11,
-    * BASELINE.md 25× addendum): the sweep ties or loses to the
-    * explode+SMJ at the probe's density (best 1.38 s vs 1.19 s strict /
-    * 1.44 vs 1.07 closed over three sessions) — the family's constant
-    * vs DuckDB's IEJoin is the shared row-at-a-time machinery, not
-    * same-bucket pair enumeration — so [[intervalJoin]] remains the
-    * shipped plan and this operator is the on-record falsification
-    * (kept correct + spec'd for denser-bucket workloads where the
-    * active-list pruning could still pay). `condition` must imply
-    * period intersection
-    * (half-open, or closed with `inclusiveBounds`) exactly as in
-    * [[intervalJoin]]; it is re-applied to the sweep's candidate pairs,
-    * so stricter predicates (CONTAINS, EQUALS) stay exact. */
-  def intervalJoinSweep(
-      left: DataFrame,
-      right: DataFrame,
-      leftFrom: String, leftTo: String,
-      rightFrom: String, rightTo: String,
-      condition: Column,
-      bucketSeconds: Long,
-      maxBucketsPerRow: Int = 4096,
-      inclusiveBounds: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.StructType
-    require(bucketSeconds > 0, "bucketSeconds must be positive")
-    val overlap = left.columns.toSet.intersect(right.columns.toSet)
-    require(overlap.isEmpty,
-      s"intervalJoinSweep requires disjoint column names; both sides " +
-        s"have: ${overlap.mkString(", ")}")
-    val leftW = ijWellFormed(left, leftFrom, leftTo, inclusiveBounds)
-    val rightW = ijWellFormed(right, rightFrom, rightTo, inclusiveBounds)
-    val w = bucketSeconds * 1000000L
-    val horizon = ijHorizonBkt(leftW, rightW, leftFrom, rightFrom, w)
-    val lB = ijBucketed(leftW, leftFrom, leftTo, "__bkt", w,
-      bucketSeconds, horizon, maxBucketsPerRow, inclusiveBounds)
-    val rB = ijBucketed(rightW, rightFrom, rightTo, "__bkt", w,
-      bucketSeconds, horizon, maxBucketsPerRow, inclusiveBounds)
-    val lCols = left.columns.toSeq
-    val rCols = right.columns.toSeq
-    val lSel = Seq(col("__bkt"), lit(0).as("__side"),
-        ijEp(col(leftFrom)).as("__s"), ijEp(col(leftTo)).as("__e")) ++
-      lCols.map(col) ++
-      rCols.map(c => lit(null).cast(right.schema(c).dataType).as(c))
-    val rSel = Seq(col("__bkt"), lit(1).as("__side"),
-        ijEp(col(rightFrom)).as("__s"), ijEp(col(rightTo)).as("__e")) ++
-      lCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-      rCols.map(col)
-    val sorted = lB.select(lSel: _*).unionByName(rB.select(rSel: _*))
-      .repartition(col("__bkt"))
-      .sortWithinPartitions(col("__bkt"), col("__s"), col("__side"))
-    val outSchema = StructType(left.schema.fields ++ right.schema.fields)
-    val (nL, nR) = (lCols.length, rCols.length)
-    val (inclusive, width) = (inclusiveBounds, w)
-    val swept = sorted.mapPartitions { iter =>
-      new Iterator[Row] {
-        private val out = scala.collection.mutable.Queue.empty[Row]
-        private var curBkt = Long.MinValue
-        // (start, end, own-side field values)
-        private val actL =
-          scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Array[Any])]
-        private val actR =
-          scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Array[Any])]
-        private def pump(): Unit =
-          while (out.isEmpty && iter.hasNext) {
-            val r = iter.next()
-            val bkt = r.getLong(0); val side = r.getInt(1)
-            val s = r.getLong(2); val e = r.getLong(3)
-            if (bkt != curBkt) { curBkt = bkt; actL.clear(); actR.clear() }
-            val own = new Array[Any](if (side == 0) nL else nR)
-            val base = if (side == 0) 4 else 4 + nL
-            var i = 0
-            while (i < own.length) { own(i) = r.get(base + i); i += 1 }
-            // the arriving row carries the pair's later start (sort
-            // order), so this is greatest(lf, rf)'s bucket
-            val canonical = java.lang.Math.floorDiv(s, width) == curBkt
-            val other = if (side == 0) actR else actL
-            var j = 0; var k = 0
-            while (j < other.length) {
-              val (os @ _, oe, ovals) = other(j)
-              val alive = if (inclusive) oe >= s else oe > s
-              if (alive) {
-                if (canonical) {
-                  val vals = new Array[Any](nL + nR)
-                  if (side == 0) {
-                    System.arraycopy(own, 0, vals, 0, nL)
-                    System.arraycopy(ovals, 0, vals, nL, nR)
-                  } else {
-                    System.arraycopy(ovals, 0, vals, 0, nL)
-                    System.arraycopy(own, 0, vals, nL, nR)
-                  }
-                  out.enqueue(new org.apache.spark.sql.catalyst.expressions
-                    .GenericRowWithSchema(vals, outSchema))
-                }
-                other(k) = other(j); k += 1
-              }
-              j += 1
-            }
-            if (k < other.length) other.remove(k, other.length - k)
-            (if (side == 0) actL else actR) += ((s, e, own))
-          }
-        def hasNext: Boolean = { pump(); out.nonEmpty }
-        def next(): Row = { pump(); out.dequeue() }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    swept.filter(condition)
+    lB.join(rB, cond).drop("__bkt_l", "__bkt_r")
   }
 
   /** Left-outer face of [[intervalJoin]]: every left row survives, with

@@ -34,10 +34,6 @@ object TextAnalysis {
     }
   }
 
-  /** Per-language stopword counts (for inspection / oracle parity). */
-  def stopwordCounts(text: Column): Seq[(String, Column)] =
-    stopwords.map { case (lang, list) => lang -> countIn(text, list) }
-
   /** Heuristic quality score scaled to an integer in [0, 10000]: blends word
     * count, mean word length, lexical diversity, and stopword rate. Emitted
     * as `floor(score * 10000 + 0.5)` rather than `round(score, 4)` — cross-

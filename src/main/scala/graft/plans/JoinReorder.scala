@@ -37,7 +37,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * already there). This minimizes intermediate cardinality for star/chain
   * shapes — dimension tables with selective filters join innermost, the
   * fact table last, which also keeps every derived side under the broadcast
-  * threshold for as long as its base is (`Joins.broadcastIfBaseSmall`
+  * threshold for as long as its base is (`Joins.baseSmall`
   * rationale).
   *
   * Safety envelope (the rule no-ops unless ALL hold):

@@ -140,7 +140,7 @@ object Relational {
       val supp = t(s, dir, "supplier")
       // stats-greedy: when the whole orders scan fits the broadcast
       // threshold the fact side never shuffles; at scale the hint is a
-      // no-op and the shuffle plan stands (Joins.broadcastIfBaseSmall).
+      // no-op and the shuffle plan stands (Joins.baseSmall).
       // Broadcast regime: the region→asiaN→cust→ord nesting executes as
       // FOUR sequential broadcast-build jobs (each collect waits on the
       // one below — measured round 17, collectTime 51→99→143→264 ms);

@@ -2,7 +2,9 @@ package graft.tools
 
 import graft.bitemporal.XtDb
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+
+import scala.jdk.CollectionConverters._
 
 /** Engine metrics surface (the reference ships a `monitoring/` module with
   * Prometheus/Grafana counters over tx + query activity; here the same
@@ -79,6 +81,43 @@ object EngineMetrics {
     * play, or a type-evolving delta key). */
   val foldChangedFromDelta = new java.util.concurrent.atomic.AtomicLong
   val foldChangedRecomputes = new java.util.concurrent.atomic.AtomicLong
+
+  /** What ran on the cluster while one [[during]] body ran: the jobs
+    * started, and each finished task's input-record and shuffle-read-record
+    * counts (one entry per task, in completion order). */
+  final case class Activity(jobs: Int, taskInputRecords: Seq[Long],
+      taskShuffleReadRecords: Seq[Long]) {
+    def inputRecords: Long = taskInputRecords.sum
+    def shuffleReadRecords: Long = taskShuffleReadRecords.sum
+  }
+
+  /** Run `body` and return what it ran on the cluster. The listener bus is
+    * drained before the counting listener is added (events of earlier work
+    * are not counted) and again before the counts are read (every event
+    * `body` caused has been delivered); the listener is removed afterwards.
+    * The counts are context-wide, so this is for single-threaded callers:
+    * a job another thread runs on the same SparkContext meanwhile is
+    * counted too. */
+  def during[A](spark: SparkSession)(body: => A): (A, Activity) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => tasks.add(
+          (m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead)))
+    }
+    GraftColumnBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      GraftColumnBridge.drainListenerBus(sc)
+      val perTask = tasks.asScala.toSeq
+      (out, Activity(jobs.get, perTask.map(_._1), perTask.map(_._2)))
+    } finally sc.removeSparkListener(listener)
+  }
 
   private val installed =
     scala.collection.concurrent.TrieMap.empty[org.apache.spark.SparkContext, Counters]

@@ -4,8 +4,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the sql-private Column <-> catalyst Expression conversions
   * (Spark 4 moved them behind `private[sql]` in
-  * org.apache.spark.sql.classic.ExpressionUtils). Same technique Spark
-  * extension libraries use to register expression-backed SQL functions. */
+  * org.apache.spark.sql.classic.ExpressionUtils), and to the
+  * `private[spark]` listener bus. Same technique Spark extension
+  * libraries use to register expression-backed SQL functions. */
 object GraftColumnBridge {
   /** Build a DataFrame from a (possibly transformed) parsed logical plan —
     * used by the SLT runner to swap `Divide` for SQLite-semantics division
@@ -25,4 +26,9 @@ object GraftColumnBridge {
     classic.ColumnNodeToExpressionConverter(c.node)
   def toColumn(e: Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Block until the listener bus (`private[spark]`) has delivered every
+    * event posted so far. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

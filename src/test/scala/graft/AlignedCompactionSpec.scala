@@ -4,6 +4,7 @@ import graft.WritePoints._
 import graft.bitemporal.XtDb
 import graft.plans.Explain
 import graft.tools.EngineMetrics
+import org.apache.spark.sql.GraftColumnBridge.drainListenerBus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,10 +51,10 @@ class AlignedCompactionSpec extends AnyFunSuite {
     assert(!expect.exists(_._1 == 7L))
 
     val c = EngineMetrics.install(spark)
-    Thread.sleep(500) // drain any in-flight listener events
+    drainListenerBus(spark.sparkContext)
     val before = c.shuffleWriteBytes.get
     db.compact("t") // escalated full compact — must take the aligned path
-    Thread.sleep(800) // listener bus is async
+    drainListenerBus(spark.sparkContext)
     val delta = c.shuffleWriteBytes.get - before
     assert(delta === 0L,
       s"aligned full compact must not shuffle (wrote $delta bytes)")

@@ -64,10 +64,19 @@ class BucketingSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS lineitem_b")
   }
 
-  test("Bench bucketed-facts ingest: lineitem⋈orders plans ZERO " +
+  test("co-bucketed facts ingest: lineitem⋈orders plans ZERO " +
       "exchanges through Tables.load, result equals the flat layout; " +
       "the declaration is a per-directory sidecar") {
-    val dst = Bench.ingestLayout(spark, sf, cpus = 4, bucketedFacts = true)
+    // lineitem + orders co-bucketed on the orderkey (same bucket count,
+    // one file per bucket, sorted within)
+    val dst = java.nio.file.Files
+      .createTempDirectory("graft_bucketed_facts").toString
+    Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey").foreach {
+      case (t, k) =>
+        graft.storage.LayoutCatalog.ingestBucketed(spark,
+          Tables.load(spark, sf, t), dst,
+          graft.storage.LayoutCatalog.Layout(t, k, 4, s"bucketed_$t"))
+    }
     assert(graft.storage.LayoutCatalog.read(dst, "lineitem").isDefined &&
       graft.storage.LayoutCatalog.read(dst, "orders").isDefined,
       "ingest must persist layout sidecars in the destination dir")

@@ -253,42 +253,6 @@ class IntervalJoinRuleSpec extends AnyFunSuite {
         assert(expected.exists(_._2 == -1L) && expected.exists(_._2 != -1L),
           s"LEFT fuzz fixture must exercise both faces (seed=$seed)")
       }
-
-      // the SWEEP operator over the same fixtures: pair-exact vs the
-      // rule-off nested-loop truth, strict + inclusive
-      for (seed <- Seq(202, 303); w <- Seq(600L, 21600L)) {
-        val lfz = mkSide(seed, 60, 1L, "l")
-        val rfz = mkSide(seed + 7, 70, 5000L, "r")
-        // sweep requires well-formed periods (malformed raise loudly):
-        // filter the planted degenerates the way a caller would
-        val lOk = lfz.filter(col("lf").isNotNull && col("lt").isNotNull &&
-          col("lf") < col("lt"))
-        val rOk = rfz.filter(col("rf").isNotNull && col("rt").isNotNull &&
-          col("rf") < col("rt"))
-        val oracle = lOk.crossJoin(rOk)
-          .filter(col("lf") < col("rt") && col("rf") < col("lt"))
-          .select("lid", "rid").as[(Long, Long)].collect().toSet
-        val swept = _root_.graft.operators.Joins.intervalJoinSweep(
-            lOk, rOk, "lf", "lt", "rf", "rt",
-            col("lf") < col("rt") && col("rf") < col("lt"),
-            bucketSeconds = w)
-          .select("lid", "rid").as[(Long, Long)].collect()
-        assert(swept.length == swept.toSet.size,
-          s"sweep fuzz dup seed=$seed w=$w")
-        assert(swept.toSet == oracle, s"sweep fuzz seed=$seed w=$w")
-        val oracleIncl = lOk.crossJoin(rOk)
-          .filter(col("lf") <= col("rt") && col("rf") <= col("lt"))
-          .select("lid", "rid").as[(Long, Long)].collect().toSet
-        val sweptIncl = _root_.graft.operators.Joins.intervalJoinSweep(
-            lOk, rOk, "lf", "lt", "rf", "rt",
-            col("lf") <= col("rt") && col("rf") <= col("lt"),
-            bucketSeconds = w, inclusiveBounds = true)
-          .select("lid", "rid").as[(Long, Long)].collect()
-        assert(sweptIncl.toSet == oracleIncl,
-          s"sweep inclusive fuzz seed=$seed w=$w")
-        assert(oracleIncl.size > oracle.size,
-          s"fixture must plant boundary equalities (seed=$seed)")
-      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Joins
+import graft.tools.EngineMetrics
 import org.apache.spark.SparkException
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -132,60 +133,6 @@ class JoinsSpec extends AnyFunSuite {
     }
   }
 
-  test("interval join SWEEP: pair-exact vs cross-join oracle across " +
-      "bucket widths, both bound modes, CONTAINS residual, empty side") {
-    val rnd = new scala.util.Random(11)
-    def mk(n: Int, idBase: Long) = (0 until n).map { i =>
-      val start = 1700000000L + rnd.nextInt(100000)
-      val len = 1 + rnd.nextInt(5000)
-      (idBase + i,
-        java.time.Instant.ofEpochSecond(start).toString.replace("T", " ").dropRight(1),
-        java.time.Instant.ofEpochSecond(start + len).toString.replace("T", " ").dropRight(1))
-    }
-    val l = periods(mk(60, 1000), "lid", "lf", "lt")
-    val r = periods(mk(80, 9000), "rid", "rf", "rt")
-    val oracle = l.crossJoin(r)
-      .filter(Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")))
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(oracle.nonEmpty)
-    for (w <- Seq(60L, 1800L, 86400L)) {
-      val got = Joins.intervalJoinSweep(l, r, "lf", "lt", "rf", "rt",
-          Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
-          bucketSeconds = w)
-        .select("lid", "rid").as[(Long, Long)].collect()
-      assert(got.length == got.toSet.size,
-        s"w=$w: sweep must not duplicate pairs")
-      assert(got.toSet == oracle, s"w=$w: sweep pair set diverged")
-    }
-    // closed-bound mode agrees with the closed cross-join oracle
-    // (boundary-equality pairs included)
-    val closedOracle = l.crossJoin(r)
-      .filter(col("lf") <= col("rt") && col("rf") <= col("lt"))
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val closed = Joins.intervalJoinSweep(l, r, "lf", "lt", "rf", "rt",
-        col("lf") <= col("rt") && col("rf") <= col("lt"),
-        bucketSeconds = 1800, inclusiveBounds = true)
-      .select("lid", "rid").as[(Long, Long)].collect()
-    assert(closed.length == closed.toSet.size)
-    assert(closed.toSet == closedOracle, "closed-mode sweep diverged")
-    // a stricter residual (CONTAINS) filters the sweep's candidates
-    val containsOracle = l.crossJoin(r)
-      .filter(Joins.containsCond(col("lf"), col("lt"), col("rf"), col("rt")))
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    val contains = Joins.intervalJoinSweep(l, r, "lf", "lt", "rf", "rt",
-        Joins.containsCond(col("lf"), col("lt"), col("rf"), col("rt")),
-        bucketSeconds = 1800)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(contains == containsOracle, "CONTAINS residual diverged")
-    // empty side: empty result, joined schema preserved
-    val empty = Joins.intervalJoinSweep(l.filter(lit(false)), r,
-      "lf", "lt", "rf", "rt",
-      Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
-      bucketSeconds = 3600)
-    assert(empty.columns.toSeq == Seq("lid", "lf", "lt", "rid", "rf", "rt"))
-    assert(empty.count() == 0)
-  }
-
   test("interval join: CONTAINS residual, empty side, and equi keys") {
     val l = periods(Seq((1L, "2024-01-01 00:00:00", "2024-01-01 10:00:00"),
       (2L, "2024-01-02 00:00:00", "2024-01-02 01:00:00")), "lid", "lf", "lt")
@@ -304,7 +251,6 @@ class JoinsSpec extends AnyFunSuite {
   test("interval join LEFT OUTER under a mega-key: one leftId matching " +
       "1e5 covers does NOT serialize into one task (max task's shuffle " +
       "read stays a fraction of the matches) and the result is exact") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     // child session WITHOUT AQE partition-coalescing: the pin targets
     // KEY-skew (the r10 window shape forced all of one leftId's matches
     // into one task no matter the partition count). At this fixture's
@@ -338,34 +284,23 @@ class JoinsSpec extends AnyFunSuite {
       val sec = base + (i % buckets) * w + (i / buckets) % (w - 2)
       (1000L + i, ts(sec), ts(sec + 1))
     }, "rid", "rf", "rt")
-    val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-    val tot = new java.util.concurrent.atomic.AtomicLong(0)
-    val tl = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          val n = te.taskMetrics.shuffleReadMetrics.recordsRead
-          tot.addAndGet(n)
-          maxTask.accumulateAndGet(n, Math.max(_, _))
-        }
-    }
-    spark.sparkContext.addSparkListener(tl)
-    val (nMatched, nNull) = try {
+    val ((nMatched, nNull), ran) = EngineMetrics.during(spark) {
       val out = Joins.intervalJoinLeft(l, r, "lf", "lt", "rf", "rt",
         Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
         bucketSeconds = w, leftId = "lid", strategy = "bucket",
         maxBucketsPerRow = 4096)
       val counts = out.groupBy(col("rid").isNull.as("isnull")).count()
         .as[(Boolean, Long)].collect().toMap
-      Thread.sleep(800)
       (counts.getOrElse(false, 0L), counts.getOrElse(true, 0L))
-    } finally spark.sparkContext.removeSparkListener(tl)
+    }
+    val maxTask = (0L +: ran.taskShuffleReadRecords).max
     assert(nMatched == nR.toLong, s"every right must match: $nMatched")
     assert(nNull == 1L, s"exactly the lonely left row null-extends: $nNull")
     // the skew pin: the r10 window shape put all 1e5 match rows of lid=1
     // into ONE task; the pass-through shape spreads them by bucket
-    assert(maxTask.get() < nR / 2,
-      s"mega-key must not serialize: max task read ${maxTask.get()} of " +
-        s"~$nR matches (total shuffled ${tot.get()})")
+    assert(maxTask < nR / 2,
+      s"mega-key must not serialize: max task read $maxTask of " +
+        s"~$nR matches (total shuffled ${ran.shuffleReadRecords})")
   }
 
   test("interval join under AQE: a hot bucket is SPLIT by the skew-join " +
@@ -520,7 +455,6 @@ class JoinsSpec extends AnyFunSuite {
       "scans and ZERO build-time jobs; LEFT face reads stay a small " +
       "constant per side (matched pass-through + skinny id branch + " +
       "anti join — never a window over the join output)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val dir = java.nio.file.Files.createTempDirectory("ij_sidecar").toFile
     try {
       val lRaw = periods((1 to 400).map(i =>
@@ -541,13 +475,7 @@ class JoinsSpec extends AnyFunSuite {
       // 1) operator BUILD + plan materialization runs ZERO jobs (the r9
       //    shape ran two full-scan max() jobs here — at optimizer-rewrite
       //    time for SQL queries)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val jl = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(jl)
-      val (inner, left) = try {
+      val ((inner, left), built) = EngineMetrics.during(spark) {
         val inner = Joins.intervalJoin(l, r, "lf", "lt", "rf", "rt",
           Joins.overlapsCond(col("lf"), col("lt"), col("rf"), col("rt")),
           bucketSeconds = 3600, strategy = "bucket")
@@ -556,11 +484,10 @@ class JoinsSpec extends AnyFunSuite {
           bucketSeconds = 3600, leftId = "lid", strategy = "bucket")
         inner.queryExecution.executedPlan // force planning
         left.queryExecution.executedPlan
-        Thread.sleep(500) // listener bus is async
-        assert(jobs.get() == 0,
-          s"sidecar horizon must plan job-free, fired ${jobs.get()}")
         (inner, left)
-      } finally spark.sparkContext.removeSparkListener(jl)
+      }
+      assert(built.jobs == 0,
+        s"sidecar horizon must plan job-free, fired ${built.jobs}")
 
       // 2) with the sidecar the plan has NO horizon aggregates at all:
       //    zero nested loops, pure bucket equi join
@@ -575,21 +502,11 @@ class JoinsSpec extends AnyFunSuite {
       //    exchange NO stage re-partitions the join output by leftId
       //    (the r10 window shape did, and a mega-key serialized there).
       val maxIn = 4L * 400L + 2L * 300L
-      val read = new java.util.concurrent.atomic.AtomicLong(0)
-      val tl = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(tl)
-      val rows = try {
-        val rows = left.collect()
-        Thread.sleep(800)
-        rows
-      } finally spark.sparkContext.removeSparkListener(tl)
-      assert(read.get() >= 700L && read.get() <= maxIn,
+      val (rows, ran) = EngineMetrics.during(spark)(left.collect())
+      val read = ran.inputRecords
+      assert(read >= 700L && read <= maxIn,
         s"expected a small constant of reads (<= $maxIn records), " +
-          s"read ${read.get()}")
+          s"read $read")
       // the skew pin: no window executes anywhere in the left face
       assert(!left.queryExecution.executedPlan.toString.contains("Window"),
         "left face must not window over the join output")

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Sampling, Similarity}
 import graft.plans.Explain
+import graft.tools.EngineMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -114,31 +115,23 @@ class PipelinePlanSpec extends AnyFunSuite {
 
   test("keyword search: corpus count folded into the plan — construction " +
       "runs no job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val ((df, bm), built) = EngineMetrics.during(spark) {
+      (graft.operators.TextAnalysis.keywordSearch(
+        Tables.load(spark, sf, "documents").select("doc_id", "text"),
+        "text", "doc_id", terms = Seq("batch", "hash", "dup")),
+      graft.operators.TextAnalysis.bm25Search(
+        Tables.load(spark, sf, "documents").select("doc_id", "text"),
+        "text", "doc_id", terms = Seq("batch", "hash", "dup")))
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = graft.operators.TextAnalysis.keywordSearch(
-        Tables.load(spark, sf, "documents").select("doc_id", "text"),
-        "text", "doc_id", terms = Seq("batch", "hash", "dup"))
-      val bm = graft.operators.TextAnalysis.bm25Search(
-        Tables.load(spark, sf, "documents").select("doc_id", "text"),
-        "text", "doc_id", terms = Seq("batch", "hash", "dup"))
-      // building the DataFrames must not fire an action (the old shape ran
-      // docs.count() here — a full extra corpus pass at 100 TB)
-      Thread.sleep(500) // listener bus is async; let any job event land
-      assert(jobs.get() == 0,
-        s"plan construction fired ${jobs.get()} job(s)")
-      // ... and N rides a broadcast inside the one plan
-      assert(Explain.report(df).broadcastExchanges >= 2,
-        "df + corpus-count must both broadcast")
-      assert(Explain.report(bm).broadcastExchanges >= 2,
-        "df + corpus-stats must both broadcast")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // building the DataFrames must not fire an action (the old shape ran
+    // docs.count() here — a full extra corpus pass at 100 TB)
+    assert(built.jobs == 0,
+      s"plan construction fired ${built.jobs} job(s)")
+    // ... and N rides a broadcast inside the one plan
+    assert(Explain.report(df).broadcastExchanges >= 2,
+      "df + corpus-count must both broadcast")
+    assert(Explain.report(bm).broadcastExchanges >= 2,
+      "df + corpus-stats must both broadcast")
   }
 
   test("bm25 with precomputed corpusStats: ONE corpus-tokenize subtree " +
@@ -156,19 +149,11 @@ class PipelinePlanSpec extends AnyFunSuite {
     // time. Pin the RUNTIME pass count via task input records: each
     // corpus pass reads nDocs rows; the postings cache contributes only
     // the few matched rows, so the totals separate cleanly.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val nDocs = docs.count()
     def measure(body: => Array[org.apache.spark.sql.Row])
         : (Array[org.apache.spark.sql.Row], Long) = {
-      val rows = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            rows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { val out = body; Thread.sleep(1000); (out, rows.get()) }
-      finally spark.sparkContext.removeSparkListener(listener)
+      val (out, ran) = EngineMetrics.during(spark)(body)
+      (out, ran.inputRecords)
     }
     val (bmRows, bmRead) = measure(bm.collect())
     // one corpus pass: the postings compute; the df branch reads the

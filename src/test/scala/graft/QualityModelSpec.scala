@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.QualityModel
 import graft.operators.TextAnalysis
+import graft.tools.EngineMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,21 +54,11 @@ class QualityModelSpec extends AnyFunSuite {
 
   test("training runs ONE fused aggregation job per iteration (gradW + " +
       "gradB + loss together, broadcast weights)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    def jobsFor(iters: Int): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+    def jobsFor(iters: Int): Int =
+      EngineMetrics.during(spark) {
         QualityModel.train(docs, "text", "doc_id", label,
           dims = 32, iters = iters)
-        Thread.sleep(1000) // async listener bus
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+      }._2.jobs
     val base = jobsFor(1)
     val more = jobsFor(4)
     val perIter = (more - base) / 3.0

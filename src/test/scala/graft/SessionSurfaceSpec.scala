@@ -10,13 +10,16 @@ import scala.jdk.CollectionConverters._
   * `GraftExtensions` — never appended to a live session, where which
   * rules a plan gets would depend on what ran before. Fault injection
   * goes through the store's one write-point hook, never a user-settable
-  * option. */
+  * option. Engine code reads no environment variable: only a program's
+  * entry point does. */
 class SessionSurfaceSpec extends AnyFunSuite {
 
   // split so this file does not match its own patterns
   private val builderCall = "SparkSession" + ".builder("
   private val extraRules = "extra" + "Optimizations"
   private val testConf = "spark.graft." + "test."
+
+  private val mainDir = Paths.get(sys.props("user.dir"), "src", "main")
 
   private lazy val sources: Seq[(Path, String)] = {
     val src = Paths.get(sys.props("user.dir"), "src")
@@ -44,9 +47,17 @@ class SessionSurfaceSpec extends AnyFunSuite {
   }
 
   test("production code reads no test-only option") {
-    val main = Paths.get(sys.props("user.dir"), "src", "main")
-    val bad = offenders(testConf, !_.startsWith(main))
+    val bad = offenders(testConf, !_.startsWith(mainDir))
     assert(bad.isEmpty,
       s"inject faults through XtDb.writePointHook, not a conf key: $bad")
+  }
+
+  test("under src/main only files defining a main read the environment") {
+    val entryPoints = sources.collect {
+      case (p, text) if text.contains("def main(") => p
+    }.toSet
+    val bad = Seq("sys.env", "System.getenv").flatMap(
+      offenders(_, p => !p.startsWith(mainDir) || entryPoints(p))).distinct
+    assert(bad.isEmpty, s"engine code must not read env variables: $bad")
   }
 }

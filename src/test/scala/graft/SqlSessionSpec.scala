@@ -2,6 +2,7 @@ package graft
 
 import graft.bitemporal.XtDb
 import graft.sql.{XtSqlEngine, XtSqlParser}
+import graft.tools.EngineMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -204,32 +205,6 @@ class SqlSessionSpec extends AnyFunSuite {
   // names them. These run on a fresh session, so no view an earlier suite
   // left registered can stand in for one the engine failed to build.
 
-  /** Spark jobs started while `body` runs. A marker job runs after it; the
-    * listener bus delivers events in order, so once the marker's start
-    * has arrived, so has every earlier one. */
-  private def jobsDuring[A](s: SparkSession)(body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "jobsDuring-marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(p =>
-            p.getProperty("spark.job.description") == marker))
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      s.sparkContext.setJobDescription(marker)
-      try s.sparkContext.parallelize(Seq(1), 1).count()
-      finally s.sparkContext.setJobDescription(null)
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get())
-    } finally s.sparkContext.removeSparkListener(listener)
-  }
-
   private def freshSession(): (SparkSession, XtSqlEngine) = {
     val s = spark.newSession()
     val db = new XtDb(s,
@@ -247,9 +222,10 @@ class SqlSessionSpec extends AnyFunSuite {
         FOR SYSTEM_TIME AS OF TIMESTAMP '2999-01-01 00:00:00' WHERE _id = 1""")
       .collect().map(_.getAs[Number](0).longValue).toSeq == Seq(10L))
     assert(!s.catalog.tableExists("orders"))
-    val (df, jobs) =
-      jobsDuring(s)(eng.sql("SELECT v FROM orders WHERE _id = 1"))
-    assert(jobs == 0, s"building the point read ran $jobs job(s)")
+    val (df, built) =
+      EngineMetrics.during(s)(eng.sql("SELECT v FROM orders WHERE _id = 1"))
+    assert(built.jobs == 0,
+      s"building the point read ran ${built.jobs} job(s)")
     Seq("pg_class", "information_schema_columns", "xt_txs", "customer")
       .foreach(v => assert(!s.catalog.tableExists(v), s"$v was registered"))
     assert(df.collect().map(_.getAs[Number](0).longValue).toSeq == Seq(10L))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Layout
+import graft.tools.EngineMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -84,7 +85,6 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("z-ordered layout prunes records on BOTH dimensions; " +
       "single-sort layout reads everything for the second") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     // scale both key domains to the full 16-bit range so the interleave
     // mixes comparable bit weights (raw l_suppkey <= 100 would leave the
     // high interleaved bits all-partkey and the layout one-dimensional —
@@ -104,21 +104,10 @@ class ZOrderSpec extends AnyFunSuite {
     scaled.repartitionByRange(16, col("pa")).sortWithinPartitions("pa")
       .write.mode("overwrite").parquet(sDir)
 
-    def readRecords(path: String, cond: org.apache.spark.sql.Column): Long = {
-      val rows = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-          if (te.taskMetrics != null)
-            rows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        spark.read.parquet(path).filter(cond)
-          .agg(count(lit(1))).collect()
-        Thread.sleep(500) // listener-bus drain, same as PipelinePlanSpec
-        rows.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def readRecords(path: String, cond: org.apache.spark.sql.Column): Long =
+      EngineMetrics.during(spark) {
+        spark.read.parquet(path).filter(cond).agg(count(lit(1))).collect()
+      }._2.inputRecords
     val total = li.count()
     // ~1/8 slice of the SECOND dimension
     val bSlice = col("l_suppkey").between(40, 52)
