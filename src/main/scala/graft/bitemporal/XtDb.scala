@@ -93,12 +93,27 @@ class XtDb(spark: SparkSession, val root: String) {
 
   private def tableDir(table: String) = s"$root/$table"
 
+  // Two system-time heads, in µs. The ALLOCATION head orders writes: it
+  // advances, under the monitor, when a write takes its system time. The
+  // COMMITTED head is the basis readers see: a write publishes its time
+  // there only once its durable log record has landed, so a reader never
+  // waits for the writer and never sees a write still in flight. Every
+  // instance over this root in the JVM shares the committed head, so a
+  // commit through any of them is visible to reads through all. Both
+  // start from the persisted logs ([[ensureHeads]]); 0 = empty store.
   @volatile private var lastSystemMicros = 0L
+  private val committedMicros = XtDb.committedHead(
+    hadoopFs.makeQualified(new org.apache.hadoop.fs.Path(root)).toString)
+  @volatile private var headsAdopted = false
+  // adoption's own lock, never the monitor: a reader adopts without
+  // queueing behind a commit
+  private val headsInit = new Object
 
-  /** Log-head system time in µs — lets external appliers (CDC replay)
-    * pre-check the `submitTx` monotonicity requirement and bump colliding
-    * source commit times instead of aborting. */
-  def logHeadMicros: Long = lastSystemMicros
+  /** Log-head system time in µs (the allocation head) — lets external
+    * appliers (CDC replay) pre-check the `submitTx` monotonicity
+    * requirement and bump colliding source commit times instead of
+    * aborting. */
+  def logHeadMicros: Long = { ensureHeads(); lastSystemMicros }
 
   /** Monotonic system-time assignment (single-writer, reference
     * log-append-time semantics). A fresh instance over an EXISTING store
@@ -108,26 +123,36 @@ class XtDb(spark: SparkSession, val root: String) {
     * reordering bitemporal history (and silently escaping the snapshot
     * watermark). */
   private def nextSystemTime(): java.sql.Timestamp = synchronized {
-    if (lastSystemMicros == 0L) adoptPersistedHead()
+    ensureHeads()
     val now = java.time.Instant.now()
     val nowUs = now.getEpochSecond * 1000000L + now.getNano / 1000L
     lastSystemMicros = math.max(nowUs, lastSystemMicros + 1000L)
-    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-      lastSystemMicros / 1000000L, (lastSystemMicros % 1000000L) * 1000L))
+    microsToTs(lastSystemMicros)
   }
 
-  /** Adopt the persisted tx-log head as the monotonicity floor (cold
-    * start on an existing store). An absent log leaves the floor at wall
-    * clock; an unreadable one throws — guessing the floor could reorder
-    * bitemporal history. */
-  private def adoptPersistedHead(): Unit = {
-    val m = txs.agg(max(col("system_time"))).collect().head
-    if (!m.isNullAt(0)) {
-      val t = m.getTimestamp(0).toInstant
-      lastSystemMicros = math.max(lastSystemMicros,
-        t.getEpochSecond * 1000000L + t.getNano / 1000L)
+  /** Make `t` the committed head, once its durable record has landed. The
+    * head only grows. */
+  private def publish(t: java.sql.Timestamp): Unit =
+    committedMicros.accumulateAndGet(tsMicros(t), math.max)
+
+  /** Adopt the persisted log head — the latest system time in the tx log
+    * and the role log — as both heads, once per instance (cold start on
+    * an existing store). An absent log leaves the heads at 0; an
+    * unreadable one throws, and the next call tries again — guessing the
+    * floor could reorder bitemporal history. */
+  private def ensureHeads(): Unit =
+    if (!headsAdopted) headsInit.synchronized {
+      if (!headsAdopted) {
+        val m = systemLog(txsLiveDir, XtDb.TxLogSchema)
+          .select(col("system_time").as("t"))
+          .union(rolesLog.select(col("at").as("t")))
+          .agg(max(col("t"))).collect().head
+        val head = if (m.isNullAt(0)) 0L else tsMicros(m.getTimestamp(0))
+        lastSystemMicros = math.max(lastSystemMicros, head)
+        committedMicros.accumulateAndGet(head, math.max)
+        headsAdopted = true
+      }
     }
-  }
 
   // ---- schema registry: the table's current LUB schema, persisted as a
   // sidecar so reads don't need parquet footer merging (which cannot widen
@@ -168,17 +193,30 @@ class XtDb(spark: SparkSession, val root: String) {
   // and names the file — never a quiet fallback to a weaker read.
 
   /** A sidecar's content; None when the file is absent. Any other
-    * failure propagates. */
+    * failure propagates. Sidecars are rewritten in place while readers
+    * run, so the read bypasses the checksum layer (a checksum file trails
+    * its data for a moment) and reads to the end of the file, not to a
+    * length taken first. No sidecar is ever written empty: an empty read
+    * caught a rewrite between its truncate and its write, and is re-read
+    * for up to ~100 ms before it is returned. */
   private def readSidecar(p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = hadoopFs
-    val len = try fs.getFileStatus(p).getLen
-      catch { case _: java.io.FileNotFoundException => return None }
-    val in = fs.open(p)
-    try {
-      val bytes = new Array[Byte](len.toInt)
-      in.readFully(bytes)
-      Some(new String(bytes, "UTF-8"))
-    } finally in.close()
+    val fs = hadoopFs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    def once(): Option[String] =
+      try {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    var text = once()
+    var retries = 0
+    while (text.contains("") && retries < 50) {
+      Thread.sleep(2)
+      text = once()
+      retries += 1
+    }
+    text
   }
 
   private def jsonSidecar(p: org.apache.hadoop.fs.Path): Option[SidecarJson] =
@@ -863,15 +901,22 @@ class XtDb(spark: SparkSession, val root: String) {
 
   private def appendEvents(table: String, docs: DataFrame, op: String,
       validFrom: Option[Column], validTo: Option[Column]): java.sql.Timestamp = {
-    val sysTime = nextSystemTime()
-    val withMeta = buildEvents(docs, op, validFrom, validTo, sysTime,
-      monotonically_increasing_id())
-    val conformed = evolveSchema(table, withMeta)
-    val obs = if (op == "erase") eraseObservation(table) else None
-    obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
-      .getOrElse(conformed)
-      .write.mode("append").parquet(dataDir(table))
-    logTx(sysTime, table, op, committed = true, error = None)
+    // allocate, land and publish under the monitor, so commits publish in
+    // allocation order and the committed head never passes a write whose
+    // files are still landing
+    val (sysTime, withMeta, obs) = synchronized {
+      val sysTime = nextSystemTime()
+      val withMeta = buildEvents(docs, op, validFrom, validTo, sysTime,
+        monotonically_increasing_id())
+      val conformed = evolveSchema(table, withMeta)
+      val obs = if (op == "erase") eraseObservation(table) else None
+      obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
+        .getOrElse(conformed)
+        .write.mode("append").parquet(dataDir(table))
+      logTx(sysTime, table, op, committed = true, error = None)
+      publish(sysTime)
+      (sysTime, withMeta, obs)
+    }
     if (op == "erase")
       markErasePending(table, withMeta, sysTime, observedBuckets(obs))
     maybeAutoCompact(table)
@@ -897,23 +942,27 @@ class XtDb(spark: SparkSession, val root: String) {
     collect_set(when(col(OP) === "erase",
       pmod(hash(col(IID)), lit(nBuckets)).cast("int"))).as("ebks")
 
-  /** The observed bucket set, with a BOUNDED wait: the write action has
+  /** An observation's row, with a BOUNDED wait: the write action has
     * already completed when this is called, but the QueryExecutionListener
     * that feeds the Observation fires asynchronously — one bounded
     * `Await.result` on the observation future covers the listener-bus
-    * latency. A timeout or failure returns None and the mark falls back
-    * to the single-agg recompute — the commit path can never block
-    * indefinitely on metrics plumbing. */
+    * latency. A timeout or failure returns None and the caller falls back
+    * to a recompute — the commit path can never block indefinitely on
+    * metrics plumbing. */
+  private def observedRow(o: org.apache.spark.sql.Observation)
+      : Option[org.apache.spark.sql.Row] =
+    try Some(scala.concurrent.Await.result(o.future,
+      scala.concurrent.duration.Duration(10, "seconds")))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The observed erase bucket set; None falls back to the single-agg
+    * recompute. */
   private def observedBuckets(
       obs: Option[(org.apache.spark.sql.Observation, Int)])
       : Option[(Set[Int], Int)] =
     obs.flatMap { case (o, nb) =>
-      try {
-        val row = scala.concurrent.Await.result(o.future,
-          scala.concurrent.duration.Duration(10, "seconds"))
-        Some((row.getAs[scala.collection.Seq[Any]]("ebks")
-          .map(_.asInstanceOf[Number].intValue).toSet, nb))
-      } catch { case scala.util.control.NonFatal(_) => None }
+      observedRow(o).map(row => (row.getAs[scala.collection.Seq[Any]]("ebks")
+        .map(_.asInstanceOf[Number].intValue).toSet, nb))
     }
 
   /** Start the erase-purge clock at the erase APPEND itself (one tiny
@@ -1006,6 +1055,11 @@ class XtDb(spark: SparkSession, val root: String) {
       }
   }
 
+  /** Event rows committed by the most recent `submitTx` on this instance
+    * (insert/update/delete/erase/patch event versions). Counted by the
+    * append write itself, never by re-executing the DML's plan. */
+  @volatile var lastTxAffectedRows: Long = 0L
+
   /** Multi-op atomic transaction: every op shares ONE system time; ops are
     * staged (materialised under `_staging/`) and only moved into the table
     * logs after the whole vector succeeds, so a failing ASSERT — or any
@@ -1014,13 +1068,13 @@ class XtDb(spark: SparkSession, val root: String) {
     * ASSERT conditions) see the staged effects of earlier ops, resolved
     * as-of the transaction time. Within the tx, `_seq` = op index, so a
     * later op supersedes an earlier one at the shared system time (the
-    * same tie-break EventAlgebra uses). Single-writer, like the
-    * reference's log-append. */
-  /** Event rows committed by the most recent `submitTx` on this instance
-    * (insert/update/delete/erase/patch event versions). Counted from the
-    * staged tx delta, never by re-executing the DML's plan. */
-  @volatile var lastTxAffectedRows: Long = 0L
-
+    * same tie-break EventAlgebra uses).
+    *
+    * Single-writer, like the reference's log-append: commits serialize
+    * on this instance's monitor. Readers never take it. A transaction
+    * becomes visible ([[snapshotToken]]) once its log record lands,
+    * before its erase marks and auto-compaction run; until then its
+    * events, landed or not, sit above every reader's basis. */
   def submitTx(ops: Seq[TxOp],
       systemTime: Option[java.sql.Timestamp] = None): java.sql.Timestamp =
     synchronized {
@@ -1028,6 +1082,7 @@ class XtDb(spark: SparkSession, val root: String) {
     // (`:system-time` on submit-tx); must stay monotonic vs the log
     val sysTime = systemTime match {
       case Some(t) =>
+        ensureHeads()
         val us = t.toInstant.getEpochSecond * 1000000L +
           t.toInstant.getNano / 1000L
         require(us > lastSystemMicros,
@@ -1101,7 +1156,6 @@ class XtDb(spark: SparkSession, val root: String) {
             rows(0).getBoolean(0)
           if (!ok) throw TxAbortedException(s"$label failed")
       }
-      var affected = 0L
       val committedByTable =
         scala.collection.mutable.Map[String, DataFrame]()
       val eraseTables = ops.collect {
@@ -1110,6 +1164,10 @@ class XtDb(spark: SparkSession, val root: String) {
       }.toSet
       val eraseObs = scala.collection.mutable
         .Map[String, (org.apache.spark.sql.Observation, Int)]()
+      // the affected-row count rides each table's append write, like the
+      // erase marks: no extra job per staged part
+      val rowObs = scala.collection.mutable
+        .Map[String, org.apache.spark.sql.Observation]()
       staged.foreach { case (table, dirs) =>
         val parts = dirs.map(spark.read.parquet(_)).toSeq
         val lubbed = parts.map(_.schema).reduce(DynamicSchema.mergeSchemas)
@@ -1119,19 +1177,28 @@ class XtDb(spark: SparkSession, val root: String) {
         val obs =
           if (eraseTables.contains(table)) eraseObservation(table) else None
         obs.foreach(eraseObs(table) = _)
+        val rows = org.apache.spark.sql.Observation(
+          s"tx-rows-${System.nanoTime()}")
+        rowObs(table) = rows
         obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
           .getOrElse(conformed)
+          .observe(rows, count(lit(1)).as("n"))
           .write.mode("append").parquet(dataDir(table))
         committedByTable(table) = conformed
-        // affected-row count from the committed delta itself (parquet
-        // footer counts over the staged files — NOT a re-run of the
-        // user's DML plan); surfaced through `lastAffectedRows` for the
-        // ADBC executeUpdate contract
-        affected += parts.map(_.count()).sum
       }
-      lastTxAffectedRows = affected
+      XtDb.writePointHook(WritePoint.Appended(staged.keys.toSeq))
       logTx(sysTime, staged.keys.mkString(","), s"tx[${ops.length}]",
         committed = true, error = None)
+      // committed: readers see this transaction from here on, while the
+      // erase marks and auto-compaction below still run
+      publish(sysTime)
+      // the affected-row count (event rows of the committed delta, never
+      // a re-run of the user's DML plan), surfaced for the ADBC
+      // executeUpdate contract
+      lastTxAffectedRows = rowObs.toSeq.map { case (table, o) =>
+        observedRow(o).map(_.getAs[Long]("n")).getOrElse(
+          committedByTable(table).count())
+      }.sum
       eraseTables.foreach(t => committedByTable.get(t).foreach(df =>
         markErasePending(t, df.where(col(OP) === "erase"), sysTime,
           observedBuckets(eraseObs.get(t)))))
@@ -1140,6 +1207,7 @@ class XtDb(spark: SparkSession, val root: String) {
     } catch {
       case e: TxAbortedException =>
         logTx(sysTime, "", "tx-abort", committed = false, Some(e.message))
+        publish(sysTime)
         throw e
     } finally {
       hadoopFs.delete(new org.apache.hadoop.fs.Path(txStage), true)
@@ -1910,6 +1978,9 @@ class XtDb(spark: SparkSession, val root: String) {
     java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
 
+  private def tsMicros(t: java.sql.Timestamp): Long =
+    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+
   /** One-cycle lease sweep of purge/fold-superseded SNAPSHOT files —
     * runs on maintenance heartbeats so an idle table's retired snapshot
     * bytes (which may hold erased payload) die within the bound. */
@@ -2377,9 +2448,17 @@ class XtDb(spark: SparkSession, val root: String) {
     * (explicit-file bucketed relation on the declared key), so a fresh
     * session/instance serves a still-valid snapshot straight from
     * storage. Callers fall back to live resolution on None; a snapshot
-    * manifest in an unknown format throws. */
-  def currentSnapshotIfValid(table: String): Option[DataFrame] = {
+    * manifest in an unknown format throws.
+    *
+    * It serves only a snapshot whose watermark (the highest
+    * `_system_from` folded in) is at or before `basis`, the reading
+    * statement's token: a snapshot rematerialized after the token would
+    * show that statement state its other tables, read at the token, do
+    * not have. */
+  def currentSnapshotIfValid(table: String,
+      basis: java.sql.Timestamp = snapshotToken()): Option[DataFrame] = {
     if (noSnapshot.contains(table)) return None
+    val basisMicros = tsMicros(basis)
     val nowMicros = {
       val i = java.time.Instant.now()
       i.getEpochSecond * 1000000L + i.getNano / 1000L
@@ -2388,7 +2467,8 @@ class XtDb(spark: SparkSession, val root: String) {
       case Some(m) =>
         val layoutOk = layoutOf(table)
           .exists(l => l.key == m.key && l.buckets == m.buckets)
-        if (!layoutOk || nowMicros >= m.expires) None
+        if (!layoutOk || nowMicros >= m.expires ||
+            m.watermark > basisMicros) None
         else liveFileSets(table) match {
           case Some(s) if s.meta.gen == m.gen &&
               s.meta.lvseq == m.lvseq && s.backlog.isEmpty =>
@@ -3060,9 +3140,12 @@ class XtDb(spark: SparkSession, val root: String) {
     val rows = cond.limit(2).collect()
     val ok = rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getBoolean(0)
     if (!ok) {
-      val sysTime = nextSystemTime()
-      logTx(sysTime, "", "assert", committed = false,
-        error = Some(s"$label failed"))
+      synchronized {
+        val sysTime = nextSystemTime()
+        logTx(sysTime, "", "assert", committed = false,
+          error = Some(s"$label failed"))
+        publish(sysTime)
+      }
       throw TxAbortedException(s"$label failed")
     }
   }
@@ -3289,12 +3372,15 @@ class XtDb(spark: SparkSession, val root: String) {
   // ---- role catalog (GRANT/REVOKE ROLE; reference Sql.g4 grant stmts +
   // pg_catalog role views). Records are append-only; the current grant set
   // is the latest action per (what, grantee).
-  def recordGrant(grant: Boolean, what: String, grantee: String): Unit = {
-    import spark.implicits._
-    Seq((nextSystemTime(), if (grant) "grant" else "revoke", what, grantee))
-      .toDF("at", "action", "what", "grantee")
-      .write.mode("append").parquet(s"$root/_roles")
-  }
+  def recordGrant(grant: Boolean, what: String, grantee: String): Unit =
+    synchronized {
+      import spark.implicits._
+      val at = nextSystemTime()
+      Seq((at, if (grant) "grant" else "revoke", what, grantee))
+        .toDF("at", "action", "what", "grantee")
+        .write.mode("append").parquet(s"$root/_roles")
+      publish(at)
+    }
 
   private def rolesLog: DataFrame =
     systemLog(s"$root/_roles", XtDb.RolesLogSchema)
@@ -3375,29 +3461,41 @@ class XtDb(spark: SparkSession, val root: String) {
     (tableCount, files)
   }
 
-  /** Stable snapshot token — the current log head. A query pinned to the
-    * token (`atSnapshot`) sees the identical database state regardless of
-    * concurrent later transactions (reference basis / snapshot-token,
-    * query.clj:142-164, 433-440). */
-  def snapshotToken(): java.sql.Timestamp = synchronized {
-    if (lastSystemMicros == 0L) {
-      adoptPersistedHead()
-      if (lastSystemMicros == 0L) {
-        val now = java.time.Instant.now()
-        lastSystemMicros = now.getEpochSecond * 1000000L + now.getNano / 1000L
-      }
-    }
-    java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-      lastSystemMicros / 1000000L, (lastSystemMicros % 1000000L) * 1000L))
+  /** Stable snapshot token — the committed head: the system time of the
+    * latest transaction whose log record has landed (reference basis /
+    * snapshot-token, query.clj:142-164, 433-440). Lock-free: it never
+    * waits for an in-flight commit, and that commit's events carry a
+    * later `_system_from`, so a read at the token cannot see them even
+    * when their files are already listed. A query pinned to the token
+    * (`atSnapshot`) sees the identical database state regardless of
+    * concurrent later transactions. On a store with no transaction yet it
+    * is the wall clock, and taking it allocates nothing. */
+  def snapshotToken(): java.sql.Timestamp = {
+    ensureHeads()
+    val head = committedMicros.get
+    if (head > 0L) microsToTs(head)
+    else new java.sql.Timestamp(System.currentTimeMillis())
   }
 
-  /** Read a table pinned to a snapshot token (current valid time). */
+  /** Read a table pinned to a snapshot token: system time at the token,
+    * valid time now. */
   def atSnapshot(table: String,
       token: java.sql.Timestamp): DataFrame =
     Bitemporal.asOf(events(table), current_timestamp(), lit(token))
 }
 
 object XtDb {
+  private val committedHeads =
+    new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicLong]()
+
+  /** The committed head of the store at the qualified `root`, one per
+    * JVM. */
+  private def committedHead(root: String)
+      : java.util.concurrent.atomic.AtomicLong =
+    committedHeads.computeIfAbsent(root,
+      _ => new java.util.concurrent.atomic.AtomicLong(0L))
+
   /** The `_txs` log's columns, as `logTx` writes them. */
   val TxLogSchema: StructType = StructType.fromDDL(
     "tx_id BIGINT, system_time TIMESTAMP, tx_table STRING, tx_op STRING, " +
@@ -3425,6 +3523,9 @@ object XtDb {
     /** The aligned rewrite's pointer has flipped; `_evmeta.json` is not
       * yet promoted. */
     final case class BeforePromote(table: String) extends WritePoint
+    /** A transaction's files have landed in every table it writes; its
+      * log record is not yet written, so it is not yet committed. */
+    final case class Appended(tables: Seq[String]) extends WritePoint
   }
 
   /** Called at every [[WritePoint]]. A no-op in production; a spec sets

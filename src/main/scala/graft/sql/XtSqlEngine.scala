@@ -98,13 +98,13 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
     if (toks.nonEmpty && toks.head.is("EXPLAIN")) {
       val analyze = toks.length > 1 && toks(1).is("ANALYZE")
       val rest = text.substring(toks(if (analyze) 2 else 1).start)
-      val df = runQuery(parseQuery(rest, dbNames))
+      val df = runQuery(parseQuery(rest, dbNames), db.snapshotToken())
       val rep = if (analyze) graft.plans.Explain.analyze(df)
         else graft.plans.Explain.report(df)
       import spark.implicits._
       rep.render.split("\n").toSeq.toDF("plan")
     } else parse(text, dbNames) match {
-      case Query(pq) => runQuery(pq)
+      case Query(pq) => runQuery(pq, db.snapshotToken())
       case CreateTable(table, ddl, layout) =>
         db.createTable(table, ddl)
         // the WITH (layout_key, layout_buckets) clause — the SQL face of
@@ -137,7 +137,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
         val fmt = format.getOrElse {
           if (path.toLowerCase.endsWith(".csv")) "csv" else "parquet"
         }
-        val snap = Bitemporal.current(db.events(table))
+        val snap = currentAt(db.events(table), db.snapshotToken())
           .drop(Bitemporal.IID, Bitemporal.VF, Bitemporal.VT, Bitemporal.SF,
             Bitemporal.ST, Bitemporal.SEQ, Bitemporal.OP, Bitemporal.BUCKET)
         val writer = snap.write.mode("overwrite")
@@ -222,9 +222,11 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
           // the stale plan ages out of the LRU. Execution is a fresh
           // QueryExecution each time: the data path re-runs in full.
           case Query(pq) if openTx.isEmpty =>
+            val token = db.snapshotToken()
             graft.PlanCache.prepared(spark,
-              ("xtsql", bound, db.snapshotToken().toString, clock,
-                spark.conf.get("spark.sql.session.timeZone")))(runQuery(pq))
+              ("xtsql", bound, token.toString, clock,
+                spark.conf.get("spark.sql.session.timeZone")))(
+              runQuery(pq, token))
           case _ => sql(bound)
         }
       case WithReturning(dml, selectList) =>
@@ -234,6 +236,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
         // materialized BEFORE submit (reference returningStatement,
         // Sql.g4:19-31: INSERT returns the inserted docs, UPDATE the new
         // versions, DELETE the removed rows)
+        lazy val token = db.snapshotToken()
         val affected: DataFrame = dml match {
           case Insert(_, _) | CopyIn(_, _, _) => toTxOp(dml) match {
             case TxOp.Put(_, docs, _, _) => docs
@@ -241,13 +244,13 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
               s"RETURNING unsupported for $other")
           }
           case Update(table, _, sets, where) =>
-            val base: DataFrame = Bitemporal.current(db.events(table))
+            val base: DataFrame = currentAt(db.events(table), token)
               .filter(where.map(expr).getOrElse(lit(true)))
             sets.foldLeft(base) {
               case (df, (c, e)) => df.withColumn(c, expr(e))
             }
           case Delete(table, _, where) =>
-            Bitemporal.current(db.events(table))
+            currentAt(db.events(table), token)
               .filter(where.map(expr).getOrElse(lit(true)))
           case other => throw SqlParseException(
             s"RETURNING is not valid on ${other.getClass.getSimpleName}")
@@ -259,8 +262,8 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
           .toSet
         val dropRet = Seq(Bitemporal.IID, Bitemporal.VF, Bitemporal.VT,
           Bitemporal.SF, Bitemporal.ST).filterNot(retRef.contains)
-        affected.drop(dropRet: _*).createOrReplaceTempView("__returning_src")
-        val out = spark.sql(s"SELECT $selectList FROM __returning_src")
+        val out = bind(Seq("__returning_src" -> affected.drop(dropRet: _*)),
+          s"SELECT $selectList FROM __returning_src")
         // Pin the RETURNING projection pre-commit WITHOUT driver memory:
         // stage it to a temp parquet path (the tx-staging pattern) and
         // return a scan of the staged copy — a 10^9-row UPDATE..RETURNING
@@ -360,29 +363,71 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
 
   // ---- queries ------------------------------------------------------------
 
-  private def toSpec(ast: SpecAst): Bitemporal.TemporalSpec = ast match {
-    case SpecAst.Current => clock match {
-      case Some(t) => Bitemporal.TemporalSpec.AsOf(lit(t))
-      case None => Bitemporal.TemporalSpec.Current
-    }
-    case SpecAst.All => Bitemporal.TemporalSpec.All
-    case SpecAst.AsOf(ts) =>
-      Bitemporal.TemporalSpec.AsOf(expr(ts).cast("timestamp"))
-    case SpecAst.Range(f, t, incl) =>
-      Bitemporal.TemporalSpec.Range(expr(f).cast("timestamp"),
-        expr(t).cast("timestamp"), incl)
-  }
+  /** System time "now" at a statement's basis `token` (the store's
+    * committed head): capped at the wall clock, so a commit stamped in the
+    * future (a system-time override) stays invisible until then, and never
+    * past the token, so a transaction still in flight stays invisible. */
+  private def atBasis(token: java.sql.Timestamp): Column =
+    least(lit(token), current_timestamp())
 
-  def runQuery(pq: ParsedQuery): DataFrame = {
+  /** A table's current rows at the statement's basis (valid time now). */
+  private def currentAt(events: DataFrame,
+      token: java.sql.Timestamp): DataFrame =
+    Bitemporal.asOf(events, current_timestamp(), atBasis(token))
+
+  /** `systemAt` is the statement's token on the system dimension of the
+    * primary store, None elsewhere (valid time, attached stores): there
+    * an unpinned reference resolves to now. A frozen clock pins both. */
+  private def toSpec(ast: SpecAst,
+      systemAt: Option[java.sql.Timestamp]): Bitemporal.TemporalSpec =
+    ast match {
+      case SpecAst.Current => (clock, systemAt) match {
+        case (Some(t), _) => Bitemporal.TemporalSpec.AsOf(lit(t))
+        case (None, Some(token)) =>
+          Bitemporal.TemporalSpec.AsOf(atBasis(token))
+        case (None, None) => Bitemporal.TemporalSpec.Current
+      }
+      case SpecAst.All => Bitemporal.TemporalSpec.All
+      case SpecAst.AsOf(ts) =>
+        Bitemporal.TemporalSpec.AsOf(expr(ts).cast("timestamp"))
+      case SpecAst.Range(f, t, incl) =>
+        Bitemporal.TemporalSpec.Range(expr(f).cast("timestamp"),
+          expr(t).cast("timestamp"), incl)
+    }
+
+  /** Register `views` (and `snapshot_token()` when `token` is given) and
+    * analyze `text` as one step. Every engine on this Spark session — each
+    * pgwire connection, the in-process client — registers views of the
+    * same names in the session's one catalog, so the step holds the
+    * session's bind lock for its few ms. Analysis is eager: the Dataset
+    * returned stays bound to these views, and it executes outside the
+    * lock. Callers build every DataFrame before calling, and nothing
+    * under the lock takes the store's monitor: an ASSERT binds while its
+    * commit holds that monitor. */
+  private def bind(views: Seq[(String, DataFrame)], text: String,
+      token: Option[String] = None): DataFrame =
+    XtSqlEngine.bindLock(spark).synchronized {
+      views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+      token.foreach { tok =>
+        import org.apache.spark.sql.GraftColumnBridge.toExpression
+        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+          "snapshot_token", _ => toExpression(lit(tok)), "scala_udf")
+      }
+      spark.sql(text)
+    }
+
+  /** Run a query at the basis `token` — one `snapshotToken()` per
+    * statement, taken by the caller before any lock. Every unpinned
+    * system-time reference to the primary store resolves at the token, so
+    * the statement reads one committed state however many tables it
+    * joins, and a transaction committing meanwhile stays invisible to it.
+    * Valid time resolves to now; a frozen clock pins both dimensions. */
+  private def runQuery(pq: ParsedQuery,
+      token: java.sql.Timestamp): DataFrame = {
     // snapshot_token() (reference temporal.clj:1783-1790): the query's
     // basis token as a string — constant within the query, so it plans as
     // a literal
-    locally {
-      import org.apache.spark.sql.GraftColumnBridge.toExpression
-      val tok = clock.getOrElse(db.snapshotToken()).toString
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "snapshot_token", _ => toExpression(lit(tok)), "scala_udf")
-    }
+    val tok = clock.getOrElse(token).toString
     // Reference semantics: _iid/_valid_*/_system_* are hidden columns —
     // `SELECT *` does not expand them, but naming one selects it
     // (as_of_test.clj scans request temporal columns explicitly). Spark
@@ -409,20 +454,23 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
             graft.functions.Periods.period(col(fc), col(tc)))
         else d
       }.drop(dropMeta: _*)
+    def resolveAt(d: XtDb, t: String, valid: SpecAst,
+        system: SpecAst): DataFrame =
+      visible(Bitemporal.resolve(d.events(t), toSpec(valid, None),
+        toSpec(system, if (d eq db) Some(token) else None)))
     // each temporal ref becomes its own view, spliced into the text
-    val reps = pq.refs.zipWithIndex.map { case (r, i) =>
-      val view = s"__xt_${r.table}_$i"
+    val refViews = pq.refs.zipWithIndex.map { case (r, i) =>
       // a temporal clause on a qualified ref resolves against the
       // attached store the parser folded into the name
-      val evs = r.table match {
-        case QualRef(dbName, tbl) => dbFor(dbName).events(tbl)
-        case t => db.events(t)
+      val (d, t) = r.table match {
+        case QualRef(dbName, tbl) => (dbFor(dbName), tbl)
+        case t => (db, t)
       }
-      visible(Bitemporal.resolve(evs, toSpec(r.valid), toSpec(r.system)))
-        .createOrReplaceTempView(view)
-      (r.start, r.end, view)
+      (r, s"__xt_${r.table}_$i" -> resolveAt(d, t, r.valid, r.system))
     }
-    val text = SqlLexer.splice(pq.text, reps)
+    val text = SqlLexer.splice(pq.text, refViews.map { case (r, (view, _)) =>
+      (r.start, r.end, view)
+    })
     // Session relations are built per statement, and only the ones the
     // text Spark will parse names: a relation is registered when its
     // lowercased name is an identifier-shaped word of that text. That is a
@@ -433,18 +481,19 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
     val words = XtSqlEngine.Word
       .findAllIn(text.toLowerCase(java.util.Locale.ROOT)).toSet
     def atDefault(d: XtDb, t: String): DataFrame =
-      visible(Bitemporal.resolve(d.events(t),
-        toSpec(pq.defaultValid), toSpec(pq.defaultSystem)))
+      resolveAt(d, t, pq.defaultValid, pq.defaultSystem)
     val tables = db.tables
     // A query at the plain current point (no temporal clause, no frozen
-    // clock) reads a table's bucketed current snapshot when one is valid —
-    // the declared-layout zero-exchange join path (XtDb.declareLayout);
-    // anything temporal resolves live from the event log.
+    // clock) reads a table's bucketed current snapshot when one is valid
+    // at the token — the declared-layout zero-exchange join path
+    // (XtDb.declareLayout); anything temporal resolves live from the
+    // event log.
     val atCurrent = pq.defaultValid == SpecAst.Current &&
       pq.defaultSystem == SpecAst.Current && clock.isEmpty
     val storeTables = tables.map { t =>
-      t -> (() => (if (atCurrent) db.currentSnapshotIfValid(t) else None)
-        .map(visible).getOrElse(atDefault(db, t)))
+      t -> (() =>
+        (if (atCurrent) db.currentSnapshotIfValid(t, token) else None)
+          .map(visible).getOrElse(atDefault(db, t)))
     }
     // attached databases: the parser folded every qualified ref to
     // __db_<name>__<table>, resolved under the default specs (xtdb.t
@@ -485,15 +534,15 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
       },
       "xt_role_membership_history" -> (() => db.roleMembershipHistory)) ++
       graft.sources.PgCatalog.views(spark, tables, schemas, membership)
-    (storeTables ++ qualified ++ system).foreach { case (name, build) =>
-      if (words(name.toLowerCase(java.util.Locale.ROOT)))
-        build().createOrReplaceTempView(name)
+    val named = (storeTables ++ qualified ++ system).collect {
+      case (name, build) if words(name.toLowerCase(java.util.Locale.ROOT)) =>
+        name -> build()
     }
-    spark.sql(text)
+    bind(refViews.map(_._2) ++ named, text, Some(tok))
   }
 
   private def runQueryText(text: String): DataFrame =
-    runQuery(parseQuery(text))
+    runQuery(parseQuery(text), db.snapshotToken())
 
   // ---- DML → TxOp ---------------------------------------------------------
 
@@ -592,13 +641,18 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
 
   /** ASSERT condition: tables resolve to the in-tx current snapshot, so a
     * multi-op tx can assert over its own staged effects. */
-  private def assertDf(snap: TxSnapshot, cond: String): DataFrame = {
-    snap.tables.foreach(t => snap.current(t).createOrReplaceTempView(t))
-    spark.sql(s"SELECT ($cond) AS ok")
-  }
+  private def assertDf(snap: TxSnapshot, cond: String): DataFrame =
+    bind(snap.tables.map(t => t -> snap.current(t)), s"SELECT ($cond) AS ok")
 }
 
 object XtSqlEngine {
   /** An identifier-shaped word: the unit a statement names a relation by. */
   private val Word = "(?U)\\w+".r
+
+  private val bindLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, AnyRef]())
+
+  /** The one lock per Spark session under which statements bind. */
+  private def bindLock(spark: SparkSession): AnyRef =
+    bindLocks.computeIfAbsent(spark, _ => new Object)
 }

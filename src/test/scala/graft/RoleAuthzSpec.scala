@@ -124,4 +124,23 @@ class RoleAuthzSpec extends AnyFunSuite {
     }
     eng.sql("ROLLBACK")
   }
+
+  test("a fresh instance's next transaction comes after the latest grant") {
+    val (db, eng) = fresh()
+    import spark.implicits._
+    // an override an hour ahead puts the log head past the wall clock, so
+    // the grant's time follows the head, not the clock
+    val ahead = new java.sql.Timestamp(System.currentTimeMillis() + 3600000L)
+    db.submitTx(Seq(graft.bitemporal.TxOp.Put("r_docs",
+      Seq((1L, 1L)).toDF("_id", "v"))), Some(ahead))
+    eng.sql("GRANT analyst TO alice")
+    val grantAt = db.roleGrants.select("at").as[java.sql.Timestamp]
+      .collect().head
+    assert(grantAt.after(ahead))
+    val reopened = new XtDb(spark, db.root)
+    val next = reopened.submitTx(Seq(graft.bitemporal.TxOp.Put("r_docs",
+      Seq((2L, 2L)).toDF("_id", "v"))))
+    assert(next.after(grantAt),
+      s"next transaction at $next must follow the grant at $grantAt")
+  }
 }

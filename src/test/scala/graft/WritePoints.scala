@@ -31,4 +31,6 @@ object WritePoints {
   val beforePromote: WritePoint => Boolean =
     _.isInstanceOf[WritePoint.BeforePromote]
   val snapshotFold: WritePoint => Boolean = _.isInstanceOf[WritePoint.Fold]
+  /** A transaction's files have landed; its log record has not. */
+  val appended: WritePoint => Boolean = _.isInstanceOf[WritePoint.Appended]
 }
