@@ -238,9 +238,13 @@ class XtDb(spark: SparkSession, val root: String) {
     * the manifest's live file set (base bucket files + level folds)
     * whenever the appended backlog is empty ([[bucketedEventsIfValid]]):
     * `Bitemporal.asOf`'s windows and as-of joins by `_iid` then plan with
-    * zero exchange. With a backlog pending, the read is the explicit
-    * union of live files (base + levels + backlog) — always correct, one
-    * exchange — until the next (incremental) compaction folds it.
+    * zero exchange. With a backlog pending, the read is bucketed(base +
+    * levels) ∪ the flat backlog — always correct; a full resolve pays one
+    * exchange until the next (incremental) compaction folds it, while an
+    * `_id = k` read (XT SQL, pgwire, `pointLookup`, a point DML's
+    * matched-row read) is pinned branch by branch by
+    * [[graft.plans.IidBucketPruning]]: one bucket of the big side plus
+    * that iid's backlog rows, resolved in one task with no exchange.
     *
     * Reads go under the registered LUB schema: Spark 4's vectorized
     * parquet reader widens narrower stored types (int→long, float/int→
@@ -264,9 +268,8 @@ class XtDb(spark: SparkSession, val root: String) {
       else if (bucketed.nonEmpty && loadSchema(table).isDefined)
         // backlog pending: serve bucketed(base+levels) ∪ flat backlog.
         // The union's output partitioning is unknown (windows pay their
-        // exchange until the next fold — correct either way), but an
-        // `_iid = k` point lookup still prunes the BIG side to one hash
-        // bucket; only the small backlog is scanned in full.
+        // exchange until the next fold — correct either way); an
+        // `_id = k` read pins both branches (IidBucketPruning)
         tryBucketed().map(_.unionByName(explicitRead(table, s.backlog)))
           .getOrElse(explicitRead(table, bucketed ++ s.backlog))
       else if (s.meta.levels.isEmpty && s.meta.consumed.isEmpty)
@@ -1266,25 +1269,17 @@ class XtDb(spark: SparkSession, val root: String) {
       sweepOldGen = pending > 0)
   }
 
-  /** Point lookup by `_id`: over a compacted log the `_iid` equality
-    * prunes the bucketed scan to ONE of the hash buckets before any file
-    * is opened (Spark bucket pruning — the reference's iid-trie path
-    * pruning, scan.clj:161-199 / Trie.kt:34-60); uncompacted appends are
-    * skipped by the pushed parquet row-group stats instead. */
+  /** Point lookup by `_id`: the `_id` equality above the snapshot lets
+    * [[graft.plans.IidBucketPruning]] derive the `_iid` + `_bucket`
+    * predicates at every event scan — the bucketed base + levels read ONE
+    * of the hash buckets before any file is opened (Spark bucket pruning —
+    * the reference's iid-trie path pruning, scan.clj:161-199 /
+    * Trie.kt:34-60), a pending backlog only that iid's rows via the
+    * pushed parquet filter — and runs the resolve in one task. */
   def pointLookup(table: String, id: Any,
       validAt: Option[Column] = None,
-      systemAt: Option[Column] = None): DataFrame = {
-    val iidHex = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(String.valueOf(id).getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-    }
-    val pruned = events(table)
-      .filter(col(BUCKET) === iidHex.substring(0, 1) && col(IID) === iidHex)
-    Bitemporal.asOf(pruned,
-      validAt.getOrElse(current_timestamp()).cast("timestamp"),
-      systemAt.getOrElse(current_timestamp()).cast("timestamp"))
-  }
+      systemAt: Option[Column] = None): DataFrame =
+    asOf(table, validAt, systemAt).filter(col(ID) === lit(id))
 
   /** Compaction — consolidate the many small per-transaction files into one
     * file per storage bucket (reference compactor/Compactor.kt; OPTIMIZE
@@ -3279,14 +3274,17 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** Snapshot read — FOR VALID_TIME AS OF / FOR SYSTEM_TIME AS OF
-    * (defaults: now/now — reference scan.clj:307-310 default when no
-    * temporal filter). */
+    * (defaults: valid time now — reference scan.clj:307-310 default when no
+    * temporal filter — and system time at the committed basis,
+    * `least(snapshotToken(), now)`, so a transaction whose files have
+    * landed but whose log record has not stays invisible). */
   def asOf(table: String,
       validAt: Option[Column] = None,
       systemAt: Option[Column] = None): DataFrame =
     Bitemporal.asOf(events(table),
       validAt.getOrElse(current_timestamp()).cast("timestamp"),
-      systemAt.getOrElse(current_timestamp()).cast("timestamp"))
+      systemAt.getOrElse(least(lit(snapshotToken()), current_timestamp()))
+        .cast("timestamp"))
 
   /** FOR ALL VALID_TIME + ALL SYSTEM_TIME — full rectangle history. */
   def history(table: String): DataFrame =

@@ -20,16 +20,34 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   * so selecting one id keeps or drops whole window partitions.
   *
   * This rule finds a conjunct `_id = lit` (or `_iid = lit`) in a Filter,
-  * derives the iid hex + bucket char at plan time, and injects
-  * `_iid = hex AND _bucket = char` directly above the event scan —
-  * descending ONLY through nodes where whole-partition removal is
-  * semantics-preserving (Project / Filter / SubqueryAlias / Window
-  * partitioned by `_iid` or `_id`); anything else (Aggregate over other
-  * keys, Join, Union) stops the descent and the rule no-ops. The injected
-  * predicate is implied by the original filter, so it can only remove rows
-  * the filter would drop anyway. `FileSourceStrategy` then splits
-  * `_bucket` into partitionFilters (1 of 16 dirs scanned) and pushes
-  * `_iid` to parquet (row-group stats + dictionary pruning).
+  * derives the iid hex + bucket char at plan time, and descends ONLY
+  * through nodes where whole-partition removal is semantics-preserving
+  * (Project / Filter / SubqueryAlias / Window partitioned by `_iid` or
+  * `_id`) to the event input; anything else (Aggregate over other keys,
+  * Join) stops the descent and the rule no-ops. At the input it injects
+  * `_iid = hex AND _bucket = char` directly above each event scan:
+  *
+  *  - a single scan is pinned in place;
+  *  - a `Union` (`XtDb.events` with a pending backlog serves bucketed
+  *    base + levels ∪ the flat backlog; `submitTx` adds its staged ops)
+  *    is pinned branch by branch: the `_id` attribute maps into each
+  *    branch by output position and follows plain attribute pass-through
+  *    Projects and Filters down to the branch's scan. If any branch
+  *    cannot be pinned (say its `_id` is computed), the whole union is
+  *    left alone.
+  *
+  * The injected predicate is implied by the original filter, so it can
+  * only remove rows the filter would drop anyway. `FileSourceStrategy`
+  * then splits `_bucket` into partitionFilters or bucket pruning (1 of 16
+  * buckets scanned) and pushes `_iid` to parquet (row-group stats +
+  * dictionary pruning).
+  *
+  * Below a window the pinned input is also coalesced to one partition
+  * (`Repartition(1, shuffle = false)`): it holds the rows of one iid, and
+  * `CoalesceExec(1)` reports `SinglePartition`, which satisfies the
+  * windows' `ClusteredDistribution(_iid)` — so the exchange disappears
+  * and the bucketed scan's mostly empty bucket partitions run as one
+  * task. Streaming inputs are not coalesced.
   */
 object IidBucketPruning extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -74,7 +92,8 @@ object IidBucketPruning extends Rule[LogicalPlan] with PredicateHelper {
         }
       target match {
         case Some((idExpr, hex)) if !alreadyPruned(child, hex) =>
-          f.copy(child = inject(child, idExpr, hex))
+          descend(child, idExpr, hex, windowed = false)
+            .map(c => f.copy(child = c)).getOrElse(f)
         case _ => f
       }
   }
@@ -96,24 +115,55 @@ object IidBucketPruning extends Rule[LogicalPlan] with PredicateHelper {
       case _ => false
     }
 
-  private def inject(plan: LogicalPlan, idExpr: ExprId, hex: String)
-      : LogicalPlan = plan match {
-    case leaf if leaf.children.isEmpty &&
-        leaf.output.exists(_.exprId == idExpr) &&
-        leaf.output.exists(_.name == IIDC) &&
-        leaf.output.exists(_.name == BUCKET) =>
-      val iidA = leaf.output.find(_.name == IIDC).get
-      val bA = leaf.output.find(_.name == BUCKET).get
-      Filter(And(
+  /** The nodes above the event input; None = no input could be pinned.
+    * `idExpr` is the filtered key attribute, `_id` or `_iid`. */
+  private def descend(plan: LogicalPlan, idExpr: ExprId, hex: String,
+      windowed: Boolean): Option[LogicalPlan] = plan match {
+    case p: Project =>
+      descend(p.child, idExpr, hex, windowed).map(c => p.copy(child = c))
+    case fl: Filter =>
+      descend(fl.child, idExpr, hex, windowed).map(c => fl.copy(child = c))
+    case sa: SubqueryAlias =>
+      descend(sa.child, idExpr, hex, windowed).map(c => sa.copy(child = c))
+    case w: Window if safePartitionSpec(w.partitionSpec) =>
+      descend(w.child, idExpr, hex, windowed = true)
+        .map(c => w.copy(child = c))
+    case wgl: WindowGroupLimit if safePartitionSpec(wgl.partitionSpec) =>
+      descend(wgl.child, idExpr, hex, windowed = true)
+        .map(c => wgl.copy(child = c))
+    case input => pin(input, idExpr, hex).map { pinned =>
+      if (windowed && !pinned.isStreaming)
+        Repartition(1, shuffle = false, pinned)
+      else pinned
+    }
+  }
+
+  /** Pin the event input: a scan, or every branch of a union, through
+    * Projects and Filters. The key (`_id` or `_iid`) keeps its ExprId
+    * only through plain attribute pass-through, so a computed key never
+    * reaches a scan: None. */
+  private def pin(plan: LogicalPlan, idExpr: ExprId, hex: String)
+      : Option[LogicalPlan] = plan match {
+    case leaf if leaf.children.isEmpty =>
+      for {
+        _ <- leaf.output.find(_.exprId == idExpr)
+        iidA <- leaf.output.find(_.name == IIDC)
+        bA <- leaf.output.find(_.name == BUCKET)
+      } yield Filter(And(
         EqualTo(iidA, Literal(hex)),
         EqualTo(bA, Literal(hex.substring(0, 1)))), leaf)
-    case p: Project => p.copy(child = inject(p.child, idExpr, hex))
-    case fl: Filter => fl.copy(child = inject(fl.child, idExpr, hex))
-    case sa: SubqueryAlias => sa.copy(child = inject(sa.child, idExpr, hex))
-    case w: Window if safePartitionSpec(w.partitionSpec) =>
-      w.copy(child = inject(w.child, idExpr, hex))
-    case wgl: WindowGroupLimit if safePartitionSpec(wgl.partitionSpec) =>
-      wgl.copy(child = inject(wgl.child, idExpr, hex))
-    case other => other // unknown shape: prune nothing, stay correct
+    case p: Project => pin(p.child, idExpr, hex).map(c => p.copy(child = c))
+    case fl: Filter => pin(fl.child, idExpr, hex).map(c => fl.copy(child = c))
+    case u: Union =>
+      val i = u.output.indexWhere(_.exprId == idExpr)
+      // a positional union may put another column at the key's position
+      val pinned = if (i < 0) Nil else u.children.map { c =>
+        val a = c.output(i)
+        if (a.name == u.output(i).name) pin(c, a.exprId, hex) else None
+      }
+      if (pinned.nonEmpty && pinned.forall(_.isDefined))
+        Some(u.withNewChildren(pinned.flatten))
+      else None
+    case _ => None // unknown shape: prune nothing, stay correct
   }
 }

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every unpinned system-time reference at it, so a transaction whose
   * files have landed but whose log record has not stays invisible, and a
   * commit's auto-compaction does not hold readers back. Statements of
-  * engines sharing one Spark session bind their views atomically.
+  * engines sharing one Spark session bind their views atomically. The
+  * engine API's `asOf` and `pointLookup` default to the same basis.
   *
   * Every cross-thread wait is bounded (30 s at most) and every held write
   * point is released in `finally`, so a read that blocks on the writer
@@ -75,6 +76,27 @@ class ReadBasisSpec extends AnyFunSuite {
       }
     }
     assert(longs(reader, "SELECT v FROM hb_a WHERE _id = 1") == Seq(2L))
+  }
+
+  test("an engine-API read while a commit is held after its files landed " +
+      "returns the pre-commit rows") {
+    val (db, writer) = fresh()
+    writer.sql("INSERT INTO hb_api RECORDS {_id: 1, v: CAST(1 AS BIGINT)}")
+    def apiReads(): (Seq[Long], Seq[Long]) = (
+      db.asOf("hb_api").select("v").collect().toSeq.map(_.getLong(0)),
+      db.pointLookup("hb_api", 1L).select("v").collect().toSeq
+        .map(_.getLong(0)))
+    withPool(2) { implicit ec =>
+      holdAt(WritePoints.appended) { held =>
+        val commit = Future(writer.sql("UPDATE hb_api SET v = 2 WHERE _id = 1"))
+        assert(held.await(Wait.toSeconds, TimeUnit.SECONDS),
+          "the commit never reached its Appended write point")
+        assert(Await.result(Future(apiReads()), Wait) == ((Seq(1L), Seq(1L))))
+        assert(!commit.isCompleted, "the commit must still be held")
+        commit
+      }
+    }
+    assert(apiReads() == ((Seq(2L), Seq(2L))))
   }
 
   test("a join racing a two-table commit sees neither table's new version, " +
