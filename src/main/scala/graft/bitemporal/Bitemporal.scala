@@ -40,13 +40,17 @@ object Bitemporal {
   val metaCols: Seq[String] = Seq(IID, ID, VF, VT, SF, SEQ, OP, BUCKET)
 
   /** Point-in-time snapshot: the document versions visible at
-    * (validAt, systemAt). Window fast path:
-    * filter events to the system snapshot, drop events at-or-before each
+    * (validAt, systemAt). Window fast path: drop events at-or-before each
     * iid's latest erase (events written *after* an erase — re-inserts —
     * stay visible, matching the reference's descending polygon scan,
-    * PolygonCalculator.kt:43-46, and `EventAlgebra.resolve`), keep events
-    * whose valid interval contains validAt, take the newest per iid, and
-    * keep it only if it is a `put`.
+    * PolygonCalculator.kt:43-46, and `EventAlgebra.resolve`), then filter
+    * to the system snapshot, keep events whose valid interval contains
+    * validAt, take the newest per iid, and keep it only if it is a `put`.
+    * An erase masks EVERY system time, including ones before it: the
+    * erase window sees erase events past `systemAt` too, exactly as
+    * `history` (FOR ALL SYSTEM_TIME) and compaction's purge treat them.
+    * On a log without erases the window's input is the system snapshot,
+    * as before.
     *
     * One shuffle: the erase ceiling rides the same `partitionBy(_iid)`
     * exchange as the recency rank — no distinct/anti-join side plan.
@@ -64,10 +68,11 @@ object Bitemporal {
   def asOf(events: DataFrame, validAt: Column, systemAt: Column): DataFrame = {
     val wIid = Window.partitionBy(IID)
     val visible = events
-      .filter(col(SF) <= systemAt)
+      .filter(col(SF) <= systemAt || col(OP) === "erase")
       .withColumn("__erase_sf",
         max(when(col(OP) === "erase", col(SF))).over(wIid))
       .filter(col("__erase_sf").isNull || col(SF) > col("__erase_sf"))
+      .filter(col(SF) <= systemAt)
     val candidate = visible
       .filter(col(VF) <= validAt &&
         (col(VT).isNull || col(VT) > validAt))

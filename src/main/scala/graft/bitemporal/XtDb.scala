@@ -75,8 +75,8 @@ trait TxSnapshot {
   * explicit-file bucketed relation (StaticFileIndex — zero planning RPCs)
   * whenever storage still vouches for it (generation pointer + manifest;
   * an append from ANY instance invalidates). Maintenance is incremental
-  * and crash-safe: leveled O(backlog) folds, chunked aligned full
-  * compaction committed by a staged manifest + pointer CAS, bounded
+  * and crash-safe: leveled O(backlog) folds, full compaction committed
+  * by one pointer CAS (zero-exchange at an unchanged fanout), bounded
   * bucket-local erase purge, and an incremental declared-layout snapshot
   * (fold from pruned event buckets or from snapshot+delta, chosen by
   * measured bytes). `Bitemporal.asOf`'s `_iid` windows and
@@ -186,8 +186,8 @@ class XtDb(spark: SparkSession, val root: String) {
     schemaSidecar(schemaPath(table))
 
   // ---- sidecars: the small metadata files next to the data (`_gen`,
-  // `_evmeta*.json`, `_snapmeta.json`, `_snapschema.json`, `_layout.json`,
-  // `_compact_progress.json`, `_schemas/<t>.json`, `_txs/_gen`). The store
+  // `_evmeta.json`, `_snapmeta.json`, `_snapschema.json`, `_layout.json`,
+  // `_schemas/<t>.json`, `_txs/_gen`). The store
   // has ONE format: every writer writes every field, so a sidecar missing
   // one is corrupt or from an unknown format, and reading it fails loudly
   // and names the file — never a quiet fallback to a weaker read.
@@ -355,16 +355,8 @@ class XtDb(spark: SparkSession, val root: String) {
     case None => tableDir(table)
   }
 
-  /** Storage bucket count FLOOR for the event log — the trie fanout
-    * analogue. 16 matches the iid-hex first-char spread; the actual count
-    * is derived from the table's live bytes at each full compaction
-    * ([[deriveEventBuckets]]) so a growing table re-fans out instead of
-    * accreting 16 multi-TB single files. */
-  private def eventBucketFloor: Int =
-    spark.conf.get("spark.graft.eventBuckets", "16").toInt
-
   /** Bucket count for a full compaction, derived from the live data size:
-    * `max(floor, ceil(bytes / spark.graft.eventBucketBytes))`, capped at
+    * `max(16, ceil(bytes / spark.graft.eventBucketBytes))`, capped at
     * 4096. Persisted in `_evmeta.json` (readers and level folds adapt for
     * free) and RE-derived at every full compaction, so the fanout tracks
     * table growth — no bucket ever has to exceed ~one task read. */
@@ -373,7 +365,7 @@ class XtDb(spark: SparkSession, val root: String) {
       .get("spark.graft.eventBucketBytes", (256L * 1024 * 1024).toString)
       .toLong
     math.min(4096L,
-      math.max(eventBucketFloor.toLong,
+      math.max(XtDb.EventBucketFloor.toLong,
         (liveBytes + target - 1) / math.max(1L, target))).toInt
   }
 
@@ -390,22 +382,36 @@ class XtDb(spark: SparkSession, val root: String) {
       case None => listRootParquet(table).map(_.getLen).sum
     }
 
-  /** Object-store-safe whole-table replace: the new generation is written
-    * as an iid-BUCKETED file set (one hash-bucket file per `_iid` bucket),
-    * committed by the atomic pointer PUT, then lazy GC of everything older
-    * than the superseded generation. No rename anywhere (ObjectStoreSpec
-    * enforces this). A crash between the pointer PUT and the meta write
-    * only costs the optimization: the flipped generation reads flat until
-    * the next compaction re-stamps it. */
-  private def rewriteCommit(table: String, df: DataFrame,
-      pendingEraseCycles: Int = 0, sweepOldGen: Boolean = false): Unit = {
-    val fs = hadoopFs
-    // pointer version BEFORE resolving the generation it points at: a
-    // racing flip makes our commit CAS fail (loud), never overwrite
-    val genV = hadoopFs match {
+  /** The versions a generation commit CASes against — the pointer's and
+    * the manifest's (-1 on stores without a version surface). Read BEFORE
+    * the commit's inputs: a racing flip or manifest write then makes the
+    * commit fail loudly, never overwrite. */
+  private final case class CommitBasis(genV: Long, manifestV: Long)
+
+  private def commitBasis(table: String): CommitBasis = CommitBasis(
+    hadoopFs match {
       case c: graft.storage.VersionedPut => c.versionOf(genPath(table))
       case _ => -1L
-    }
+    },
+    readEvMetaV(table)._2)
+
+  /** The one generation commit, shared by every whole-table rewrite
+    * (full compaction at any fanout, schema-flip migration). `df` is
+    * written as an iid-BUCKETED file set (one file per `_iid` bucket)
+    * into a fresh `g<n>_<suffix>` dir — without a repartition when
+    * `alreadyBucketed` (the input is hashed on `_iid` at `nb`) — and then,
+    * in order: the pointer PUT (CAS), the manifest write (CAS), lazy GC
+    * of everything older than the superseded generation. No rename
+    * anywhere (ObjectStoreSpec enforces this). A crash before the flip
+    * leaves the old generation and its manifest untouched (the new dir is
+    * an inert orphan for the next commit's GC); a crash after it leaves a
+    * gen-mismatched manifest, and the flipped generation reads flat from
+    * its directory listing — exactly its live set — until the next
+    * compaction re-stamps it. Recovery is a re-run. */
+  private def rewriteCommit(table: String, basis: CommitBasis,
+      df: DataFrame, nb: Int, alreadyBucketed: Boolean,
+      pendingEraseCycles: Int = 0, sweepOldGen: Boolean = false): Unit = {
+    val fs = hadoopFs
     val curInfo = currentGenInfo(table)
     val cur = curInfo.map(_._1)
     val next = cur.getOrElse(0) + 1
@@ -414,7 +420,6 @@ class XtDb(spark: SparkSession, val root: String) {
     // loser's dir is a whole orphan collected by the next commit's GC
     val gname = s"g${next}_" + java.util.UUID.randomUUID().toString.take(8)
     val gdir = s"${tableDir(table)}/$gname"
-    val nb = deriveEventBuckets(liveEventBytes(table))
     // the files the generation lease would keep until the NEXT flip: if
     // they hold erased payload, schedule the bounded sweep instead
     val sweepDirs =
@@ -423,19 +428,19 @@ class XtDb(spark: SparkSession, val root: String) {
         case Some((_, d)) => Seq(d)
         case None => listRootParquet(table).map(_.getPath.getName)
       }
-    writeBucketedFiles(df, gdir, nb)
+    writeBucketedFiles(df, gdir, nb, alreadyBucketed = alreadyBucketed)
     XtDb.writePointHook(WritePoint.BeforeFlip(table))
-    conditionalPut(genPath(table), s"$next:$gname", genV,
+    conditionalPut(genPath(table), s"$next:$gname", basis.genV,
       s"generation pointer of '$table'")
-    // the manifest write is a SUPERSEDE for the new generation, not a
-    // read-modify-write of the old one — unconditional by design
+    XtDb.writePointHook(WritePoint.Flipped(table))
     writeEvMeta(table, EvMeta(next, nb, Nil, Set.empty, Nil, 0,
-      eraseCycles = pendingEraseCycles, sweepDirs = sweepDirs))
+      eraseCycles = pendingEraseCycles, sweepDirs = sweepDirs),
+      basis.manifestV)
     // keep the superseded generation for in-flight readers; drop older.
     // Root-layout legacy data (loose appended parts) is "generation 0":
     // kept on the g1 flip, swept on the g2 flip. Every `_`-prefixed
-    // sidecar (_gen/_layout/_evmeta*/_snapmeta/_snapschema/
-    // _compact_progress/_staging) is metadata, never GC'd here.
+    // sidecar (_gen/_layout/_evmeta/_snapmeta/_snapschema/_staging) is
+    // metadata, never GC'd here.
     val keep = Set(gname) ++ curInfo.map(_._2)
     if (cur.isDefined)
       fs.listStatus(new org.apache.hadoop.fs.Path(tableDir(table)))
@@ -505,15 +510,7 @@ class XtDb(spark: SparkSession, val root: String) {
       //    swallowed fold failure) is repaired BEFORE the markers are
       //    physically deleted (GDPR bound, ADVICE r14 #3).
       eraseBuckets: Set[Int] = Set.empty,
-      eraseMaxSf: Long = 0L,
-      // round 17: an aligned generation's committed chunk-dir names
-      // (gen-dir-relative, attempt-tagged `c<lo>.<tag>`). NonEmpty ⇒
-      // base-file reads are FENCED to these dirs: a paused loser
-      // attempt's late-landing part files in its own tagged dirs are
-      // never served as duplicate base rows. Empty = no fence (flat
-      // folds and shuffle-path generations write base files at the gen
-      // root).
-      chunks: Seq[String] = Nil)
+      eraseMaxSf: Long = 0L)
 
   private def evMetaPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_evmeta.json")
@@ -532,7 +529,7 @@ class XtDb(spark: SparkSession, val root: String) {
   private[graft] def writeEvMeta(table: String, m: EvMeta,
       expectVersion: Long = -1L): Unit = {
     require((m.levels ++ m.consumed ++ m.retired ++ m.excluded ++
-        m.sweepDirs ++ m.chunks)
+        m.sweepDirs)
         .forall(n => !n.exists(c => c == '"' || c == '\\' || c == '\n')),
       "manifest entries must be plain file/dir names")
     conditionalPut(evMetaPath(table), evMetaJson(m), expectVersion,
@@ -542,14 +539,14 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   private def evMetaJson(m: EvMeta): String =
-    s"""{"v":2,"gen":${m.gen},""" +
+    s"""{"v":3,"gen":${m.gen},""" +
       s""""buckets":${m.buckets},"levels":${jsonArr(m.levels)},""" +
       s""""consumed":${jsonArr(m.consumed)},""" +
       s""""retired":${jsonArr(m.retired)},"lvseq":${m.lvseq},""" +
       s""""ecyc":${m.eraseCycles},"excl":${jsonArr(m.excluded)},""" +
       s""""sweep":${jsonArr(m.sweepDirs)},""" +
       s""""ebk":[${m.eraseBuckets.toSeq.sorted.mkString(",")}],""" +
-      s""""emsf":${m.eraseMaxSf},"chunks":${jsonArr(m.chunks)}}"""
+      s""""emsf":${m.eraseMaxSf}}"""
 
   /** CAS-if-available PUT (see [[writeEvMeta]]). */
   private def conditionalPut(p: org.apache.hadoop.fs.Path,
@@ -569,79 +566,33 @@ class XtDb(spark: SparkSession, val root: String) {
     * includes hidden level dirs), so a silent flat fallback would serve
     * wrong rows. */
   private[graft] def readEvMeta(table: String): Option[EvMeta] =
-    readEvMetaAt(evMetaPath(table))
-
-  private def readEvMetaAt(p: org.apache.hadoop.fs.Path): Option[EvMeta] =
-    jsonSidecar(p).map { j =>
-      j.requireVersion(2)
+    jsonSidecar(evMetaPath(table)).map { j =>
+      j.requireVersion(3)
       EvMeta(j.int("gen"), j.int("buckets"), j.strs("levels"),
         j.strs("consumed").toSet, j.strs("retired"), j.int("lvseq"),
         j.int("ecyc"), j.strs("excl").toSet, j.strs("sweep"),
-        j.ints("ebk"), j.long("emsf"), j.strs("chunks"))
+        j.ints("ebk"), j.long("emsf"))
     }
 
-  // ---- staged (gen-qualified) manifest — the aligned-commit fix ---------
-  //
-  // The aligned full compaction's new generation holds chunk SUBDIRS that
-  // only a manifest-driven read can serve, so its manifest must be
-  // durable BEFORE the pointer flips — but overwriting `_evmeta.json`
-  // before the flip would destroy the OLD generation's manifest (the only
-  // record of its levels/consumed set): a crash in that window would
-  // leave readers on a flat fallback that hides level dirs and
-  // resurrects consumed duplicates, and the next compaction would
-  // full-compact from that lossy read (ADVICE r14 #1 — silent permanent
-  // data loss). Instead the new manifest is STAGED under a name
-  // qualified by the new generation's unique dir (`_evmeta.<gdir>.json`),
-  // the pointer flips, and only then is `_evmeta.json` superseded. A
-  // crash before the flip leaves the old manifest fully intact; a crash
-  // after it is healed by the resolution below (any reader/writer finds
-  // the staged manifest through the pointer) and the next manifest write
-  // promotes it.
-
-  private def stagedEvMetaPath(table: String, genDir: String) =
-    new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_evmeta.$genDir.json")
-
-  /** Manifest resolution honoring a staged gen-qualified manifest: if
-    * `_evmeta.json` does not vouch for the CURRENT generation but a
-    * staged manifest written for the pointer's dir does, the staged one
-    * is authoritative (the returned version is still `_evmeta.json`'s —
-    * a CAS write of the promoted content races correctly). ANY manifest
-    * that claims a FUTURE generation (with no staged manifest covering
-    * the pointer) is the pre-round-15 crash artifact: no current writer
-    * produces one — both commit paths flip the pointer before touching
-    * `_evmeta.json` — so the only source is an aligned rewrite that
-    * overwrote the OLD generation's manifest and crashed before the
-    * flip. Whether the destroyed manifest had levels/consumed is
-    * unknowable from the new one (the common artifact carries
-    * levels=Nil), so serving or compacting from the flat fallback
-    * would silently lose data; it fails loudly regardless of the
-    * artifact's contents. */
+  /** The manifest with the version read before it. A manifest that
+    * claims a FUTURE generation is corruption: the generation commit
+    * flips the pointer before it writes `_evmeta.json`, and every other
+    * manifest write keeps the generation, so no writer produces one.
+    * Whether the live set it replaced had levels or consumed files
+    * is unknowable from it, so serving or compacting from the flat
+    * fallback would silently lose data; it fails loudly. */
   private def resolvedEvMetaV(table: String): (Option[EvMeta], Long) = {
     val (m, ver) = readEvMetaV(table)
     val curGen = currentGen(table).getOrElse(0)
-    m match {
-      case Some(mm) if mm.gen == curGen => (m, ver)
-      case other =>
-        val staged = currentGenDirName(table)
-          .flatMap(d => try readEvMetaAt(stagedEvMetaPath(table, d))
-            catch { case scala.util.control.NonFatal(_) => None })
-          .filter(_.gen == curGen)
-        staged match {
-          case Some(s) => (Some(s), ver)
-          case None =>
-            other.filter(_.gen > curGen)
-              .foreach { mm =>
-                throw new IllegalStateException(
-                  s"event manifest of '$table' claims generation " +
-                    s"${mm.gen} but the pointer is at $curGen and no " +
-                    s"staged manifest exists: a flat fallback would hide " +
-                    s"level dirs and resurrect consumed duplicates. " +
-                    s"Restore _gen or _evmeta.json from the store's " +
-                    s"object history before reading or compacting.")
-              }
-            (other, ver)
-        }
+    m.filter(_.gen > curGen).foreach { mm =>
+      throw new IllegalStateException(
+        s"event manifest of '$table' claims generation ${mm.gen} but " +
+          s"the pointer is at $curGen: a flat fallback would hide level " +
+          s"dirs and resurrect consumed duplicates. Restore _gen or " +
+          s"_evmeta.json from the store's object history before reading " +
+          s"or compacting.")
     }
+    (m, ver)
   }
 
   private def cachedResolvedEvMeta(table: String): Option[EvMeta] =
@@ -762,26 +713,10 @@ class XtDb(spark: SparkSession, val root: String) {
         // it reads as flat backlog instead of being wrongly prunable
         def isBase(name: String) =
           isBucketFile(name) && bucketIdOf(name) < m.buckets
-        // exclusion matches on the DATA-DIR-RELATIVE path: base files of
-        // an aligned generation live under chunk subdirs (`c0/part-…`),
-        // so a name-only match would silently keep serving a
-        // purge-superseded file. When the manifest carries a `chunks`
-        // fence (round 17), only files under the COMMITTED chunk dirs
-        // serve as base — a loser compaction attempt's late-landing
-        // part files in its own attempt-tagged dir are garbage, not
-        // duplicate rows.
-        val chunkFence: Option[Set[String]] =
-          if (m.chunks.nonEmpty) Some(m.chunks.toSet) else None
-        val base = rootFiles.filter { f =>
-          isBase(f.getPath.getName) && {
-            lazy val rel = relUnderData(table, f)
-            !m.excluded.contains(rel) &&
-              chunkFence.forall { cs =>
-                val i = rel.indexOf('/')
-                i > 0 && cs.contains(rel.substring(0, i))
-              }
-          }
-        }
+        // exclusion matches on the DATA-DIR-RELATIVE path, the key the
+        // purge writes (a base file's name, a level file's `level/name`)
+        val base = rootFiles.filter(f => isBase(f.getPath.getName) &&
+          !m.excluded.contains(relUnderData(table, f)))
         val backlog = rootFiles.filterNot(f =>
           isBase(f.getPath.getName) ||
             m.consumed.contains(f.getPath.getName))
@@ -1246,12 +1181,7 @@ class XtDb(spark: SparkSession, val root: String) {
         // transition at any depth, scalar->struct) needs the files rewritten
         // because no read-side promotion can conjure the new shape.
         if (!DynamicSchema.readPromotable(existingSchema, merged))
-          rewriteTable(table, DynamicSchema.conform(
-            liveFileSets(table) match {
-              case Some(s) =>
-                explicitRead(table, s.base ++ s.levelFiles ++ s.backlog)
-              case None => flatEvents(table)
-            }, merged))
+          rewriteTable(table, merged)
         saveSchema(table, merged)
       }
       DynamicSchema.conform(incoming, merged)
@@ -1261,13 +1191,24 @@ class XtDb(spark: SparkSession, val root: String) {
   /** Schema-flip rewrite: NOT a compaction — erase events (and their
     * pending-purge clock) ride into the new generation unpurged, and an
     * erase-tainted superseded generation still gets the bounded sweep. */
-  private def rewriteTable(table: String, df: DataFrame): Unit = {
-    val pending = cachedResolvedEvMeta(table)
-      .filter(_.gen == currentGen(table).getOrElse(0))
-      .map(_.eraseCycles).getOrElse(0)
-    rewriteCommit(table, df, pendingEraseCycles = pending,
-      sweepOldGen = pending > 0)
+  private def rewriteTable(table: String, schema: StructType): Unit = {
+    val basis = commitBasis(table)
+    val sets = liveFileSets(table)
+    val pending = sets.map(_.meta.eraseCycles).getOrElse(0)
+    rewriteCommit(table, basis,
+      DynamicSchema.conform(liveRead(table, sets), schema),
+      deriveEventBuckets(liveEventBytes(table)), alreadyBucketed = false,
+      pendingEraseCycles = pending, sweepOldGen = pending > 0)
   }
+
+  /** Every live event as one plain read: base + levels + backlog through
+    * the manifest — NEVER the directory listing once levels or consumed
+    * files exist — or the listing when there is no manifest. */
+  private def liveRead(table: String, sets: Option[LiveSets]): DataFrame =
+    sets match {
+      case Some(s) => explicitRead(table, s.base ++ s.levelFiles ++ s.backlog)
+      case None => flatEvents(table)
+    }
 
   /** Point lookup by `_id`: the `_id` equality above the snapshot lets
     * [[graft.plans.IidBucketPruning]] derive the `_iid` + `_bucket`
@@ -1295,23 +1236,34 @@ class XtDb(spark: SparkSession, val root: String) {
   def compact(table: String): Unit = {
     // a layout may be declared before the first write — nothing to fold
     if (!tableExists(table)) return
-    if (!tryAlignedCompact(table)) {
-      val sets = liveFileSets(table)
-      val ev = sets match {
-        // manifest-aware full input (base + levels + backlog as one plain
-        // read) — NEVER the directory listing once levels/consumed exist
-        case Some(s) =>
-          explicitRead(table, s.base ++ s.levelFiles ++ s.backlog)
-        case None => flatEvents(table)
-      }
-      // erased payload is being purged from the NEW generation — the old
-      // one (lease) must not outlive the bound either. The manifest's
-      // pending-erase clock knows; a manifest-less first compact pays one
-      // pushed-predicate probe.
-      val hadErase = sets.map(_.meta.eraseCycles > 0)
-        .getOrElse(!ev.where(col(OP) === "erase").isEmpty)
-      rewriteCommit(table, purgeErased(ev), sweepOldGen = hadErase)
+    // a bucketed base with a backlog: fold the backlog first (O(backlog))
+    // so every live row is bucketed and an unchanged fanout merges per
+    // bucket below
+    liveFileSets(table).foreach(s =>
+      if (s.backlog.nonEmpty && (s.base ++ s.levelFiles).nonEmpty)
+        compactIncremental(table))
+    val basis = commitBasis(table)
+    val sets = liveFileSets(table)
+    val nb = deriveEventBuckets(liveEventBytes(table))
+    // the fanout is unchanged: base and level files are already hashed on
+    // `_iid` at `nb`, so the purge window and the bucketed write merge
+    // bucket by bucket with ZERO exchange (the reference merges per trie
+    // partition, compactor/Compactor.kt / SegmentMerge.kt). A fanout
+    // change (or no bucketed base yet) pays the one shuffle.
+    val aligned = sets.filter(s => s.backlog.isEmpty && s.meta.buckets == nb)
+      .map(s => s.base ++ s.levelFiles).filter(_.nonEmpty)
+    val ev = aligned match {
+      case Some(files) => bucketedRelation(table, files, nb)
+      case None => liveRead(table, sets)
     }
+    // erased payload is being purged from the NEW generation — the old
+    // one (lease) must not outlive the bound either. The manifest's
+    // pending-erase clock knows; a manifest-less first compact pays one
+    // pushed-predicate probe.
+    val hadErase = sets.map(_.meta.eraseCycles > 0)
+      .getOrElse(!ev.where(col(OP) === "erase").isEmpty)
+    rewriteCommit(table, basis, purgeErased(ev), nb,
+      alreadyBucketed = aligned.isDefined, sweepOldGen = hadErase)
     layoutOf(table).foreach(l => materializeCurrentSnapshot(table, l))
   }
 
@@ -1328,414 +1280,6 @@ class XtDb(spark: SparkSession, val root: String) {
       .filter(col(OP) =!= "erase" &&
         (col("__erase_sf").isNull || col(SF) > col("__erase_sf")))
       .drop("__erase_sf")
-  }
-
-  // ---- bucket-aligned full compaction (round 14) --------------------------
-  //
-  // When a bucketed base exists and the re-derived fanout is UNCHANGED,
-  // the escalated full compaction does not need the whole-table shuffle:
-  // base and level files are already hashed on `_iid` at the same fanout,
-  // so the fold into the new generation is a per-bucket merge — read
-  // bucket i of base+levels, purge, write bucket i — with ZERO exchange
-  // (the reference merges per trie partition independently,
-  // compactor/Compactor.kt / SegmentMerge.kt: segment merges are per-path
-  // subtree). Buckets are processed in CHUNKS, each committed to a
-  // progress sidecar after it lands, so at 100 TB the rewrite is N
-  // restartable bucket merges instead of one monolithic all-or-nothing
-  // shuffle job: a crash resumes from the last completed chunk, verified
-  // against an input fingerprint (any fold landing in between restarts
-  // the merge — the inputs changed). Only a fanout CHANGE keeps the
-  // genuine shuffle path.
-
-  /** `owner`/`hb` (round 16, VERDICT r15 #2): an attempt token + a
-    * heartbeat. A resume finding a FOREIGN token within the lease treats
-    * the attempt as live and starts a fresh suffixed attempt instead of
-    * collaborating on (and thrashing) a live compactor's sidecar; an
-    * expired or released (empty-owner) token is taken over —
-    * atomically via the store's CAS surface where one exists, by
-    * write-then-verify on plain filesystems — resuming the dead
-    * attempt's dir, done set and chunk dirs.
-    *
-    * Round 17 (ADVICE r16 #1): the heartbeat is refreshed by a
-    * BACKGROUND daemon timer while chunks execute (a chunk may
-    * legitimately outlast the lease at scale — without the timer a
-    * second compactor takes over the same dir/done-set under a still-
-    * live owner), and on versioned stores every owner write CAS-chains
-    * on the version the owner's own previous write produced, so a
-    * foreign takeover surfaces at the owner's NEXT write as a lost
-    * lease instead of being masked by read-immediately-after-own-write.
-    *
-    * `dirs` maps each completed chunk's start bucket to its ATTEMPT-
-    * TAGGED output dir name (`c<lo>.<tag>`): attempts never share chunk
-    * dirs, and the committed manifest's `chunks` list fences reads to
-    * the winner's dirs — a paused loser's late-landing part files are
-    * never served (they previously mixed into the shared `c<lo>` dir as
-    * duplicate base rows). */
-  private[graft] final case class CompactProgress(gen: Int, buckets: Int,
-      fp: String, done: Set[Int], chunk: Int, dir: String,
-      owner: String, hb: Long, dirs: Map[Int, String] = Map.empty)
-
-  private def compactProgressPath(table: String) =
-    new org.apache.hadoop.fs.Path(
-      s"${tableDir(table)}/_compact_progress.json")
-
-  // `chunk` (stride) and `dir` (output dir) ride with `done`: `done`
-  // keys chunk-START bucket ids, so a resume under a DIFFERENT stride
-  // would skip/rewrite overlapping bucket ranges and serve rows twice
-  // (ADVICE r14 #2) — a different stride restarts the merge
-  private[graft] def readCompactProgress(
-      table: String): Option[CompactProgress] =
-    jsonSidecar(compactProgressPath(table)).map { j =>
-      CompactProgress(j.int("gen"), j.int("buckets"), j.str("fp"),
-        j.ints("done"), j.int("chunk"), j.str("dir"), j.str("owner"),
-        j.long("hb"), j.pairs("dirv").map { case (lo, d) =>
-          j.toInt(lo) -> d }.toMap)
-    }
-
-  private def compactProgressJson(p: CompactProgress): String =
-    s"""{"gen":${p.gen},"buckets":${p.buckets},""" +
-      s""""fp":"${p.fp}","chunk":${p.chunk},"dir":"${p.dir}",""" +
-      s""""owner":"${p.owner}","hb":${p.hb},""" +
-      s""""dirv":${jsonArr(
-        p.dirs.toSeq.sortBy(_._1).map { case (k, v) => s"$k:$v" })},""" +
-      s""""done":[${p.done.toSeq.sorted.mkString(",")}]}"""
-
-  /** Unconditional sidecar write (plain-FS path; versioned stores go
-    * through the owner's CAS chain in [[alignedRewrite]]). */
-  private[graft] def writeCompactProgress(table: String,
-      p: CompactProgress): Unit =
-    writeSidecar(compactProgressPath(table), compactProgressJson(p))
-
-  /** The aligned full compaction, if its preconditions hold: a
-    * gen-matching manifest with a bucketed base, and a re-derived fanout
-    * equal to the current one. Any pending backlog is first folded
-    * (O(backlog)) so every live row is bucketed. Returns false ⇒ the
-    * caller takes the shuffle path. */
-  private def tryAlignedCompact(table: String): Boolean = {
-    val have = liveFileSets(table).exists(s =>
-      (s.base ++ s.levelFiles).nonEmpty)
-    if (!have) return false
-    liveFileSets(table).foreach(s =>
-      if (s.backlog.nonEmpty) compactIncremental(table))
-    liveFileSets(table) match {
-      case Some(s) if s.backlog.isEmpty &&
-          (s.base ++ s.levelFiles).nonEmpty &&
-          deriveEventBuckets(liveEventBytes(table)) == s.meta.buckets =>
-        alignedRewrite(table, s)
-        true
-      case _ => false
-    }
-  }
-
-  /** Chunked per-bucket merge of base+levels into generation N+1 with no
-    * repartition (see section comment). Commit order (round 15, ADVICE
-    * r14 #1): the new generation's data dir holds chunk SUBDIRS, which
-    * only the manifest-driven explicit-file read can serve — so its
-    * manifest is made durable FIRST, but STAGED under a gen-qualified
-    * name (`_evmeta.<gdir>.json`) so the OLD generation's `_evmeta.json`
-    * (the only record of its levels/consumed live set) survives intact
-    * until the pointer has actually flipped. Crash windows:
-    *  - before the pointer flip: readers keep the old manifest and serve
-    *    the old generation EXACTLY (levels included, consumed excluded);
-    *    the next compact resumes the chunk loop from the progress
-    *    sidecar.
-    *  - between flip and promote: readers resolve the staged manifest
-    *    through the pointer ([[resolvedEvMetaV]]); the next manifest
-    *    write promotes it into `_evmeta.json`. */
-  private def alignedRewrite(table: String, s: LiveSets): Unit = {
-    val fs = hadoopFs
-    val mver = readEvMetaV(table)._2
-    val genV = hadoopFs match {
-      case c: graft.storage.VersionedPut => c.versionOf(genPath(table))
-      case _ => -1L
-    }
-    val curInfo = currentGenInfo(table)
-    val cur = curInfo.map(_._1)
-    val next = cur.getOrElse(0) + 1
-    val nb = s.meta.buckets
-    val chunkSz = math.max(1, spark.conf
-      .get("spark.graft.fullCompact.chunkBuckets", "256").toInt)
-    val inputs = s.base ++ s.levelFiles
-    val byBucket = inputs.groupBy(f => bucketIdOf(f.getPath.getName))
-    val fingerprint = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      inputs.map(f => s"${f.getPath.getName}:${f.getLen}").sorted
-        .foreach(x => md.update(x.getBytes("UTF-8")))
-      md.digest().map("%02x".format(_)).mkString
-    }
-    // resume ONLY under the same gen + fanout + input set + chunk stride
-    // (a stride change re-partitions the chunk ranges — `done` entries
-    // would cover different bucket spans, ADVICE r14 #2) — and into the
-    // SAME unique output dir the crashed attempt was writing. An
-    // attempt token + heartbeat lease (VERDICT r15 #2) keeps two
-    // concurrent compactors from collaborating on one sidecar: a LIVE
-    // foreign attempt is left alone (fresh suffixed dir, its files
-    // untouched); a dead one is taken over — atomically on versioned
-    // stores, write-then-verify on plain FS.
-    val attempt = java.util.UUID.randomUUID().toString
-    val tag = attempt.replace("-", "").take(8)
-    val leaseMs = spark.conf
-      .get("spark.graft.fullCompact.ownerLeaseMs", "600000").toLong
-    def liveForeign(p: CompactProgress): Boolean =
-      p.owner.nonEmpty && p.owner != attempt &&
-        System.currentTimeMillis() - p.hb <= leaseMs
-    def freshDir(): String =
-      s"g${next}_" + java.util.UUID.randomUUID().toString.take(8)
-    // sidecar version captured BEFORE the content read: a write landing
-    // in between makes a later takeover CAS fail spuriously (safe) —
-    // never succeed wrongly (-1 on stores without a version surface)
-    val sidecarV = hadoopFs match {
-      case cas: graft.storage.VersionedPut =>
-        cas.versionOf(compactProgressPath(table))
-      case _ => -1L
-    }
-    // ADVICE r16 #1: the owner's sidecar writes form a CAS CHAIN on
-    // versioned stores — every write (acquire, per-chunk progress, the
-    // background heartbeat, the release) expects the version the
-    // owner's OWN previous write produced (putIfVersionNext returns the
-    // new etag/generation), so a foreign takeover breaks the chain and
-    // surfaces at the owner's NEXT write as a lost lease — never masked
-    // by a read immediately after the owner's own write (which two
-    // live writers can each pass in turn, ping-ponging). chainV < 0 =
-    // plain FS: write-then-verify remains, and corruption is fenced by
-    // the attempt-tagged chunk dirs + manifest `chunks` list either way.
-    val chainV = new java.util.concurrent.atomic.AtomicLong(-1L)
-    @volatile var leaseLost = false
-    @volatile var lastProgress: Option[CompactProgress] = None
-    val sideLock = new Object
-    // one guarded owner write; false = the lease is gone (chain broken
-    // on CAS stores, foreign owner read back on plain FS)
-    def ownerPut(p: CompactProgress): Boolean = sideLock.synchronized {
-      if (leaseLost) false
-      else hadoopFs match {
-        case cas: graft.storage.VersionedPut if chainV.get >= 0L =>
-          val nv = cas.putIfVersionNext(compactProgressPath(table),
-            compactProgressJson(p).getBytes("UTF-8"), chainV.get)
-          if (nv < 0L) { leaseLost = true; false }
-          else { chainV.set(nv); lastProgress = Some(p); true }
-        case _ =>
-          writeCompactProgress(table, p)
-          val ok = readCompactProgress(table).exists(_.owner == p.owner)
-          if (!ok) leaseLost = true else lastProgress = Some(p)
-          ok
-      }
-    }
-    // initial lease write: CAS against the version captured before the
-    // sidecar read, so two racing takeovers (or two fresh starts) can
-    // never both win on a real object store
-    def acquire(p: CompactProgress): Boolean = sideLock.synchronized {
-      hadoopFs match {
-        case cas: graft.storage.VersionedPut =>
-          val nv = cas.putIfVersionNext(compactProgressPath(table),
-            compactProgressJson(p).getBytes("UTF-8"), sidecarV)
-          if (nv < 0L) false
-          else { chainV.set(nv); lastProgress = Some(p); true }
-        case _ =>
-          writeCompactProgress(table, p)
-          val ok = readCompactProgress(table).exists(_.owner == attempt)
-          if (ok) lastProgress = Some(p)
-          ok
-      }
-    }
-    // (output dir, completed chunks, their dirs, persist progress?) — a
-    // loser racing a LIVE attempt runs sidecar-silent: it never writes
-    // the shared sidecar (no thrash, no clobbered resume state for the
-    // live owner), it just computes its fresh dir and lets the pointer
-    // CAS decide.
-    val (gname, done0, dirs0, persistProgress) =
-      readCompactProgress(table) match {
-        case Some(p) if p.gen == next && p.buckets == nb &&
-            p.fp == fingerprint && p.chunk == chunkSz && p.dir.nonEmpty =>
-          if (liveForeign(p))
-            // a live compactor owns this attempt — never interleave with
-            // it; our fresh dir stays orphaned (lazy GC) if it wins
-            (freshDir(), Set.empty[Int], Map.empty[Int, String], false)
-          else {
-            // dead (or released) attempt: take the lease,
-            // resuming its dir, done set and completed chunk dirs
-            val stamped = p.copy(owner = attempt,
-              hb = System.currentTimeMillis())
-            if (acquire(stamped)) (p.dir, p.done, p.dirs, true)
-            else (freshDir(), Set.empty[Int], Map.empty[Int, String], false)
-          }
-        case prior =>
-          // no progress, or the inputs/stride changed since the crash —
-          // restart into a fresh uniquely-suffixed dir (racing compactors
-          // can never interleave files; the loser's dir stays orphaned
-          // until the winner's GC). A LIVE foreign attempt's dir and
-          // sidecar are never touched — its inputs changed, so it will
-          // fail loudly at its own commit CAS; only a dead attempt's
-          // leftovers are collected.
-          prior.filter(p => p.dir.nonEmpty && !liveForeign(p)).foreach { p =>
-            val gp = new org.apache.hadoop.fs.Path(
-              s"${tableDir(table)}/${p.dir}")
-            if (fs.exists(gp)) fs.delete(gp, true)
-          }
-          val dir0 = freshDir()
-          if (prior.exists(liveForeign))
-            (dir0, Set.empty[Int], Map.empty[Int, String], false)
-          else {
-            // publish owner+hb BEFORE the first (possibly long) chunk —
-            // a second fresh compactor starting in that window sees a
-            // live owner instead of racing blind
-            val fresh = CompactProgress(next, nb, fingerprint,
-              Set.empty, chunkSz, dir0, attempt,
-              System.currentTimeMillis())
-            (dir0, Set.empty[Int], Map.empty[Int, String], acquire(fresh))
-          }
-      }
-    // heartbeat on a background daemon timer (ADVICE r16 #1): a chunk
-    // may legitimately outlast the lease at scale; refreshing only on
-    // chunk commit let a second compactor take over the same dir under
-    // a still-live owner. A failed refresh (chain broken / foreign
-    // owner) just sets leaseLost — the chunk loop stops at its next
-    // boundary.
-    val hbTimer: Option[java.util.concurrent.ScheduledExecutorService] =
-      if (!persistProgress) None
-      else {
-        val ex = java.util.concurrent.Executors
-          .newSingleThreadScheduledExecutor((r: Runnable) => {
-            val t = new Thread(r, s"graft-compact-hb-$tag")
-            t.setDaemon(true); t
-          })
-        val period = math.max(100L, leaseMs / 3)
-        ex.scheduleWithFixedDelay(() => {
-          try {
-            if (!leaseLost) lastProgress.foreach(p =>
-              ownerPut(p.copy(hb = System.currentTimeMillis())))
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }, period, period, java.util.concurrent.TimeUnit.MILLISECONDS)
-        Some(ex)
-      }
-    def stopHeartbeat(): Unit = hbTimer.foreach { ex =>
-      ex.shutdownNow()
-      try ex.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS)
-      catch { case _: InterruptedException =>
-        Thread.currentThread().interrupt() }
-      ()
-    }
-    // a GRACEFUL failure (any exception — an injected crash at a write
-    // point included) releases the attempt lease on the way out, so a quick
-    // restart resumes the done chunks immediately; only a hard kill
-    // (SIGKILL/power loss) leaves the lease to age out. Routed through
-    // the CAS chain: a taker-over's sidecar is never clobbered.
-    def releaseLease(): Unit =
-      if (persistProgress && !leaseLost) try
-        lastProgress.foreach(p => ownerPut(p.copy(owner = "", hb = 0L)))
-      catch { case scala.util.control.NonFatal(_) => () }
-    try {
-    val gdir = s"${tableDir(table)}/$gname"
-    var done = done0
-    var dirs = dirs0
-    def lostLease(after: Int): Nothing = {
-      val who = try readCompactProgress(table).map(_.owner).getOrElse("?")
-        catch { case scala.util.control.NonFatal(_) => "?" }
-      throw new IllegalStateException(
-        s"aligned compaction of '$table' lost its attempt lease " +
-          s"(now '$who') after $after chunks — another compactor took " +
-          "over the sidecar; this attempt stops")
-    }
-    var landed = 0
-    (0 until nb by chunkSz).foreach { lo =>
-      val hi = math.min(nb, lo + chunkSz)
-      if (!done.contains(lo)) {
-        // a heartbeat refresh already saw the lease gone: stop before
-        // spending another chunk of work
-        if (persistProgress && leaseLost) lostLease(landed)
-        val files = (lo until hi).flatMap(byBucket.getOrElse(_, Nil))
-        // each attempt writes into its OWN tagged chunk dir: a paused
-        // attempt's in-flight Spark job landing part files after a
-        // takeover can only land them in the LOSER's dir, which the
-        // committed manifest's `chunks` list fences out of every read
-        val cdir = s"c$lo.$tag"
-        if (files.nonEmpty) {
-          writeBucketedAligned(
-            purgeErased(bucketedRelation(table, files, nb)),
-            s"$gdir/$cdir", nb)
-          dirs += (lo -> cdir)
-        }
-        done += lo
-        XtDb.writePointHook(WritePoint.ChunkLanded(table, lo))
-        if (persistProgress &&
-            !ownerPut(CompactProgress(next, nb, fingerprint,
-              done, chunkSz, gname, attempt, System.currentTimeMillis(),
-              dirs)))
-          // the CAS chain broke (versioned store) or a foreign owner
-          // read back (plain FS): the lease is gone — surface at the
-          // write itself (ADVICE r16 #1)
-          lostLease(landed)
-        landed += 1
-        XtDb.writePointHook(WritePoint.ChunkDurable(table, landed))
-      }
-    }
-    // every chunk durable; the commit phase is short — stop refreshing
-    // the lease (the pointer CAS below arbitrates from here on)
-    stopHeartbeat()
-    // prune chunk dirs in OUR gdir that are not part of the committed
-    // set (a dead prior attempt's incomplete chunk, or a paused loser's
-    // late landing): fenced out of reads either way, this just returns
-    // the disk
-    if (fs.exists(new org.apache.hadoop.fs.Path(gdir))) {
-      val committed = dirs.values.toSet
-      fs.listStatus(new org.apache.hadoop.fs.Path(gdir))
-        .filter(st => st.isDirectory && !committed.contains(
-          st.getPath.getName))
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-    // Commit: stage the new generation's manifest under its
-    // gen-qualified name (the old `_evmeta.json` stays intact),
-    // CAS the pointer flip, THEN supersede `_evmeta.json` and clean up.
-    // A pending erase was purged by the per-chunk merges — the superseded
-    // generation holding the payload gets the bounded sweep. `chunks`
-    // fences base-file reads to exactly this attempt's chunk dirs.
-    val newMeta = EvMeta(next, nb, Nil, Set.empty, Nil, 0,
-      sweepDirs = if (s.meta.eraseCycles > 0)
-        curInfo.map(_._2).toSeq else Nil,
-      chunks = dirs.values.toSeq.sorted)
-    val stagedP = stagedEvMetaPath(table, gname)
-    writeSidecar(stagedP, evMetaJson(newMeta))
-    XtDb.writePointHook(WritePoint.BeforeFlip(table))
-    conditionalPut(genPath(table), s"$next:$gname", genV,
-      s"generation pointer of '$table'")
-    // between the flip and the promote, readers resolve the staged
-    // manifest through the pointer
-    XtDb.writePointHook(WritePoint.BeforePromote(table))
-    // promote: supersede `_evmeta.json` for the new generation. Armed
-    // with the version read at entry so a racing fold's manifest write
-    // (a single-writer-discipline violation) still fails LOUDLY — the
-    // staged manifest keeps readers correct either way.
-    writeEvMeta(table, newMeta, mver)
-    fs.delete(stagedP, false)
-    fs.delete(compactProgressPath(table), false)
-    val keep = Set(gname) ++ curInfo.map(_._2)
-    if (cur.isDefined)
-      fs.listStatus(new org.apache.hadoop.fs.Path(tableDir(table)))
-        .filterNot { st =>
-          val n = st.getPath.getName
-          n.startsWith("_") || keep.contains(n)
-        }
-        .foreach(st => fs.delete(st.getPath, true))
-    } catch { case e: Throwable =>
-      stopHeartbeat(); releaseLease(); throw e
-    } finally stopHeartbeat()
-  }
-
-  /** Bucketed write WITHOUT the repartition: the input is already hashed
-    * on `_iid` at this fanout (a bucketed relation over base+level
-    * files), so the writer only adds a local sort — zero exchange. One
-    * output file per non-empty bucket per input partition; a bucketed
-    * input yields one partition per bucket, hence one file per bucket. */
-  private def writeBucketedAligned(df: DataFrame, dir: String,
-      buckets: Int): Unit = {
-    val tmp =
-      s"graft_bkw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    try
-      df.write.mode("overwrite").option("path", dir)
-        .bucketBy(buckets, IID).sortBy(IID)
-        .saveAsTable(tmp)
-    finally
-      spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    ()
   }
 
   // ---- declared layout (bucket key + count) ------------------------------
@@ -2711,10 +2255,8 @@ class XtDb(spark: SparkSession, val root: String) {
     // loser's orphan dir stays hidden (underscore) until the next flip
     val lvName = s"_lv${m.lvseq}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    if (alignedMerge)
-      writeBucketedAligned(folding, s"${dataDir(table)}/$lvName", m.buckets)
-    else
-      writeBucketedFiles(folding, s"${dataDir(table)}/$lvName", m.buckets)
+    writeBucketedFiles(folding, s"${dataDir(table)}/$lvName", m.buckets,
+      alreadyBucketed = alignedMerge)
     writeEvMeta(table, m.copy(
       levels = (if (mergeLevels) Nil else m.levels) :+ lvName,
       consumed = consumedCarry ++ backlog.map(_.getPath.getName),
@@ -2761,27 +2303,6 @@ class XtDb(spark: SparkSession, val root: String) {
         (try { fs.delete(p, true); fs.exists(p) }
          catch { case scala.util.control.NonFatal(_) => fs.exists(p) })
     }
-    // staged gen-qualified manifests are redundant once `_evmeta.json`
-    // itself vouches for a generation at least as new (crash-healed or
-    // promoted); a staged manifest for a FUTURE generation belongs to an
-    // in-flight commit and is never touched. An UNPARSEABLE staged
-    // manifest is kept too: it may be a racing instance's stage read
-    // mid-write — deleting it inside that instance's stage→flip window
-    // would destroy the healing manifest if that instance then crashed
-    // between flip and promote (reads would fail loudly, manual-restore
-    // territory). Staged files are tiny; a later sweep collects them
-    // once readable-and-superseded.
-    try {
-      if (readEvMeta(table).exists(_.gen >= m.gen))
-        fs.listStatus(new org.apache.hadoop.fs.Path(tableDir(table)))
-          .filter { st =>
-            val n = st.getPath.getName
-            st.isFile && n.startsWith("_evmeta.") && n != "_evmeta.json" &&
-              (try readEvMetaAt(st.getPath).exists(_.gen <= m.gen)
-               catch { case scala.util.control.NonFatal(_) => false })
-          }
-          .foreach(st => fs.delete(st.getPath, false))
-    } catch { case scala.util.control.NonFatal(_) => () }
     m.copy(consumed = sweep(m.consumed, recursive = false),
       retired = sweep(m.retired.toSet, recursive = true).toSeq,
       excluded = sweep(m.excluded, recursive = false),
@@ -2793,7 +2314,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * partition, so its erase purge is likewise per-subtree —
     * compactor/Compactor.kt, PolygonCalculator.kt:43-46). Erased iids
     * hash to known buckets: merge ONLY those buckets' base+level files
-    * (purged, zero exchange — [[writeBucketedAligned]]) into a new
+    * (purged, zero exchange — [[writeBucketedFiles]]) into a new
     * purge-level dir, and supersede the replaced files via the
     * manifest's `excluded` list (deleted after the one-cycle lease).
     * Cost is O(affected buckets), not O(table); the table's generation,
@@ -2873,9 +2394,9 @@ class XtDb(spark: SparkSession, val root: String) {
       affected.map(_.getPath.getName)
     val pgName = s"_lv${m.lvseq}_" +
       java.util.UUID.randomUUID().toString.take(8)
-    writeBucketedAligned(
+    writeBucketedFiles(
       purgeErased(bucketedRelation(table, affected, m.buckets)),
-      s"${dataDir(table)}/$pgName", m.buckets)
+      s"${dataDir(table)}/$pgName", m.buckets, alreadyBucketed = true)
     // SUPERSEDED storage (older generations, legacy gen-0 loose parts)
     // may hold the erased payload from before earlier flips — it has
     // been out of live reads for at least one full cycle already, so it
@@ -2980,18 +2501,23 @@ class XtDb(spark: SparkSession, val root: String) {
       ()
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Write `df` as a bucketed file set (one file per non-empty `_iid`
-    * hash bucket, Spark bucket ids in the file names) into `dir`. Goes
-    * through a throwaway external-table registration because that is the
-    * only writer Spark exposes for bucketed files; the registration is
-    * dropped immediately (external ⇒ files stay) — serving never touches
-    * the catalog. */
+  /** Write `df` as a bucketed file set (one file per non-empty `key`
+    * hash bucket, Spark bucket ids in the file names) into `dir`. An input
+    * `alreadyBucketed` — hashed on `key` at `buckets`, like a bucketed
+    * relation over base+level files — skips the repartition: the writer
+    * only adds a local sort, so the write is zero-exchange and its one
+    * partition per bucket yields one file per bucket. Goes through a
+    * throwaway external-table registration because that is the only
+    * writer Spark exposes for bucketed files; the registration is dropped
+    * immediately (external ⇒ files stay) — serving never touches the
+    * catalog. */
   private def writeBucketedFiles(df: DataFrame, dir: String,
-      buckets: Int, key: String = IID): Unit = {
+      buckets: Int, key: String = IID,
+      alreadyBucketed: Boolean = false): Unit = {
     val tmp = s"graft_bkw_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val in = if (alreadyBucketed) df else df.repartition(buckets, col(key))
     try
-      df.repartition(buckets, col(key))
-        .write.mode("overwrite").option("path", dir)
+      in.write.mode("overwrite").option("path", dir)
         .bucketBy(buckets, key).sortBy(key)
         .saveAsTable(tmp)
     finally
@@ -3509,18 +3035,12 @@ object XtDb {
   object WritePoint {
     /** A declared-layout snapshot fold is about to start. */
     final case class Fold(table: String) extends WritePoint
-    /** An aligned-compaction chunk (start bucket `lo`) has landed; its
-      * progress is not yet durable. */
-    final case class ChunkLanded(table: String, lo: Int) extends WritePoint
-    /** The `landed`-th chunk of this attempt has its progress durable. */
-    final case class ChunkDurable(table: String, landed: Int)
-      extends WritePoint
-    /** A rewrite's files (and staged manifest) are written; the
-      * generation pointer is not yet flipped. */
+    /** A rewrite's files are written; the generation pointer is not yet
+      * flipped. */
     final case class BeforeFlip(table: String) extends WritePoint
-    /** The aligned rewrite's pointer has flipped; `_evmeta.json` is not
-      * yet promoted. */
-    final case class BeforePromote(table: String) extends WritePoint
+    /** A rewrite's pointer has flipped; `_evmeta.json` still describes
+      * the superseded generation. */
+    final case class Flipped(table: String) extends WritePoint
     /** A transaction's files have landed in every table it writes; its
       * log record is not yet written, so it is not yet committed. */
     final case class Appended(tables: Seq[String]) extends WritePoint
@@ -3530,6 +3050,12 @@ object XtDb {
     * it to interleave a competing writer or to throw (an injected crash)
     * at one point, and resets it afterwards. */
   @volatile private[graft] var writePointHook: WritePoint => Unit = _ => ()
+
+  /** Event-log bucket count floor — the trie fanout analogue: 16 matches
+    * the iid-hex first-char spread. The actual count is derived from the
+    * table's live bytes at each full compaction so a growing table
+    * re-fans out instead of accreting 16 multi-TB single files. */
+  private val EventBucketFloor = 16
 
   /** `_gen` pointer content: `<n>:<dir>`. */
   private val GenPointer = """(\d+):(\S+)""".r

@@ -11,16 +11,17 @@ import java.nio.charset.StandardCharsets.UTF_8
   *
   * The Blowfish P-array and S-boxes are initialized from the fractional
   * hexadecimal digits of π. Rather than embedding the 1042-word table,
-  * [[PiDigits]] computes it at first use from Machin's formula with
-  * BigDecimal — the table is therefore correct by construction (and
-  * BcryptSpec cross-checks the first words against the two π words
-  * everyone can verify by hand: 0x243f6a88, 0x85a308d3).
+  * [[PiDigits]] computes it at first use from Machin's formula in
+  * BigInteger fixed point (a few hundred ms) — the table is therefore
+  * correct by construction (and BcryptSpec cross-checks the first words
+  * against the two π words everyone can verify by hand: 0x243f6a88,
+  * 0x85a308d3).
   *
-  * Caveat, stated plainly: this container has no reference bcrypt
-  * implementation to produce known-answer vectors against, so BcryptSpec
-  * pins self-consistency (hash/verify round trip, salt and cost
-  * sensitivity, format) plus the π-derived constants — not cross-library
-  * interop.
+  * Caveat, stated plainly: BcryptSpec has no cross-library known-answer
+  * vector. It pins self-consistency (hash/verify round trip, salt and
+  * cost sensitivity, format), the π-derived constants, and one hash
+  * produced by the earlier BigDecimal derivation of the same table — not
+  * cross-library interop.
   */
 object Bcrypt {
 
@@ -28,45 +29,32 @@ object Bcrypt {
 
   private object PiDigits {
     /** First `words` 32-bit words of the fractional hex expansion of π,
-      * via Machin: π = 16·atan(1/5) − 4·atan(1/239). */
+      * via Machin: π = 16·atan(1/5) − 4·atan(1/239), in fixed point
+      * (every value scaled by 2^bits, 64 guard bits below the last word;
+      * each series term is one division by a small number, and the
+      * truncation error of a few thousand terms stays far inside the
+      * guard bits). */
     def piWords(words: Int): Array[Int] = {
-      val hexDigits = words * 8
-      val scale = (hexDigits * math.log10(16.0)).toInt + 20
-      val mc = new java.math.MathContext(scale)
-      import java.math.BigDecimal
-      def atanInv(x: Long): BigDecimal = {
+      import java.math.BigInteger
+      val bits = 32 * words + 64
+      val one = BigInteger.ONE.shiftLeft(bits)
+      def atanInv(x: Long): BigInteger = {
         // atan(1/x) = Σ (−1)^k / ((2k+1) x^(2k+1))
-        val xb = BigDecimal.valueOf(x)
-        val x2 = xb.multiply(xb)
-        var term = BigDecimal.ONE.divide(xb, mc)
+        val x2 = BigInteger.valueOf(x * x)
+        var term = one.divide(BigInteger.valueOf(x))
         var sum = term
-        var k = 1
-        val eps = BigDecimal.ONE.movePointLeft(scale - 5)
-        while (term.abs.compareTo(eps) > 0) {
-          term = term.divide(x2, mc)
-          val add = term.divide(BigDecimal.valueOf(2L * k + 1), mc)
+        var k = 1L
+        while (term.signum != 0) {
+          term = term.divide(x2)
+          val add = term.divide(BigInteger.valueOf(2 * k + 1))
           sum = if (k % 2 == 1) sum.subtract(add) else sum.add(add)
           k += 1
         }
         sum
       }
-      var frac = atanInv(5).multiply(BigDecimal.valueOf(16), mc)
-        .subtract(atanInv(239).multiply(BigDecimal.valueOf(4), mc))
-        .subtract(BigDecimal.valueOf(3)) // fractional part of π
-      val out = new Array[Int](words)
-      val sixteen = BigDecimal.valueOf(16)
-      var w = 0
-      var acc = 0L
-      var nib = 0
-      while (w < words) {
-        frac = frac.multiply(sixteen)
-        val digit = frac.toBigInteger.intValueExact()
-        frac = frac.subtract(new BigDecimal(frac.toBigInteger))
-        acc = (acc << 4) | digit
-        nib += 1
-        if (nib == 8) { out(w) = acc.toInt; w += 1; acc = 0L; nib = 0 }
-      }
-      out
+      val frac = atanInv(5).shiftLeft(4).subtract(atanInv(239).shiftLeft(2))
+        .subtract(one.multiply(BigInteger.valueOf(3))) // fractional part
+      Array.tabulate(words)(i => frac.shiftRight(bits - 32 * (i + 1)).intValue)
     }
     lazy val all: Array[Int] = piWords(18 + 1024)
   }

@@ -81,22 +81,12 @@ class ObjectStoreFileSystem extends RawLocalFileSystem
 
   override def putIfVersion(p: Path, bytes: Array[Byte],
       expectedVersion: Long): Boolean =
-    putIfVersionNext(p, bytes, expectedVersion) >= 0L
-
-  override def putIfVersionNext(p: Path, bytes: Array[Byte],
-      expectedVersion: Long): Long =
     ObjectStoreFileSystem.lock.synchronized {
-      val cur =
-        if (!exists(p)) 0L
-        else ObjectStoreFileSystem.versions.getOrElse(key(p), 1L)
-      if (cur != expectedVersion) -1L
-      else {
+      // create() bumps the version counter
+      versionOf(p) == expectedVersion && {
         val out = create(p, true)
         try out.write(bytes) finally out.close()
-        // create() above already bumped the counter; report what it holds
-        val now = ObjectStoreFileSystem.versions.getOrElse(key(p), cur + 1L)
-        ObjectStoreFileSystem.versions.put(key(p), now)
-        now
+        true
       }
     }
 
@@ -145,11 +135,4 @@ trait VersionedPut {
     * `expectedVersion` (pass 0 to require absence). */
   def putIfVersion(p: Path, bytes: Array[Byte],
       expectedVersion: Long): Boolean
-  /** As [[putIfVersion]], but returns the NEW version on success
-    * (-1 on a lost race) so a single writer can chain CAS writes
-    * without a read-after-write (real stores return the new
-    * etag/generation in the PUT response — S3 `x-amz-version-id`,
-    * GCS `generation`, Azure `ETag`). */
-  def putIfVersionNext(p: Path, bytes: Array[Byte],
-      expectedVersion: Long): Long
 }

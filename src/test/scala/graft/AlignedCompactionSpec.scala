@@ -1,6 +1,5 @@
 package graft
 
-import graft.WritePoints._
 import graft.bitemporal.XtDb
 import graft.plans.Explain
 import graft.tools.EngineMetrics
@@ -9,13 +8,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 storage: bucket-ALIGNED full compaction — when the re-derived
-  * fanout is unchanged, the escalated full rewrite merges base+levels per
-  * bucket (the reference merges per trie partition independently,
-  * compactor/Compactor.kt / SegmentMerge.kt) with ZERO exchange, in
-  * chunks committed to a progress sidecar so a crash resumes instead of
-  * restarting. The genuine shuffle path survives only for fanout
-  * changes. */
+/** Bucket-ALIGNED full compaction — when the re-derived fanout is
+  * unchanged, the escalated full rewrite merges base+levels per bucket
+  * (the reference merges per trie partition independently,
+  * compactor/Compactor.kt / SegmentMerge.kt) in one Spark job with ZERO
+  * exchange, written to the root of the new generation dir. The genuine
+  * shuffle path survives only for fanout changes. */
 class AlignedCompactionSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -27,11 +25,16 @@ class AlignedCompactionSpec extends AnyFunSuite {
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"${db.root}/$t/_evmeta.json")), "UTF-8")
 
-  // chunk dirs are attempt-tagged since round 17 (`c<lo>.<tag>`)
-  private def chunkDirs(db: XtDb, t: String): Seq[String] =
-    Option(new java.io.File(db.dataDir(t)).listFiles).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.matches("c\\d+(\\..+)?"))
-      .map(_.getName).sorted
+  /** The live generation dir's entries: (bucket file names at its root,
+    * its visible subdirectories). */
+  private def genRoot(db: XtDb, t: String): (Seq[String], Seq[String]) = {
+    val entries = Option(new java.io.File(db.dataDir(t)).listFiles).toSeq
+      .flatten.filterNot(f => f.getName.startsWith("_") ||
+        f.getName.startsWith("."))
+    (entries.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getName).sorted,
+      entries.filter(_.isDirectory).map(_.getName).sorted)
+  }
 
   test("aligned full compact at unchanged fanout: ZERO shuffle bytes, new " +
       "generation committed, erase purged physically, serving stays " +
@@ -59,12 +62,14 @@ class AlignedCompactionSpec extends AnyFunSuite {
     assert(delta === 0L,
       s"aligned full compact must not shuffle (wrote $delta bytes)")
     assert(db.dataDir("t") !== gen1, "a new generation must commit")
-    assert(chunkDirs(db, "t").nonEmpty,
-      s"aligned generation holds chunk dirs: ${chunkDirs(db, "t")}")
+    val (files, subdirs) = genRoot(db, "t")
+    assert(files.nonEmpty && files.forall(_.matches("part-.*_\\d+\\..*")),
+      s"bucket files at the generation root: $files")
+    assert(subdirs.isEmpty, s"no subdirectories in the generation: $subdirs")
     // erase completed physically: no event of the erased iid anywhere
     assert(db.events("t").filter(col("_id") === 7L).count() === 0L)
     assert(db.events("t").filter(col("_op") === "erase").count() === 0L)
-    // serving over the chunked generation: bucketed, zero-exchange, equal
+    // serving over the new generation: bucketed, zero-exchange, equal
     val asof = db.asOf("t")
     assert(Explain.report(asof).shuffleExchanges === 0,
       s"asOf over the aligned generation must not exchange:\n" +
@@ -72,89 +77,6 @@ class AlignedCompactionSpec extends AnyFunSuite {
     assert(asof.select("_id", "v").as[(Long, Long)].collect().toSet == expect)
     assert(db.pointLookup("t", 42L).select("v").as[Long].collect().toSeq
       == Seq(126L))
-  }
-
-  test("kill-and-resume: a crash between chunks resumes from the progress " +
-      "sidecar — completed chunks are not rewritten, readers stay on the " +
-      "old generation until the final commit") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "4")
-    try {
-      val db = newDb("aligned-resume")
-      db.putDocs("r", spark.range(1, 1001).selectExpr("id AS _id", "id AS v"))
-      db.compact("r") // base at the 16-bucket floor ⇒ 4 chunks of 4
-      val gen1 = db.dataDir("r")
-      db.putDocs("r", spark.range(1001, 1051)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("r"))
-      val expect = db.asOf("r").count()
-
-      val crash = intercept[IllegalStateException] {
-        crashAt(afterChunks(2))(db.compact("r"))
-      }
-      assert(crash.getMessage.contains("injected"))
-
-      // crashed mid-merge: pointer NOT flipped, reads correct on old gen
-      assert(db.dataDir("r") === gen1,
-        "generation must not flip before every chunk lands")
-      assert(db.asOf("r").count() === expect)
-      val prog = new java.io.File(s"${db.root}/r/_compact_progress.json")
-      assert(prog.exists, "progress sidecar must survive the crash")
-      // the two completed chunks are on disk under the next generation's
-      // unique dir, recorded in the progress sidecar (round 15)
-      val progJson = new String(
-        java.nio.file.Files.readAllBytes(prog.toPath), "UTF-8")
-      val gdirName = """"dir"\s*:\s*"([^"]+)"""".r
-        .findFirstMatchIn(progJson).get.group(1)
-      val g2 = new java.io.File(s"${db.root}/r/$gdirName")
-      val landed = Option(g2.listFiles).toSeq.flatten
-        .filter(_.getName.matches("c\\d+(\\..+)?"))
-      assert(landed.size === 2, s"2 chunks must have landed: $landed")
-      val mtimes = landed.flatMap(d => d.listFiles.toSeq)
-        .map(f => f.getName -> f.lastModified()).toMap
-
-      Thread.sleep(20) // make any rewrite visible as an mtime bump
-      db.compact("r") // resume
-      assert(db.dataDir("r") !== gen1, "resume must complete the flip")
-      assert(!prog.exists, "progress sidecar must be cleared on commit")
-      val after = landed.flatMap(d => d.listFiles.toSeq)
-        .map(f => f.getName -> f.lastModified()).toMap
-      assert(after === mtimes,
-        "completed chunks must NOT be rewritten on resume")
-      assert(chunkDirs(db, "r").size === 4)
-      assert(db.asOf("r").count() === expect)
-      assert(Explain.report(db.asOf("r")).shuffleExchanges === 0)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
-  }
-
-  test("a fold landing after the crash invalidates the progress (input " +
-      "fingerprint) — the merge restarts instead of committing stale " +
-      "chunks") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "4")
-    try {
-      val db = newDb("aligned-stale")
-      db.putDocs("s", spark.range(1, 501).selectExpr("id AS _id", "id AS v"))
-      db.compact("s")
-      db.putDocs("s", spark.range(501, 521).selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("s"))
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("s"))
-      }
-      // new data lands and folds — the crashed attempt's inputs are stale
-      db.putDocs("s", spark.range(521, 541).selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("s"))
-      db.compact("s")
-      assert(db.asOf("s").count() === 540L,
-        "restart must include the rows folded after the crash")
-      assert(db.asOf("s").select(max(col("_id"))).as[Long].head() === 540L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
   }
 
   test("fanout change keeps the genuine shuffle path and re-fans the base") {
@@ -177,8 +99,10 @@ class AlignedCompactionSpec extends AnyFunSuite {
       val b2 = """"buckets":(\d+)""".r
         .findFirstMatchIn(metaJson(db, "f")).get.group(1).toInt
       assert(b2 > 16, s"fanout change must re-fan the base: $b2")
-      assert(chunkDirs(db, "f").isEmpty,
-        "the shuffle path writes a flat bucketed generation (no chunks)")
+      val (files, subdirs) = genRoot(db, "f")
+      assert(files.nonEmpty && subdirs.isEmpty,
+        s"the shuffle path writes bucket files at the generation root: " +
+          s"$files $subdirs")
       assert(db.asOf("f").count() === 5100L)
       assert(Explain.report(db.asOf("f")).shuffleExchanges === 0)
     } finally spark.conf.unset("spark.graft.eventBucketBytes")

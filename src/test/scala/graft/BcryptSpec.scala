@@ -4,10 +4,12 @@ import graft.pgwire.Bcrypt
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the π-derived Blowfish constants and bcrypt's observable
-  * contract. No reference bcrypt exists in this container for
-  * known-answer interop vectors (stated in Bcrypt's scaladoc); what IS
-  * independently checkable is checked: the first two P-array words are
-  * the universally known leading hex digits of π. */
+  * contract. There are no cross-library known-answer vectors (stated in
+  * Bcrypt's scaladoc); what IS independently checkable is checked: the
+  * first two P-array words are the universally known leading hex digits
+  * of π, and one hash is pinned to the output of the earlier BigDecimal
+  * derivation of the table, so the fixed-point derivation provably
+  * changes no hash. */
 class BcryptSpec extends AnyFunSuite {
 
   test("Blowfish init state = fractional hex digits of pi") {
@@ -15,6 +17,13 @@ class BcryptSpec extends AnyFunSuite {
     val (w0, w1) = Bcrypt.piCheckWords
     assert(w0 == 0x243f6a88, f"P[0] = $w0%08x")
     assert(w1 == 0x85a308d3.toInt, f"P[1] = $w1%08x")
+  }
+
+  test("a fixed password, salt and cost hash to the value the BigDecimal " +
+      "derivation of the pi table produced") {
+    val salt = Array.tabulate[Byte](16)(i => (i * 11 + 5).toByte)
+    assert(Bcrypt.hashWithSalt("pinned password", salt, 5) ==
+      "$2a$05$/P.ZHhC6PzHbYFL8gXQdoeRnVOOWsJvqDwjfijH/7TRiqnqohcZ76")
   }
 
   test("hash/verify round trip; wrong password rejected") {

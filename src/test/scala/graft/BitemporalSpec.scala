@@ -82,6 +82,22 @@ class BitemporalSpec extends AnyFunSuite {
     assert(db.history("docs").filter(col("_id") === 1L).count() == 0)
   }
 
+  test("an erase masks every system time, including times before it; a " +
+      "re-insert after it is visible from its own system time on") {
+    val db = freshDb()
+    import spark.implicits._
+    val tPut = db.putDocs("docs", Seq((1L, "a"), (2L, "b")).toDF("_id", "val"))
+    val tErase = db.eraseDocs("docs", Seq(Tuple1(1L)).toDF("_id"))
+    db.putDocs("docs", Seq((1L, "a2")).toDF("_id", "val"))
+    def at(t: Option[java.sql.Timestamp]): Seq[(Long, String)] =
+      db.asOf("docs", systemAt = t.map(lit(_))).select("_id", "val")
+        .as[(Long, String)].collect().toSeq.sorted
+
+    assert(at(Some(tPut)) == Seq((2L, "b")), "as of before the erase")
+    assert(at(Some(tErase)) == Seq((2L, "b")), "between erase and re-insert")
+    assert(at(None) == Seq((1L, "a2"), (2L, "b")), "after the re-insert")
+  }
+
   test("patch merges fields onto current version") {
     val db = freshDb()
     import spark.implicits._

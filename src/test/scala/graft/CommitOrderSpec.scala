@@ -2,44 +2,23 @@ package graft
 
 import graft.WritePoints._
 import graft.bitemporal.XtDb
-import graft.bitemporal.XtDb.WritePoint
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-15 storage: the aligned full compaction's commit order. The new
-  * generation's manifest is STAGED under a gen-qualified name and
-  * `_evmeta.json` is only superseded AFTER the pointer flip — so a crash
-  * anywhere in the commit window can never destroy the old generation's
-  * manifest (the only record of its levels/consumed live set) and can
-  * never leave readers on a lossy flat fallback (ADVICE r14 #1, the
-  * silent-data-loss window of the round-14 meta-then-pointer order).
-  * Also pins the chunk-stride resume guard (ADVICE r14 #2) and the loud
-  * refusal of a gen-ahead manifest artifact. */
+/** The generation commit's order: files, pointer CAS, manifest, GC.
+  * `_evmeta.json` is only superseded AFTER the pointer flip, so a crash
+  * anywhere in the commit can never destroy the old generation's manifest
+  * (the only record of its levels/consumed live set): before the flip the
+  * old generation serves exactly; after it the new generation reads flat
+  * from its listing, which is its live set. Also pins the loud refusal of
+  * a gen-ahead manifest. */
 class CommitOrderSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
 
   private def newDb(tag: String): XtDb = new XtDb(spark,
     java.nio.file.Files.createTempDirectory(tag).toString)
-
-  /** The (attempt-tagged, round 17) chunk dir for chunk-start `lo`
-    * under a generation dir — `c<lo>.<tag>`. */
-  private def chunkDir(genDir: String, lo: Int)
-      : Option[java.nio.file.Path] = {
-    val d = java.nio.file.Paths.get(genDir)
-    if (!java.nio.file.Files.exists(d)) None
-    else {
-      val it = java.nio.file.Files.list(d).iterator()
-      var found: Option[java.nio.file.Path] = None
-      while (it.hasNext && found.isEmpty) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n == s"c$lo" || n.startsWith(s"c$lo.")) found = Some(p)
-      }
-      found
-    }
-  }
 
   /** A table in the state the round-14 order corrupted: bucketed base
     * (g1) + a LEVEL fold + its consumed backlog files still on disk
@@ -90,73 +69,62 @@ class CommitOrderSpec extends AnyFunSuite {
     assert(db.asOf("t").select(max(col("_id"))).as[Long].head() === 550L)
   }
 
-  test("crash BETWEEN the flip and the promote: readers resolve the " +
-      "staged gen-qualified manifest through the pointer; the next fold " +
-      "promotes it and maintenance sweeps the staged file") {
-    val db = newDb("commit-prepromote")
-    val expect = levelsAndLeases(db, "t")
-    val gen1 = db.dataDir("t")
+  /** Crash a full compaction right after its pointer flip, reopen the
+    * store, and check it serves exactly the post-state: the flipped
+    * generation reads flat from its listing (its manifest still names
+    * the superseded generation). The next lagged `compactIfLagged`
+    * re-stamps the manifest. */
+  private def crashAfterFlip(root: String): Unit = {
+    import spark.implicits._
+    val before = new XtDb(spark, root)
+    levelsAndLeases(before, "t")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    val expectAsOf = rows(before.asOf("t").select("_id", "v"))
+    val expectHistory = rows(before.history("t")
+      .select("_id", "v", "_valid_from", "_valid_to", "_system_from",
+        "_system_to"))
 
     intercept[IllegalStateException] {
-      crashAt(beforePromote)(db.compact("t"))
+      crashAt(flipped)(before.compact("t"))
     }
 
-    // pointer flipped; _evmeta.json still describes the OLD generation;
-    // the staged manifest must carry the reads
-    assert(db.dataDir("t") !== gen1, "pointer must have flipped")
-    val tdir = new java.io.File(s"${db.root}/t")
-    val staged = tdir.listFiles.map(_.getName)
-      .filter(n => n.startsWith("_evmeta.") && n != "_evmeta.json")
-    assert(staged.length === 1,
-      s"staged gen-qualified manifest must exist: ${staged.toSeq}")
-    assert(db.asOf("t").count() === expect,
-      "reads in the window serve the NEW generation via the staged manifest")
+    val db = new XtDb(spark, root)
+    assert(db.readEvMeta("t").map(_.gen) === Some(1),
+      "the manifest still names the superseded generation")
+    assert(db.storageStats("t")._3 === 2, "the pointer flipped")
+    assert(rows(db.asOf("t").select("_id", "v")) === expectAsOf)
+    assert(rows(db.history("t").select("_id", "v", "_valid_from",
+      "_valid_to", "_system_from", "_system_to")) === expectHistory)
+    assert(db.blockLag("t") === 0L, "the flipped generation has no backlog")
+    assert(db.events("t").count() === expectAsOf.size.toLong,
+      "no consumed duplicates, no missing level rows")
 
-    // the next maintenance write promotes the staged manifest; one more
-    // cycle sweeps the now-redundant staged file
-    db.compactIncremental("t")
-    val rawGen = """"gen"\s*:\s*(\d+)""".r.findFirstMatchIn(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${db.root}/t/_evmeta.json")), "UTF-8"))
-      .get.group(1).toInt
-    assert(rawGen === 2, s"_evmeta.json must be promoted to gen 2: $rawGen")
-    db.compactIncremental("t")
-    val stagedAfter = tdir.listFiles.map(_.getName)
-      .filter(n => n.startsWith("_evmeta.") && n != "_evmeta.json")
-    assert(stagedAfter.isEmpty,
-      s"staged manifest must be swept after promotion: ${stagedAfter.toSeq}")
-    assert(db.asOf("t").count() === expect)
+    db.putDocs("t", Seq((551L, 3857L)).toDF("_id", "v"))
+    db.putDocs("t", Seq((552L, 3864L)).toDF("_id", "v"))
+    assert(db.compactIfLagged("t", maxLag = 0))
+    val m = db.readEvMeta("t")
+    assert(m.map(_.gen) === Some(db.storageStats("t")._3) &&
+      m.exists(_.buckets == 16), s"the manifest is re-stamped: $m")
+    assert(db.asOf("t").count() === 552L)
+    assert(db.bucketedEventsIfValid("t").isDefined,
+      "the re-stamped generation serves bucketed again")
   }
 
-  test("chunk-stride change between crash and resume RESTARTS the merge " +
-      "(ADVICE r14 #2): no bucket range is ever served twice") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    try {
-      val db = newDb("commit-stride")
-      db.putDocs("s", spark.range(1, 1001).selectExpr("id AS _id", "id AS v"))
-      db.compact("s") // 16-bucket base ⇒ 2 chunks of 8
-      db.putDocs("s", spark.range(1001, 1051)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("s"))
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("s"))
-      }
-      // ops lowers the chunk size before retrying — the wide chunk c0
-      // (buckets 0-7) is already on disk; a naive resume at stride 4
-      // would skip lo=0 but rewrite buckets 4-7 again under c4
-      spark.conf.set("spark.graft.fullCompact.chunkBuckets", "4")
-      db.compact("s")
-      assert(db.asOf("s").count() === 1050L,
-        "post-resume row count must be exact (no duplicated bucket range)")
-      assert(db.events("s").groupBy(col("_id")).count()
-        .filter(col("count") > 1).count() === 0L,
-        "no event may be served twice after the stride change")
-      assert(db.asOf("s").select(max(col("_id"))).as[Long].head() === 1050L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
+  test("crash AFTER the flip, before the manifest write (file://): a " +
+      "reopened store serves the post-state flat; the next compaction " +
+      "re-stamps the manifest") {
+    crashAfterFlip(
+      java.nio.file.Files.createTempDirectory("commit-flipped").toString)
+  }
+
+  test("crash AFTER the flip, before the manifest write (objstore://)") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.objstore.impl",
+      classOf[graft.storage.ObjectStoreFileSystem].getName)
+    conf.set("fs.objstore.impl.disable.cache", "true")
+    crashAfterFlip("objstore:" +
+      java.nio.file.Files.createTempDirectory("commit-flipped-os").toString)
   }
 
   test("a gen-AHEAD manifest with levels/consumed (the pre-round-15 crash " +
@@ -222,284 +190,5 @@ class CommitOrderSpec extends AnyFunSuite {
     assert(db.asOf("a").count() === 110L)
   }
 
-  test("maintenance NEVER deletes an unparseable staged manifest " +
-      "(ADVICE r15 #3): a racing instance's stage read mid-write must " +
-      "survive the sweep; a parseable superseded stage is collected") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("commit-sweepstage")
-    db.putDocs("w", spark.range(1, 201).selectExpr("id AS _id", "id AS v"))
-    db.compact("w")
-    db.putDocs("w", spark.range(201, 221).selectExpr("id AS _id", "id AS v"))
-    assert(db.compactIncremental("w"))
-    // a half-written stage from a racing instance: unparseable bytes
-    val tdir = s"${db.root}/w"
-    val halfWritten = java.nio.file.Paths.get(s"$tdir/_evmeta.g7xyz.json")
-    java.nio.file.Files.write(halfWritten,
-      """{"v":2,"gen":7,"buck""".getBytes("UTF-8"))
-    // a parseable stage the promoted manifest already supersedes
-    val superseded = java.nio.file.Paths.get(s"$tdir/_evmeta.g0old.json")
-    val cur = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$tdir/_evmeta.json")), "UTF-8")
-    java.nio.file.Files.write(superseded,
-      cur.replaceFirst(""""gen":\d+""", "\"gen\":0").getBytes("UTF-8"))
-    // two maintenance cycles (the sweep runs on manifest writes)
-    db.putDocs("w", spark.range(221, 231).selectExpr("id AS _id", "id AS v"))
-    assert(db.compactIncremental("w"))
-    db.putDocs("w", spark.range(231, 241).selectExpr("id AS _id", "id AS v"))
-    assert(db.compactIncremental("w"))
-    assert(java.nio.file.Files.exists(halfWritten),
-      "an unreadable staged manifest must survive the sweep — it may be " +
-        "a live commit's healing manifest read mid-write")
-    assert(!java.nio.file.Files.exists(superseded),
-      "a parseable superseded staged manifest must be collected")
-    assert(db.asOf("w").count() === 240L)
-  }
 
-  test("VERDICT r15 #2 — sidecar ownership: a resume within a LIVE " +
-      "attempt's lease never collaborates on its sidecar or dir (fresh " +
-      "suffixed attempt, sidecar-silent); an EXPIRED lease is taken " +
-      "over, resuming the dead attempt's dir and done chunks") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    try {
-      val db = newDb("commit-owner")
-      db.putDocs("r", spark.range(1, 1001).selectExpr("id AS _id", "id AS v"))
-      db.compact("r") // 16-bucket base ⇒ 2 chunks of 8
-      db.putDocs("r", spark.range(1001, 1051)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("r"))
-      // crash after chunk 1: a GRACEFUL failure releases the attempt
-      // lease on the way out (quick restarts resume immediately; only a
-      // hard kill leaves the lease to age)
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("r"))
-      }
-      val scPath = java.nio.file.Paths.get(
-        s"${db.root}/r/_compact_progress.json")
-      val sc0 = new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8")
-      val dir1 = """"dir"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(sc0).get.group(1)
-      assert(""""owner"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(sc0).get.group(1).isEmpty,
-        "a graceful crash must release the attempt lease")
-      // now simulate a LIVE foreign compactor owning this attempt: a
-      // foreign token with a fresh heartbeat
-      def rewriteSidecar(owner: String, hb: Long): String = {
-        val cur = new String(
-          java.nio.file.Files.readAllBytes(scPath), "UTF-8")
-        val next = cur
-          .replaceFirst(""""owner":"[^"]*"""", s""""owner":"$owner"""")
-          .replaceFirst(""""hb":-?\d+""", s""""hb":$hb""")
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-          s"${db.root}/r/._compact_progress.json.crc"))
-        java.nio.file.Files.write(scPath, next.getBytes("UTF-8"))
-        next
-      }
-      val sc1 = rewriteSidecar("foreign-live-attempt",
-        System.currentTimeMillis())
-      val c0 = chunkDir(s"${db.root}/r/$dir1", 0)
-        .getOrElse(fail("chunk c0 landed"))
-      val c0Before = java.nio.file.Files.list(c0).count()
-
-      // LIVE lease (heartbeat is seconds old): the retry must not
-      // resume dir1 — it completes in a fresh suffixed dir, and right
-      // up to its commit point the "live" attempt's sidecar and chunk
-      // files are untouched (after the commit, the orphan dir is the
-      // winner's lazy GC's to collect — the doomed attempt fails
-      // loudly at its own CAS either way)
-      @volatile var atFlip: Option[(Boolean, Long, String)] = None
-      withHook { case _: WritePoint.BeforeFlip =>
-        val sc = new String(
-          java.nio.file.Files.readAllBytes(scPath), "UTF-8")
-        atFlip = Some((java.nio.file.Files.exists(c0),
-          if (java.nio.file.Files.exists(c0))
-            java.nio.file.Files.list(c0).count() else -1L,
-          sc))
-      }(db.compact("r"))
-      assert(db.asOf("r").count() === 1050L)
-      val committedDir = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${db.root}/r/_gen")), "UTF-8")
-        .trim.split(':').last
-      assert(committedDir !== dir1,
-        "a live foreign attempt's dir must never be resumed")
-      val (c0There, c0Count, scAtFlip) = atFlip.get
-      assert(c0There && c0Count === c0Before,
-        "the live attempt's chunk files must be untouched at commit time")
-      assert(scAtFlip === sc1,
-        "a sidecar-silent loser must never rewrite the live sidecar")
-
-      // EXPIRED foreign lease: crash again, stamp a foreign owner with
-      // an ancient heartbeat — the takeover must resume the SAME dir
-      // with the done chunk intact
-      db.putDocs("r", spark.range(1051, 1101)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("r"))
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("r"))
-      }
-      rewriteSidecar("foreign-dead-attempt", 1L)
-      val dir2 = """"dir"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(
-        new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8"))
-        .get.group(1)
-      val c0b = chunkDir(s"${db.root}/r/$dir2", 0)
-        .getOrElse(fail("chunk c0 landed before the crash"))
-      val c0Mtime = java.nio.file.Files.getLastModifiedTime(c0b)
-      db.compact("r")
-      val committed2 = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${db.root}/r/_gen")), "UTF-8")
-        .trim.split(':').last
-      assert(committed2 === dir2,
-        "an expired attempt must be taken over into the SAME dir")
-      assert(java.nio.file.Files.getLastModifiedTime(c0b) === c0Mtime,
-        "the dead attempt's completed chunk must not be rewritten")
-      assert(db.asOf("r").count() === 1100L,
-        "no chunk served twice, none lost")
-      assert(db.events("r").groupBy(col("_id")).count()
-        .filter(col("count") > 1).count() === 0L)
-
-      // MISMATCHED inputs + LIVE foreign lease: a crashed attempt whose
-      // fingerprint went stale (new data folded after the crash) but
-      // whose sidecar a live foreign compactor now owns — the stale-dir
-      // cleanup must NOT delete a live attempt's dir, and the retry
-      // must still complete correctly in its own fresh dir
-      db.putDocs("r", spark.range(1101, 1151)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("r"))
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("r"))
-      }
-      val dir3 = """"dir"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(
-        new String(java.nio.file.Files.readAllBytes(scPath), "UTF-8"))
-        .get.group(1)
-      // stale the fingerprint: land and fold MORE data
-      db.putDocs("r", spark.range(1151, 1201)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("r"))
-      rewriteSidecar("foreign-live-stale-fp", System.currentTimeMillis())
-      val d3 = java.nio.file.Paths.get(s"${db.root}/r/$dir3")
-      assert(java.nio.file.Files.exists(d3))
-      @volatile var d3AtFlip = false
-      withHook { case _: WritePoint.BeforeFlip =>
-        d3AtFlip = java.nio.file.Files.exists(d3)
-      }(db.compact("r"))
-      assert(d3AtFlip,
-        "a LIVE foreign attempt's dir must not be deleted by the " +
-          "stale-progress cleanup, even when its fingerprint mismatches")
-      assert(db.asOf("r").count() === 1200L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
-  }
-
-  test("ADVICE r16 #1 — the lease heartbeat rides a BACKGROUND timer: " +
-      "a chunk outlasting the lease keeps the heartbeat fresh (no " +
-      "second compactor can deem the owner dead mid-chunk), and the " +
-      "compaction commits normally") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    spark.conf.set("spark.graft.fullCompact.ownerLeaseMs", "600")
-    try {
-      val db = newDb("commit-hb")
-      db.putDocs("h", spark.range(1, 1001)
-        .selectExpr("id AS _id", "id AS v"))
-      db.compact("h") // 16-bucket base ⇒ 2 chunks of 8
-      db.putDocs("h", spark.range(1001, 1051)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("h"))
-      val scPath = java.nio.file.Paths.get(
-        s"${db.root}/h/_compact_progress.json")
-      // simulate a chunk that outlasts the 600ms lease: sleep 3 lease
-      // periods after chunk 0, then check the sidecar's heartbeat age —
-      // the background timer (period = lease/3) must have refreshed it
-      @volatile var hbAge: Long = Long.MaxValue
-      @volatile var fired = false
-      withHook { case _: WritePoint.ChunkLanded if !fired =>
-        fired = true
-        Thread.sleep(1800)
-        // the background timer REWRITES the sidecar concurrently and a
-        // plain-FS write is not atomic — retry a torn/mid-write read
-        // (reading later only sees a FRESHER heartbeat, so the age
-        // bound below stays meaningful)
-        var hb: Option[Long] = None
-        val deadline = System.currentTimeMillis() + 2000
-        while (hb.isEmpty && System.currentTimeMillis() < deadline) {
-          val sc = new String(
-            java.nio.file.Files.readAllBytes(scPath), "UTF-8")
-          hb = """"hb"\s*:\s*(-?\d+)""".r.findFirstMatchIn(sc)
-            .map(_.group(1).toLong)
-          if (hb.isEmpty) Thread.sleep(20)
-        }
-        hbAge = System.currentTimeMillis() - hb.get
-      }(db.compact("h"))
-      assert(fired)
-      // refreshed-on-chunk-commit-only would leave the heartbeat at
-      // least sleep(1800ms) + chunk-0-job-duration old here; the
-      // background timer (period 200ms) keeps it fresh. 1500ms bound =
-      // strictly inside the sleep, with slack for a loaded machine.
-      assert(hbAge <= 1500L,
-        s"the heartbeat must be refreshed DURING a long chunk (age " +
-          s"${hbAge}ms) — refreshed only on chunk commit, a live " +
-          "owner would be taken over")
-      assert(db.asOf("h").count() === 1050L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-      spark.conf.unset("spark.graft.fullCompact.ownerLeaseMs")
-    }
-  }
-
-  test("round 17 — `chunks` manifest fence: a loser attempt's " +
-      "late-landing part files in its own tagged chunk dir are never " +
-      "served as base rows (no duplicates), and the committed manifest " +
-      "names its chunk dirs") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    try {
-      val db = newDb("commit-fence")
-      db.putDocs("f", spark.range(1, 1001)
-        .selectExpr("id AS _id", "id AS v"))
-      db.compact("f")
-      db.putDocs("f", spark.range(1001, 1051)
-        .selectExpr("id AS _id", "id AS v"))
-      assert(db.compactIncremental("f"))
-      db.compact("f") // aligned rewrite → tagged chunk dirs + fence
-      val meta = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${db.root}/f/_evmeta.json")), "UTF-8")
-      assert(meta.contains(""""chunks":["""),
-        s"an aligned generation's manifest must carry the chunk fence: " +
-          meta)
-      assert(""""chunks"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(meta)
-        .get.group(1).contains("c0."),
-        "committed chunk dirs are attempt-tagged")
-      val before = db.asOf("f").count()
-      assert(before === 1050L)
-      // a paused loser lands a COMPLETE copy of chunk 0 in its own
-      // tagged dir after the winner committed — without the fence these
-      // bucket-named files would read as duplicate base rows
-      val gname = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${db.root}/f/_gen")), "UTF-8")
-        .trim.split(':').last
-      val gdir = java.nio.file.Paths.get(s"${db.root}/f/$gname")
-      val winner = chunkDir(gdir.toString, 0).getOrElse(fail("chunk c0"))
-      val loser = gdir.resolve("c0.deadbeef")
-      java.nio.file.Files.createDirectory(loser)
-      val it = java.nio.file.Files.list(winner).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        if (p.getFileName.toString.endsWith(".parquet"))
-          java.nio.file.Files.copy(p,
-            loser.resolve(p.getFileName.toString))
-      }
-      assert(db.asOf("f").count() === before,
-        "unmanifested chunk dirs must be fenced out of base reads")
-      assert(db.events("f").groupBy(col("_id")).count()
-        .filter(col("count") > 1).count() === 0L,
-        "a loser's late files must never serve as duplicate rows")
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
-  }
 }

@@ -362,110 +362,4 @@ class ObjectStoreSpec extends AnyFunSuite {
       s"orphan gen-2 dirs must be collected: $afterDirs")
     assert(Bitemporal.current(a.events("docs")).count() === 521L)
   }
-
-  test("ATOMIC lease takeover on objstore:// (round 16): an expired " +
-      "attempt's sidecar is taken over via putIfVersion — the resume " +
-      "lands in the dead attempt's dir with its done chunks intact, " +
-      "rename-free end to end") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    try {
-      val (root, fs) = freshRoot()
-      val db = new XtDb(spark, root)
-      db.putDocs("docs", spark.range(1, 1001)
-        .select(col("id").as("_id"), (col("id") * 2).as("v")))
-      db.compact("docs") // 16-bucket base ⇒ 2 chunks of 8
-      db.putDocs("docs", spark.range(1001, 1051)
-        .select(col("id").as("_id"), (col("id") * 2).as("v")))
-      assert(db.compactIncremental("docs"))
-      intercept[IllegalStateException] {
-        crashAt(afterChunks(1))(db.compact("docs"))
-      }
-      // stamp a FOREIGN owner with an ancient heartbeat (the graceful
-      // release left owner empty — craft the dead-foreign artifact)
-      val scP = new org.apache.hadoop.fs.Path(
-        s"$root/docs/_compact_progress.json")
-      val in = fs.open(scP)
-      val sc = try {
-        val b = new Array[Byte](fs.getFileStatus(scP).getLen.toInt)
-        in.readFully(b); new String(b, "UTF-8")
-      } finally in.close()
-      val dir1 = """"dir"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(sc)
-        .get.group(1)
-      val crafted = sc
-        .replaceFirst(""""owner":"[^"]*"""", """"owner":"dead-foreign"""")
-        .replaceFirst(""""hb":-?\d+""", """"hb":1""")
-      val out = fs.create(scP, true)
-      try out.write(crafted.getBytes("UTF-8")) finally out.close()
-      // the takeover goes through the store's CAS surface and resumes
-      // the SAME dir; commit completes with exact rows
-      db.compact("docs")
-      val gen = {
-        val gp = new org.apache.hadoop.fs.Path(s"$root/docs/_gen")
-        val gi = fs.open(gp)
-        try {
-          val b = new Array[Byte](fs.getFileStatus(gp).getLen.toInt)
-          gi.readFully(b); new String(b, "UTF-8").trim
-        } finally gi.close()
-      }
-      assert(gen.split(':').last === dir1,
-        s"expired-lease takeover must resume the dead attempt's dir: " +
-          s"$gen vs $dir1")
-      assert(Bitemporal.current(db.events("docs")).count() === 1050L)
-      assert(db.events("docs").groupBy(col("_id")).count()
-        .filter(col("count") > 1).count() === 0L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
-  }
-
-  test("CAS-CHAINED owner writes (round 17, ADVICE r16 #1): a foreign " +
-      "sidecar write mid-run breaks the owner's version chain — the " +
-      "lost lease surfaces AT the owner's next write (never masked by " +
-      "read-after-own-write), and a retry still commits exact rows") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.fullCompact.chunkBuckets", "8")
-    try {
-      val (root, fs) = freshRoot()
-      val db = new XtDb(spark, root)
-      db.putDocs("docs", spark.range(1, 1001)
-        .select(col("id").as("_id"), (col("id") * 2).as("v")))
-      db.compact("docs") // 16-bucket base ⇒ 2 chunks of 8
-      db.putDocs("docs", spark.range(1001, 1051)
-        .select(col("id").as("_id"), (col("id") * 2).as("v")))
-      assert(db.compactIncremental("docs"))
-      val scP = new org.apache.hadoop.fs.Path(
-        s"$root/docs/_compact_progress.json")
-      // after chunk 0 lands (before the owner's progress write), a
-      // "foreign compactor" overwrites the sidecar — any PUT bumps the
-      // object version, so the owner's chained CAS must lose
-      @volatile var fired = false
-      val e = intercept[IllegalStateException] {
-        withHook { case _: WritePoint.ChunkLanded if !fired =>
-          fired = true
-          val foreign =
-            """{"gen":99,"buckets":16,"fp":"x","chunk":8,"dir":"gX",""" +
-              """"owner":"foreign-live","hb":""" +
-              s"${System.currentTimeMillis()}," +
-              """"dirv":[],"done":[]}"""
-          val out = fs.create(scP, true)
-          try out.write(foreign.getBytes("UTF-8"))
-          finally out.close()
-        }(db.compact("docs"))
-      }
-      assert(fired)
-      assert(e.getMessage.contains("lost its attempt lease"),
-        s"the chain break must surface as a lost lease: ${e.getMessage}")
-      // retry: the crafted 'foreign' owner looks live, so the retry runs
-      // sidecar-silent in its own fresh dir — and still commits exactly
-      db.compact("docs")
-      assert(Bitemporal.current(db.events("docs")).count() === 1050L)
-      assert(db.events("docs").groupBy(col("_id")).count()
-        .filter(col("count") > 1).count() === 0L)
-    } finally {
-      spark.conf.unset("spark.graft.fullCompact.chunkBuckets")
-    }
-  }
 }

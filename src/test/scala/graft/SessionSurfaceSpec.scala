@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   * rules a plan gets would depend on what ran before. Fault injection
   * goes through the store's one write-point hook, never a user-settable
   * option. Engine code reads no environment variable: only a program's
-  * entry point does. */
+  * entry point does. The set of `spark.graft.*` options is pinned. */
 class SessionSurfaceSpec extends AnyFunSuite {
 
   // split so this file does not match its own patterns
@@ -50,6 +50,22 @@ class SessionSurfaceSpec extends AnyFunSuite {
     val bad = offenders(testConf, !_.startsWith(mainDir))
     assert(bad.isEmpty,
       s"inject faults through XtDb.writePointHook, not a conf key: $bad")
+  }
+
+  test("src/main reads exactly the listed spark.graft.* options") {
+    // a new option fails here until it is listed on purpose
+    val listed = Set(
+      "autoCompact.maxLag", "erasePurge.maxCycles", "eventBucketBytes",
+      "fullCompact.ratio", "fullCompact.smallBytes",
+      "intervalJoin.bucketSeconds", "intervalJoin.enabled",
+      "joinReorder.enabled", "joinReorder.ndvStats", "maxLevels",
+      "snapshotFold.broadcastMaxIds", "snapshotFold.resolveMode",
+      "txsFoldThreshold").map("spark.graft." + _)
+    val key = ("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"").r
+    val read = sources.collect { case (p, text) if p.startsWith(mainDir) =>
+      key.findAllMatchIn(text).map(_.group(1))
+    }.flatten.toSet
+    assert(read === listed)
   }
 
   test("under src/main only files defining a main read the environment") {

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every field a sidecar writer writes reads back as written: the event
-  * manifest, the snapshot manifest and the aligned-compaction progress,
-  * each with every field set away from its default. */
+  * manifest and the snapshot manifest, each with every field set away
+  * from its default. */
 class SidecarRoundTripSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -22,9 +22,9 @@ class SidecarRoundTripSpec extends AnyFunSuite {
     val m = db.EvMeta(gen = 3, buckets = 32, levels = Seq("_lv1_ab", "_lv2_cd"),
       consumed = Set("part-1.parquet", "part-2.parquet"),
       retired = Seq("_lv0_ef"), lvseq = 7, eraseCycles = 2,
-      excluded = Set("c0.x/part-9_00001.parquet"), sweepDirs = Seq("g2_aa"),
-      eraseBuckets = Set(1, 5, 31), eraseMaxSf = 1700000000123456L,
-      chunks = Seq("c0.tag1", "c16.tag1"))
+      excluded = Set("_lv1_ab/part-9_00001.parquet"),
+      sweepDirs = Seq("g2_aa"),
+      eraseBuckets = Set(1, 5, 31), eraseMaxSf = 1700000000123456L)
     db.writeEvMeta("t", m)
     assert(db.readEvMeta("t") === Some(m))
   }
@@ -40,14 +40,5 @@ class SidecarRoundTripSpec extends AnyFunSuite {
       bmins = Map(0 -> 1800000000000000L, 9 -> 1900000000000000L))
     db.writeSnapMeta2("t", m)
     assert(db.readSnapMeta2("t") === Some(m))
-  }
-
-  test("compaction progress round-trips every field, chunk dirs included") {
-    val db = newDb("rt-progress")
-    val p = db.CompactProgress(gen = 4, buckets = 16, fp = "0a1b2c",
-      done = Set(0, 8), chunk = 8, dir = "g4_12345678", owner = "attempt-1",
-      hb = 1700000000000L, dirs = Map(0 -> "c0.abcd1234", 8 -> "c8.abcd1234"))
-    db.writeCompactProgress("t", p)
-    assert(db.readCompactProgress("t") === Some(p))
   }
 }

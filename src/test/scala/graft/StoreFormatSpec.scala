@@ -74,6 +74,19 @@ class StoreFormatSpec extends AnyFunSuite {
     assertNames("_evmeta.json")(db.asOf("t").count())
   }
 
+  test("a v2 event manifest (aligned bases in chunk dirs behind a " +
+      "`chunks` read fence) is refused, naming _evmeta.json") {
+    val db = newDb("fmt-evmeta-v2")
+    put(db, "t", 1, 101)
+    db.compact("t")
+    val p = Paths.get(s"${db.root}/t/_evmeta.json")
+    val v3 = new String(Files.readAllBytes(p), "UTF-8").trim
+    assert(v3.startsWith("{\"v\":3,") && v3.endsWith("}"), v3)
+    overwrite(p, "{\"v\":2," + v3.stripPrefix("{\"v\":3,").stripSuffix("}") +
+      ",\"chunks\":[\"c0.0a1b2c3d\"]}")
+    assertNames("_evmeta.json")(new XtDb(spark, db.root).asOf("t").count())
+  }
+
   test("a generation pointer holding only the number is refused, naming " +
       "_gen") {
     val db = newDb("fmt-gen")

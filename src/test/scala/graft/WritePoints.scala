@@ -21,15 +21,9 @@ object WritePoints {
       throw new IllegalStateException(s"injected crash at $p")
     }(body)
 
-  /** Once `k` aligned-compaction chunks of one attempt are durable. */
-  def afterChunks(k: Int): WritePoint => Boolean = {
-    case WritePoint.ChunkDurable(_, n) => n >= k
-    case _ => false
-  }
-
   val beforeFlip: WritePoint => Boolean = _.isInstanceOf[WritePoint.BeforeFlip]
-  val beforePromote: WritePoint => Boolean =
-    _.isInstanceOf[WritePoint.BeforePromote]
+  /** A rewrite's pointer has flipped; its manifest is not yet written. */
+  val flipped: WritePoint => Boolean = _.isInstanceOf[WritePoint.Flipped]
   val snapshotFold: WritePoint => Boolean = _.isInstanceOf[WritePoint.Fold]
   /** A transaction's files have landed; its log record has not. */
   val appended: WritePoint => Boolean = _.isInstanceOf[WritePoint.Appended]
