@@ -239,7 +239,8 @@ object Bench {
       def q70B() = {
         import graft.QueryDef.PresentOps
         Bitemporal.asOf(graft.storage.LayoutCatalog.load(
-            spark, dstB, "ev70", ev70Layout), asof70, asof70)
+            spark, dstB, "ev70", ev70Layout), asof70, asof70,
+            current_timestamp())
           .select(col("_id"), col("version"),
             unix_timestamp(col(Bitemporal.VF)).as("vf_ep"))
           .presentSorted("_id")

@@ -47,10 +47,13 @@ object Bitemporal {
     * to the system snapshot, keep events whose valid interval contains
     * validAt, take the newest per iid, and keep it only if it is a `put`.
     * An erase masks EVERY system time, including ones before it: the
-    * erase window sees erase events past `systemAt` too, exactly as
-    * `history` (FOR ALL SYSTEM_TIME) and compaction's purge treat them.
-    * On a log without erases the window's input is the system snapshot,
-    * as before.
+    * erase window sees erase events past `systemAt` too, up to `basis`
+    * (the committed state the read runs at: the statement's token, or
+    * now for a log nothing writes concurrently), exactly as `history`
+    * (FOR ALL SYSTEM_TIME) and compaction's purge treat them. An erase
+    * above `basis` (its files landed, its log record not yet) masks
+    * nothing. On a log without erases the window's input is the system
+    * snapshot, as before.
     *
     * One shuffle: the erase ceiling rides the same `partitionBy(_iid)`
     * exchange as the recency rank — no distinct/anti-join side plan.
@@ -65,10 +68,12 @@ object Bitemporal {
     * window pays one exchange (reused by both frames) plus a codegen'd
     * sort of short runs. Both formulations hash-matched all 16
     * bitemporal gate queries — the revert is performance-only. */
-  def asOf(events: DataFrame, validAt: Column, systemAt: Column): DataFrame = {
+  def asOf(events: DataFrame, validAt: Column, systemAt: Column,
+      basis: Column): DataFrame = {
     val wIid = Window.partitionBy(IID)
     val visible = events
-      .filter(col(SF) <= systemAt || col(OP) === "erase")
+      .filter(col(SF) <= systemAt ||
+        (col(OP) === "erase" && col(SF) <= basis))
       .withColumn("__erase_sf",
         max(when(col(OP) === "erase", col(SF))).over(wIid))
       .filter(col("__erase_sf").isNull || col(SF) > col("__erase_sf"))
@@ -86,7 +91,7 @@ object Bitemporal {
   /** Current state (valid-time and system-time = now). */
   def current(events: DataFrame): DataFrame = {
     val now = current_timestamp()
-    asOf(events, now, now)
+    asOf(events, now, now, now)
   }
 
   private val MaxMicros = Long.MaxValue
@@ -175,9 +180,11 @@ object Bitemporal {
     * of the full event history. Output always carries
     * `_valid_from/_valid_to/_system_from/_system_to` (fast path: bounds as
     * stored; `_system_to` null since the version is current at the point).
+    * `basis` bounds the erases a point read admits (see `asOf`).
     */
   def resolve(events: DataFrame, valid: TemporalSpec,
-      system: TemporalSpec): DataFrame = {
+      system: TemporalSpec,
+      basis: Column = current_timestamp()): DataFrame = {
     import TemporalSpec._
     def point(s: TemporalSpec): Option[Column] = s match {
       case Current => Some(current_timestamp())
@@ -186,7 +193,7 @@ object Bitemporal {
     }
     (point(valid), point(system)) match {
       case (Some(v), Some(s)) =>
-        asOf(events, v, s).withColumn(ST, lit(null).cast("timestamp"))
+        asOf(events, v, s, basis).withColumn(ST, lit(null).cast("timestamp"))
       case _ =>
         def dimFilter(spec: TemporalSpec, from: String, to: String): Column =
           spec match {

@@ -1049,7 +1049,8 @@ class XtDb(spark: SparkSession, val root: String) {
     val snapshot: TxSnapshot = new TxSnapshot {
       def events(table: String): DataFrame = viewEvents(table)
       def current(table: String): DataFrame =
-        Bitemporal.asOf(viewEvents(table), lit(sysTime), lit(sysTime))
+        Bitemporal.asOf(viewEvents(table), lit(sysTime), lit(sysTime),
+          lit(sysTime))
       def tables: Seq[String] =
         (XtDb.this.tables ++ staged.keys).distinct.sorted
     }
@@ -2085,6 +2086,9 @@ class XtDb(spark: SparkSession, val root: String) {
     *    (default 0.2) of the base, i.e. geometrically: lifetime write
     *    amplification is O(1/ratio) per byte instead of the pre-round-13
     *    O(table/maxLag) per byte.
+    * A generation whose manifest names an older one (a crash between a
+    * rewrite's pointer flip and its manifest write) counts as lagged and
+    * takes the full [[compact]], which re-stamps it.
     * Returns whether any compaction ran — a freshly-folded table has lag
     * 0, so callers get idempotence for free. */
   def compactIfLagged(table: String, maxLag: Int = 5): Boolean = {
@@ -2094,7 +2098,12 @@ class XtDb(spark: SparkSession, val root: String) {
       .filter(_.gen == currentGen(table).getOrElse(0))
     def eraseOverdue = maxEraseCycles > 0 &&
       genMeta.exists(_.eraseCycles >= maxEraseCycles)
-    val lagged = blockLag(table) > maxLag
+    // a generation without its manifest (a crash after a rewrite's
+    // pointer flip) is lagged at once: until re-stamped it serves flat,
+    // and the superseded dir keeps any erased payload past the purge bound
+    val meta = genMeta
+    val unstamped = meta.isEmpty && currentGen(table).isDefined
+    val lagged = unstamped || blockLag(table) > maxLag
     if (!lagged && !eraseOverdue) {
       // a maintenance heartbeat with nothing to fold is still a CYCLE:
       // the erase clock ticks (the purge-latency bound holds on tables
@@ -2132,7 +2141,7 @@ class XtDb(spark: SparkSession, val root: String) {
     val smallBytes = spark.conf
       .get("spark.graft.fullCompact.smallBytes",
         (256L * 1024 * 1024).toString).toLong
-    val hasBase = genMeta.isDefined
+    val hasBase = meta.isDefined
     if (!hasBase || liveEventBytes(table) <= smallBytes) compact(table)
     else {
       if (lagged) compactIncremental(table)
@@ -2803,14 +2812,17 @@ class XtDb(spark: SparkSession, val root: String) {
     * (defaults: valid time now — reference scan.clj:307-310 default when no
     * temporal filter — and system time at the committed basis,
     * `least(snapshotToken(), now)`, so a transaction whose files have
-    * landed but whose log record has not stays invisible). */
+    * landed but whose log record has not stays invisible). Erases resolve
+    * at that basis whatever `systemAt` is, so a landed but unlogged erase
+    * masks nothing. */
   def asOf(table: String,
       validAt: Option[Column] = None,
-      systemAt: Option[Column] = None): DataFrame =
+      systemAt: Option[Column] = None): DataFrame = {
+    val basis = least(lit(snapshotToken()), current_timestamp())
     Bitemporal.asOf(events(table),
       validAt.getOrElse(current_timestamp()).cast("timestamp"),
-      systemAt.getOrElse(least(lit(snapshotToken()), current_timestamp()))
-        .cast("timestamp"))
+      systemAt.getOrElse(basis).cast("timestamp"), basis)
+  }
 
   /** FOR ALL VALID_TIME + ALL SYSTEM_TIME — full rectangle history. */
   def history(table: String): DataFrame =
@@ -3005,7 +3017,8 @@ class XtDb(spark: SparkSession, val root: String) {
     * valid time now. */
   def atSnapshot(table: String,
       token: java.sql.Timestamp): DataFrame =
-    Bitemporal.asOf(events(table), current_timestamp(), lit(token))
+    Bitemporal.asOf(events(table), current_timestamp(), lit(token),
+      lit(token))
 }
 
 object XtDb {

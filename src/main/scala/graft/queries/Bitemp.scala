@@ -55,7 +55,8 @@ object Bitemp {
 
     QueryDef("q70_bitemp_asof", (s, dir) => {
       val asof = lit("1999-01-01 00:00:00").cast("timestamp")
-      Bitemporal.asOf(syntheticEvents(s, dir), asof, asof)
+      Bitemporal.asOf(syntheticEvents(s, dir), asof, asof,
+        current_timestamp())
         .select(col("_id"), col("version"),
           unix_timestamp(col(Bitemporal.VF)).as("vf_ep"))
         .presentSorted("_id")
@@ -120,7 +121,7 @@ object Bitemp {
         .unionByName(ev(base.filter(col("m") === 3L), 1L, 1, "put",
           expr("timestampadd(DAY, 1, d)")))
       val asof = lit("1999-06-01 00:00:00").cast("timestamp")
-      Bitemporal.asOf(events, asof, asof)
+      Bitemporal.asOf(events, asof, asof, current_timestamp())
         .select(col("_id"), col("version"))
         .orderBy("_id")
     }, Some("""
@@ -138,10 +139,11 @@ object Bitemp {
       vis AS (
         SELECT *, max(CASE WHEN op = 'erase' THEN sf END)
                     OVER (PARTITION BY _id) AS esf
-        FROM ev WHERE sf <= TIMESTAMP '1999-06-01'),
+        FROM ev),
       cand AS (
         SELECT *, row_number() OVER (PARTITION BY _id ORDER BY sf DESC) AS rn
         FROM vis WHERE (esf IS NULL OR sf > esf)
+          AND sf <= TIMESTAMP '1999-06-01'
           AND vf <= TIMESTAMP '1999-06-01')
       SELECT _id, version FROM cand WHERE rn = 1 AND op = 'put'
       ORDER BY _id""")),

@@ -372,8 +372,10 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
 
   /** A table's current rows at the statement's basis (valid time now). */
   private def currentAt(events: DataFrame,
-      token: java.sql.Timestamp): DataFrame =
-    Bitemporal.asOf(events, current_timestamp(), atBasis(token))
+      token: java.sql.Timestamp): DataFrame = {
+    val at = atBasis(token)
+    Bitemporal.asOf(events, current_timestamp(), at, at)
+  }
 
   /** `systemAt` is the statement's token on the system dimension of the
     * primary store, None elsewhere (valid time, attached stores): there
@@ -457,7 +459,8 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
     def resolveAt(d: XtDb, t: String, valid: SpecAst,
         system: SpecAst): DataFrame =
       visible(Bitemporal.resolve(d.events(t), toSpec(valid, None),
-        toSpec(system, if (d eq db) Some(token) else None)))
+        toSpec(system, if (d eq db) Some(token) else None),
+        if (d eq db) atBasis(token) else current_timestamp()))
     // each temporal ref becomes its own view, spliced into the text
     val refViews = pq.refs.zipWithIndex.map { case (r, i) =>
       // a temporal clause on a qualified ref resolves against the

@@ -69,21 +69,27 @@ class CommitOrderSpec extends AnyFunSuite {
     assert(db.asOf("t").select(max(col("_id"))).as[Long].head() === 550L)
   }
 
-  /** Crash a full compaction right after its pointer flip, reopen the
-    * store, and check it serves exactly the post-state: the flipped
-    * generation reads flat from its listing (its manifest still names
-    * the superseded generation). The next lagged `compactIfLagged`
-    * re-stamps the manifest. */
+  /** Crash a full compaction that purges an erase right after its
+    * pointer flip, reopen the store, and check it serves exactly the
+    * post-state: the flipped generation reads flat from its listing (its
+    * manifest still names the superseded generation). The next
+    * `compactIfLagged`, with nothing appended, re-stamps the manifest and
+    * drops the superseded generation, which still holds the erased
+    * payload. */
   private def crashAfterFlip(root: String): Unit = {
     import spark.implicits._
     val before = new XtDb(spark, root)
     levelsAndLeases(before, "t")
+    before.eraseDocs("t", spark.range(1, 11).selectExpr("id AS _id"))
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
     val expectAsOf = rows(before.asOf("t").select("_id", "v"))
+    assert(expectAsOf.size === 540)
     val expectHistory = rows(before.history("t")
       .select("_id", "v", "_valid_from", "_valid_to", "_system_from",
         "_system_to"))
+    val gen1 = new org.apache.hadoop.fs.Path(before.dataDir("t"))
+    val fs = gen1.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     intercept[IllegalStateException] {
       crashAt(flipped)(before.compact("t"))
@@ -98,17 +104,20 @@ class CommitOrderSpec extends AnyFunSuite {
       "_valid_to", "_system_from", "_system_to")) === expectHistory)
     assert(db.blockLag("t") === 0L, "the flipped generation has no backlog")
     assert(db.events("t").count() === expectAsOf.size.toLong,
-      "no consumed duplicates, no missing level rows")
+      "no consumed duplicates, no missing level rows, no erased rows")
+    assert(fs.exists(gen1), "the superseded generation is still on disk")
 
-    db.putDocs("t", Seq((551L, 3857L)).toDF("_id", "v"))
-    db.putDocs("t", Seq((552L, 3864L)).toDF("_id", "v"))
-    assert(db.compactIfLagged("t", maxLag = 0))
+    assert(db.compactIfLagged("t"),
+      "an unstamped generation is lagged with nothing appended")
     val m = db.readEvMeta("t")
     assert(m.map(_.gen) === Some(db.storageStats("t")._3) &&
       m.exists(_.buckets == 16), s"the manifest is re-stamped: $m")
-    assert(db.asOf("t").count() === 552L)
+    assert(!fs.exists(gen1),
+      "the generation holding the erased payload is dropped")
+    assert(rows(db.asOf("t").select("_id", "v")) === expectAsOf)
     assert(db.bucketedEventsIfValid("t").isDefined,
       "the re-stamped generation serves bucketed again")
+    assert(!db.compactIfLagged("t"), "a stamped generation is not lagged")
   }
 
   test("crash AFTER the flip, before the manifest write (file://): a " +

@@ -41,7 +41,7 @@ class ExplainSpec extends AnyFunSuite {
       .toDF("_id", "_iid", "_valid_from", "_valid_to", "_system_from",
         "_seq", "_op")
     val asof = lit("2024-06-01 00:00:00").cast("timestamp")
-    val df = graft.bitemporal.Bitemporal.asOf(events, asof, asof)
+    val df = graft.bitemporal.Bitemporal.asOf(events, asof, asof, asof)
     val rep = Explain.report(df)
     // erase-ceiling + recency rank ride ONE _iid exchange (round-2 fix:
     // no distinct+anti-join side plan)

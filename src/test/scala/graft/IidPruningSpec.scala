@@ -178,7 +178,7 @@ class IidPruningSpec extends AnyFunSuite {
       .withColumn("_id", col("_id").cast("string").cast("long"))
     val all = db.events("pu").unionByName(computed)
     val now = lit(db.snapshotToken())
-    val df = Bitemporal.asOf(all, now, now)
+    val df = Bitemporal.asOf(all, now, now, now)
       .filter(col("_id") === 5L).select("_id", "v")
     assert(df.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
       Seq((5L, 55L)))

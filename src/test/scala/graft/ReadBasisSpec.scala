@@ -9,6 +9,7 @@ import graft.bitemporal.{TxOp, XtDb}
 import graft.bitemporal.XtDb.WritePoint
 import graft.sql.XtSqlEngine
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reads run at the committed basis and never wait for the writer: a
@@ -97,6 +98,34 @@ class ReadBasisSpec extends AnyFunSuite {
       }
     }
     assert(apiReads() == ((Seq(2L), Seq(2L))))
+  }
+
+  test("an erase held after its files landed masks nothing, at the current " +
+      "point or as of before it; once logged it masks both") {
+    val (db, writer) = fresh()
+    val reader = new XtSqlEngine(spark, db)
+    writer.sql("INSERT INTO hb_e RECORDS {_id: 1, v: CAST(1 AS BIGINT)}")
+    val tPut = db.snapshotToken()
+    val current = "SELECT v FROM hb_e WHERE _id = 1"
+    val asOfPut = "SELECT v FROM hb_e FOR SYSTEM_TIME AS OF TIMESTAMP " +
+      s"'${tPut.toInstant}' WHERE _id = 1"
+    def reads(): Seq[Seq[Long]] = Seq(
+      longs(reader, current),
+      longs(reader, asOfPut),
+      db.asOf("hb_e").select("v").collect().toSeq.map(_.getLong(0)),
+      db.asOf("hb_e", systemAt = Some(lit(tPut))).select("v").collect().toSeq
+        .map(_.getLong(0)))
+    withPool(2) { implicit ec =>
+      holdAt(WritePoints.appended) { held =>
+        val commit = Future(writer.sql("ERASE FROM hb_e WHERE _id = 1"))
+        assert(held.await(Wait.toSeconds, TimeUnit.SECONDS),
+          "the erase never reached its Appended write point")
+        assert(Await.result(Future(reads()), Wait) == Seq.fill(4)(Seq(1L)))
+        assert(!commit.isCompleted, "the erase must still be held")
+        commit
+      }
+    }
+    assert(reads() == Seq.fill(4)(Seq.empty[Long]))
   }
 
   test("a join racing a two-table commit sees neither table's new version, " +
