@@ -78,8 +78,8 @@ trait TxSnapshot {
   * and crash-safe: leveled O(backlog) folds, full compaction committed
   * by one pointer CAS (zero-exchange at an unchanged fanout), bounded
   * bucket-local erase purge, and an incremental declared-layout snapshot
-  * (fold from pruned event buckets or from snapshot+delta, chosen by
-  * measured bytes). `Bitemporal.asOf`'s `_iid` windows and
+  * (folded from the changed ids' event buckets). `Bitemporal.asOf`'s
+  * `_iid` windows and
   * every as-of join on `_iid` then plan with ZERO exchange: the per-query
   * shuffle of the whole event log becomes a write-once cost, exactly the
   * trade the declared snapshot layout made for equi joins. Fresh per-tx
@@ -124,9 +124,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * watermark). */
   private def nextSystemTime(): java.sql.Timestamp = synchronized {
     ensureHeads()
-    val now = java.time.Instant.now()
-    val nowUs = now.getEpochSecond * 1000000L + now.getNano / 1000L
-    lastSystemMicros = math.max(nowUs, lastSystemMicros + 1000L)
+    lastSystemMicros = math.max(nowMicros(), lastSystemMicros + 1000L)
     microsToTs(lastSystemMicros)
   }
 
@@ -184,6 +182,18 @@ class XtDb(spark: SparkSession, val root: String) {
 
   private def loadSchema(table: String): Option[StructType] =
     schemaSidecar(schemaPath(table))
+
+  /** The registered schema of a table that holds event files. Every
+    * writer saves it before the first data file ([[evolveSchema]],
+    * [[createTable]]), so its absence is a damaged store: the read fails
+    * and names the file, never guessing the schema from footers. */
+  private def registeredSchema(table: String): StructType =
+    loadSchema(table).getOrElse(missingRegistry(table))
+
+  private def missingRegistry(table: String): Nothing =
+    throw new IllegalStateException(
+      s"table '$table' has event files but no schema registry " +
+        s"${schemaPath(table)}: restore the file or regenerate the store")
 
   // ---- sidecars: the small metadata files next to the data (`_gen`,
   // `_evmeta.json`, `_snapmeta.json`, `_snapschema.json`, `_layout.json`,
@@ -250,44 +260,36 @@ class XtDb(spark: SparkSession, val root: String) {
     * parquet reader widens narrower stored types (int→long, float/int→
     * double) at scan time, so a numeric widening append costs O(batch),
     * never a table rewrite (reference merge-types read-side conform).
-    * Tables written before the registry fall back to footer merging. */
+    * A table with event files but no registry fails loudly
+    * ([[registeredSchema]]). */
   def events(table: String): DataFrame = liveFileSets(table) match {
     case None => flatEvents(table)
     case Some(s) =>
       val bucketed = s.base ++ s.levelFiles
-      // the bucketed relation is strictly an optimization over the same
-      // rows — ANY construction failure (the documented remote-writer
-      // race, schema inference with no registry) degrades to the
-      // manifest-aware plain read, never to an error and never to a raw
-      // directory listing (which could resurrect consumed files)
-      def tryBucketed(): Option[DataFrame] =
-        try Some(bucketedRelation(table, bucketed, s.meta.buckets))
-        catch { case scala.util.control.NonFatal(_) => None }
-      if (s.backlog.isEmpty && bucketed.nonEmpty)
-        tryBucketed().getOrElse(explicitRead(table, bucketed))
-      else if (bucketed.nonEmpty && loadSchema(table).isDefined)
+      if (bucketed.nonEmpty) {
+        val rel = bucketedRelation(table, bucketed, s.meta.buckets)
         // backlog pending: serve bucketed(base+levels) ∪ flat backlog.
         // The union's output partitioning is unknown (windows pay their
         // exchange until the next fold — correct either way); an
         // `_id = k` read pins both branches (IidBucketPruning)
-        tryBucketed().map(_.unionByName(explicitRead(table, s.backlog)))
-          .getOrElse(explicitRead(table, bucketed ++ s.backlog))
-      else if (s.meta.levels.isEmpty && s.meta.consumed.isEmpty)
-        // pure post-full-compaction state (no registry, or no bucketed
-        // files at all): the directory listing IS the live set — the
-        // plain flat read (keeps the pre-manifest behavior exactly,
-        // incl. the empty-table case)
+        if (s.backlog.isEmpty) rel
+        else rel.unionByName(explicitRead(table, s.backlog))
+      } else if (s.meta.levels.isEmpty && s.meta.consumed.isEmpty)
+        // no bucketed files at all: the directory listing IS the live
+        // set — the plain flat read (incl. the empty-table case)
         flatEvents(table)
-      else explicitRead(table, bucketed ++ s.backlog)
+      else explicitRead(table, s.backlog)
   }
 
   /** The flat (file-level) event read — the write path's view: every
     * rewrite/migration input reads THIS, never the catalog registration,
-    * so a rewrite is decoupled from catalog state it is about to replace. */
+    * so a rewrite is decoupled from catalog state it is about to replace.
+    * A table that does not exist fails with Spark's own missing-path
+    * error. */
   private def flatEvents(table: String): DataFrame = loadSchema(table) match {
     case Some(st) => spark.read.schema(st).parquet(dataDir(table))
-    case None =>
-      spark.read.option("mergeSchema", "true").parquet(dataDir(table))
+    case None if !tableExists(table) => spark.read.parquet(dataDir(table))
+    case None => missingRegistry(table)
   }
 
   // Resolve the FileSystem FOR THE ROOT PATH, not the default FS — an
@@ -733,16 +735,9 @@ class XtDb(spark: SparkSession, val root: String) {
     * `_iid` plan with zero exchange, `_iid = k` prunes to one bucket —
     * with no session-catalog registration to go stale. */
   private def bucketedRelation(table: String,
-      files: Seq[org.apache.hadoop.fs.FileStatus], buckets: Int): DataFrame = {
-    // registry-less fallback must MERGE footers like flatEvents does:
-    // base and level files can be heterogeneous (columns added after the
-    // base was written, then folded into a level), and a single-footer
-    // inference would silently drop the later-added columns
-    val schema = loadSchema(table).getOrElse(
-      spark.read.option("mergeSchema", "true")
-        .parquet(files.map(_.getPath.toString): _*).schema)
-    bucketedRelationFor(files, buckets, IID, schema, sortCols = Nil)
-  }
+      files: Seq[org.apache.hadoop.fs.FileStatus], buckets: Int): DataFrame =
+    bucketedRelationFor(files, buckets, IID, registeredSchema(table),
+      sortCols = Nil)
 
   /** Explicit-file bucketed relation on an arbitrary key (the
     * declared-layout snapshot twin of [[bucketedRelation]]). `sortCols`
@@ -767,34 +762,22 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** Plain (non-bucketed) read of an explicit live file list under the
-    * registered LUB schema — the correct-by-construction path whenever a
-    * backlog is pending or levels exist without the registry. */
+    * registered LUB schema. An empty list is the correctly-typed empty
+    * relation, never a directory listing (which could resurrect consumed
+    * files). */
   private def explicitRead(table: String,
       files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
-    val paths = files.map(_.getPath.toString)
-    if (paths.isEmpty)
-      // empty live set: never fall back to a directory listing when the
-      // registry can produce the correctly-typed empty relation (a
-      // listing could resurrect consumed files)
-      loadSchema(table) match {
-        case Some(st) => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-        case None => flatEvents(table)
-      }
-    else loadSchema(table) match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    val st = registeredSchema(table)
+    if (files.isEmpty) spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), st)
+    else spark.read.schema(st).parquet(files.map(_.getPath.toString): _*)
   }
 
   /** The iid-bucketed event log, iff the manifest's live set has NO
     * pending flat backlog: any append from any instance shows up in the
     * live-dir listing as an un-consumed flat file and flips readers to
     * the explicit-union path until the next (incremental) compaction
-    * folds it. Any failure to build the relation degrades to the plain
-    * read — the bucketed serving is strictly an optimization over the
-    * same rows. Public so specs/tools can pin the serving decision.
+    * folds it. Public so specs/tools can pin the serving decision.
     *
     * Concurrency contract: the manifest-then-list is not atomic against
     * a REMOTE writer — an append landing between the two can surface as
@@ -804,9 +787,7 @@ class XtDb(spark: SparkSession, val root: String) {
   def bucketedEventsIfValid(table: String): Option[DataFrame] =
     liveFileSets(table) match {
       case Some(s) if s.backlog.isEmpty && (s.base ++ s.levelFiles).nonEmpty =>
-        try Some(bucketedRelation(table, s.base ++ s.levelFiles,
-          s.meta.buckets))
-        catch { case scala.util.control.NonFatal(_) => None }
+        Some(bucketedRelation(table, s.base ++ s.levelFiles, s.meta.buckets))
       case _ => None
     }
 
@@ -922,7 +903,8 @@ class XtDb(spark: SparkSession, val root: String) {
   private def markErasePending(table: String, erasedDocs: DataFrame,
       sysTime: java.sql.Timestamp,
       observed: Option[(Set[Int], Int)] = None): Unit =
-    try {
+    maintenance(s"erase-pending mark on '$table'",
+        "erase is committed; the fold will re-detect it") {
       val (m0, ver) = resolvedEvMetaV(table)
       m0.filter(_.gen == currentGen(table).getOrElse(0))
         .foreach { m =>
@@ -935,8 +917,7 @@ class XtDb(spark: SparkSession, val root: String) {
               erasedDocs.agg(eraseBucketAgg(m.buckets)).head
                 .getSeq[Any](0).map(_.asInstanceOf[Number].intValue).toSet
           }
-          val us = sysTime.toInstant.getEpochSecond * 1000000L +
-            sysTime.toInstant.getNano / 1000L
+          val us = tsMicros(sysTime)
           if (m.eraseCycles < 1 || !bks.subsetOf(m.eraseBuckets) ||
               us > m.eraseMaxSf)
             writeEvMeta(table, m.copy(
@@ -945,11 +926,17 @@ class XtDb(spark: SparkSession, val root: String) {
               eraseMaxSf = math.max(m.eraseMaxSf, us)), ver)
         }
     }
+
+  /** Run post-commit maintenance: a failure leaves the commit standing
+    * and is reported, never thrown — the write already committed, and a
+    * caller seeing it fail would retry it. */
+  private def maintenance(what: String, standing: String)(
+      body: => Unit): Unit =
+    try body
     catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[xtdb] erase-pending mark on '$table' " +
-          s"failed (erase is committed; the fold will re-detect it): " +
-          s"${e.getMessage}")
+        System.err.println(
+          s"[xtdb] $what failed ($standing): ${e.getMessage}")
     }
 
   /** Post-write compaction trigger — the reference compactor's wakeup
@@ -980,16 +967,9 @@ class XtDb(spark: SparkSession, val root: String) {
     def optedIn = layoutOf(table).isDefined ||
       cachedEvMeta(table).isDefined
     if (maxLag >= 0 && optedIn)
-      // the append already COMMITTED (and logged) — a maintenance failure
-      // here must not make the put look failed, or a retrying caller
-      // would double-insert. Surface it loudly and leave the backlog for
-      // the next trigger / an explicit compact().
-      try { compactIfLagged(table, maxLag); () }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[xtdb] auto-compaction of '$table' failed (append is " +
-              s"committed; backlog remains): ${e.getMessage}")
+      maintenance(s"auto-compaction of '$table'",
+          "append is committed; backlog remains") {
+        compactIfLagged(table, maxLag); ()
       }
   }
 
@@ -1021,8 +1001,7 @@ class XtDb(spark: SparkSession, val root: String) {
     val sysTime = systemTime match {
       case Some(t) =>
         ensureHeads()
-        val us = t.toInstant.getEpochSecond * 1000000L +
-          t.toInstant.getNano / 1000L
+        val us = tsMicros(t)
         require(us > lastSystemMicros,
           s"system-time override $t is not after the log head")
         lastSystemMicros = us
@@ -1174,7 +1153,7 @@ class XtDb(spark: SparkSession, val root: String) {
       saveSchema(table, incoming.schema)
       incoming
     } else {
-      val existingSchema = loadSchema(table).getOrElse(events(table).schema)
+      val existingSchema = registeredSchema(table)
       val merged = DynamicSchema.mergeSchemas(existingSchema, incoming.schema)
       if (!sameTypes(merged, existingSchema)) {
         // A change the parquet reader can promote (numeric widening, added
@@ -1326,8 +1305,7 @@ class XtDb(spark: SparkSession, val root: String) {
     val canonicalKey =
       if (!tableExists(table)) key
       else {
-        val cols = loadSchema(table).map(_.fieldNames)
-          .getOrElse(events(table).columns)
+        val cols = registeredSchema(table).fieldNames
         cols.find(_.equalsIgnoreCase(key)).getOrElse(
           throw new IllegalArgumentException(
             s"declareLayout($table): key '$key' is not a column " +
@@ -1377,8 +1355,9 @@ class XtDb(spark: SparkSession, val root: String) {
     * is structural (generation + manifest lvseq + empty backlog), the
     * `watermark` records the highest `_system_from` incorporated, and
     * `files` is the live per-bucket file list (copy-on-write: a fold
-    * replaces only touched buckets' files; `retired` leases the replaced
-    * ones for one cycle). `bmins` holds the per-iid-bucket FUTURE
+    * writes the touched buckets into `_cs<seq+1>` and `retired` leases
+    * the replaced files for one cycle; [[compact]] starts a generation's
+    * snapshot at `_cs0`). `bmins` holds the per-iid-bucket FUTURE
     * valid-time boundary minimum, keyed at the EVENT log's fanout `bfan`
     * (always the generation's manifest fanout): the global expiry is
     * `min(bmins)`, and after a boundary crossing only the buckets whose
@@ -1444,8 +1423,9 @@ class XtDb(spark: SparkSession, val root: String) {
     * the event-log parquet listing; it is swept with its generation) and
     * persist the snapshot manifest (generation + manifest lvseq +
     * per-bucket valid-time expiry + layout) that every serve re-verifies.
-    * Called by [[compact]] and the purge's repair, both of which run only
-    * once the current generation's event manifest is committed. */
+    * Called only by [[compact]], right after its generation commit: the
+    * `_cs0` dir is in a fresh generation dir, and the previous snapshot's
+    * files leave with the previous generation. */
   private def materializeCurrentSnapshot(table: String,
       l: TableLayout): Unit = {
     val ev = cachedResolvedEvMeta(table)
@@ -1458,37 +1438,20 @@ class XtDb(spark: SparkSession, val root: String) {
     require(cur.columns.contains(l.key),
       s"declared layout key '${l.key}' is not a column of $table " +
         s"(${cur.columns.mkString(", ")})")
-    // NEVER overwrite a live snapshot dir in place (ADVICE r15 #2): a
-    // prior SnapMeta2 may still list its files as live, and
-    // StaticFileIndex serves from the manifest with zero existence
-    // checks — a crash between an in-place overwrite and the meta
-    // write (or a concurrent reader on another instance) would hit
-    // deleted file names. A rebuild gets a FRESH seq-qualified dir,
-    // exactly like folds; the old files die via the one-cycle lease.
-    val seq = readSnapMeta2(table).map(_.seq + 1).getOrElse(0)
-    val relDir = s"_cs$seq"
+    val relDir = "_cs0"
     val dir = s"${dataDir(table)}/$relDir"
     // the boundary reference point is taken BEFORE the snapshot write:
     // an event activating between this stamp and the write's own
     // `current_timestamp()` is then counted as an (already-passed)
     // expiry, so the snapshot conservatively refuses itself rather than
     // race the clock
-    val nowTs = java.sql.Timestamp.from(java.time.Instant.now())
-    // a PRIOR snapshot's files (a mid-generation rebuild — e.g. the
-    // purge's watermark repair) may hold payload the new one supersedes,
-    // possibly erased payload: retire them into the one-cycle lease
-    // sweep instead of orphaning them
-    val prior = readSnapMeta2(table).toSeq.flatMap(sm =>
-      (sm.files.map(snapEntryPath) ++ sm.retired)
-        .filterNot(_.startsWith(s"$relDir/")))
+    val nowTs = microsToTs(nowMicros())
     writeBucketedFiles(cur, dir, l.buckets, l.key)
     // earliest FUTURE valid-time boundary across live events: once the
     // clock passes it, the current state changes without a write and the
     // snapshot must stop serving (the q-fixture: a put valid-from
     // tomorrow). Kept PER IID-BUCKET (round 15) so a later crossing
     // re-scans only the buckets whose boundary actually passed.
-    def micros(i: java.time.Instant): Long =
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
     val rows = events(table)
       .groupBy(pmod(hash(col(IID)), lit(ev.buckets)).cast("int").as("bk"))
       .agg(least(
@@ -1498,11 +1461,11 @@ class XtDb(spark: SparkSession, val root: String) {
       .collect()
     val bmins = rows.flatMap(r =>
       if (r.isNullAt(1)) None
-      else Some(r.getInt(0) -> micros(r.getTimestamp(1).toInstant)))
+      else Some(r.getInt(0) -> tsMicros(r.getTimestamp(1))))
       .toMap
     val watermark = rows.flatMap(r =>
       if (r.isNullAt(2)) None
-      else Some(micros(r.getTimestamp(2).toInstant)))
+      else Some(tsMicros(r.getTimestamp(2))))
       .foldLeft(0L)(math.max)
     val files = hadoopFs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -1510,7 +1473,7 @@ class XtDb(spark: SparkSession, val root: String) {
     writeSnapSchema(table, cur.schema)
     writeSnapMeta2(table, SnapMeta2(ev.gen, ev.lvseq, watermark,
       if (bmins.isEmpty) Long.MaxValue else bmins.values.min,
-      l.key, l.buckets, seq, files, prior.distinct, ev.buckets, bmins))
+      l.key, l.buckets, 0, files, Nil, ev.buckets, bmins))
     noSnapshot.remove(table)
   }
 
@@ -1518,44 +1481,40 @@ class XtDb(spark: SparkSession, val root: String) {
     java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
 
-  private def tsMicros(t: java.sql.Timestamp): Long =
-    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
+  private def tsMicros(t: java.sql.Timestamp): Long = {
+    val i = t.toInstant
+    i.getEpochSecond * 1000000L + i.getNano / 1000L
+  }
 
-  /** One-cycle lease sweep of purge/fold-superseded SNAPSHOT files —
-    * runs on maintenance heartbeats so an idle table's retired snapshot
-    * bytes (which may hold erased payload) die within the bound. */
-  private def sweepSnapRetired(table: String): Unit =
-    try readSnapMeta2(table).filter(_.retired.nonEmpty).foreach { sm =>
-      val fs = hadoopFs
-      val dd = dataDir(table)
-      val carry = sm.retired.filter { n =>
-        val p = new org.apache.hadoop.fs.Path(s"$dd/$n")
-        (try { fs.delete(p, false); fs.exists(p) }
-         catch { case scala.util.control.NonFatal(_) => fs.exists(p) })
-      }
-      if (carry != sm.retired) writeSnapMeta2(table, sm.copy(retired = carry))
-    } catch { case scala.util.control.NonFatal(_) => () }
+  private def nowMicros(): Long =
+    tsMicros(java.sql.Timestamp.from(java.time.Instant.now()))
+
+  /** Delete each of `names` under `dir`; return those that still exist
+    * (a lease keeps listing them until a later sweep takes them). */
+  private def deleteSurvivors(dir: String, names: Iterable[String],
+      recursive: Boolean): Seq[String] = {
+    val fs = hadoopFs
+    names.toSeq.filter { n =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$n")
+      try { fs.delete(p, recursive); fs.exists(p) }
+      catch { case scala.util.control.NonFatal(_) => fs.exists(p) }
+    }
+  }
 
   /** Fold the event-log delta into the declared-layout SNAPSHOT —
     * bucket-locally by declared key, never O(snapshot) in the point/CDC
-    * regime and never O(event log) in ANY regime (round 16). The delta
-    * (every event above the snapshot watermark) names the changed iids;
-    * the new current rows come from one of two resolve paths, chosen by
-    * measured bytes:
-    *  - point/CDC: the changed iids' event-log BUCKETS (pruned before
-    *    the relation is built; broadcast semi-join — zero exchange on
-    *    the big side); fold input measured flat to 100×;
-    *  - bulk (changed iids hash everywhere): ONE scan of the snapshot
-    *    ∪ the delta — the point-current resolution algebra is closed
-    *    over (prior winner row ∪ delta events), so the event log is not
-    *    read at all (VERDICT r15 top_next).
-    * Only the buckets changed ids' key values hash into are rewritten
-    * copy-on-write (reference analogue: the compactor keeps L1 current
-    * per partition continuously, compactor/Compactor.kt). Runs after
-    * every event fold, so a large declared table returns to
+    * regime. The delta (every event above the snapshot watermark) and
+    * any crossed valid-time boundary name the changed iids; their new
+    * current rows are resolved from those iids' event-log BUCKETS,
+    * pruned before the relation is built. The event log is the one
+    * resolve input that is right on its own: a crossed boundary's new
+    * winner may be a pre-watermark event, in neither the snapshot nor
+    * the delta. Only the buckets changed ids' key values hash into are
+    * rewritten copy-on-write (reference analogue: the compactor keeps L1
+    * current per partition continuously, compactor/Compactor.kt). Runs
+    * after every event fold, so a large declared table returns to
     * zero-exchange key joins at the SAME cadence the event log returns
-    * to zero-exchange iid serving — not only at geometric full
-    * compactions. */
+    * to zero-exchange iid serving — not only at full compactions. */
   private def foldSnapshot(table: String): Unit = layoutOf(table) match {
     case None => ()
     case Some(l) =>
@@ -1570,32 +1529,16 @@ class XtDb(spark: SparkSession, val root: String) {
         if (sm0.bfan != s.meta.buckets)
           corruptSidecar(snapMetaPath(table), "bfan is not the event fanout",
             s"bfan=${sm0.bfan}, fanout=${s.meta.buckets}")
-        val nowMicros = {
-          val i = java.time.Instant.now()
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
-        val expired = nowMicros >= sm0.expires
-        // one-cycle lease sweep of previously retired snapshot files
-        val fs = hadoopFs
+        val now = nowMicros()
+        val expired = now >= sm0.expires
         val dd = dataDir(table)
-        val retiredCarry = sm0.retired.filter { n =>
-          val p = new org.apache.hadoop.fs.Path(s"$dd/$n")
-          (try { fs.delete(p, false); fs.exists(p) }
-           catch { case scala.util.control.NonFatal(_) => fs.exists(p) })
-        }
+        // one-cycle lease sweep of previously retired snapshot files
+        val retiredCarry = deleteSurvivors(dd, sm0.retired, recursive = false)
         val sm = sm0.copy(retired = retiredCarry)
         val wmTs = microsToTs(sm.watermark)
-        val nowTs = java.sql.Timestamp.from(java.time.Instant.now())
-        def micros(t: java.sql.Timestamp): Long = {
-          val i = t.toInstant
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
+        val nowTs = microsToTs(now)
         val live = s.base ++ s.levelFiles
         val evFan = s.meta.buckets
-        def relOver(files: Seq[org.apache.hadoop.fs.FileStatus]) =
-          (try bucketedRelation(table, files, evFan)
-           catch { case scala.util.control.NonFatal(_) =>
-             explicitRead(table, files) })
         def filesOfBuckets(bks: Set[Int]) =
           live.filter(f => bks.contains(bucketIdOf(f.getPath.getName)))
         val delta = if (s.levelFiles.isEmpty) None
@@ -1604,61 +1547,38 @@ class XtDb(spark: SparkSession, val root: String) {
         // a CROSSED valid-time boundary changed ids with no event above
         // the watermark — but the activation IS event-addressed: every
         // event whose _valid_from/_valid_to lies in [expires, now]
-        // flipped current-ness, and (round 15) it lives in a bucket
-        // whose stored per-bucket boundary minimum has passed. One
-        // pushed-range scan over ONLY those buckets' files names the ids.
+        // flipped current-ness, and it lives in a bucket whose stored
+        // per-bucket boundary minimum has passed. One pushed-range scan
+        // over ONLY those buckets' files names the ids.
         val crossedBuckets: Set[Int] =
           if (!expired) Set.empty
-          else sm.bmins.filter(_._2 <= nowMicros).keySet
+          else sm.bmins.filter(_._2 <= now).keySet
         val boundaryIds: Option[DataFrame] =
           if (!expired) None
           else {
             val lo = microsToTs(sm.expires)
             val bFiles = filesOfBuckets(crossedBuckets)
             if (bFiles.isEmpty) None
-            else Some(relOver(bFiles).filter(
+            else Some(bucketedRelation(table, bFiles, evFan).filter(
                 (col(VF) >= lit(lo) && col(VF) <= lit(nowTs)) ||
                 (col(VT) >= lit(lo) && col(VT) <= lit(nowTs)))
               .select(col(IID)))
           }
         // ONE job over the delta yields emptiness, the new watermark,
-        // the per-bucket boundary mins AND (round 17, VERDICT r16 #2)
-        // the per-bucket changed-id counts + the delta's declared-key
-        // bucket set — so in the common non-crossing path neither the
-        // changed-count job nor the delta half of the touched-bucket
-        // job runs separately (the fold's constant is driver job count
-        // at small deltas — keep it minimal).
-        // Key-bucket typing guard: the fold's write hashes the key at
-        // the schema-LUB type and Spark's hash() is type-sensitive
-        // (hash(1) != hash(1L)), so the delta-side key buckets computed
-        // here are only usable when the delta's key type matches the
-        // snapshot's (or the delta lacks the key — null hashes
-        // type-independently). A type-evolving delta falls back to the
-        // union-typed touched job.
-        val deltaKeyCol: Column = delta match {
-          case Some(d) if d.columns.contains(l.key) => col(l.key)
-          case _ => lit(null)
-        }
+        // the per-bucket boundary mins AND the per-bucket changed-id
+        // counts — so in the common non-crossing path the changed-count
+        // job does not run separately (the fold's constant is driver job
+        // count at small deltas — keep it minimal).
         val deltaRows: Array[org.apache.spark.sql.Row] = delta
           .map(_.groupBy(pmod(hash(col(IID)), lit(evFan)).cast("int")
               .as("bk"))
             .agg(max(col(SF)).as("wm"),
               least(min(when(col(VF) > lit(nowTs), col(VF))),
                 min(when(col(VT) > lit(nowTs), col(VT)))).as("b"),
-              countDistinct(col(IID)).as("cnt"),
-              collect_set(pmod(hash(deltaKeyCol), lit(l.buckets))
-                .cast("int")).as("kbks"))
+              countDistinct(col(IID)).as("cnt"))
             .collect())
           .getOrElse(Array.empty)
         val deltaEmpty = deltaRows.isEmpty
-        val deltaKeyTypeOk = delta.exists { d =>
-          !d.columns.contains(l.key) || loadSnapSchema(table).exists(ss =>
-            ss.fields.find(_.name == l.key)
-              .exists(_.dataType == d.schema(l.key).dataType))
-        }
-        // the delta's declared-key buckets (valid under deltaKeyTypeOk)
-        lazy val deltaTouched: Set[Int] = deltaRows.iterator
-          .flatMap(_.getSeq[Int](4)).toSet
         if (deltaEmpty && !expired) {
           // nothing new (e.g. a purge bumped lvseq): re-stamp validity
           writeSnapMeta2(table, sm.copy(lvseq = s.meta.lvseq))
@@ -1667,7 +1587,7 @@ class XtDb(spark: SparkSession, val root: String) {
         }
         val newWm = math.max(sm.watermark, deltaRows
           .flatMap(r => if (r.isNullAt(1)) None
-            else Some(micros(r.getTimestamp(1))))
+            else Some(tsMicros(r.getTimestamp(1))))
           .foldLeft(0L)(math.max))
         // per-bucket boundary-min maintenance, O(delta) in the common
         // path: an existing event's boundary only leaves the future set
@@ -1683,11 +1603,11 @@ class XtDb(spark: SparkSession, val root: String) {
             min(when(col(VT) > lit(nowTs), col(VT)))).as("b"))
           .collect()
           .flatMap(r => if (r.isNullAt(1)) None
-            else Some(r.getInt(0) -> micros(r.getTimestamp(1))))
+            else Some(r.getInt(0) -> tsMicros(r.getTimestamp(1))))
           .toMap
         lazy val deltaMins: Map[Int, Long] = deltaRows
           .flatMap(r => if (r.isNullAt(2)) None
-            else Some(r.getInt(0) -> micros(r.getTimestamp(2))))
+            else Some(r.getInt(0) -> tsMicros(r.getTimestamp(2))))
           .toMap
         // `bks` = buckets whose carried min must be re-derived from their
         // FILES (a crossing consumed it); everything else carries, with
@@ -1696,7 +1616,7 @@ class XtDb(spark: SparkSession, val root: String) {
           val files = filesOfBuckets(bks)
           val fresh =
             if (files.isEmpty) Map.empty[Int, Long]
-            else perBucketMins(relOver(files))
+            else perBucketMins(bucketedRelation(table, files, evFan))
           val merged = deltaMins.foldLeft((sm.bmins -- bks) ++ fresh) {
             case (m, (b, v)) =>
               // recomputed buckets' files already include the delta
@@ -1706,7 +1626,7 @@ class XtDb(spark: SparkSession, val root: String) {
           (if (merged.isEmpty) Long.MaxValue else merged.values.min, merged)
         }
         val changed0 = (delta.filterNot(_ => deltaEmpty).toSeq ++
-            boundaryIds.toSeq.map(identity))
+            boundaryIds.toSeq)
           .map(_.select(col(IID)))
           .reduceOption(_.unionByName(_))
           .map(_.distinct())
@@ -1722,14 +1642,12 @@ class XtDb(spark: SparkSession, val root: String) {
         val changed = changed0
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // one job: per-bucket changed-id counts give the bucket set
-          // AND the total for the broadcast gate
           // per-iid-bucket changed-id counts: when the changed set IS
           // the delta's id set (no boundary crossing in play — the
           // common path) the histogram already rode the delta-aggregate
           // job (`cnt` per bucket, exact: buckets partition iids); only
           // a crossing runs the separate distinct-count job over the
-          // delta ∪ boundary union (VERDICT r16 #2).
+          // delta ∪ boundary union.
           val changedByBucket: Array[(Int, Long)] =
             if (boundaryIds.isEmpty && delta.isDefined) {
               graft.tools.EngineMetrics.foldChangedFromDelta
@@ -1755,214 +1673,53 @@ class XtDb(spark: SparkSession, val root: String) {
           // the changed ids hash to KNOWN iid-buckets: the resolve input
           // is pruned to exactly those buckets' files BEFORE the relation
           // is built — the common-path fold reads O(changed buckets),
-          // never O(event log) (VERDICT r14 top_next). A uniform delta
-          // touches every bucket and degrades to the documented
-          // O(snapshot) read, with no broadcast cliff (gate below).
-          val changedIidBuckets =
-            changedByBucket.iterator.map(_._1).toSet
-          val resolveFiles = filesOfBuckets(changedIidBuckets)
-          // size-gate the changed-set broadcast (ADVICE-pair of the
-          // prune): a huge delta must degrade to a shuffle semi-join —
-          // the documented O(snapshot) path — never to a failed/OOM
-          // broadcast that silently stalls snapshot freshness
-          val gate = spark.conf
-            .get("spark.graft.snapshotFold.broadcastMaxIds", "500000")
-            .toLong
-          // (a shuffle_hash hint on the past-gate changed side was tried
-          // and FALSIFIED round 16: fold times identical within noise at
-          // 3.75M ids / 100k delta / gate=1 — the bucketed write, not
-          // the probe-side sort, dominates the shuffle-path fold)
-          def changedSide: DataFrame =
-            if (changedCount <= gate) broadcast(changed) else changed
-          // RESOLVE-PATH selection (round 16, VERDICT r15 top_next): for
-          // the point-current snapshot the resolution algebra is CLOSED
-          // over (old snapshot row ∪ delta events) per changed id — the
-          // snapshot row IS the prior winner (max-_system_from event
-          // covering now, columns as stored), every delta event has
-          // _system_from strictly above the watermark, and a newer event
-          // can only change the value at valid-time=now if its own valid
-          // interval covers now (erases/deletes included: the asOf erase
-          // ceiling and put-only filter see them in the union). So a
-          // BULK delta — whose changed iids hash into every bucket and
-          // would degrade the pruned event read to O(event log) — folds
-          // from one scan of the SNAPSHOT plus the delta instead: the
-          // event log is not read at all. The event-log resolve remains
-          // for the point/CDC regime (measured flat to 100×: reading a
-          // few iid-buckets beats a full snapshot scan), for crossed
-          // valid-time boundaries (the new winner may be a pre-watermark
-          // event that is in NEITHER the snapshot nor the delta), for
-          // and as the verified fallback (`resolveMode=event`). Chosen by
-          // measured bytes: the pruned event read vs one snapshot scan.
-          val resolveMode = spark.conf
-            .get("spark.graft.snapshotFold.resolveMode", "auto")
-          val snapSchemaOpt = loadSnapSchema(table)
-          // total snapshot bytes for the path heuristic, from the
-          // manifest's recorded lengths (zero filesystem calls)
-          def snapBytes: Long = sm.files.map(snapEntryLen).sum
-          // MIXED-MODE crossings (round 17, VERDICT r16 #5): a crossed
-          // valid-time boundary no longer flips the whole fold to the
-          // event path — only the CROSSED buckets' ids resolve from
-          // their event files (the new winner may be pre-watermark),
-          // the rest from snapshot+delta, in one fold. The crossed
-          // bucket set is exactly what `bmins` names; the event read is
-          // pruned to (crossed ∩ changed) buckets' files.
-          val crossedResolve =
-            if (!expired) Nil
-            else filesOfBuckets(crossedBuckets.intersect(changedIidBuckets))
-          // same hash-typing guard as deltaKeyTypeOk, for the event-side
-          // resolve of crossed ids: its touched buckets hash the key at
-          // the event schema's type
-          lazy val evKeyTypeOk = loadSchema(table).forall(es =>
-            es.fields.find(_.name == l.key).forall(f =>
-              snapSchemaOpt.exists(_.fields.find(_.name == l.key)
-                .exists(_.dataType == f.dataType))))
-          val useSnapDelta = resolveMode != "event" &&
-            !deltaEmpty && delta.isDefined &&
-            snapSchemaOpt.isDefined &&
-            (!expired || evKeyTypeOk) &&
-            (resolveMode == "snapshot" ||
-              resolveFiles.map(_.getLen).sum >
-                snapBytes + crossedResolve.map(_.getLen).sum)
-          var snapScan: Option[DataFrame] = None
-          try {
-          val (newCur, keep, touched, snapSchema) =
-            if (useSnapDelta) {
-              // crossed-bucket ids (if any) resolve from their event
-              // files; everything else from snapshot+delta — disjoint
-              // by construction (iid-bucket membership partitions ids,
-              // and an id's every event lives in its iid bucket's files)
-              val mixed = expired && crossedResolve.nonEmpty
-              graft.tools.EngineMetrics.lastFoldResolveMode =
-                if (mixed) "mixed" else "snapshot+delta"
-              graft.tools.EngineMetrics.lastFoldResolveFiles =
-                if (mixed) crossedResolve.map(_.getPath.getName) else Nil
-              graft.tools.EngineMetrics.lastFoldLiveFileCount = live.size
-              val ss = snapSchemaOpt.get
-              def iidBkt = pmod(hash(col(IID)), lit(evFan)).cast("int")
-              // ONE scan of the live snapshot; the marked left join
-              // splits it into the changed ids' old rows (resolve input)
-              // and the keep side — persisted so both read it once
-              val snapAll =
-                if (sm.files.isEmpty)
-                  spark.createDataFrame(
-                    new java.util.ArrayList[org.apache.spark.sql.Row](), ss)
-                else spark.read.schema(ss)
-                  .parquet(sm.files.map(n => s"$dd/${snapEntryPath(n)}"): _*)
-              val marked = snapAll
-                .join(changedSide.withColumn("__chg", lit(true)),
-                  Seq(IID), "left_outer")
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              snapScan = Some(marked)
-              val oldRowsAll = marked.filter(col("__chg").isNotNull)
-                .drop("__chg")
-              val keepAll = marked.filter(col("__chg").isNull).drop("__chg")
-              // the snapshot+delta half never sees crossed-bucket ids
-              val oldRows = if (!mixed) oldRowsAll
-                else oldRowsAll.filter(
-                  !iidBkt.isInCollection(crossedBuckets))
-              // a snapshot row is the prior winner with its event columns
-              // as stored — re-arm it as a put event (its _seq can be 0:
-              // delta _system_from is strictly above the old row's, so
-              // the tiebreak never reaches _seq across the union)
-              val oldEv = oldRows.drop(ST)
-                .withColumn(OP, lit("put"))
-                .withColumn(SEQ, lit(0L))
-              val deltaEv = if (!mixed) delta.get
-                else delta.get.filter(
-                  !iidBkt.isInCollection(crossedBuckets))
-              val lubEv =
-                DynamicSchema.mergeSchemas(oldEv.schema, deltaEv.schema)
-              val unioned = DynamicSchema.conform(oldEv, lubEv)
-                .unionByName(DynamicSchema.conform(deltaEv, lubEv),
-                  allowMissingColumns = true)
-              val newCurD = Bitemporal.resolve(unioned,
-                Bitemporal.TemporalSpec.Current,
-                Bitemporal.TemporalSpec.Current)
-              // event-side resolve of the crossed buckets' changed ids:
-              // full history from exactly those buckets' files (the new
-              // winner may be pre-watermark — in NEITHER the snapshot
-              // row nor the delta)
-              val evChangedX =
-                if (!mixed) None
-                else Some(relOver(crossedResolve)
-                  .join(changedSide, Seq(IID), "left_semi"))
-              val newCur = evChangedX match {
-                case None => newCurD
-                case Some(evX) =>
-                  val newCurX = Bitemporal.resolve(evX,
-                    Bitemporal.TemporalSpec.Current,
-                    Bitemporal.TemporalSpec.Current)
-                  val lubX = DynamicSchema.mergeSchemas(
-                    newCurD.schema, newCurX.schema)
-                  DynamicSchema.conform(newCurD, lubX)
-                    .unionByName(DynamicSchema.conform(newCurX, lubX),
-                      allowMissingColumns = true)
-              }
-              // {old key bucket} ∪ {delta key buckets} ∪ (mixed: every
-              // bucket any crossed id's key version hashes into) —
-              // exactly the buckets a changed id can leave or enter
-              // (historic pre-watermark key versions are not in the
-              // snapshot; the crossed ids' event read covers theirs).
-              // The delta half rode the delta-aggregate job (VERDICT
-              // r16 #2) when its key typing matches the snapshot's, so
-              // this ONE job only scans the CACHED marked relation plus
-              // the crossed files; a type-evolving delta keeps the
-              // union-typed computation.
-              def kb(df: DataFrame) =
-                df.select(pmod(hash(col(l.key)), lit(l.buckets))
-                  .cast("int").as("b"))
-              val touchedBase =
-                if (deltaKeyTypeOk) kb(oldRows) else kb(unioned)
-              val touchedDf = evChangedX match {
-                case None => touchedBase
-                case Some(evX) => touchedBase.unionByName(kb(evX))
-              }
-              val touched =
-                touchedDf.distinct().collect().map(_.getInt(0)).toSet ++
-                  (if (deltaKeyTypeOk) deltaTouched else Set.empty)
-              val keep = keepAll.filter(pmod(hash(col(l.key)),
-                lit(l.buckets)).cast("int").isInCollection(touched))
-              (newCur, keep, touched, ss)
-            } else {
-              graft.tools.EngineMetrics.lastFoldResolveMode = "event-log"
-              graft.tools.EngineMetrics.lastFoldResolveFiles =
-                resolveFiles.map(_.getPath.getName)
-              graft.tools.EngineMetrics.lastFoldLiveFileCount = live.size
-              val evChanged = relOver(resolveFiles)
-                .join(changedSide, Seq(IID), "left_semi")
-              val newCur = Bitemporal.resolve(evChanged,
-                Bitemporal.TemporalSpec.Current,
-                Bitemporal.TemporalSpec.Current)
-              // every bucket ANY version of a changed id's key hashes
-              // into — superset of {old bucket, new bucket}, so key-value
-              // moves and deletions both land; Spark's own bucket
-              // function, matching the writer's file stamps
-              val touched = evChanged
-                .select(pmod(hash(col(l.key)), lit(l.buckets)).cast("int")
-                  .as("b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-              val snapSchema = loadSnapSchema(table).getOrElse(newCur.schema)
-              val oldTouched0 = sm.files.filter(n => touched.contains(
-                bucketIdOf(snapEntryPath(n).split('/').last)))
-              val keep =
-                if (oldTouched0.isEmpty)
-                  spark.createDataFrame(
-                    new java.util.ArrayList[org.apache.spark.sql.Row](),
-                    snapSchema)
-                else spark.read.schema(snapSchema)
-                  .parquet(oldTouched0.map(n => s"$dd/${snapEntryPath(n)}"): _*)
-                  .join(changedSide, Seq(IID), "left_anti")
-              (newCur, keep, touched, snapSchema)
-            }
+          // never O(event log). A uniform delta touches every bucket and
+          // reads the whole live set.
+          val resolveFiles = filesOfBuckets(
+            changedByBucket.iterator.map(_._1).toSet)
+          graft.tools.EngineMetrics.lastFoldResolveFiles =
+            resolveFiles.map(_.getPath.getName)
+          graft.tools.EngineMetrics.lastFoldLiveFileCount = live.size
+          // broadcast the changed set while it fits Spark's own broadcast
+          // threshold (`_iid` is 32-char md5 hex; -1 = never): a huge
+          // delta degrades to a shuffle semi-join, never to a failed or
+          // OOM broadcast that silently stalls snapshot freshness
+          val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+          val changedSide =
+            if (threshold >= 0 && changedCount * 32L <= threshold)
+              broadcast(changed)
+            else changed
+          val evChanged = bucketedRelation(table, resolveFiles, evFan)
+            .join(changedSide, Seq(IID), "left_semi")
+          val newCur = Bitemporal.resolve(evChanged,
+            Bitemporal.TemporalSpec.Current,
+            Bitemporal.TemporalSpec.Current)
+          // every bucket ANY version of a changed id's key hashes into —
+          // superset of {old bucket, new bucket}, so key-value moves and
+          // deletions both land; Spark's own bucket function, matching
+          // the writer's file stamps
+          val touched = evChanged
+            .select(pmod(hash(col(l.key)), lit(l.buckets)).cast("int")
+              .as("b"))
+            .distinct().collect().map(_.getInt(0)).toSet
+          val snapSchema = loadSnapSchema(table).getOrElse(newCur.schema)
           val (oldTouched, untouched) = sm.files.partition(n =>
             touched.contains(bucketIdOf(snapEntryPath(n).split('/').last)))
+          val keep =
+            if (oldTouched.isEmpty)
+              spark.createDataFrame(
+                new java.util.ArrayList[org.apache.spark.sql.Row](),
+                snapSchema)
+            else spark.read.schema(snapSchema)
+              .parquet(oldTouched.map(n => s"$dd/${snapEntryPath(n)}"): _*)
+              .join(changedSide, Seq(IID), "left_anti")
           val lub = DynamicSchema.mergeSchemas(snapSchema, newCur.schema)
           val merged = DynamicSchema.conform(keep, lub)
             .unionByName(DynamicSchema.conform(newCur, lub),
               allowMissingColumns = true)
           val outDir = s"_cs${sm.seq + 1}"
           writeBucketedFiles(merged, s"$dd/$outDir", l.buckets, l.key)
-          val newFiles = fs
+          val newFiles = hadoopFs
             .listStatus(new org.apache.hadoop.fs.Path(s"$dd/$outDir"))
             .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
             .map(f => snapEntry(s"$outDir/${f.getPath.getName}", f.getLen))
@@ -1975,7 +1732,6 @@ class XtDb(spark: SparkSession, val root: String) {
             retiredCarry ++ oldTouched.map(snapEntryPath),
             evFan, nbmins))
           noSnapshot.remove(table)
-          } finally snapScan.foreach(_.unpersist())
         } finally changed.unpersist()
       }
   }
@@ -1999,31 +1755,25 @@ class XtDb(spark: SparkSession, val root: String) {
       basis: java.sql.Timestamp = snapshotToken()): Option[DataFrame] = {
     if (noSnapshot.contains(table)) return None
     val basisMicros = tsMicros(basis)
-    val nowMicros = {
-      val i = java.time.Instant.now()
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    }
     readSnapMeta2(table) match {
       case Some(m) =>
         val layoutOk = layoutOf(table)
           .exists(l => l.key == m.key && l.buckets == m.buckets)
-        if (!layoutOk || nowMicros >= m.expires ||
+        if (!layoutOk || nowMicros() >= m.expires ||
             m.watermark > basisMicros) None
         else liveFileSets(table) match {
           case Some(s) if s.meta.gen == m.gen &&
               s.meta.lvseq == m.lvseq && s.backlog.isEmpty =>
-            try {
-              val dd = dataDir(table)
-              // zero-RPC serve: length from the manifest (immutable
-              // files), mtime immaterial to split/footer reading
-              val files = m.files.map(n =>
-                new org.apache.hadoop.fs.FileStatus(snapEntryLen(n), false,
-                  1, 128L * 1024 * 1024, 0L,
-                  new org.apache.hadoop.fs.Path(s"$dd/${snapEntryPath(n)}")))
-              loadSnapSchema(table).map(st =>
-                bucketedRelationFor(files, m.buckets, m.key, st,
-                  sortCols = Seq(m.key)))
-            } catch { case scala.util.control.NonFatal(_) => None }
+            val dd = dataDir(table)
+            // zero-RPC serve: length from the manifest (immutable
+            // files), mtime immaterial to split/footer reading
+            val files = m.files.map(n =>
+              new org.apache.hadoop.fs.FileStatus(snapEntryLen(n), false,
+                1, 128L * 1024 * 1024, 0L,
+                new org.apache.hadoop.fs.Path(s"$dd/${snapEntryPath(n)}")))
+            loadSnapSchema(table).map(st =>
+              bucketedRelationFor(files, m.buckets, m.key, st,
+                sortCols = Seq(m.key)))
           case _ => None
         }
       case None => noSnapshot.add(table); None
@@ -2119,23 +1869,24 @@ class XtDb(spark: SparkSession, val root: String) {
           writeEvMeta(table, swept.copy(eraseCycles =
             if (m.eraseCycles > 0) m.eraseCycles + 1 else 0), hbVer)
         }
-      sweepSnapRetired(table)
-      // an EXPIRED declared-layout snapshot revives on the heartbeat:
-      // the boundary activation is event-addressed (see foldSnapshot),
-      // so idle tables don't wait for the next write or full compact
-      if (layoutOf(table).isDefined)
-        readSnapMeta2(table).foreach { sm =>
-          val now = {
-            val i = java.time.Instant.now()
-            i.getEpochSecond * 1000000L + i.getNano / 1000L
+      // the snapshot's retired files get the same one-cycle lease sweep
+      // (they may hold erased payload), and an EXPIRED declared-layout
+      // snapshot revives on the heartbeat: the boundary activation is
+      // event-addressed (see foldSnapshot), so idle tables don't wait
+      // for the next write or full compact
+      readSnapMeta2(table).foreach { sm =>
+        maintenance(s"snapshot heartbeat of '$table'",
+            "live resolution serves") {
+          val carry = deleteSurvivors(dataDir(table), sm.retired,
+            recursive = false)
+          if (carry != sm.retired)
+            writeSnapMeta2(table, sm.copy(retired = carry))
+          if (layoutOf(table).isDefined && nowMicros() >= sm.expires) {
+            if (blockLag(table) > 0) compactIncremental(table)
+            else foldSnapshot(table)
           }
-          if (now >= sm.expires)
-            try {
-              if (blockLag(table) > 0) compactIncremental(table)
-              else foldSnapshot(table)
-              ()
-            } catch { case scala.util.control.NonFatal(_) => () }
         }
+      }
       return false
     }
     val smallBytes = spark.conf
@@ -2228,10 +1979,7 @@ class XtDb(spark: SparkSession, val root: String) {
     // levels right now is physically on disk until a purge runs — one
     // pushed-predicate existence probe over the O(backlog) input
     val folding =
-      if (alignedMerge)
-        try bucketedRelation(table, input, m.buckets)
-        catch { case scala.util.control.NonFatal(_) =>
-          explicitRead(table, input) }
+      if (alignedMerge) bucketedRelation(table, input, m.buckets)
       else explicitRead(table, input)
     // erase addressing (round 15): any erase event entering a level is
     // recorded in the manifest by BUCKET id + max system-time, so the
@@ -2248,12 +1996,8 @@ class XtDb(spark: SparkSession, val root: String) {
           .agg(collect_set(
             pmod(hash(col(IID)), lit(m.buckets)).cast("int")).as("bk"),
             max(col(SF)).as("sf")).head()
-        val bks = r.getSeq[Int](0).toSet
-        val sf = if (r.isNullAt(1)) 0L else {
-          val i = r.getTimestamp(1).toInstant
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
-        (bks, sf)
+        (r.getSeq[Int](0).toSet,
+          if (r.isNullAt(1)) 0L else tsMicros(r.getTimestamp(1)))
       }
     val pending =
       if (m.eraseCycles > 0) m.eraseCycles + 1
@@ -2278,13 +2022,8 @@ class XtDb(spark: SparkSession, val root: String) {
     // log (O(delta + touched buckets)); a failure here leaves the
     // snapshot refused (correct — live resolution serves), never fails
     // the committed event fold
-    try foldSnapshot(table)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[xtdb] snapshot fold of '$table' failed " +
-          s"(event fold is committed; snapshot serves at the next " +
-          s"fold/compact): ${e.getMessage}")
-    }
+    maintenance(s"snapshot fold of '$table'", "event fold is committed; " +
+        "snapshot serves at the next fold/compact")(foldSnapshot(table))
     true
   }
 
@@ -2294,28 +2033,17 @@ class XtDb(spark: SparkSession, val root: String) {
     * that refuses to die stays listed (never re-read). Returns `m` with
     * only the survivors carried. Pure FS metadata work, no data scan. */
   private def sweepLeases(table: String, m: EvMeta): EvMeta = {
-    val fs = hadoopFs
     val dd = dataDir(table)
-    def sweep(entries: Set[String], recursive: Boolean): Set[String] =
-      entries.filter { name =>
-        val p = new org.apache.hadoop.fs.Path(s"$dd/$name")
-        (try { fs.delete(p, recursive); fs.exists(p) }
-         catch { case scala.util.control.NonFatal(_) => fs.exists(p) })
-      }
     // erase-tainted superseded generations / legacy loose parts: swept at
     // the next cycle instead of the next generation flip (table-dir
     // relative; the live generation is never listed here by construction)
     val liveDir = currentGenDirName(table).getOrElse(s"g${m.gen}")
-    val sweepCarry = m.sweepDirs.filter { name =>
-      val p = new org.apache.hadoop.fs.Path(s"${tableDir(table)}/$name")
-      name != liveDir &&
-        (try { fs.delete(p, true); fs.exists(p) }
-         catch { case scala.util.control.NonFatal(_) => fs.exists(p) })
-    }
-    m.copy(consumed = sweep(m.consumed, recursive = false),
-      retired = sweep(m.retired.toSet, recursive = true).toSeq,
-      excluded = sweep(m.excluded, recursive = false),
-      sweepDirs = sweepCarry)
+    m.copy(
+      consumed = deleteSurvivors(dd, m.consumed, recursive = false).toSet,
+      retired = deleteSurvivors(dd, m.retired.distinct, recursive = true),
+      excluded = deleteSurvivors(dd, m.excluded, recursive = false).toSet,
+      sweepDirs = deleteSurvivors(tableDir(table),
+        m.sweepDirs.filterNot(_ == liveDir), recursive = true))
   }
 
   /** BUCKET-LOCAL physical purge of erased history — the GDPR guarantee
@@ -2362,12 +2090,8 @@ class XtDb(spark: SparkSession, val root: String) {
           .agg(collect_set(
             pmod(hash(col(IID)), lit(m.buckets)).cast("int")).as("b"),
             max(col(SF)).as("sf")).head()
-        val bks = r.getSeq[Int](0).toSet
-        val sf = if (r.isNullAt(1)) 0L else {
-          val i = r.getTimestamp(1).toInstant
-          i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
-        (bks, sf)
+        (r.getSeq[Int](0).toSet,
+          if (r.isNullAt(1)) 0L else tsMicros(r.getTimestamp(1)))
       }
     if (erased.isEmpty) {
       if (m.eraseCycles > 0)
@@ -2375,27 +2099,20 @@ class XtDb(spark: SparkSession, val root: String) {
           eraseBuckets = Set.empty, eraseMaxSf = 0L), mver)
       return false
     }
-    // ADVICE r14 #3: the purge is about to physically delete the erase
-    // markers — if the declared-layout snapshot never folded them (an
-    // earlier fold failure was swallowed), its watermark predates the
-    // erase and the post-purge re-stamp would retain the erased payload
-    // in the snapshot FOREVER. Repair while the markers are still
-    // event-addressable: fold first; if the watermark still lags,
-    // rebuild the snapshot outright; if even that fails, invalidate it
-    // (live resolution serves — safe) rather than re-stamp a lie.
-    var rebuiltNow = false
+    // the purge is about to physically delete the erase markers — if
+    // the declared-layout snapshot never folded them (an earlier fold
+    // failure was swallowed), its watermark predates the erase and the
+    // post-purge re-stamp would retain the erased payload in the
+    // snapshot FOREVER. Fold while the markers are still
+    // event-addressable; if the watermark still lags, drop the snapshot
+    // (live resolution serves — correct) and let the next [[compact]]
+    // rebuild it, rather than re-stamp a lie.
     if (maxEraseSf > 0L) readSnapMeta2(table)
       .filter(_.watermark < maxEraseSf).foreach { _ =>
-        try foldSnapshot(table)
-        catch { case scala.util.control.NonFatal(_) => () }
+        maintenance(s"pre-purge snapshot fold of '$table'",
+          "a lagging snapshot is dropped")(foldSnapshot(table))
         if (readSnapMeta2(table).exists(_.watermark < maxEraseSf))
-          layoutOf(table) match {
-            case Some(l) =>
-              try { materializeCurrentSnapshot(table, l); rebuiltNow = true }
-              catch { case scala.util.control.NonFatal(_) =>
-                invalidateSnapshot(table) }
-            case None => invalidateSnapshot(table)
-          }
+          invalidateSnapshot(table)
       }
     val affected = live.filter(f =>
       erased.contains(bucketIdOf(f.getPath.getName)))
@@ -2433,82 +2150,27 @@ class XtDb(spark: SparkSession, val root: String) {
       lvseq = m.lvseq + 1, eraseCycles = 0,
       sweepDirs = (m.sweepDirs ++ superseded).distinct,
       eraseBuckets = Set.empty, eraseMaxSf = 0L), mver)
-    // VERDICT r15 #3: a purged future-boundary event's min would
-    // otherwise linger in the snapshot's per-bucket map and expire the
-    // snapshot EARLY (safe — the crossing recompute heals it — but a
-    // spurious expiry). The purge just rewrote exactly the affected
-    // buckets; recompute their mins over the written purge level and
-    // patch the snapshot manifest.
-    try {
-      val pgFiles = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"${dataDir(table)}/$pgName"))
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .toSeq
-      readSnapMeta2(table)
-        .filter(sm => sm.gen == m.gen && erased.exists(sm.bmins.contains))
-        .foreach { sm =>
-          val nowTs = java.sql.Timestamp.from(java.time.Instant.now())
-          def us(t: java.sql.Timestamp): Long = {
-            val i = t.toInstant
-            i.getEpochSecond * 1000000L + i.getNano / 1000L
-          }
-          val fresh: Map[Int, Long] =
-            if (pgFiles.isEmpty) Map.empty
-            else (try bucketedRelation(table, pgFiles, m.buckets)
-              catch { case scala.util.control.NonFatal(_) =>
-                explicitRead(table, pgFiles) })
-              .groupBy(pmod(hash(col(IID)), lit(m.buckets)).cast("int")
-                .as("bk"))
-              .agg(least(
-                min(when(col(VF) > lit(nowTs), col(VF))),
-                min(when(col(VT) > lit(nowTs), col(VT)))).as("b"))
-              .collect()
-              .flatMap(r => if (r.isNullAt(1)) None
-                else Some(r.getInt(0) -> us(r.getTimestamp(1))))
-              .toMap
-          val mergedMins = (sm.bmins -- erased) ++ fresh
-          writeSnapMeta2(table, sm.copy(
-            expires = if (mergedMins.isEmpty) Long.MaxValue
-              else mergedMins.values.min,
-            bmins = mergedMins))
-        }
-    } catch { case scala.util.control.NonFatal(_) =>
-      () // maintenance metadata: a stale-early min stays safe
-    }
     // the purge bumped lvseq without changing logical state — re-stamp
     // the snapshot's validity (and fold any straggler delta) so a big
-    // declared table does not fall back to live joins over a purge
-    try foldSnapshot(table)
-    catch { case scala.util.control.NonFatal(_) =>
-      // a snapshot REBUILT inside this purge has a current watermark and
-      // no pending delta by construction — re-stamping its lvseq to the
-      // purge's manifest is safe even when the fold itself is failing
-      // (without it, the just-rebuilt snapshot would refuse to serve)
-      if (rebuiltNow)
-        readSnapMeta2(table).filter(_.gen == m.gen)
-          .foreach(sm => writeSnapMeta2(table,
-            sm.copy(lvseq = m.lvseq + 1)))
-    }
+    // declared table does not fall back to live joins over a purge. A
+    // purged future boundary leaves a stale-early per-bucket min: at
+    // worst the snapshot expires early and the crossing recompute heals
+    // it
+    maintenance(s"post-purge snapshot fold of '$table'",
+      "purge is committed; live resolution serves")(foldSnapshot(table))
     true
   }
 
   /** Drop the snapshot manifest AND its data files (they may hold erased
     * payload — an invalidated snapshot must not leave orphans nothing
     * will ever sweep). Serving falls back to live resolution; the next
-    * full compaction rebuilds. Last-resort path — see the purge. */
-  private def invalidateSnapshot(table: String): Unit =
-    try {
-      val fs = hadoopFs
-      val dd = dataDir(table)
-      readSnapMeta2(table).foreach { sm =>
-        (sm.files.map(snapEntryPath) ++ sm.retired).foreach { n =>
-          try { fs.delete(new org.apache.hadoop.fs.Path(s"$dd/$n"), false); () }
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      }
-      fs.delete(snapMetaPath(table), false)
-      ()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    * full compaction rebuilds. */
+  private def invalidateSnapshot(table: String): Unit = {
+    readSnapMeta2(table).foreach(sm => deleteSurvivors(dataDir(table),
+      sm.files.map(snapEntryPath) ++ sm.retired, recursive = false))
+    hadoopFs.delete(snapMetaPath(table), false)
+    ()
+  }
 
   /** Write `df` as a bucketed file set (one file per non-empty `key`
     * hash bucket, Spark bucket ids in the file names) into `dir`. An input
@@ -2563,7 +2225,12 @@ class XtDb(spark: SparkSession, val root: String) {
     case None => s"$root/_txs"
   }
 
-  private def maybeFoldTxs(): Unit = try {
+  // the DML op already committed and logged: tx-log maintenance never
+  // fails the write; the backlog just waits for the next trigger
+  private def maybeFoldTxs(): Unit =
+    maintenance("tx-log fold", "log intact")(foldTxs())
+
+  private def foldTxs(): Unit = {
     val fs = hadoopFs
     val threshold =
       spark.conf.get("spark.graft.txsFoldThreshold", "64").toLong
@@ -2601,13 +2268,6 @@ class XtDb(spark: SparkSession, val root: String) {
       fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_txs"))
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .foreach(st => fs.delete(st.getPath, false))
-    ()
-  } catch {
-    case scala.util.control.NonFatal(e) =>
-      // the DML op already committed+logged — tx-log maintenance must
-      // never fail the write; the backlog just waits for the next trigger
-      System.err.println(s"[xtdb] tx-log fold failed (log intact): " +
-        s"${e.getMessage}")
   }
 
   private def logTx(sysTime: java.sql.Timestamp, table: String, op: String,
@@ -2854,9 +2514,9 @@ class XtDb(spark: SparkSession, val root: String) {
     spark.read.parquet(s"$root/_stats/$table")
 
   /** CREATE TABLE — pre-declare a table with an explicit column DDL
-    * ("a BIGINT, b STRING"). Writes an empty event-log part carrying the
-    * full meta schema so the table is immediately queryable; later inserts
-    * LUB-merge onto it as usual. */
+    * ("a BIGINT, b STRING"). Registers the schema, then writes an empty
+    * event-log part carrying the full meta schema so the table is
+    * immediately queryable; later inserts LUB-merge onto it as usual. */
   def createTable(table: String, columnsDdl: String): Unit = {
     require(!tableExists(table), s"table $table already exists")
     val userSchema = StructType.fromDDL(columnsDdl)
@@ -2877,10 +2537,10 @@ class XtDb(spark: SparkSession, val root: String) {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField(BUCKET,
         org.apache.spark.sql.types.StringType)))
+    saveSchema(table, full)
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), full)
       .write.parquet(tableDir(table))
-    saveSchema(table, full)
   }
 
   /** COPY IN — bulk ingest a file/directory as one put transaction

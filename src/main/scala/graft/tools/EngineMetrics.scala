@@ -53,12 +53,6 @@ object EngineMetrics {
   @volatile var lastFoldResolveFiles: Seq[String] = Nil
   @volatile var lastFoldLiveFileCount: Int = 0
 
-  /** Which resolve path the last snapshot fold took (round 16):
-    * "event-log" (bucket-pruned event resolve — the point/CDC regime)
-    * or "snapshot+delta" (bulk regime: one snapshot scan ∪ delta, the
-    * event log not read at all — VERDICT r15 top_next). */
-  @volatile var lastFoldResolveMode: String = ""
-
   /** Erase-purge addressing accounting (round 15): whether the last
     * purge took the manifest-recorded bucket path (no discovery scan),
     * and the bucket files it actually merged. */
@@ -74,11 +68,9 @@ object EngineMetrics {
   val eraseMarkRecomputes = new java.util.concurrent.atomic.AtomicLong
 
   /** Snapshot-fold driver-job accounting (round 17, VERDICT r16 #2):
-    * folds whose changed-id bucket histogram (and, on the
-    * snapshot+delta path, the delta side of the touched-bucket set)
-    * RODE the fold's single delta-aggregate job vs folds that had to
-    * run the separate changed-count job (boundary-crossing ids in
-    * play, or a type-evolving delta key). */
+    * folds whose changed-id bucket histogram RODE the fold's single
+    * delta-aggregate job vs folds that had to run the separate
+    * changed-count job (boundary-crossing ids in play). */
   val foldChangedFromDelta = new java.util.concurrent.atomic.AtomicLong
   val foldChangedRecomputes = new java.util.concurrent.atomic.AtomicLong
 

@@ -42,14 +42,6 @@ class CompactionFuzzSpec extends AnyFunSuite {
 
     def setKnobs(): Unit = {
       spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-      // force the changed-set broadcast gate low when asked (the shuffle
-      // semi-join degradation path runs under the same oracle)
-      sys.env.get("GRAFT_FUZZ_BCAST_GATE").foreach(g =>
-        spark.conf.set("spark.graft.snapshotFold.broadcastMaxIds", g))
-      // round 16: force the fold's resolve path (snapshot+delta vs
-      // event-log) so both run under the same differential oracle
-      sys.env.get("GRAFT_FUZZ_RESOLVE_MODE").foreach(m =>
-        spark.conf.set("spark.graft.snapshotFold.resolveMode", m))
       spark.conf.set("spark.graft.fullCompact.smallBytes", "0")
       spark.conf.set("spark.graft.fullCompact.ratio", "0.5")
       spark.conf.set("spark.graft.maxLevels", "2")
@@ -57,13 +49,9 @@ class CompactionFuzzSpec extends AnyFunSuite {
       // rewrites + excluded-file leases must stay invisible to semantics)
       spark.conf.set("spark.graft.erasePurge.maxCycles", "2")
     }
-    def unsetKnobs(): Unit = (Seq("spark.graft.autoCompact.maxLag",
+    def unsetKnobs(): Unit = Seq("spark.graft.autoCompact.maxLag",
       "spark.graft.fullCompact.smallBytes", "spark.graft.fullCompact.ratio",
-      "spark.graft.maxLevels", "spark.graft.erasePurge.maxCycles") ++
-      sys.env.get("GRAFT_FUZZ_BCAST_GATE").map(_ =>
-        "spark.graft.snapshotFold.broadcastMaxIds").toSeq ++
-      sys.env.get("GRAFT_FUZZ_RESOLVE_MODE").map(_ =>
-        "spark.graft.snapshotFold.resolveMode").toSeq)
+      "spark.graft.maxLevels", "spark.graft.erasePurge.maxCycles")
       .foreach(spark.conf.unset)
 
     setKnobs()

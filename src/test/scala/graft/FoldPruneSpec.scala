@@ -7,13 +7,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-15 storage: the snapshot fold's resolve input is PRUNED to the
-  * changed ids' iid-buckets before the relation is built (the last
-  * O(event-log) read in the maintenance plane — VERDICT r14 top_next),
-  * the changed-set broadcast is size-gated into a shuffle semi-join, the
-  * purge reads only the manifest-addressed erase buckets, and a
-  * stale-watermark snapshot is repaired (fold) or rebuilt before the
-  * purge deletes the erase markers (ADVICE r14 #3). */
+/** The snapshot fold's one resolve path: the changed ids' iid-buckets of
+  * the event log, PRUNED before the relation is built (never an
+  * O(event-log) read in the maintenance plane), with the changed-set
+  * broadcast gated by Spark's `autoBroadcastJoinThreshold` into a shuffle
+  * semi-join past it. The purge reads only the manifest-addressed erase
+  * buckets, and a stale-watermark snapshot is folded — or, if the fold
+  * still fails, dropped until the next compaction — before the purge
+  * deletes the erase markers. */
 class FoldPruneSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -57,9 +58,6 @@ class FoldPruneSpec extends AnyFunSuite {
 
     val resolveFiles = EngineMetrics.lastFoldResolveFiles
     val liveCount = EngineMetrics.lastFoldLiveFileCount
-    assert(EngineMetrics.lastFoldResolveMode === "event-log",
-      "a point delta must stay on the pruned event path — the byte " +
-        "heuristic must not drag it through a full snapshot scan")
     assert(resolveFiles.nonEmpty && liveCount > 0)
     assert(resolveFiles.size < liveCount,
       s"fold must prune: resolved ${resolveFiles.size} of $liveCount files")
@@ -85,14 +83,17 @@ class FoldPruneSpec extends AnyFunSuite {
       "sides of the threshold") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.snapshotFold.broadcastMaxIds", "2")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(threshold)
+    // -1: the changed set is never broadcast
+    spark.conf.set(threshold, "-1")
     try {
       val db = newDb("fold-gate")
       db.declareLayout("g", "k", 4)
       db.putDocs("g", spark.range(1, 2001)
         .selectExpr("id AS _id", "CAST(id % 20 AS INT) AS k", "id AS v"))
       db.compact("g")
-      // 50 changed ids >> gate of 2: the fold must take the plain-join
+      // 50 changed ids past the gate: the fold must take the plain-join
       // degradation, not a forced broadcast
       db.putDocs("g", spark.range(1, 51)
         .selectExpr("id AS _id", "CAST(id % 20 AS INT) AS k",
@@ -106,7 +107,10 @@ class FoldPruneSpec extends AnyFunSuite {
         .as[Long].head() === 5000L)
       assert(snap.get.filter(col("_id") === 51L).select("v")
         .as[Long].head() === 51L)
-    } finally spark.conf.unset("spark.graft.snapshotFold.broadcastMaxIds")
+    } finally prior match {
+      case Some(v) => spark.conf.set(threshold, v)
+      case None => spark.conf.unset(threshold)
+    }
   }
 
   test("purge reads ONLY manifest-addressed erase buckets: no discovery " +
@@ -188,95 +192,29 @@ class FoldPruneSpec extends AnyFunSuite {
     crashAt(snapshotFold) {
       db.eraseDocs("x", Seq(Tuple1(55L)).toDF("_id"))
       assert(db.compactIncremental("x"))
-      // fold still failing: the purge rebuilds the snapshot from the
-      // (not yet purged) event log instead of re-stamping a lie
+      // fold still failing: the purge drops the lagging snapshot instead
+      // of re-stamping a lie, and reads resolve live
       assert(db.purgeErasedBuckets("x"))
-      val snap = db.currentSnapshotIfValid("x")
-      assert(snap.isDefined, "rebuilt snapshot must serve")
-      assert(snap.get.filter(col("_id") === 55L).isEmpty,
-        "the erased row must NOT survive the rebuild")
-      assert(snap.get.count() === 999L)
+      assert(db.currentSnapshotIfValid("x").isEmpty,
+        "a snapshot that never folded the erase must not serve")
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"${db.root}/x/_snapmeta.json")),
+        "the dropped snapshot's manifest must be gone")
+      assert(db.asOf("x").filter(col("_id") === 55L).isEmpty,
+        "the erased row must not resolve")
+      assert(db.asOf("x").count() === 999L)
     }
     // payload physically dies within the lease bound
     db.compactIfLagged("x", 5); db.compactIfLagged("x", 5)
     db.compactIfLagged("x", 5)
     assert(payloadFiles(db, "x", secret).isEmpty,
       s"erased payload files: ${payloadFiles(db, "x", secret)}")
-  }
-
-  test("VERDICT r15 #3 — purging a future-boundary event rewrites the " +
-      "affected buckets' boundary mins: no spurious early snapshot " +
-      "expiry survives the purge") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("purge-bmins")
-    db.declareLayout("m", "k", 4)
-    db.putDocs("m", spark.range(1, 501)
-      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
-        "concat('r', id) AS data"))
-    // one FUTURE activation (+1h): the snapshot expiry pins to it
-    db.putDocs("m", Seq((7777L, 7, "future")).toDF("_id", "k", "data"),
-      validFrom = Some(lit(java.sql.Timestamp.from(
-        java.time.Instant.now().plusSeconds(3600)))))
-    db.compact("m")
-    def snapNum(k: String): Long =
-      (s""""$k"\\s*:\\s*(-?\\d+)""").r.findFirstMatchIn(
-        new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
-          .get(s"${db.root}/m/_snapmeta.json")), "UTF-8")).get.group(1).toLong
-    val e1 = snapNum("expires")
-    assert(e1 != Long.MaxValue,
-      "snapshot expiry must be pinned to the future boundary")
-    // erase the future event's id, fold (O(delta) min maintenance keeps
-    // the now-stale boundary), then purge — the purge must rewrite the
-    // affected buckets' mins from the data it just merged
-    db.eraseDocs("m", Seq(Tuple1(7777L)).toDF("_id"))
-    assert(db.compactIncremental("m"))
-    assert(db.purgeErasedBuckets("m"))
-    val e2 = snapNum("expires")
-    assert(e2 === Long.MaxValue,
-      s"the purged boundary must leave the expiry ($e1 -> $e2): a stale " +
-        "min would expire the snapshot early for no reason")
-    val snap = db.currentSnapshotIfValid("m")
-    assert(snap.isDefined && snap.get.count() === 500L)
-  }
-
-  test("VERDICT r15 top_next — a BULK fresh-id delta folds from " +
-      "snapshot+delta: the event log is NOT read (resolve input is " +
-      "O(delta + changed snapshot rows), not O(event log)) and the " +
-      "snapshot is exact") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("fold-bulk")
-    db.declareLayout("b", "k", 4)
-    // two versions per id: the event log is ~2x the snapshot, so the
-    // auto heuristic must pick the snapshot-scan path for a bulk delta
-    db.putDocs("b", spark.range(1, 2001)
-      .selectExpr("id AS _id", "CAST(id % 20 AS INT) AS k", "id AS v"))
-    db.putDocs("b", spark.range(1, 2001)
-      .selectExpr("id AS _id", "CAST(id % 20 AS INT) AS k", "id*2 AS v"))
-    db.compact("b")
-    assert(db.currentSnapshotIfValid("b").isDefined)
-    // a bulk FRESH-id delta: 500 new ids hash into (essentially) every
-    // iid-bucket — the pruned event read would degrade to O(event log)
-    db.putDocs("b", spark.range(10001, 10501)
-      .selectExpr("id AS _id", "CAST(id % 20 AS INT) AS k", "id*3 AS v"))
-    assert(db.compactIncremental("b"), "fold the bulk delta")
-    assert(EngineMetrics.lastFoldResolveMode === "snapshot+delta",
-      "a bulk delta must resolve from snapshot+delta, not the event log")
-    assert(EngineMetrics.lastFoldResolveFiles.isEmpty,
-      "no event-log file may enter the bulk fold's resolve")
-    val snap = db.currentSnapshotIfValid("b")
-    assert(snap.isDefined, "snapshot must be valid after the bulk fold")
-    assert(snap.get.count() === 2500L)
-    assert(snap.get.filter(col("_id") === 10100L).select("v")
-      .as[Long].head() === 30300L)
-    assert(snap.get.filter(col("_id") === 500L).select("v")
-      .as[Long].head() === 1000L, "pre-delta rows keep their current value")
-    // and the folded snapshot ≡ a from-scratch resolve of the full log
-    val oracle = db.asOf("b").select(col("_id"), col("v"))
-    val got = snap.get.select(col("_id"), col("v"))
-    assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
-      "bulk-folded snapshot must equal the full resolve")
+    // the next compaction rebuilds the snapshot
+    db.compact("x")
+    val snap = db.currentSnapshotIfValid("x")
+    assert(snap.isDefined, "the next compaction must rebuild the snapshot")
+    assert(snap.get.filter(col("_id") === 55L).isEmpty)
+    assert(snap.get.count() === 999L)
   }
 
   test("snapshot+delta parity across UPDATE / DELETE / ERASE / key-move " +
@@ -284,47 +222,43 @@ class FoldPruneSpec extends AnyFunSuite {
       "to the event-log resolve of the same log") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.snapshotFold.resolveMode", "snapshot")
-    try {
-      val db = newDb("fold-parity")
-      db.declareLayout("p", "k", 4)
-      db.putDocs("p", spark.range(1, 501)
-        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id AS v"))
-      db.compact("p")
-      // one delta carrying every mutation class
-      db.putDocs("p", Seq((7L, 7, 7000L)).toDF("_id", "k", "v")) // update
-      db.putDocs("p", Seq((8L, 99, 8000L)).toDF("_id", "k", "v")) // key move
-      db.deleteDocs("p", Seq(Tuple1(9L)).toDF("_id"))
-      db.eraseDocs("p", Seq(Tuple1(10L)).toDF("_id"))
-      db.putDocs("p", spark.range(601, 651)
-        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
-          "id*5 AS v")) // fresh ids
-      // schema evolution inside the delta: the union of (old snapshot
-      // rows ∪ delta) must LUB the new column, old rows reading null
-      db.putDocs("p", Seq((11L, 1, 1100L, "tagged"))
-        .toDF("_id", "k", "v", "extra"))
-      assert(db.compactIncremental("p"))
-      assert(EngineMetrics.lastFoldResolveMode === "snapshot+delta")
-      val snap = db.currentSnapshotIfValid("p")
-      assert(snap.isDefined)
-      val got = snap.get.select(col("_id"), col("k"), col("v"), col("extra"))
-      val oracle = db.asOf("p")
-        .select(col("_id"), col("k"), col("v"), col("extra"))
-      assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
-        "forced snapshot+delta fold must equal the event-log resolve")
-      assert(got.filter(col("_id") === 11L).select("extra")
-        .as[String].head() === "tagged")
-      assert(got.filter(col("_id") === 12L).select("extra")
-        .as[String].head() === null,
-        "pre-evolution rows must read the new column as null")
-      assert(got.filter(col("_id") === 7L).select("v").as[Long].head()
-        === 7000L)
-      assert(got.filter(col("_id") === 8L).select("k").as[Int].head()
-        === 99, "key move must land in the new bucket")
-      assert(got.filter(col("_id").isin(9L, 10L)).isEmpty,
-        "delete and erase must leave the snapshot")
-      assert(got.count() === 548L)
-    } finally spark.conf.unset("spark.graft.snapshotFold.resolveMode")
+    val db = newDb("fold-parity")
+    db.declareLayout("p", "k", 4)
+    db.putDocs("p", spark.range(1, 501)
+      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id AS v"))
+    db.compact("p")
+    // one delta carrying every mutation class
+    db.putDocs("p", Seq((7L, 7, 7000L)).toDF("_id", "k", "v")) // update
+    db.putDocs("p", Seq((8L, 99, 8000L)).toDF("_id", "k", "v")) // key move
+    db.deleteDocs("p", Seq(Tuple1(9L)).toDF("_id"))
+    db.eraseDocs("p", Seq(Tuple1(10L)).toDF("_id"))
+    db.putDocs("p", spark.range(601, 651)
+      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
+        "id*5 AS v")) // fresh ids
+    // schema evolution inside the delta: the folded buckets must LUB
+    // the new column, untouched rows reading null
+    db.putDocs("p", Seq((11L, 1, 1100L, "tagged"))
+      .toDF("_id", "k", "v", "extra"))
+    assert(db.compactIncremental("p"))
+    val snap = db.currentSnapshotIfValid("p")
+    assert(snap.isDefined)
+    val got = snap.get.select(col("_id"), col("k"), col("v"), col("extra"))
+    val oracle = db.asOf("p")
+      .select(col("_id"), col("k"), col("v"), col("extra"))
+    assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
+      "the fold must equal the full resolve")
+    assert(got.filter(col("_id") === 11L).select("extra")
+      .as[String].head() === "tagged")
+    assert(got.filter(col("_id") === 12L).select("extra")
+      .as[String].head() === null,
+      "pre-evolution rows must read the new column as null")
+    assert(got.filter(col("_id") === 7L).select("v").as[Long].head()
+      === 7000L)
+    assert(got.filter(col("_id") === 8L).select("k").as[Int].head()
+      === 99, "key move must land in the new bucket")
+    assert(got.filter(col("_id").isin(9L, 10L)).isEmpty,
+      "delete and erase must leave the snapshot")
+    assert(got.count() === 548L)
   }
 
   test("ADVICE r15 #4 — the erase-mark bucket set rides the append " +
@@ -361,58 +295,6 @@ class FoldPruneSpec extends AnyFunSuite {
     assert(db.asOf("o").count() === 498L)
   }
 
-  test("ADVICE r15 #2 — a mid-generation snapshot rebuild writes a FRESH " +
-      "seq-qualified dir, never overwriting the live one: the manifest " +
-      "always references files that exist, and the old files die via " +
-      "the one-cycle lease") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("rebuild-fresh")
-    db.declareLayout("f", "k", 4)
-    db.putDocs("f", spark.range(1, 1001)
-      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
-        "concat('r', id) AS data"))
-    db.compact("f")
-    def metaFiles(): Seq[String] =
-      """"files":\[([^\]]*)\]""".r.findFirstMatchIn(
-        new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths
-          .get(s"${db.root}/f/_snapmeta.json")), "UTF-8")).get.group(1)
-        .split(",").filter(_.nonEmpty).toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"").takeWhile(_ != '|'))
-    val before = metaFiles()
-    assert(before.nonEmpty)
-    val dd = db.dataDir("f")
-    def allExist(fs: Seq[String]): Boolean =
-      fs.forall(n => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dd/$n")))
-    assert(allExist(before))
-    // force the purge's mid-generation REBUILD path (fold kept failing)
-    crashAt(snapshotFold) {
-      db.eraseDocs("f", Seq(Tuple1(7L)).toDF("_id"))
-      assert(db.compactIncremental("f"))
-      assert(db.purgeErasedBuckets("f"))
-    }
-    val after = metaFiles()
-    assert(after.nonEmpty && allExist(after),
-      s"rebuilt manifest must reference only existing files: $after")
-    val beforeDirs = before.map(_.takeWhile(_ != '/')).toSet
-    val afterDirs = after.map(_.takeWhile(_ != '/')).toSet
-    assert(beforeDirs.intersect(afterDirs).isEmpty,
-      s"the rebuild must land in a FRESH dir: $beforeDirs vs $afterDirs")
-    // the prior snapshot files survive the rebuild itself (a concurrent
-    // reader holding the old manifest can still serve) …
-    assert(allExist(before),
-      "prior snapshot files must outlive the rebuild (one-cycle lease)")
-    // … and die within the lease bound
-    db.compactIfLagged("f", 5); db.compactIfLagged("f", 5)
-    db.compactIfLagged("f", 5)
-    assert(!allExist(before) || before.forall(n =>
-        metaFiles().contains(n)),
-      "retired snapshot files must be swept within the lease bound")
-    val snap = db.currentSnapshotIfValid("f")
-    assert(snap.isDefined && snap.get.count() === 999L)
-  }
-
   test("VERDICT r16 #2 — the changed-id bucket histogram (and the " +
       "delta half of the touched set) ride the fold's single " +
       "delta-aggregate job: no separate count job on the common path, " +
@@ -433,8 +315,7 @@ class FoldPruneSpec extends AnyFunSuite {
       "a non-crossing fold's changed histogram must ride the delta job")
     assert(EngineMetrics.foldChangedRecomputes.get() === rec0,
       "no separate changed-count job on the common path")
-    // bulk fold (snapshot+delta path) — rides as well, and the delta
-    // half of the touched set comes from the same job
+    // bulk fold — the histogram rides as well
     db.putDocs("r", spark.range(5001, 5501)
       .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id*3 AS v"))
     assert(db.compactIncremental("r"))
@@ -456,50 +337,35 @@ class FoldPruneSpec extends AnyFunSuite {
       "the full event resolve") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    spark.conf.set("spark.graft.snapshotFold.resolveMode", "snapshot")
-    try {
-      val db = newDb("fold-mixed")
-      db.declareLayout("x", "k", 4)
-      db.putDocs("x", spark.range(1, 501)
-        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id AS v"))
-      // a near-future activation: current value 777, future value 888
-      db.putDocs("x", Seq((7777L, 7, 777L)).toDF("_id", "k", "v"))
-      val activateAt = java.sql.Timestamp.from(
-        java.time.Instant.now().plusSeconds(3))
-      db.putDocs("x", Seq((7777L, 7, 888L)).toDF("_id", "k", "v"),
-        validFrom = Some(lit(activateAt)))
-      db.compact("x")
-      val snap0 = db.currentSnapshotIfValid("x")
-      assert(snap0.isDefined)
-      assert(snap0.get.filter(col("_id") === 7777L).select("v")
-        .as[Long].head() === 777L, "pre-crossing value serves")
-      // bulk fresh-id delta lands, then the boundary crosses
-      db.putDocs("x", spark.range(9001, 9301)
-        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id*2 AS v"))
-      Thread.sleep(3500)
-      assert(db.compactIncremental("x"), "fold across the crossing")
-      assert(EngineMetrics.lastFoldResolveMode === "mixed",
-        s"a crossing inside a bulk fold must go mixed, not " +
-          s"${EngineMetrics.lastFoldResolveMode}")
-      // the event-side read is pruned to the crossed buckets
-      val crossedBucket = db.events("x")
-        .filter(col("_id") === 7777L)
-        .select(pmod(hash(col("_iid")), lit(16)).cast("int"))
-        .distinct().as[Int].collect().toSet
-      val scanned = EngineMetrics.lastFoldResolveFiles.map(bucketIdOf).toSet
-      assert(scanned.nonEmpty && scanned.subsetOf(crossedBucket),
-        s"mixed resolve read buckets $scanned but only $crossedBucket " +
-          "crossed — the event read must not widen past the crossing")
-      val snap = db.currentSnapshotIfValid("x")
-      assert(snap.isDefined, "snapshot must re-stamp after the crossing")
-      assert(snap.get.filter(col("_id") === 7777L).select("v")
-        .as[Long].head() === 888L,
-        "the crossed id must serve its ACTIVATED (pre-watermark) value")
-      assert(snap.get.count() === 801L)
-      val oracle = db.asOf("x").select(col("_id"), col("v"))
-      val got = snap.get.select(col("_id"), col("v"))
-      assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
-        "mixed fold must equal the full event resolve")
-    } finally spark.conf.unset("spark.graft.snapshotFold.resolveMode")
+    val db = newDb("fold-mixed")
+    db.declareLayout("x", "k", 4)
+    db.putDocs("x", spark.range(1, 501)
+      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id AS v"))
+    // a near-future activation: current value 777, future value 888
+    db.putDocs("x", Seq((7777L, 7, 777L)).toDF("_id", "k", "v"))
+    val activateAt = java.sql.Timestamp.from(
+      java.time.Instant.now().plusSeconds(3))
+    db.putDocs("x", Seq((7777L, 7, 888L)).toDF("_id", "k", "v"),
+      validFrom = Some(lit(activateAt)))
+    db.compact("x")
+    val snap0 = db.currentSnapshotIfValid("x")
+    assert(snap0.isDefined)
+    assert(snap0.get.filter(col("_id") === 7777L).select("v")
+      .as[Long].head() === 777L, "pre-crossing value serves")
+    // bulk fresh-id delta lands, then the boundary crosses
+    db.putDocs("x", spark.range(9001, 9301)
+      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k", "id*2 AS v"))
+    Thread.sleep(3500)
+    assert(db.compactIncremental("x"), "fold across the crossing")
+    val snap = db.currentSnapshotIfValid("x")
+    assert(snap.isDefined, "snapshot must re-stamp after the crossing")
+    assert(snap.get.filter(col("_id") === 7777L).select("v")
+      .as[Long].head() === 888L,
+      "the crossed id must serve its ACTIVATED (pre-watermark) value")
+    assert(snap.get.count() === 801L)
+    val oracle = db.asOf("x").select(col("_id"), col("v"))
+    val got = snap.get.select(col("_id"), col("v"))
+    assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty,
+      "the crossing fold must equal the full resolve")
   }
 }

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * rules a plan gets would depend on what ran before. Fault injection
   * goes through the store's one write-point hook, never a user-settable
   * option. Engine code reads no environment variable: only a program's
-  * entry point does. The set of `spark.graft.*` options is pinned. */
+  * entry point does. The set of `spark.graft.*` options and the number
+  * of catch-all handlers in the bitemporal store are pinned. */
 class SessionSurfaceSpec extends AnyFunSuite {
 
   // split so this file does not match its own patterns
@@ -59,13 +60,23 @@ class SessionSurfaceSpec extends AnyFunSuite {
       "fullCompact.ratio", "fullCompact.smallBytes",
       "intervalJoin.bucketSeconds", "intervalJoin.enabled",
       "joinReorder.enabled", "joinReorder.ndvStats", "maxLevels",
-      "snapshotFold.broadcastMaxIds", "snapshotFold.resolveMode",
       "txsFoldThreshold").map("spark.graft." + _)
     val key = ("\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"").r
     val read = sources.collect { case (p, text) if p.startsWith(mainDir) =>
       key.findAllMatchIn(text).map(_.group(1))
     }.flatten.toSet
     assert(read === listed)
+  }
+
+  test("the bitemporal store has exactly the pinned number of catch-alls") {
+    // a new catch-all fails here until the count is raised on purpose:
+    // a failure the store cannot name should propagate, not degrade
+    val catchAll = "NonFatal|Throwable|case _: Exception|case e: Exception".r
+    val storeDir = mainDir.resolve("scala/graft/bitemporal")
+    val lines = sources.collect { case (p, text) if p.startsWith(storeDir) =>
+      text.linesIterator.count(catchAll.findFirstIn(_).isDefined)
+    }.sum
+    assert(lines === 5)
   }
 
   test("under src/main only files defining a main read the environment") {

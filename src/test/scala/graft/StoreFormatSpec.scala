@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 
 /** The store has one on-disk format. A store file in any other format —
-  * here the layouts earlier versions wrote — fails loudly and names the
-  * file, instead of being served through a compatibility branch. And a
-  * store whose tx log is unreadable refuses to assign system time. Uses
-  * only the public store API. */
+  * here the layouts earlier versions wrote — or a missing schema registry
+  * fails loudly and names the file, instead of being served through a
+  * compatibility branch. And a store whose tx log is unreadable refuses
+  * to assign system time. Uses only the public store API. */
 class StoreFormatSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -99,6 +99,18 @@ class StoreFormatSpec extends AnyFunSuite {
     Files.move(live, tdir.resolve("g3"))
     overwrite(tdir.resolve("_gen"), "3")
     assertNames("_gen")(db.asOf("t").count())
+  }
+
+  test("a compacted table whose schema registry is gone is refused, " +
+      "naming the registry file") {
+    val db = newDb("fmt-registry")
+    put(db, "t", 1, 101)
+    db.compact("t")
+    val registry = Paths.get(s"${db.root}/_schemas/t.json")
+    Files.delete(registry)
+    Files.deleteIfExists(registry.resolveSibling(".t.json.crc"))
+    // the registry is the schema: no read guesses it from file footers
+    assertNames("_schemas/t.json")(db.asOf("t").count())
   }
 
   test("a store whose tx log is unreadable refuses to hand out a " +
