@@ -45,8 +45,8 @@ object TxOp {
 }
 
 /** Read view handed to in-transaction operations (ASSERT conditions):
-  * committed events unioned with the event batches staged so far by this
-  * transaction, resolved as-of the transaction's system time. */
+  * committed events unioned with the events of this transaction's earlier
+  * ops, resolved as-of the transaction's system time. */
 trait TxSnapshot {
   def events(table: String): DataFrame
   def current(table: String): DataFrame
@@ -441,7 +441,7 @@ class XtDb(spark: SparkSession, val root: String) {
     // keep the superseded generation for in-flight readers; drop older.
     // Root-layout legacy data (loose appended parts) is "generation 0":
     // kept on the g1 flip, swept on the g2 flip. Every `_`-prefixed
-    // sidecar (_gen/_layout/_evmeta/_snapmeta/_snapschema/_staging) is
+    // sidecar (_gen/_layout/_evmeta/_snapmeta/_snapschema) is
     // metadata, never GC'd here.
     val keep = Set(gname) ++ curInfo.map(_._2)
     if (cur.isDefined)
@@ -500,9 +500,9 @@ class XtDb(spark: SparkSession, val root: String) {
       lvseq: Int, eraseCycles: Int = 0,
       excluded: Set[String] = Set.empty,
       sweepDirs: Seq[String] = Nil,
-      // round 15: pending-erase ADDRESSING, recorded at the erase append
-      // and (authoritatively) at every fold that carries an erase event
-      // into a level — the purge then reads ONLY the affected buckets,
+      // pending-erase ADDRESSING, recorded by every fold that carries an
+      // erase event into a level (the purge never runs over an unfolded
+      // backlog) — the purge then reads ONLY the affected buckets,
       // end-to-end, instead of re-scanning the live set to discover them.
       //  - `eraseBuckets`: iid-bucket ids (at this manifest's fanout) of
       //    every UNPURGED erased id; bounded by the 4096 fanout cap.
@@ -800,10 +800,12 @@ class XtDb(spark: SparkSession, val root: String) {
       fs.listStatus(dir).exists(_.getPath.getName != "_layout.json")
   }
 
-  /** Stamp the bitemporal event-meta columns onto a doc batch. */
+  /** Stamp the bitemporal event-meta columns onto a doc batch. `_seq` is
+    * a placeholder here: [[sequenced]] numbers a table's events once,
+    * over the whole transaction. */
   private def buildEvents(docs: DataFrame, op: String,
       validFrom: Option[Column], validTo: Option[Column],
-      sysTime: java.sql.Timestamp, seqCol: Column): DataFrame = {
+      sysTime: java.sql.Timestamp): DataFrame = {
     val vf = validFrom.getOrElse(lit(sysTime)).cast("timestamp")
     val vt = validTo.map(_.cast("timestamp")).getOrElse(lit(null).cast("timestamp"))
     // _system_to is always derived at read — never a stored payload column
@@ -813,53 +815,28 @@ class XtDb(spark: SparkSession, val root: String) {
       .withColumn(VF, vf)
       .withColumn(VT, vt)
       .withColumn(SF, lit(sysTime))
-      .withColumn(SEQ, seqCol)
+      .withColumn(SEQ, lit(0L))
       .withColumn(OP, lit(op))
       .withColumn(BUCKET, substring(col(IID), 1, 1))
   }
 
-  private def appendEvents(table: String, docs: DataFrame, op: String,
-      validFrom: Option[Column], validTo: Option[Column]): java.sql.Timestamp = {
-    // allocate, land and publish under the monitor, so commits publish in
-    // allocation order and the committed head never passes a write whose
-    // files are still landing
-    val (sysTime, withMeta, obs) = synchronized {
-      val sysTime = nextSystemTime()
-      val withMeta = buildEvents(docs, op, validFrom, validTo, sysTime,
-        monotonically_increasing_id())
-      val conformed = evolveSchema(table, withMeta)
-      val obs = if (op == "erase") eraseObservation(table) else None
-      obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
-        .getOrElse(conformed)
-        .write.mode("append").parquet(dataDir(table))
-      logTx(sysTime, table, op, committed = true, error = None)
-      publish(sysTime)
-      (sysTime, withMeta, obs)
-    }
-    if (op == "erase")
-      markErasePending(table, withMeta, sysTime, observedBuckets(obs))
-    maybeAutoCompact(table)
-    sysTime
+  /** LUB-conform, then union: the parts may carry conflicting types for a
+    * column (ops of one tx, the duv_promotion within-tx case), which a
+    * raw unionByName would coerce (string->long cast error) instead of
+    * promoting to the tagged union. */
+  private def lubUnion(parts: Seq[DataFrame]): DataFrame = {
+    val lubbed = parts.map(_.schema).reduce(DynamicSchema.mergeSchemas)
+    parts.map(DynamicSchema.conform(_, lubbed))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Erase-mark bucket addressing riding the append write itself
-    * (`Dataset.observe` — the aggregation is computed by the SAME job
-    * that writes the erase, so the commit path runs ZERO extra driver
-    * jobs; ADVICE r15 #4). Returns the observation handle plus the
-    * bucket count it was addressed against; None when the table has no
-    * current bucketed manifest (nothing to mark — the first fold
-    * records addressing authoritatively from its own input). */
-  private def eraseObservation(
-      table: String): Option[(org.apache.spark.sql.Observation, Int)] =
-    try cachedResolvedEvMeta(table)
-      .filter(_.gen == currentGen(table).getOrElse(0))
-      .map(m => (org.apache.spark.sql.Observation(
-        s"erase-mark-${System.nanoTime()}"), m.buckets))
-    catch { case scala.util.control.NonFatal(_) => None }
-
-  private def eraseBucketAgg(nBuckets: Int): Column =
-    collect_set(when(col(OP) === "erase",
-      pmod(hash(col(IID)), lit(nBuckets)).cast("int"))).as("ebks")
+  /** One table's events of a transaction: its op frames in op order,
+    * `_seq` numbered once over their union. A union's partitions come in
+    * child order, so a later op supersedes an earlier one at the shared
+    * system time (EventAlgebra's tie-break), and the rows of one op keep
+    * the order their own frame gives them. */
+  private def sequenced(frames: Seq[DataFrame]): DataFrame =
+    lubUnion(frames).withColumn(SEQ, monotonically_increasing_id())
 
   /** An observation's row, with a BOUNDED wait: the write action has
     * already completed when this is called, but the QueryExecutionListener
@@ -874,57 +851,21 @@ class XtDb(spark: SparkSession, val root: String) {
       scala.concurrent.duration.Duration(10, "seconds")))
     catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The observed erase bucket set; None falls back to the single-agg
-    * recompute. */
-  private def observedBuckets(
-      obs: Option[(org.apache.spark.sql.Observation, Int)])
-      : Option[(Set[Int], Int)] =
-    obs.flatMap { case (o, nb) =>
-      observedRow(o).map(row => (row.getAs[scala.collection.Seq[Any]]("ebks")
-        .map(_.asInstanceOf[Number].intValue).toSet, nb))
-    }
-
-  /** Start the erase-purge clock at the erase APPEND itself (one tiny
+  /** Start the erase-purge clock at the erase commit itself (one tiny
     * manifest PUT), so the latency bound counts from the user's erase,
-    * not from whenever the first fold happens to notice it — and record
-    * the erased ids' iid-bucket ids + the erase system-time (round 15):
-    * the purge then reads only the affected buckets and can compare the
-    * erase against the snapshot watermark without any discovery scan.
-    * Maintenance metadata — must never fail the committed append; every
-    * fold re-records the addressing authoritatively from its own input
-    * ([[compactIncremental]]), so a lost mark costs latency, never the
-    * bound.
-    *
-    * The bucket set normally arrives pre-computed by the append write's
-    * own job (`observed` — [[eraseObservation]]); the single-agg
-    * recompute below runs only when the manifest's bucket count changed
-    * between the append and this CAS (a racing full compact — rare),
-    * and the manifest PUT is skipped when it would change nothing. */
-  private def markErasePending(table: String, erasedDocs: DataFrame,
-      sysTime: java.sql.Timestamp,
-      observed: Option[(Set[Int], Int)] = None): Unit =
+    * not from whenever the first fold happens to notice it. The mark
+    * carries no addressing: the purge never runs over an unfolded
+    * backlog, and the fold that carries the erase into a level records
+    * its buckets and system time from its own input
+    * ([[compactIncremental]]). Maintenance metadata — must never fail the
+    * committed erase; a lost mark costs latency, never the bound. */
+  private def markErasePending(table: String): Unit =
     maintenance(s"erase-pending mark on '$table'",
         "erase is committed; the fold will re-detect it") {
       val (m0, ver) = resolvedEvMetaV(table)
-      m0.filter(_.gen == currentGen(table).getOrElse(0))
-        .foreach { m =>
-          val bks = observed match {
-            case Some((bs, nb)) if nb == m.buckets =>
-              graft.tools.EngineMetrics.eraseMarkObserved.incrementAndGet()
-              bs
-            case _ =>
-              graft.tools.EngineMetrics.eraseMarkRecomputes.incrementAndGet()
-              erasedDocs.agg(eraseBucketAgg(m.buckets)).head
-                .getSeq[Any](0).map(_.asInstanceOf[Number].intValue).toSet
-          }
-          val us = tsMicros(sysTime)
-          if (m.eraseCycles < 1 || !bks.subsetOf(m.eraseBuckets) ||
-              us > m.eraseMaxSf)
-            writeEvMeta(table, m.copy(
-              eraseCycles = math.max(1, m.eraseCycles),
-              eraseBuckets = m.eraseBuckets ++ bks,
-              eraseMaxSf = math.max(m.eraseMaxSf, us)), ver)
-        }
+      m0.filter(m => m.gen == currentGen(table).getOrElse(0) &&
+          m.eraseCycles < 1)
+        .foreach(m => writeEvMeta(table, m.copy(eraseCycles = 1), ver))
     }
 
   /** Run post-commit maintenance: a failure leaves the commit standing
@@ -973,29 +914,52 @@ class XtDb(spark: SparkSession, val root: String) {
       }
   }
 
-  /** Event rows committed by the most recent `submitTx` on this instance
-    * (insert/update/delete/erase/patch event versions). Counted by the
-    * append write itself, never by re-executing the DML's plan. */
-  @volatile var lastTxAffectedRows: Long = 0L
+  /** Commits on this instance between their system-time allocation and
+    * their return or throw. */
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Multi-op atomic transaction: every op shares ONE system time; ops are
-    * staged (materialised under `_staging/`) and only moved into the table
-    * logs after the whole vector succeeds, so a failing ASSERT — or any
-    * error — aborts the batch with nothing visible (reference submit-tx
-    * semantics, api.clj:258-339). Later ops (UPDATE sources, PATCH merges,
-    * ASSERT conditions) see the staged effects of earlier ops, resolved
-    * as-of the transaction time. Within the tx, `_seq` = op index, so a
-    * later op supersedes an earlier one at the shared system time (the
-    * same tie-break EventAlgebra uses).
+  /** A commit on this instance is in flight — the synchronous store's
+    * equivalent of the reference's submitted-but-not-processed message
+    * window (`/healthz/started`). Commit state, not files: a process
+    * killed mid-commit leaves nothing that reads as in flight. */
+  private[graft] def commitInFlight: Boolean = inFlight.get > 0
+
+  /** The one commit protocol. Every write of this store — the put,
+    * delete, erase, patch, update and copy APIs, SQL DML, CDC and Connect
+    * — is one atomic transaction whose ops share ONE system time
+    * (reference submit-tx, api.clj:258-339, on one ordered log): a
+    * failing ASSERT — or any error — aborts the batch with nothing
+    * visible.
+    *
+    * Later ops (UPDATE sources, DELETE/ERASE … WHERE, PATCH merges,
+    * ASSERT conditions) see the effects of earlier ops, resolved as-of
+    * the transaction time. Op i is pinned (`localCheckpoint`) only when a
+    * later op reads that view of its table — an Update, DeleteWhere,
+    * EraseWhere or Patch on the same table, or any Assert — and its
+    * blocks are released when the commit returns or throws. Every other
+    * op's frame goes straight into its table's single append, so a
+    * one-op transaction runs its plan once, inside the append job. Each
+    * table's events take `_seq` in op order, then in each op's row order
+    * ([[sequenced]]).
     *
     * Single-writer, like the reference's log-append: commits serialize
     * on this instance's monitor. Readers never take it. A transaction
     * becomes visible ([[snapshotToken]]) once its log record lands,
     * before its erase marks and auto-compaction run; until then its
-    * events, landed or not, sit above every reader's basis. */
+    * events, landed or not, sit above every reader's basis, and a failure
+    * before the log record is written deletes the files its appends
+    * landed. */
   def submitTx(ops: Seq[TxOp],
       systemTime: Option[java.sql.Timestamp] = None): java.sql.Timestamp =
-    synchronized {
+    commit(ops, systemTime)._1
+
+  /** [[submitTx]], returning the commit's system time and the event rows
+    * it appended — counted by the append writes themselves, never by a
+    * second run of an op's plan, and only when the returned function is
+    * called (the first call may wait, bounded, for the observations). */
+  private[graft] def commit(ops: Seq[TxOp],
+      systemTime: Option[java.sql.Timestamp] = None)
+      : (java.sql.Timestamp, () => Long) = synchronized {
     // explicit system time = the reference's import/backfill override
     // (`:system-time` on submit-tx); must stay monotonic vs the log
     val sysTime = systemTime match {
@@ -1008,22 +972,14 @@ class XtDb(spark: SparkSession, val root: String) {
         t
       case None => nextSystemTime()
     }
-    val txStage = s"$root/_staging/tx_${sysTime.toInstant.toEpochMilli}"
-    val staged =
-      scala.collection.mutable.LinkedHashMap[String,
-        scala.collection.mutable.Buffer[String]]()
+    inFlight.incrementAndGet()
+    val frames = scala.collection.mutable.LinkedHashMap[String,
+      scala.collection.mutable.Buffer[DataFrame]]()
     def viewEvents(table: String): DataFrame = {
-      val committed = if (tableExists(table)) Seq(events(table)) else Nil
-      val all = committed ++
-        staged.getOrElse(table, Nil).toSeq.map(d => spark.read.parquet(d))
+      val all = (if (tableExists(table)) Seq(events(table)) else Nil) ++
+        frames.get(table).map(f => sequenced(f.toSeq))
       require(all.nonEmpty, s"submitTx: unknown table $table")
-      // LUB-conform before combining: ops of one tx may carry conflicting
-      // types for a column (duv_promotion within-tx case) and a raw
-      // unionByName would let Spark coerce them (string->long cast error)
-      // instead of promoting to the tagged union
-      val lubbed = all.map(_.schema).reduce(DynamicSchema.mergeSchemas)
-      all.map(DynamicSchema.conform(_, lubbed))
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+      lubUnion(all)
     }
     val snapshot: TxSnapshot = new TxSnapshot {
       def events(table: String): DataFrame = viewEvents(table)
@@ -1031,105 +987,147 @@ class XtDb(spark: SparkSession, val root: String) {
         Bitemporal.asOf(viewEvents(table), lit(sysTime), lit(sysTime),
           lit(sysTime))
       def tables: Seq[String] =
-        (XtDb.this.tables ++ staged.keys).distinct.sorted
+        (XtDb.this.tables ++ frames.keys).distinct.sorted
     }
-    def stage(table: String, docs: DataFrame, op: String,
-        validFrom: Option[Column], validTo: Option[Column], i: Int): Unit = {
-      val dir = s"$txStage/op$i"
-      buildEvents(docs, op, validFrom, validTo, sysTime, lit(i.toLong))
-        .write.mode("overwrite").parquet(dir)
-      staged.getOrElseUpdate(table,
-        scala.collection.mutable.Buffer[String]()) += dir
+    def readsView(later: TxOp, table: String): Boolean = later match {
+      case _: TxOp.Assert => true
+      case TxOp.Update(t, _, _, _, _) => t == table
+      case TxOp.DeleteWhere(t, _, _, _) => t == table
+      case TxOp.EraseWhere(t, _) => t == table
+      case TxOp.Patch(t, _, _) => t == table
+      case _ => false
     }
+    // the pinned ops' checkpoints, released when the commit ends
+    val pins = scala.collection.mutable.Buffer[DataFrame]()
+    def add(i: Int, table: String, docs: DataFrame, op: String,
+        validFrom: Option[Column], validTo: Option[Column]): Unit = {
+      val ev = buildEvents(docs, op, validFrom, validTo, sysTime)
+      frames.getOrElseUpdate(table, scala.collection.mutable.Buffer()) +=
+        (if (ops.drop(i + 1).exists(readsView(_, table))) {
+          pins += ev.localCheckpoint(eager = true)
+          pins.last
+        } else ev)
+    }
+    val beginning = Some(lit("0001-01-01 00:00:00"))
+    // each appended table's data dir with its listing from before the
+    // append (None: the append made the dir), kept until the log record is
+    // being written — a failure in between deletes what landed there
+    // ([[dropLanded]])
+    var landed =
+      List.empty[(org.apache.hadoop.fs.Path, Option[Set[String]])]
     try {
       ops.zipWithIndex.foreach {
-        case (TxOp.Put(t, docs, vf, vt), i) => stage(t, docs, "put", vf, vt, i)
+        case (TxOp.Put(t, docs, vf, vt), i) => add(i, t, docs, "put", vf, vt)
         case (TxOp.Delete(t, ids, vf, vt), i) =>
-          stage(t, ids.select(col(ID)), "delete", vf, vt, i)
+          add(i, t, ids.select(col(ID)), "delete", vf, vt)
         case (TxOp.DeleteWhere(t, where, vf, vt), i) =>
-          stage(t, snapshot.current(t).filter(where).select(col(ID)),
-            "delete", vf, vt, i)
+          add(i, t, snapshot.current(t).filter(where).select(col(ID)),
+            "delete", vf, vt)
         case (TxOp.Erase(t, ids), i) =>
-          stage(t, ids.select(col(ID)), "erase",
-            Some(lit("0001-01-01 00:00:00")), None, i)
+          add(i, t, ids.select(col(ID)), "erase", beginning, None)
         case (TxOp.EraseWhere(t, where), i) =>
-          stage(t,
-            viewEvents(t).filter(where).select(col(ID)).distinct(),
-            "erase", Some(lit("0001-01-01 00:00:00")), None, i)
+          add(i, t, viewEvents(t).filter(where).select(col(ID)).distinct(),
+            "erase", beginning, None)
         case (TxOp.Patch(t, patches, None), i) =>
-          stage(t, mergePatches(snapshot.current(t), patches), "put",
-            None, None, i)
+          add(i, t, mergePatches(snapshot.current(t), patches), "put",
+            None, None)
         case (TxOp.Patch(t, patches, Some((pvf, pvt))), i) =>
           val rects = Bitemporal.resolve(viewEvents(t),
             Bitemporal.TemporalSpec.All,
             Bitemporal.TemporalSpec.AsOf(lit(sysTime)))
-          val segs = patchGapSegments(rects, patches, pvf, pvt)
-          stage(t, segs, "put", Some(col(VF)), Some(col(VT)), i)
+          add(i, t, patchGapSegments(rects, patches, pvf, pvt), "put",
+            Some(col(VF)), Some(col(VT)))
         case (TxOp.Update(t, where, sets, vf, vt), i) =>
-          stage(t, applyUpdate(snapshot.current(t), where, sets), "put",
-            vf, vt, i)
+          add(i, t, applyUpdate(snapshot.current(t), where, sets), "put",
+            vf, vt)
         case (TxOp.Assert(label, cond), _) =>
           val rows = cond(snapshot).limit(2).collect()
           val ok = rows.length == 1 && !rows(0).isNullAt(0) &&
             rows(0).getBoolean(0)
           if (!ok) throw TxAbortedException(s"$label failed")
       }
-      val committedByTable =
-        scala.collection.mutable.Map[String, DataFrame]()
-      val eraseTables = ops.collect {
-        case TxOp.Erase(t, _) => t
-        case TxOp.EraseWhere(t, _) => t
-      }.toSet
-      val eraseObs = scala.collection.mutable
-        .Map[String, (org.apache.spark.sql.Observation, Int)]()
-      // the affected-row count rides each table's append write, like the
-      // erase marks: no extra job per staged part
-      val rowObs = scala.collection.mutable
-        .Map[String, org.apache.spark.sql.Observation]()
-      staged.foreach { case (table, dirs) =>
-        val parts = dirs.map(spark.read.parquet(_)).toSeq
-        val lubbed = parts.map(_.schema).reduce(DynamicSchema.mergeSchemas)
-        val df = parts.map(DynamicSchema.conform(_, lubbed))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-        val conformed = evolveSchema(table, df)
-        val obs =
-          if (eraseTables.contains(table)) eraseObservation(table) else None
-        obs.foreach(eraseObs(table) = _)
+      val tables = frames.keys.toSeq
+      val appended = tables.map { table =>
+        val df = evolveSchema(table, sequenced(frames(table).toSeq))
+        val dir = new org.apache.hadoop.fs.Path(dataDir(table))
+        landed ::= (dir -> entryNames(dir))
         val rows = org.apache.spark.sql.Observation(
           s"tx-rows-${System.nanoTime()}")
-        rowObs(table) = rows
-        obs.map { case (o, nb) => conformed.observe(o, eraseBucketAgg(nb)) }
-          .getOrElse(conformed)
-          .observe(rows, count(lit(1)).as("n"))
-          .write.mode("append").parquet(dataDir(table))
-        committedByTable(table) = conformed
+        df.observe(rows, count(lit(1)).as("n"))
+          .write.mode("append").parquet(dir.toString)
+        table -> rows
       }
-      XtDb.writePointHook(WritePoint.Appended(staged.keys.toSeq))
-      logTx(sysTime, staged.keys.mkString(","), s"tx[${ops.length}]",
+      XtDb.writePointHook(WritePoint.Appended(tables))
+      landed = Nil
+      logTx(sysTime, tables.mkString(","), s"tx[${ops.length}]",
         committed = true, error = None)
       // committed: readers see this transaction from here on, while the
       // erase marks and auto-compaction below still run
       publish(sysTime)
-      // the affected-row count (event rows of the committed delta, never
-      // a re-run of the user's DML plan), surfaced for the ADBC
-      // executeUpdate contract
-      lastTxAffectedRows = rowObs.toSeq.map { case (table, o) =>
+      ops.collect {
+        case TxOp.Erase(t, _) => t
+        case TxOp.EraseWhere(t, _) => t
+      }.distinct.foreach(markErasePending)
+      tables.foreach(maybeAutoCompact)
+      // counted on demand: only a caller that reports the count waits for
+      // the observations. A lost observation counts the table's events at
+      // this system time — what the commit wrote, not a rerun of its plan
+      lazy val rows = appended.map { case (table, o) =>
         observedRow(o).map(_.getAs[Long]("n")).getOrElse(
-          committedByTable(table).count())
+          events(table).filter(col(SF) === lit(sysTime)).count())
       }.sum
-      eraseTables.foreach(t => committedByTable.get(t).foreach(df =>
-        markErasePending(t, df.where(col(OP) === "erase"), sysTime,
-          observedBuckets(eraseObs.get(t)))))
-      staged.keys.foreach(maybeAutoCompact)
-      sysTime
+      (sysTime, () => rows)
     } catch {
       case e: TxAbortedException =>
         logTx(sysTime, "", "tx-abort", committed = false, Some(e.message))
         publish(sysTime)
         throw e
     } finally {
-      hadoopFs.delete(new org.apache.hadoop.fs.Path(txStage), true)
+      landed.foreach { case (dir, before) =>
+        dropLanded(dir, before, sysTime) }
+      pins.foreach(_.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.foreach(_.unpersist(blocking = false)))
+      inFlight.decrementAndGet()
     }
+  }
+
+  /** Delete what an append of a failed commit landed in `dir`: the loose
+    * data files (and Spark's `_SUCCESS` marker) that were not in its
+    * `before` listing and hold no row of another system time. Maintenance
+    * may have written into the same dir meanwhile — a fold's or purge's
+    * `_lv` level, a generation dir, `_`-prefixed sidecars — so no
+    * directory and no other `_`/`.`-prefixed entry is touched; another
+    * instance's commit may have landed loose files there too, and its
+    * rows carry its own system time. A dir the append made (`before`
+    * None) goes only when nothing else is left in it. */
+  private def dropLanded(dir: org.apache.hadoop.fs.Path,
+      before: Option[Set[String]], sysTime: java.sql.Timestamp): Unit = {
+    val fs = hadoopFs
+    if (fs.exists(dir)) {
+      val fresh = fs.listStatus(dir).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !before.exists(_.contains(n)) &&
+          (n == "_SUCCESS" || !(n.startsWith("_") || n.startsWith(".")))
+      }.map(_.getPath)
+      val data = fresh.filter(_.getName != "_SUCCESS")
+      val foreign =
+        if (data.isEmpty) Set.empty[String]
+        else spark.read.parquet(data.map(_.toString): _*)
+          .where(col(SF) =!= lit(sysTime))
+          .select(col("_metadata.file_name")).distinct()
+          .collect().map(_.getString(0)).toSet
+      fresh.filterNot(p => foreign(p.getName)).foreach(fs.delete(_, false))
+      if (before.isEmpty && fs.listStatus(dir).isEmpty) fs.delete(dir, false)
+    }
+  }
+
+  /** The names directly under `dir`; None when it does not exist. */
+  private def entryNames(
+      dir: org.apache.hadoop.fs.Path): Option[Set[String]] = {
+    val fs = hadoopFs
+    if (!fs.exists(dir)) None
+    else Some(fs.listStatus(dir).map(_.getPath.getName).toSet)
   }
 
   private def sameTypes(a: StructType, b: StructType): Boolean =
@@ -2312,11 +2310,10 @@ class XtDb(spark: SparkSession, val root: String) {
       sets: Seq[(String, Column)],
       validFrom: Option[Column] = None,
       validTo: Option[Column] = None): java.sql.Timestamp =
-    putDocs(table, applyUpdate(Bitemporal.current(events(table)), where, sets),
-      validFrom, validTo)
+    submitTx(Seq(TxOp.Update(table, where, sets, validFrom, validTo)))
 
   /** Tables materialised under this store's root (excluding `_`-prefixed
-    * system dirs: _txs, _stats, _staging). */
+    * system dirs: _txs, _stats, _roles, _schemas). */
   def tables: Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(root)
     if (!hadoopFs.exists(p)) Nil
@@ -2325,46 +2322,37 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** ASSERT — `cond` must evaluate to a single true row or the transaction
-    * aborts (recorded in xt.txs with committed = false). */
+    * aborts (recorded in xt.txs with committed = false); a passing one
+    * commits an empty transaction. */
   def assertTx(cond: DataFrame, label: String = "ASSERT"): Unit = {
-    val rows = cond.limit(2).collect()
-    val ok = rows.length == 1 && !rows(0).isNullAt(0) && rows(0).getBoolean(0)
-    if (!ok) {
-      synchronized {
-        val sysTime = nextSystemTime()
-        logTx(sysTime, "", "assert", committed = false,
-          error = Some(s"$label failed"))
-        publish(sysTime)
-      }
-      throw TxAbortedException(s"$label failed")
-    }
+    submitTx(Seq(TxOp.Assert(label, _ => cond)))
+    ()
   }
 
   /** `:put-docs` — docs must carry `_id` + payload columns. */
   def putDocs(table: String, docs: DataFrame,
       validFrom: Option[Column] = None,
       validTo: Option[Column] = None): java.sql.Timestamp =
-    appendEvents(table, docs, "put", validFrom, validTo)
+    submitTx(Seq(TxOp.Put(table, docs, validFrom, validTo)))
 
   /** `:delete-docs` — logical delete over a valid-time range (defaults to
     * [now, unbounded)). */
   def deleteDocs(table: String, ids: DataFrame,
       validFrom: Option[Column] = None,
       validTo: Option[Column] = None): java.sql.Timestamp =
-    appendEvents(table, ids.select(col(ID)), "delete", validFrom, validTo)
+    submitTx(Seq(TxOp.Delete(table, ids, validFrom, validTo)))
 
   /** `:erase-docs` — physical erasure of the document's entire history
     * (reference PolygonCalculator.kt:43-46: post-erase, no events resolve). */
   def eraseDocs(table: String, ids: DataFrame): java.sql.Timestamp =
-    appendEvents(table, ids.select(col(ID)), "erase",
-      Some(lit("0001-01-01 00:00:00")), None)
+    submitTx(Seq(TxOp.Erase(table, ids)))
 
   /** `:patch-docs` — field-wise merge onto the current version (missing
     * fields keep their current values; reference `_patch` expression.clj:2095
     * + static expansion sql.clj:3503-3601). Patches are expanded to put
     * events at submit time. */
   def patchDocs(table: String, patches: DataFrame): java.sql.Timestamp =
-    putDocs(table, mergePatches(Bitemporal.current(events(table)), patches))
+    submitTx(Seq(TxOp.Patch(table, patches)))
 
   private def mergePatches(cur: DataFrame, patches: DataFrame): DataFrame = {
     val curPayload = cur.columns.filterNot(c => metaCols.contains(c) || c == ST)
@@ -2395,12 +2383,8 @@ class XtDb(spark: SparkSession, val root: String) {
     * Versions outside the range are untouched (the new puts only supersede
     * within their own valid intervals). */
   def patchGaps(table: String, patches: DataFrame, validFrom: Column,
-      validTo: Option[Column]): java.sql.Timestamp = {
-    val rects = Bitemporal.resolve(events(table),
-      Bitemporal.TemporalSpec.All, Bitemporal.TemporalSpec.Current)
-    val segs = patchGapSegments(rects, patches, validFrom, validTo)
-    putDocs(table, segs, Some(col(VF)), Some(col(VT)))
-  }
+      validTo: Option[Column]): java.sql.Timestamp =
+    submitTx(Seq(TxOp.Patch(table, patches, Some((validFrom, validTo)))))
 
   /** Build the put batch for a gap-filling PATCH: merged segments over
     * existing rectangles + patch-only rows over the gaps, all clipped to
@@ -2544,12 +2528,17 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   /** COPY IN — bulk ingest a file/directory as one put transaction
-    * (reference COPY … FROM STDIN arrow/csv path). Format inferred from
-    * the extension unless given. Scale note: the read is a distributed
-    * scan, the append is a distributed write — nothing funnels through
-    * the driver. */
+    * (reference COPY … FROM STDIN arrow/csv path). Scale note: the read is
+    * a distributed scan, the append is a distributed write — nothing
+    * funnels through the driver. */
   def copyIn(table: String, path: String,
-      format: Option[String] = None): java.sql.Timestamp = {
+      format: Option[String] = None): java.sql.Timestamp =
+    submitTx(Seq(TxOp.Put(table, copySource(path, format))))
+
+  /** The docs of a COPY IN source file or directory, its format inferred
+    * from the extension unless given (csv, json/jsonl, else parquet). */
+  private[graft] def copySource(path: String,
+      format: Option[String]): DataFrame = {
     val fmt = format.getOrElse {
       val lower = path.toLowerCase
       if (lower.endsWith(".csv")) "csv"
@@ -2557,12 +2546,11 @@ class XtDb(spark: SparkSession, val root: String) {
       else "parquet"
     }
     val reader = spark.read
-    val docs = (fmt match {
+    (fmt match {
       case "csv" => reader.option("header", "true")
         .option("inferSchema", "true").format("csv")
       case other => reader.format(other)
     }).load(path)
-    putDocs(table, docs)
   }
 
   // ---- role catalog (GRANT/REVOKE ROLE; reference Sql.g4 grant stmts +
@@ -2633,8 +2621,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * registry, tx log, stats and role catalog — into `destRoot`, which a
     * fresh `new XtDb(spark, destRoot)` opens with identical query results
     * (reference export/export-snapshot!: a file-level copy of the current
-    * block's objects). `_staging` (in-flight tx scratch) is excluded.
-    * File copies go through the Hadoop FS API, so the same call works on
+    * block's objects). File copies go through the Hadoop FS API, so the same call works on
     * object storage. Returns (tables, filesCopied). */
   def exportSnapshot(destRoot: String): (Int, Int) = synchronized {
     val fs = hadoopFs
@@ -2643,9 +2630,7 @@ class XtDb(spark: SparkSession, val root: String) {
     fs.mkdirs(dst)
     var files = 0
     var tableCount = 0
-    val entries = fs.listStatus(src).filterNot(
-      _.getPath.getName == "_staging")
-    entries.foreach { st =>
+    fs.listStatus(src).foreach { st =>
       if (st.isDirectory && !st.getPath.getName.startsWith("_"))
         tableCount += 1
       org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,

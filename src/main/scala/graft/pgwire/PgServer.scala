@@ -1,6 +1,6 @@
 package graft.pgwire
 
-import graft.bitemporal.XtDb
+import graft.bitemporal.{TxOp, XtDb}
 import graft.sql.{SqlLexer, Tok, XtSqlEngine}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -550,9 +550,8 @@ final class PgServer(spark: SparkSession, db: XtDb, port: Int = 0,
             s"COPY format not supported over the wire: $other " +
               "(json | csv | arrow-file | arrow-stream)")
         }
-        val n = docs.count()
-        db.putDocs(table, docs)
-        msg(out, 'C')(w => cstr(w, s"COPY $n"))
+        val (_, n) = db.commit(Seq(TxOp.Put(table, docs)))
+        msg(out, 'C')(w => cstr(w, s"COPY ${n()}"))
     }
   }
 

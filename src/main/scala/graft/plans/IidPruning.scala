@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   *
   *  - a single scan is pinned in place;
   *  - a `Union` (`XtDb.events` with a pending backlog serves bucketed
-  *    base + levels ∪ the flat backlog; `submitTx` adds its staged ops)
+  *    base + levels ∪ the flat backlog; `submitTx` adds its pinned ops)
   *    is pinned branch by branch: the `_id` attribute maps into each
   *    branch by output position and follows plain attribute pass-through
   *    Projects and Filters down to the branch's scan. If any branch

@@ -73,6 +73,19 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
   def txEpoch: Long = txEnds
   private var txReadOnly: Boolean = false
   private var txSystemTime: Option[java.sql.Timestamp] = None
+  // event rows of this engine's latest commit (`sqlUpdate`), counted on
+  // demand; another engine committing on the same store never overwrites
+  // it
+  private var lastAffectedRows: () => Long = () => 0L
+
+  /** Commit `ops` through the store's one protocol, keeping its row
+    * count for [[sqlUpdate]]. */
+  private def commit(ops: Seq[TxOp],
+      systemTime: Option[java.sql.Timestamp] = None): java.sql.Timestamp = {
+    val (at, rows) = db.commit(ops, systemTime)
+    lastAffectedRows = rows
+    at
+  }
   private val sessionVars = scala.collection.mutable.Map.empty[String, String]
   private val preparedStmts = scala.collection.mutable.Map.empty[String, String]
   // Attached databases (ATTACH DATABASE, Sql.g4:55): read-side multi-db —
@@ -160,7 +173,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
         openTx = None
         txEnds += 1
         if (ops.isEmpty) statusDf("status", "COMMIT (empty)")
-        else txInfo(db.submitTx(ops.toSeq, txSystemTime))
+        else txInfo(commit(ops.toSeq, txSystemTime))
       case Rollback =>
         if (openTx.isEmpty)
           throw SqlParseException("ROLLBACK without an open transaction")
@@ -265,14 +278,14 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
         val out = bind(Seq("__returning_src" -> affected.drop(dropRet: _*)),
           s"SELECT $selectList FROM __returning_src")
         // Pin the RETURNING projection pre-commit WITHOUT driver memory:
-        // stage it to a temp parquet path (the tx-staging pattern) and
-        // return a scan of the staged copy — a 10^9-row UPDATE..RETURNING
-        // streams through executors; the driver never holds the rows.
-        val staged = java.nio.file.Files
-          .createTempDirectory("graft_returning").toString + "/out"
-        out.write.parquet(staged)
-        db.submitTx(Seq(toTxOp(dml)))
-        spark.read.parquet(staged)
+        // a local checkpoint keeps it in the executors' block stores, so
+        // a 10^9-row UPDATE..RETURNING streams through executors and the
+        // driver never holds the rows. The caller holds the result, so
+        // nothing here can release it: its blocks stay until the frame is
+        // garbage-collected and Spark's ContextCleaner drops them.
+        val pinned = out.localCheckpoint(eager = true)
+        commit(Seq(toTxOp(dml)))
+        pinned
       case dml =>
         openTx match {
           case Some(buf) =>
@@ -281,23 +294,24 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
             buf += toTxOp(dml)
             statusDf("status", s"staged (${buf.length} ops)")
           case None =>
-            txInfo(db.submitTx(Seq(toTxOp(dml))))
+            txInfo(commit(Seq(toTxOp(dml))))
         }
     }
   }
 
-  /** DML-only execution returning the affected event-row count from the
-    * transaction itself (the staged tx delta — never a second run of the
-    * DML's plan). Queries are rejected: their result is a relation, not a
-    * count, and belongs on the query path (ADBC `executeQuery`). Inside
-    * an open BEGIN the op is only staged, so the count is 0 until COMMIT. */
+  /** DML-only execution returning the affected event-row count of this
+    * engine's commit (the event rows its appends wrote — never a second
+    * run of the DML's plan). Queries are rejected: their result is a
+    * relation, not a count, and belongs on the query path (ADBC
+    * `executeQuery`). Inside an open BEGIN the op is only staged, so the
+    * count is 0 until COMMIT. */
   def sqlUpdate(text: String): Long = parse(text, dbNames) match {
     case Query(_) => throw SqlParseException(
       "executeUpdate requires a DML statement; use executeQuery for queries")
     case _: Insert | _: Update | _: Delete | _: Erase | _: Patch |
          _: CopyIn | _: WithReturning =>
       sql(text)
-      if (openTx.isDefined) 0L else db.lastTxAffectedRows
+      if (openTx.isDefined) 0L else lastAffectedRows()
     case other => throw SqlParseException(
       s"executeUpdate requires a DML statement, got " +
         other.getClass.getSimpleName.stripSuffix("$"))
@@ -334,7 +348,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
     * vector, api.clj:258-339). */
   def submitTxSql(stmts: Seq[String],
       systemTime: Option[java.sql.Timestamp] = None): java.sql.Timestamp =
-    db.submitTx(stmts.map(s => toTxOp(parse(s, dbNames))), systemTime)
+    commit(stmts.map(s => toTxOp(parse(s, dbNames))), systemTime)
 
   /** Execute a `;`-separated script (psql-style). Statements run in order,
     * each as its own transaction; the last statement's result is returned.
@@ -618,18 +632,7 @@ class XtSqlEngine(spark: SparkSession, db: XtDb,
       TxOp.DeleteWhere(table, where.map(expr).getOrElse(lit(true)), vf, vt)
     case Erase(table, where) => TxOp.EraseWhere(table, expr(where))
     case CopyIn(table, path, format) =>
-      val fmt = format.getOrElse {
-        val lower = path.toLowerCase
-        if (lower.endsWith(".csv")) "csv"
-        else if (lower.endsWith(".json") || lower.endsWith(".jsonl")) "json"
-        else "parquet"
-      }
-      val reader = spark.read
-      val docs = (fmt match {
-        case "csv" => reader.option("header", "true")
-          .option("inferSchema", "true").format("csv")
-        case other => reader.format(other)
-      }).load(path)
+      val docs = db.copySource(path, format)
       val (vf, vt) = validCols(docs)
       TxOp.Put(table, docs, vf, vt)
     case CreateTable(_, _, _) | DeclareLayout(_, _, _) | DropLayout(_) |

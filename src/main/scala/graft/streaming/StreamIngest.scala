@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.bitemporal.XtDb
+import graft.bitemporal.{TxOp, XtDb}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -96,8 +96,12 @@ object StreamIngest {
             else batch
           val dels = if (hasOp) batch.filter(col("_op") === "delete")
             .select("_id") else batch.limit(0).select("_id")
-          if (!puts.isEmpty) db.putDocs(table, puts)
-          if (hasOp && !dels.isEmpty) db.deleteDocs(table, dels)
+          // one transaction per micro-batch: puts, then deletes
+          val ops = Seq(
+            Option.when(!puts.isEmpty)(TxOp.Put(table, puts)),
+            Option.when(hasOp && !dels.isEmpty)(TxOp.Delete(table, dels)))
+            .flatten
+          if (ops.nonEmpty) db.submitTx(ops)
         }
         ()
       }

@@ -59,14 +59,6 @@ object EngineMetrics {
   @volatile var lastPurgeUsedManifest: Boolean = false
   @volatile var lastPurgeScannedFiles: Seq[String] = Nil
 
-  /** Erase-mark commit-path accounting (round 16, ADVICE r15 #4): marks
-    * whose bucket set rode the append write's own job (`Dataset.observe`
-    * — zero extra commit-path jobs) vs marks that had to run the
-    * fallback recompute agg (manifest bucket count changed between the
-    * append and the CAS — a racing full compact, rare). */
-  val eraseMarkObserved = new java.util.concurrent.atomic.AtomicLong
-  val eraseMarkRecomputes = new java.util.concurrent.atomic.AtomicLong
-
   /** Snapshot-fold driver-job accounting (round 17, VERDICT r16 #2):
     * folds whose changed-id bucket histogram RODE the fold's single
     * delta-aggregate job vs folds that had to run the separate

@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   *  - `GET /`                → index page
   *  - `GET /metrics`         → Prometheus text exposition (EngineMetrics)
   *  - `GET /healthz/started` → 503 with `X-Graft-Databases-Catching-Up`
-  *    while in-flight transaction scratch exists (`_staging` — the
-  *    repo's synchronous analog of "latest processed < latest submitted
-  *    msg id"); 200 "Started." once the log is drained
+  *    while a commit on this instance is in flight (the repo's
+  *    synchronous analog of "latest processed < latest submitted msg
+  *    id"); 200 "Started." once none is
   *  - `GET /healthz/alive`   → per-table block lag = physical files
   *    beyond one per storage bucket (the uncompacted backlog the
   *    reference reads from its BlockCatalog); lag > 5 → 503
@@ -49,15 +49,6 @@ object Healthz {
     * (`XtDb.compactIfLagged`) shares. */
   def blockLag(db: XtDb, table: String): Long = db.blockLag(table)
 
-  /** In-flight transaction scratch (the `_staging` dir): non-empty means
-    * a transaction is mid-commit — the synchronous store's equivalent of
-    * the reference's submitted-but-not-processed message window. */
-  def catchingUp(db: XtDb): Boolean = {
-    val fs = db.hadoopFs
-    val p = new org.apache.hadoop.fs.Path(s"${db.root}/_staging")
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
   def serve(spark: SparkSession, db: Option[XtDb], port: Int = 0)
       : HttpServer = {
     val server = HttpServer.create(new java.net.InetSocketAddress(port), 0)
@@ -85,7 +76,7 @@ object Healthz {
 
     server.createContext("/healthz/started", (ex: HttpExchange) =>
       try {
-        val catching = db.exists(catchingUp)
+        val catching = db.exists(_.commitInFlight)
         if (catching)
           respond(ex, 503, "Catching up: transactions in flight",
             Seq("X-Graft-Databases-Catching-Up" -> "1"))

@@ -261,35 +261,34 @@ class FoldPruneSpec extends AnyFunSuite {
     assert(got.count() === 548L)
   }
 
-  test("ADVICE r15 #4 — the erase-mark bucket set rides the append " +
-      "write's own job (observe): zero extra commit-path driver jobs, " +
-      "and the recorded buckets are exact") {
+  test("ADVICE r15 #4 — the erase mark starts the clock; the fold that " +
+      "carries the erase into a level records its exact buckets") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
     val db = newDb("erase-observe")
     db.putDocs("o", spark.range(1, 501)
       .selectExpr("id AS _id", "concat('r', id) AS data"))
-    db.compact("o") // manifest exists → marks are addressed
-    val obs0 = EngineMetrics.eraseMarkObserved.get()
-    val rec0 = EngineMetrics.eraseMarkRecomputes.get()
+    db.compact("o") // manifest exists → the erase mark lands in it
     db.eraseDocs("o", Seq(Tuple1(13L), Tuple1(250L)).toDF("_id"))
-    assert(EngineMetrics.eraseMarkObserved.get() === obs0 + 1,
-      "the mark must consume the write job's observation")
-    assert(EngineMetrics.eraseMarkRecomputes.get() === rec0,
-      "no fallback recompute job may run in the common path")
-    // the observed addressing is exact: the manifest's erase buckets
-    // are the erased iids' buckets
+    def evmeta = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"${db.root}/o/_evmeta.json")), "UTF-8")
+    def field(pattern: String) =
+      pattern.r.findFirstMatchIn(evmeta).get.group(1)
+    assert(field(""""ecyc":(\d+)""").toInt >= 1,
+      "the erase commit must start the purge clock")
+    assert(field(""""ebk":\[([^\]]*)\]""").isEmpty,
+      "the erase mark carries no bucket addressing")
+    assert(db.compactIncremental("o"), "fold the erase into a level")
+    // the fold's addressing is exact: the manifest's erase buckets are
+    // the erased iids' buckets
     val expected = Seq("13", "250").map(s =>
       spark.range(1).select(pmod(hash(md5(lit(s))), lit(16)).cast("int"))
         .as[Int].head()).toSet
-    val js = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"${db.root}/o/_evmeta.json")), "UTF-8")
-    val ebk = """"ebk":\[([^\]]*)\]""".r.findFirstMatchIn(js).get.group(1)
-      .split(",").filter(_.nonEmpty).map(_.trim.toInt).toSet
-    assert(expected.subsetOf(ebk),
-      s"manifest erase buckets $ebk must contain $expected")
-    // and the purge still takes the manifest-addressed path end to end
-    assert(db.compactIncremental("o"), "fold the erase into a level")
+    val ebk = field(""""ebk":\[([^\]]*)\]""").split(",").filter(_.nonEmpty)
+      .map(_.trim.toInt).toSet
+    assert(ebk === expected,
+      s"manifest erase buckets $ebk must be $expected")
+    // and the purge takes the manifest-addressed path end to end
     assert(db.purgeErasedBuckets("o"))
     assert(EngineMetrics.lastPurgeUsedManifest)
     assert(db.asOf("o").count() === 498L)

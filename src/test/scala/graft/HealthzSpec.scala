@@ -1,14 +1,17 @@
 package graft
 
 import graft.bitemporal.XtDb
+import graft.bitemporal.XtDb.WritePoint
 import graft.sql.XtSqlEngine
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+
 /** Healthz HTTP surface (reference healthz.clj analogue): every probe is
   * exercised against REAL engine state — block lag from actual small
-  * files, catching-up from actual staging scratch, finish-block running
-  * actual compaction. */
+  * files, catching-up from a commit actually held in flight, finish-block
+  * running actual compaction. */
 class HealthzSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -32,7 +35,7 @@ class HealthzSpec extends AnyFunSuite {
   }
 
   test("healthz surface: index, ready, metrics, alive lifecycle with " +
-      "real block lag, finish-block compaction, staged-tx started probe") {
+      "real block lag, finish-block compaction, in-flight started probe") {
     val root = java.nio.file.Files.createTempDirectory("graft_healthz")
       .toString
     val db = new XtDb(spark, root)
@@ -79,17 +82,35 @@ class HealthzSpec extends AnyFunSuite {
       // ... and GET is rejected
       assert(get(port, "/system/finish-block")._1 == 405)
 
-      // started: drained log → 200; a staged in-flight tx file → 503
+      // started: no commit in flight → 200; a commit held at its Appended
+      // write point → 503; released → 200
       assert(get(port, "/healthz/started") match {
         case (200, "Started.", _) => true; case _ => false
       })
-      val staging = java.nio.file.Paths.get(root, "_staging")
-      java.nio.file.Files.createDirectories(staging)
-      java.nio.file.Files.writeString(staging.resolve("tx0"), "wip")
-      val (sc, sbody, sconn) = get(port, "/healthz/started")
-      assert(sc == 503 && sbody.startsWith("Catching up"))
-      assert(sconn.getHeaderField("X-Graft-Databases-Catching-Up") == "1")
-      java.nio.file.Files.delete(staging.resolve("tx0"))
+      val held = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val pool = Executors.newSingleThreadExecutor()
+      try WritePoints.withHook { case WritePoint.Appended(_) =>
+        held.countDown()
+        release.await(30, TimeUnit.SECONDS)
+      } {
+        val commit = pool.submit(new Callable[Any] {
+          def call(): Any = eng.sql("INSERT INTO ht RECORDS {_id: 2, v: 'y'}")
+        })
+        try {
+          assert(held.await(30, TimeUnit.SECONDS),
+            "the commit never reached its Appended write point")
+          val (sc, sbody, sconn) = get(port, "/healthz/started")
+          assert(sc == 503 && sbody.startsWith("Catching up"))
+          assert(sconn.getHeaderField("X-Graft-Databases-Catching-Up") == "1")
+        } finally release.countDown()
+        commit.get(30, TimeUnit.SECONDS)
+      } finally pool.shutdownNow()
+      assert(get(port, "/healthz/started")._1 == 200)
+      // a commit that throws is no longer in flight once it has thrown
+      intercept[IllegalStateException](
+        WritePoints.crashAt(WritePoints.appended)(
+          eng.sql("INSERT INTO ht RECORDS {_id: 3, v: 'z'}")))
       assert(get(port, "/healthz/started")._1 == 200)
     } finally server.stop(0)
   }

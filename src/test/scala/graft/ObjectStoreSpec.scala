@@ -142,7 +142,7 @@ class ObjectStoreSpec extends AnyFunSuite {
     val cur = Bitemporal.current(db.events("t"))
       .select("_id", "n").as[(Long, Long)].collect().sortBy(_._1)
     assert(cur.toSeq == Seq((1L, 11L), (2L, 20L)))
-    // staging area is cleaned up
+    // a transaction stages nothing in the store: no scratch dir
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(ls(fs, s"$root/_staging").isEmpty)

@@ -76,7 +76,7 @@ class SessionSurfaceSpec extends AnyFunSuite {
     val lines = sources.collect { case (p, text) if p.startsWith(storeDir) =>
       text.linesIterator.count(catchAll.findFirstIn(_).isDefined)
     }.sum
-    assert(lines === 5)
+    assert(lines === 4)
   }
 
   test("under src/main only files defining a main read the environment") {

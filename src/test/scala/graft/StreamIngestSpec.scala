@@ -31,6 +31,7 @@ class StreamIngestSpec extends AnyFunSuite {
     q.processAllAvailable()
 
     assert(db.asOf("docs").count() == 2)
+    val committedTxs = db.txs.filter(col("committed")).count()
 
     // batch 2: update doc 1, delete doc 2
     Seq((1L, "a2", "put"), (2L, "b", "delete"))
@@ -38,6 +39,16 @@ class StreamIngestSpec extends AnyFunSuite {
       .write.mode("append").parquet(logDir)
     q.processAllAvailable()
     q.stop()
+
+    // the micro-batch is ONE transaction: one committed log row, and its
+    // update and delete share one system time
+    assert(db.txs.filter(col("committed")).count() == committedTxs + 1)
+    val batch2 = db.events("docs")
+      .filter((col("_id") === 1L && col("val") === "a2") ||
+        (col("_id") === 2L && col("_op") === "delete"))
+      .select("_system_from").collect().toSeq
+    assert(batch2.length == 2 && batch2.distinct.length == 1,
+      s"update and delete must share one system time: $batch2")
 
     val cur = db.asOf("docs").select("_id", "val")
       .as[(Long, String)].collect().toMap

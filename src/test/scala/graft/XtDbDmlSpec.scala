@@ -49,8 +49,10 @@ class XtDbDmlSpec extends AnyFunSuite {
 
     val txs = db.txs.select("tx_op", "committed").collect()
       .map(r => (r.getString(0), r.getBoolean(1))).toSeq
-    assert(txs.contains(("put", true)))
-    assert(txs.contains(("assert", false)))
+    // every API write is a submitTx: the put is a one-op transaction and
+    // the failed ASSERT its abort
+    assert(txs.contains(("tx[1]", true)))
+    assert(txs.contains(("tx-abort", false)))
   }
 
   test("submitTx: multi-op atomic commit at one system time") {
