@@ -2,6 +2,7 @@ package graft.bitemporal
 
 import graft.functions.{DynamicSchema, Ids}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -76,8 +77,8 @@ trait TxSnapshot {
   * whenever storage still vouches for it (generation pointer + manifest;
   * an append from ANY instance invalidates). Maintenance is incremental
   * and crash-safe: leveled O(backlog) folds, full compaction committed
-  * by one pointer CAS (zero-exchange at an unchanged fanout), bounded
-  * bucket-local erase purge, and an incremental declared-layout snapshot
+  * by one pointer CAS (zero-exchange at an unchanged fanout; it is also
+  * the bounded erase purge), and an incremental declared-layout snapshot
   * (folded from the changed ids' event buckets). `Bitemporal.asOf`'s
   * `_iid` windows and
   * every as-of join on `_iid` then plan with ZERO exchange: the per-query
@@ -267,18 +268,18 @@ class XtDb(spark: SparkSession, val root: String) {
     case Some(s) =>
       val bucketed = s.base ++ s.levelFiles
       if (bucketed.nonEmpty) {
-        val rel = bucketedRelation(table, bucketed, s.meta.buckets)
+        val rel = eventRelation(table, bucketed, Some(s.meta.buckets))
         // backlog pending: serve bucketed(base+levels) ∪ flat backlog.
         // The union's output partitioning is unknown (windows pay their
         // exchange until the next fold — correct either way); an
         // `_id = k` read pins both branches (IidBucketPruning)
         if (s.backlog.isEmpty) rel
-        else rel.unionByName(explicitRead(table, s.backlog))
+        else rel.unionByName(eventRelation(table, s.backlog))
       } else if (s.meta.levels.isEmpty && s.meta.consumed.isEmpty)
         // no bucketed files at all: the directory listing IS the live
         // set — the plain flat read (incl. the empty-table case)
         flatEvents(table)
-      else explicitRead(table, s.backlog)
+      else eventRelation(table, s.backlog)
   }
 
   /** The flat (file-level) event read — the write path's view: every
@@ -475,21 +476,18 @@ class XtDb(spark: SparkSession, val root: String) {
     *  - `levels`: ordered level dir names under the live generation dir
     *    (each one bucketed fold of appended backlog);
     *  - `consumed`: root append files whose rows live in a level — still
-    *    on disk for one cycle, excluded from reads;
+    *    on disk for one cycle, left out of every read;
     *  - `retired`: level dirs superseded by a level merge — same lease;
     *  - `lvseq`: monotone level-name counter;
     *  - `eraseCycles`: maintenance cycles elapsed since the oldest
     *    UNPURGED erase entered the log (0 = none pending). Bounds the
     *    GDPR purge latency: once it reaches
     *    `spark.graft.erasePurge.maxCycles`, [[compactIfLagged]] runs the
-    *    BUCKET-LOCAL purge ([[purgeErasedBuckets]]) regardless of the
-    *    level-bytes ratio — a slow-growing table can no longer hold
-    *    erased payload on disk indefinitely waiting for a geometric
-    *    escalation that never comes;
-    *  - `excluded`: RELATIVE paths (base file name, or `level/name`) of
-    *    bucket files superseded by a bucket-local purge — still on disk
-    *    for one cycle (read lease), excluded from every read, deleted at
-    *    the next fold;
+    *    full [[compact]] regardless of the level-bytes ratio — a
+    *    slow-growing table can no longer hold erased payload on disk
+    *    indefinitely waiting for a geometric escalation that never comes.
+    *    The clock carries no addressing: the full compaction purges every
+    *    erased iid it reads;
     *  - `sweepDirs`: TABLE-DIR-relative entries (a superseded generation
     *    dir, or legacy gen-0 loose parts) that held erased payload when a
     *    full compaction purged it — the usual lazy generation GC waits
@@ -497,22 +495,7 @@ class XtDb(spark: SparkSession, val root: String) {
     *    are swept at the next maintenance cycle instead. */
   private[graft] final case class EvMeta(gen: Int, buckets: Int,
       levels: Seq[String], consumed: Set[String], retired: Seq[String],
-      lvseq: Int, eraseCycles: Int = 0,
-      excluded: Set[String] = Set.empty,
-      sweepDirs: Seq[String] = Nil,
-      // pending-erase ADDRESSING, recorded by every fold that carries an
-      // erase event into a level (the purge never runs over an unfolded
-      // backlog) — the purge then reads ONLY the affected buckets,
-      // end-to-end, instead of re-scanning the live set to discover them.
-      //  - `eraseBuckets`: iid-bucket ids (at this manifest's fanout) of
-      //    every UNPURGED erased id; bounded by the 4096 fanout cap.
-      //  - `eraseMaxSf`: max `_system_from` (micros) of the unpurged
-      //    erase events — compared against the snapshot watermark at
-      //    purge time so a snapshot that never folded the erase (a
-      //    swallowed fold failure) is repaired BEFORE the markers are
-      //    physically deleted (GDPR bound, ADVICE r14 #3).
-      eraseBuckets: Set[Int] = Set.empty,
-      eraseMaxSf: Long = 0L)
+      lvseq: Int, eraseCycles: Int = 0, sweepDirs: Seq[String] = Nil)
 
   private def evMetaPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_evmeta.json")
@@ -530,8 +513,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * documented contract and the write is unconditional. */
   private[graft] def writeEvMeta(table: String, m: EvMeta,
       expectVersion: Long = -1L): Unit = {
-    require((m.levels ++ m.consumed ++ m.retired ++ m.excluded ++
-        m.sweepDirs)
+    require((m.levels ++ m.consumed ++ m.retired ++ m.sweepDirs)
         .forall(n => !n.exists(c => c == '"' || c == '\\' || c == '\n')),
       "manifest entries must be plain file/dir names")
     conditionalPut(evMetaPath(table), evMetaJson(m), expectVersion,
@@ -541,14 +523,11 @@ class XtDb(spark: SparkSession, val root: String) {
   }
 
   private def evMetaJson(m: EvMeta): String =
-    s"""{"v":3,"gen":${m.gen},""" +
+    s"""{"v":4,"gen":${m.gen},""" +
       s""""buckets":${m.buckets},"levels":${jsonArr(m.levels)},""" +
       s""""consumed":${jsonArr(m.consumed)},""" +
       s""""retired":${jsonArr(m.retired)},"lvseq":${m.lvseq},""" +
-      s""""ecyc":${m.eraseCycles},"excl":${jsonArr(m.excluded)},""" +
-      s""""sweep":${jsonArr(m.sweepDirs)},""" +
-      s""""ebk":[${m.eraseBuckets.toSeq.sorted.mkString(",")}],""" +
-      s""""emsf":${m.eraseMaxSf}}"""
+      s""""ecyc":${m.eraseCycles},"sweep":${jsonArr(m.sweepDirs)}}"""
 
   /** CAS-if-available PUT (see [[writeEvMeta]]). */
   private def conditionalPut(p: org.apache.hadoop.fs.Path,
@@ -569,11 +548,10 @@ class XtDb(spark: SparkSession, val root: String) {
     * wrong rows. */
   private[graft] def readEvMeta(table: String): Option[EvMeta] =
     jsonSidecar(evMetaPath(table)).map { j =>
-      j.requireVersion(3)
+      j.requireVersion(4)
       EvMeta(j.int("gen"), j.int("buckets"), j.strs("levels"),
         j.strs("consumed").toSet, j.strs("retired"), j.int("lvseq"),
-        j.int("ecyc"), j.strs("excl").toSet, j.strs("sweep"),
-        j.ints("ebk"), j.long("emsf"))
+        j.int("ecyc"), j.strs("sweep"))
     }
 
   /** The manifest with the version read before it. A manifest that
@@ -690,22 +668,9 @@ class XtDb(spark: SparkSession, val root: String) {
       backlog: Seq[org.apache.hadoop.fs.FileStatus],
       levelFiles: Seq[org.apache.hadoop.fs.FileStatus])
 
-  /** Relative path of a live file under the data dir — the key the
-    * manifest's `excluded` list uses (base file = its name; level file =
-    * `level/name`). */
-  private def relUnderData(table: String,
-      f: org.apache.hadoop.fs.FileStatus): String = {
-    val dd = hadoopFs.makeQualified(
-      new org.apache.hadoop.fs.Path(dataDir(table))).toString
-    val full = f.getPath.toString
-    if (full.startsWith(dd + "/")) full.substring(dd.length + 1)
-    else f.getPath.getName
-  }
-
   /** Resolve the manifest against the live listing: base bucket files,
-    * un-consumed flat backlog, level files — minus purge-superseded
-    * `excluded` files. None = no (gen-matching) manifest — the table
-    * reads flat. */
+    * un-consumed flat backlog, level files. None = no (gen-matching)
+    * manifest — the table reads flat. */
   private def liveFileSets(table: String): Option[LiveSets] =
     cachedResolvedEvMeta(table) match {
       case Some(m) if currentGen(table).getOrElse(0) == m.gen =>
@@ -715,63 +680,44 @@ class XtDb(spark: SparkSession, val root: String) {
         // it reads as flat backlog instead of being wrongly prunable
         def isBase(name: String) =
           isBucketFile(name) && bucketIdOf(name) < m.buckets
-        // exclusion matches on the DATA-DIR-RELATIVE path, the key the
-        // purge writes (a base file's name, a level file's `level/name`)
-        val base = rootFiles.filter(f => isBase(f.getPath.getName) &&
-          !m.excluded.contains(relUnderData(table, f)))
-        val backlog = rootFiles.filterNot(f =>
-          isBase(f.getPath.getName) ||
-            m.consumed.contains(f.getPath.getName))
-        val lv = m.levels.flatMap(levelParquet(table, _)).filterNot(f =>
-          m.excluded.contains(relUnderData(table, f)))
-        Some(LiveSets(m, base, backlog, lv))
+        val (base, rest) = rootFiles.partition(f => isBase(f.getPath.getName))
+        val backlog =
+          rest.filterNot(f => m.consumed.contains(f.getPath.getName))
+        Some(LiveSets(m, base, backlog,
+          m.levels.flatMap(levelParquet(table, _))))
       case _ => None
     }
 
-  /** One bucketed relation over an EXPLICIT file list (public Spark API:
-    * InMemoryFileIndex over leaf files + HadoopFsRelation carrying the
-    * BucketSpec, surfaced via `baseRelationToDataFrame`). Catalyst sees
-    * `HashPartitioning(_iid, buckets)` on the scan — windows/joins on
-    * `_iid` plan with zero exchange, `_iid = k` prunes to one bucket —
-    * with no session-catalog registration to go stale. */
-  private def bucketedRelation(table: String,
-      files: Seq[org.apache.hadoop.fs.FileStatus], buckets: Int): DataFrame =
-    bucketedRelationFor(files, buckets, IID, registeredSchema(table),
-      sortCols = Nil)
-
-  /** Explicit-file bucketed relation on an arbitrary key (the
-    * declared-layout snapshot twin of [[bucketedRelation]]). `sortCols`
-    * may claim per-file sort order — Spark only exploits it when each
-    * bucket has a single file, which the copy-on-write snapshot folds
-    * preserve. */
-  private def bucketedRelationFor(
-      files: Seq[org.apache.hadoop.fs.FileStatus], buckets: Int,
-      key: String, schema: StructType,
-      sortCols: Seq[String]): DataFrame = {
+  /** The one relation over an EXPLICIT file list the manifest resolved
+    * (public Spark API: a [[graft.storage.StaticFileIndex]] +
+    * HadoopFsRelation, surfaced via `baseRelationToDataFrame`). The
+    * manifest already vouches for these statuses, so the relation plans
+    * with ZERO further filesystem calls — a path-based read's
+    * InMemoryFileIndex re-stats every leaf per query, and past Spark's
+    * parallel-discovery threshold (32 paths) runs a listing job. With
+    * `bucketing`, Catalyst sees `HashPartitioning(key, buckets)` on the
+    * scan — windows/joins on the key plan with zero exchange, `_iid = k`
+    * prunes to one bucket — with no session-catalog registration to go
+    * stale; its sort columns only count when each bucket has a single
+    * file, which the copy-on-write snapshot folds preserve. An empty list
+    * is the correctly-typed empty relation, never a directory listing
+    * (which could resurrect consumed files). */
+  private def relationFor(files: Seq[org.apache.hadoop.fs.FileStatus],
+      schema: StructType, bucketing: Option[BucketSpec]): DataFrame = {
     import org.apache.spark.sql.execution.datasources._
-    // the manifest already vouches for these statuses — a StaticFileIndex
-    // plans with ZERO further filesystem calls (InMemoryFileIndex would
-    // re-stat every leaf file per query: N metadata RPCs per serve on an
-    // object store)
-    val index = new graft.storage.StaticFileIndex(files)
-    val rel = HadoopFsRelation(index, new StructType(), schema,
-      Some(org.apache.spark.sql.catalyst.catalog.BucketSpec(
-        buckets, Seq(key), sortCols)),
+    val rel = HadoopFsRelation(new graft.storage.StaticFileIndex(files),
+      new StructType(), schema, bucketing,
       new parquet.ParquetFileFormat(), Map.empty)(spark)
     spark.baseRelationToDataFrame(rel)
   }
 
-  /** Plain (non-bucketed) read of an explicit live file list under the
-    * registered LUB schema. An empty list is the correctly-typed empty
-    * relation, never a directory listing (which could resurrect consumed
-    * files). */
-  private def explicitRead(table: String,
-      files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
-    val st = registeredSchema(table)
-    if (files.isEmpty) spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-    else spark.read.schema(st).parquet(files.map(_.getPath.toString): _*)
-  }
+  /** Event-log files under the registered LUB schema; `buckets` = the
+    * files' `_iid` hash fanout, None for a flat backlog. */
+  private def eventRelation(table: String,
+      files: Seq[org.apache.hadoop.fs.FileStatus],
+      buckets: Option[Int] = None): DataFrame =
+    relationFor(files, registeredSchema(table),
+      buckets.map(BucketSpec(_, Seq(IID), Nil)))
 
   /** The iid-bucketed event log, iff the manifest's live set has NO
     * pending flat backlog: any append from any instance shows up in the
@@ -787,7 +733,8 @@ class XtDb(spark: SparkSession, val root: String) {
   def bucketedEventsIfValid(table: String): Option[DataFrame] =
     liveFileSets(table) match {
       case Some(s) if s.backlog.isEmpty && (s.base ++ s.levelFiles).nonEmpty =>
-        Some(bucketedRelation(table, s.base ++ s.levelFiles, s.meta.buckets))
+        Some(eventRelation(table, s.base ++ s.levelFiles,
+          Some(s.meta.buckets)))
       case _ => None
     }
 
@@ -853,12 +800,12 @@ class XtDb(spark: SparkSession, val root: String) {
 
   /** Start the erase-purge clock at the erase commit itself (one tiny
     * manifest PUT), so the latency bound counts from the user's erase,
-    * not from whenever the first fold happens to notice it. The mark
-    * carries no addressing: the purge never runs over an unfolded
-    * backlog, and the fold that carries the erase into a level records
-    * its buckets and system time from its own input
-    * ([[compactIncremental]]). Maintenance metadata — must never fail the
-    * committed erase; a lost mark costs latency, never the bound. */
+    * not from whenever the first fold happens to notice it. The clock is
+    * all the purge needs: once overdue, the full [[compact]] purges
+    * every erased iid it reads. Maintenance metadata — must never fail
+    * the committed erase; a lost mark costs latency, never the bound (the
+    * fold that carries the erase into a level starts the clock from its
+    * own input, [[compactIncremental]]). */
   private def markErasePending(table: String): Unit =
     maintenance(s"erase-pending mark on '$table'",
         "erase is committed; the fold will re-detect it") {
@@ -1184,7 +1131,7 @@ class XtDb(spark: SparkSession, val root: String) {
     * files exist — or the listing when there is no manifest. */
   private def liveRead(table: String, sets: Option[LiveSets]): DataFrame =
     sets match {
-      case Some(s) => explicitRead(table, s.base ++ s.levelFiles ++ s.backlog)
+      case Some(s) => eventRelation(table, s.base ++ s.levelFiles ++ s.backlog)
       case None => flatEvents(table)
     }
 
@@ -1210,8 +1157,11 @@ class XtDb(spark: SparkSession, val root: String) {
     * Compaction also completes any deferred schema migration: the read
     * conforms every file to the registered LUB schema, so the rewritten
     * files are physically wide and later scans stop paying the widening
-    * promotion. Single-writer: do not run concurrently with appends. */
-  def compact(table: String): Unit = {
+    * promotion. Runs under the commit monitor (re-entrant for the
+    * auto-compaction inside a commit): a commit from another thread
+    * waits for the flip instead of appending into the generation this
+    * rewrite is about to supersede. */
+  def compact(table: String): Unit = synchronized {
     // a layout may be declared before the first write — nothing to fold
     if (!tableExists(table)) return
     // a bucketed base with a backlog: fold the backlog first (O(backlog))
@@ -1231,7 +1181,7 @@ class XtDb(spark: SparkSession, val root: String) {
     val aligned = sets.filter(s => s.backlog.isEmpty && s.meta.buckets == nb)
       .map(s => s.base ++ s.levelFiles).filter(_.nonEmpty)
     val ev = aligned match {
-      case Some(files) => bucketedRelation(table, files, nb)
+      case Some(files) => eventRelation(table, files, Some(nb))
       case None => liveRead(table, sets)
     }
     // erased payload is being purged from the NEW generation — the old
@@ -1376,6 +1326,14 @@ class XtDb(spark: SparkSession, val root: String) {
     e.substring(0, e.lastIndexOf('|'))
   private def snapEntryLen(e: String): Long =
     e.substring(e.lastIndexOf('|') + 1).toLong
+  /** A snapshot file's status from its manifest entry under `dd` — zero
+    * filesystem calls: the length is the manifest's (immutable files),
+    * the mtime is immaterial to split planning and footer reading. */
+  private def snapStatus(dd: String, e: String)
+      : org.apache.hadoop.fs.FileStatus =
+    new org.apache.hadoop.fs.FileStatus(snapEntryLen(e), false, 1,
+      128L * 1024 * 1024, 0L,
+      new org.apache.hadoop.fs.Path(s"$dd/${snapEntryPath(e)}"))
 
   private def snapMetaPath(table: String) =
     new org.apache.hadoop.fs.Path(s"${tableDir(table)}/_snapmeta.json")
@@ -1540,7 +1498,7 @@ class XtDb(spark: SparkSession, val root: String) {
         def filesOfBuckets(bks: Set[Int]) =
           live.filter(f => bks.contains(bucketIdOf(f.getPath.getName)))
         val delta = if (s.levelFiles.isEmpty) None
-          else Some(explicitRead(table, s.levelFiles)
+          else Some(eventRelation(table, s.levelFiles)
             .filter(col(SF) > lit(wmTs)))
         // a CROSSED valid-time boundary changed ids with no event above
         // the watermark — but the activation IS event-addressed: every
@@ -1557,7 +1515,7 @@ class XtDb(spark: SparkSession, val root: String) {
             val lo = microsToTs(sm.expires)
             val bFiles = filesOfBuckets(crossedBuckets)
             if (bFiles.isEmpty) None
-            else Some(bucketedRelation(table, bFiles, evFan).filter(
+            else Some(eventRelation(table, bFiles, Some(evFan)).filter(
                 (col(VF) >= lit(lo) && col(VF) <= lit(nowTs)) ||
                 (col(VT) >= lit(lo) && col(VT) <= lit(nowTs)))
               .select(col(IID)))
@@ -1614,7 +1572,7 @@ class XtDb(spark: SparkSession, val root: String) {
           val files = filesOfBuckets(bks)
           val fresh =
             if (files.isEmpty) Map.empty[Int, Long]
-            else perBucketMins(bucketedRelation(table, files, evFan))
+            else perBucketMins(eventRelation(table, files, Some(evFan)))
           val merged = deltaMins.foldLeft((sm.bmins -- bks) ++ fresh) {
             case (m, (b, v)) =>
               // recomputed buckets' files already include the delta
@@ -1687,7 +1645,7 @@ class XtDb(spark: SparkSession, val root: String) {
             if (threshold >= 0 && changedCount * 32L <= threshold)
               broadcast(changed)
             else changed
-          val evChanged = bucketedRelation(table, resolveFiles, evFan)
+          val evChanged = eventRelation(table, resolveFiles, Some(evFan))
             .join(changedSide, Seq(IID), "left_semi")
           val newCur = Bitemporal.resolve(evChanged,
             Bitemporal.TemporalSpec.Current,
@@ -1703,14 +1661,8 @@ class XtDb(spark: SparkSession, val root: String) {
           val snapSchema = loadSnapSchema(table).getOrElse(newCur.schema)
           val (oldTouched, untouched) = sm.files.partition(n =>
             touched.contains(bucketIdOf(snapEntryPath(n).split('/').last)))
-          val keep =
-            if (oldTouched.isEmpty)
-              spark.createDataFrame(
-                new java.util.ArrayList[org.apache.spark.sql.Row](),
-                snapSchema)
-            else spark.read.schema(snapSchema)
-              .parquet(oldTouched.map(n => s"$dd/${snapEntryPath(n)}"): _*)
-              .join(changedSide, Seq(IID), "left_anti")
+          val keep = relationFor(oldTouched.map(snapStatus(dd, _)),
+            snapSchema, None).join(changedSide, Seq(IID), "left_anti")
           val lub = DynamicSchema.mergeSchemas(snapSchema, newCur.schema)
           val merged = DynamicSchema.conform(keep, lub)
             .unionByName(DynamicSchema.conform(newCur, lub),
@@ -1763,15 +1715,9 @@ class XtDb(spark: SparkSession, val root: String) {
           case Some(s) if s.meta.gen == m.gen &&
               s.meta.lvseq == m.lvseq && s.backlog.isEmpty =>
             val dd = dataDir(table)
-            // zero-RPC serve: length from the manifest (immutable
-            // files), mtime immaterial to split/footer reading
-            val files = m.files.map(n =>
-              new org.apache.hadoop.fs.FileStatus(snapEntryLen(n), false,
-                1, 128L * 1024 * 1024, 0L,
-                new org.apache.hadoop.fs.Path(s"$dd/${snapEntryPath(n)}")))
             loadSnapSchema(table).map(st =>
-              bucketedRelationFor(files, m.buckets, m.key, st,
-                sortCols = Seq(m.key)))
+              relationFor(m.files.map(snapStatus(dd, _)), st,
+                Some(BucketSpec(m.buckets, Seq(m.key), Seq(m.key)))))
           case _ => None
         }
       case None => noSnapshot.add(table); None
@@ -1834,6 +1780,10 @@ class XtDb(spark: SparkSession, val root: String) {
     *    (default 0.2) of the base, i.e. geometrically: lifetime write
     *    amplification is O(1/ratio) per byte instead of the pre-round-13
     *    O(table/maxLag) per byte.
+    * An erase whose purge clock reached `spark.graft.erasePurge.maxCycles`
+    * takes the full [[compact]] too, lagged or not: it is the one
+    * physical purge, so on a large table an overdue erase costs one
+    * table rewrite per `maxCycles` cycles.
     * A generation whose manifest names an older one (a crash between a
     * rewrite's pointer flip and its manifest write) counts as lagged and
     * takes the full [[compact]], which re-stamps it.
@@ -1856,12 +1806,12 @@ class XtDb(spark: SparkSession, val root: String) {
       // a maintenance heartbeat with nothing to fold is still a CYCLE:
       // the erase clock ticks (the purge-latency bound holds on tables
       // whose ingest stops right after the erase) and expired leases are
-      // swept (a purge's superseded payload files must not outlive their
+      // swept (a purged generation's superseded dir must not outlive its
       // one-cycle lease on an idle table). One tiny manifest PUT.
       val (hb, hbVer) = resolvedEvMetaV(table)
       hb.filter(_.gen == currentGen(table).getOrElse(0))
         .filter(m => m.eraseCycles > 0 || m.consumed.nonEmpty ||
-          m.retired.nonEmpty || m.excluded.nonEmpty || m.sweepDirs.nonEmpty)
+          m.retired.nonEmpty || m.sweepDirs.nonEmpty)
         .foreach { m =>
           val swept = sweepLeases(table, m)
           writeEvMeta(table, swept.copy(eraseCycles =
@@ -1900,15 +1850,9 @@ class XtDb(spark: SparkSession, val root: String) {
         val baseBytes = math.max(1L, s.base.map(_.getLen).sum)
         s.levelFiles.map(_.getLen).sum >= ratio * baseBytes
       }
-      if (escalate) compact(table)
-      else if (eraseOverdue) {
-        // the purge clock ran out without a geometric escalation: run
-        // the bucket-local purge (fold any stray backlog first so every
-        // erase is bucket-addressed)
-        if (blockLag(table) > 0) compactIncremental(table)
-        purgeErasedBuckets(table)
-        ()
-      }
+      // the purge clock ran out without a geometric escalation: the full
+      // compaction purges (and schedules the superseded generation's sweep)
+      if (escalate || eraseOverdue) compact(table)
     }
     true
   }
@@ -1944,7 +1888,6 @@ class XtDb(spark: SparkSession, val root: String) {
     val swept = sweepLeases(table, m)
     val consumedCarry = swept.consumed
     val retiredCarry = swept.retired
-    val excludedCarry = swept.excluded
     val backlog = listRootParquet(table).filterNot(f =>
       isBucketFile(f.getPath.getName) ||
         consumedCarry.contains(f.getPath.getName))
@@ -1954,49 +1897,28 @@ class XtDb(spark: SparkSession, val root: String) {
     def tick(e: Int): Int = if (e > 0) e + 1 else 0
     if (backlog.isEmpty && !mergeLevels) {
       writeEvMeta(table, m.copy(consumed = consumedCarry,
-        retired = retiredCarry, eraseCycles = tick(m.eraseCycles),
-        excluded = excludedCarry), mver)
+        retired = retiredCarry, eraseCycles = tick(m.eraseCycles)), mver)
       return false
     }
     val input = backlog ++
-      (if (mergeLevels)
-        m.levels.flatMap(levelParquet(table, _)).filterNot(f =>
-          excludedCarry.contains(relUnderData(table, f)))
-       else Nil)
+      (if (mergeLevels) m.levels.flatMap(levelParquet(table, _)) else Nil)
     if (input.isEmpty) {
       writeEvMeta(table, m.copy(consumed = consumedCarry,
-        retired = retiredCarry, eraseCycles = tick(m.eraseCycles),
-        excluded = excludedCarry), mver)
+        retired = retiredCarry, eraseCycles = tick(m.eraseCycles)), mver)
       return false
     }
     // a PURE level merge (no backlog) reads only bucketed inputs — the
     // aligned writer skips the repartition entirely (zero exchange; at
     // scale the level merge is otherwise a shuffle of all level bytes)
     val alignedMerge = backlog.isEmpty
-    // start (or advance) the purge clock: an erase folding INTO the
-    // levels right now is physically on disk until a purge runs — one
-    // pushed-predicate existence probe over the O(backlog) input
     val folding =
-      if (alignedMerge) bucketedRelation(table, input, m.buckets)
-      else explicitRead(table, input)
-    // erase addressing (round 15): any erase event entering a level is
-    // recorded in the manifest by BUCKET id + max system-time, so the
-    // purge reads only affected buckets and can check the snapshot
-    // watermark without a discovery scan. The existence probe is a
-    // pushed-predicate limit-1 over the O(backlog) input (near-free when
-    // no erase is pending — the common case); the full agg runs only
-    // when one exists.
+      eventRelation(table, input, Some(m.buckets).filter(_ => alignedMerge))
+    // start (or advance) the purge clock: an erase folding INTO the
+    // levels right now is physically on disk until a full compaction
+    // purges it. The erase commit's mark normally started the clock; this
+    // pushed-predicate limit-1 probe over the O(backlog) input catches a
+    // mark that was lost
     val hasErase = !folding.where(col(OP) === "erase").isEmpty
-    val (foldEraseBks, foldEraseSf) =
-      if (!hasErase) (Set.empty[Int], 0L)
-      else {
-        val r = folding.where(col(OP) === "erase")
-          .agg(collect_set(
-            pmod(hash(col(IID)), lit(m.buckets)).cast("int")).as("bk"),
-            max(col(SF)).as("sf")).head()
-        (r.getSeq[Int](0).toSet,
-          if (r.isNullAt(1)) 0L else tsMicros(r.getTimestamp(1)))
-      }
     val pending =
       if (m.eraseCycles > 0) m.eraseCycles + 1
       else if (hasErase) 1
@@ -2012,10 +1934,7 @@ class XtDb(spark: SparkSession, val root: String) {
       levels = (if (mergeLevels) Nil else m.levels) :+ lvName,
       consumed = consumedCarry ++ backlog.map(_.getPath.getName),
       retired = retiredCarry ++ (if (mergeLevels) m.levels else Nil),
-      lvseq = m.lvseq + 1, eraseCycles = pending,
-      excluded = excludedCarry,
-      eraseBuckets = m.eraseBuckets ++ foldEraseBks,
-      eraseMaxSf = math.max(m.eraseMaxSf, foldEraseSf)), mver)
+      lvseq = m.lvseq + 1, eraseCycles = pending), mver)
     // the declared-layout snapshot folds at the SAME cadence as the event
     // log (O(delta + touched buckets)); a failure here leaves the
     // snapshot refused (correct — live resolution serves), never fails
@@ -2025,11 +1944,11 @@ class XtDb(spark: SparkSession, val root: String) {
     true
   }
 
-  /** Lazy-by-one lease GC: the manifest's consumed/retired/excluded
-    * entries were written a full maintenance cycle ago and have been out
-    * of every manifest-resolved read since — delete them now; anything
-    * that refuses to die stays listed (never re-read). Returns `m` with
-    * only the survivors carried. Pure FS metadata work, no data scan. */
+  /** Lazy-by-one lease GC: the manifest's consumed/retired entries were
+    * written a full maintenance cycle ago and have been out of every
+    * manifest-resolved read since — delete them now; anything that
+    * refuses to die stays listed (never re-read). Returns `m` with only
+    * the survivors carried. Pure FS metadata work, no data scan. */
   private def sweepLeases(table: String, m: EvMeta): EvMeta = {
     val dd = dataDir(table)
     // erase-tainted superseded generations / legacy loose parts: swept at
@@ -2039,135 +1958,8 @@ class XtDb(spark: SparkSession, val root: String) {
     m.copy(
       consumed = deleteSurvivors(dd, m.consumed, recursive = false).toSet,
       retired = deleteSurvivors(dd, m.retired.distinct, recursive = true),
-      excluded = deleteSurvivors(dd, m.excluded, recursive = false).toSet,
       sweepDirs = deleteSurvivors(tableDir(table),
         m.sweepDirs.filterNot(_ == liveDir), recursive = true))
-  }
-
-  /** BUCKET-LOCAL physical purge of erased history — the GDPR guarantee
-    * with BOUNDED latency and bounded cost (the reference merges per trie
-    * partition, so its erase purge is likewise per-subtree —
-    * compactor/Compactor.kt, PolygonCalculator.kt:43-46). Erased iids
-    * hash to known buckets: merge ONLY those buckets' base+level files
-    * (purged, zero exchange — [[writeBucketedFiles]]) into a new
-    * purge-level dir, and supersede the replaced files via the
-    * manifest's `excluded` list (deleted after the one-cycle lease).
-    * Cost is O(affected buckets), not O(table); the table's generation,
-    * untouched buckets, and serving posture are unchanged. Requires an
-    * empty backlog (erases still in flat appends aren't bucket-addressed
-    * yet) — [[compactIfLagged]] folds first. Returns true if a purge
-    * ran. */
-  def purgeErasedBuckets(table: String): Boolean = {
-    val mver = readEvMetaV(table)._2
-    val s = liveFileSets(table) match {
-      case Some(s0) if s0.backlog.isEmpty => s0
-      case _ => return false
-    }
-    val m = s.meta
-    val live = s.base ++ s.levelFiles
-    if (live.isEmpty) {
-      if (m.eraseCycles > 0)
-        writeEvMeta(table, m.copy(eraseCycles = 0,
-          eraseBuckets = Set.empty, eraseMaxSf = 0L), mver)
-      return false
-    }
-    // the erased iids' bucket ids + the newest erase's system-time. The
-    // manifest already knows both (recorded at the erase append and at
-    // every fold — round 15), so the common path runs NO discovery job.
-    // The scan is the safety net for a pending clock with no addressing:
-    // a schema-flip rewrite carries the clock into a new generation (at
-    // a possibly different fanout) without any bucket ids.
-    val (erased, maxEraseSf) =
-      if (m.eraseBuckets.nonEmpty) {
-        graft.tools.EngineMetrics.lastPurgeUsedManifest = true
-        (m.eraseBuckets, m.eraseMaxSf)
-      } else {
-        graft.tools.EngineMetrics.lastPurgeUsedManifest = false
-        val r = explicitRead(table, live)
-          .where(col(OP) === "erase")
-          .agg(collect_set(
-            pmod(hash(col(IID)), lit(m.buckets)).cast("int")).as("b"),
-            max(col(SF)).as("sf")).head()
-        (r.getSeq[Int](0).toSet,
-          if (r.isNullAt(1)) 0L else tsMicros(r.getTimestamp(1)))
-      }
-    if (erased.isEmpty) {
-      if (m.eraseCycles > 0)
-        writeEvMeta(table, m.copy(eraseCycles = 0,
-          eraseBuckets = Set.empty, eraseMaxSf = 0L), mver)
-      return false
-    }
-    // the purge is about to physically delete the erase markers — if
-    // the declared-layout snapshot never folded them (an earlier fold
-    // failure was swallowed), its watermark predates the erase and the
-    // post-purge re-stamp would retain the erased payload in the
-    // snapshot FOREVER. Fold while the markers are still
-    // event-addressable; if the watermark still lags, drop the snapshot
-    // (live resolution serves — correct) and let the next [[compact]]
-    // rebuild it, rather than re-stamp a lie.
-    if (maxEraseSf > 0L) readSnapMeta2(table)
-      .filter(_.watermark < maxEraseSf).foreach { _ =>
-        maintenance(s"pre-purge snapshot fold of '$table'",
-          "a lagging snapshot is dropped")(foldSnapshot(table))
-        if (readSnapMeta2(table).exists(_.watermark < maxEraseSf))
-          invalidateSnapshot(table)
-      }
-    val affected = live.filter(f =>
-      erased.contains(bucketIdOf(f.getPath.getName)))
-    graft.tools.EngineMetrics.lastPurgeScannedFiles =
-      affected.map(_.getPath.getName)
-    val pgName = s"_lv${m.lvseq}_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    writeBucketedFiles(
-      purgeErased(bucketedRelation(table, affected, m.buckets)),
-      s"${dataDir(table)}/$pgName", m.buckets, alreadyBucketed = true)
-    // SUPERSEDED storage (older generations, legacy gen-0 loose parts)
-    // may hold the erased payload from before earlier flips — it has
-    // been out of live reads for at least one full cycle already, so it
-    // joins the bounded sweep instead of waiting for a flip that an
-    // idle table never reaches
-    val fs = hadoopFs
-    val liveDir = currentGenDirName(table).getOrElse("")
-    val genName = """g(\d+)(?:_[0-9a-f]+)?""".r
-    val superseded = fs
-      .listStatus(new org.apache.hadoop.fs.Path(tableDir(table)))
-      .collect {
-        case st if st.isDirectory && st.getPath.getName != liveDir &&
-            (st.getPath.getName match {
-              case genName(n) => n.toInt <= m.gen
-              case _ => false
-            }) =>
-          st.getPath.getName
-        case st if st.isFile &&
-            st.getPath.getName.endsWith(".parquet") && m.gen >= 1 =>
-          st.getPath.getName
-      }.toSeq
-    writeEvMeta(table, m.copy(
-      levels = m.levels :+ pgName,
-      excluded = m.excluded ++ affected.map(relUnderData(table, _)),
-      lvseq = m.lvseq + 1, eraseCycles = 0,
-      sweepDirs = (m.sweepDirs ++ superseded).distinct,
-      eraseBuckets = Set.empty, eraseMaxSf = 0L), mver)
-    // the purge bumped lvseq without changing logical state — re-stamp
-    // the snapshot's validity (and fold any straggler delta) so a big
-    // declared table does not fall back to live joins over a purge. A
-    // purged future boundary leaves a stale-early per-bucket min: at
-    // worst the snapshot expires early and the crossing recompute heals
-    // it
-    maintenance(s"post-purge snapshot fold of '$table'",
-      "purge is committed; live resolution serves")(foldSnapshot(table))
-    true
-  }
-
-  /** Drop the snapshot manifest AND its data files (they may hold erased
-    * payload — an invalidated snapshot must not leave orphans nothing
-    * will ever sweep). Serving falls back to live resolution; the next
-    * full compaction rebuilds. */
-  private def invalidateSnapshot(table: String): Unit = {
-    readSnapMeta2(table).foreach(sm => deleteSurvivors(dataDir(table),
-      sm.files.map(snapEntryPath) ++ sm.retired, recursive = false))
-    hadoopFs.delete(snapMetaPath(table), false)
-    ()
   }
 
   /** Write `df` as a bucketed file set (one file per non-empty `key`
@@ -2742,9 +2534,6 @@ object XtDb {
     def strs(k: String): Seq[String] =
       "\"([^\"]*)\"".r.findAllMatchIn(field(k, "\\[([^\\]]*)\\]"))
         .map(_.group(1)).toSeq
-    def ints(k: String): Set[Int] =
-      field(k, "\\[([^\\]]*)\\]").split(",").filter(_.trim.nonEmpty)
-        .map(toInt).toSet
     /** `"k":["a:b",…]` entries, split at the first ':'. */
     def pairs(k: String): Seq[(String, String)] = strs(k).map { e =>
       val i = e.indexOf(':')

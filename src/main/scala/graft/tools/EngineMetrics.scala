@@ -53,12 +53,6 @@ object EngineMetrics {
   @volatile var lastFoldResolveFiles: Seq[String] = Nil
   @volatile var lastFoldLiveFileCount: Int = 0
 
-  /** Erase-purge addressing accounting (round 15): whether the last
-    * purge took the manifest-recorded bucket path (no discovery scan),
-    * and the bucket files it actually merged. */
-  @volatile var lastPurgeUsedManifest: Boolean = false
-  @volatile var lastPurgeScannedFiles: Seq[String] = Nil
-
   /** Snapshot-fold driver-job accounting (round 17, VERDICT r16 #2):
     * folds whose changed-id bucket histogram RODE the fold's single
     * delta-aggregate job vs folds that had to run the separate

@@ -176,15 +176,14 @@ class CommitOrderSpec extends AnyFunSuite {
     db.compact("a")
     db.putDocs("a", spark.range(101, 111).selectExpr("id AS _id", "id AS v"))
     assert(db.compactIncremental("a"))
-    // the real artifact: a FRESH gen-ahead manifest — levels/consumed/
-    // excluded all empty (exactly what the pre-fix aligned rewrite wrote
-    // over the old manifest before flipping the pointer)
+    // the real artifact: a FRESH gen-ahead manifest — levels/consumed
+    // both empty (exactly what the pre-fix aligned rewrite wrote over the
+    // old manifest before flipping the pointer)
     val p = java.nio.file.Paths.get(s"${db.root}/a/_evmeta.json")
     val js = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     val ahead = js.replaceFirst(""""gen":\d+""", "\"gen\":99")
       .replaceFirst(""""levels":\[[^\]]*\]""", "\"levels\":[]")
       .replaceFirst(""""consumed":\[[^\]]*\]""", "\"consumed\":[]")
-      .replaceFirst(""""excl":\[[^\]]*\]""", "\"excl\":[]")
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"${db.root}/a/._evmeta.json.crc"))
     java.nio.file.Files.write(p, ahead.getBytes("UTF-8"))

@@ -223,6 +223,44 @@ class CommitPathSpec extends AnyFunSuite {
     assert(current(db, "lf") == Map(1L -> "a", 2L -> "b", 3L -> "c"))
   }
 
+  test("a commit during an external full compaction lands in the " +
+      "generation the compaction flips to") {
+    import spark.implicits._
+    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
+    val db = freshDb()
+    db.putDocs("cc", Seq((1L, "a"), (2L, "b")).toDF("_id", "v"))
+    val atFlip = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var putThread: Thread = null
+    try WritePoints.withHook { case WritePoint.BeforeFlip("cc") =>
+      atFlip.countDown()
+      release.await(30, TimeUnit.SECONDS)
+    } {
+      val compaction = Future(db.compact("cc"))
+      val put = try {
+        assert(atFlip.await(30, TimeUnit.SECONDS),
+          "the compaction never reached its flip")
+        val put = Future {
+          putThread = Thread.currentThread()
+          db.putDocs("cc", Seq((3L, "c")).toDF("_id", "v"))
+        }
+        // hold the flip until the put has landed, or waits on the store
+        def waiting = Option(putThread).exists(t =>
+          t.getState == Thread.State.BLOCKED &&
+            t.getStackTrace.headOption
+              .exists(_.getClassName == classOf[XtDb].getName))
+        val deadline = System.nanoTime() + 30.seconds.toNanos
+        while (!put.isCompleted && !waiting && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        put
+      } finally release.countDown()
+      Await.result(compaction, 30.seconds)
+      Await.result(put, 30.seconds)
+    } finally spark.conf.unset("spark.graft.autoCompact.maxLag")
+    assert(current(db, "cc") == Map(1L -> "a", 2L -> "b", 3L -> "c"),
+      "the commit appended into the superseded generation")
+  }
+
   test("a failing commit keeps another instance's commit into the same " +
       "table") {
     import spark.implicits._

@@ -36,7 +36,7 @@ class CompactionFuzzSpec extends AnyFunSuite {
     val T = "fz"
     // round 15: the maintained store runs under a DECLARED layout, so
     // every fold also exercises the incremental snapshot maintenance
-    // (bucket-pruned resolve, boundary mins, purge watermark repair) and
+    // (bucket-pruned resolve, boundary mins, compaction rebuilds) and
     // the snapshot itself joins the differential oracle below
     a.declareLayout(T, "v", 4)
 
@@ -45,8 +45,8 @@ class CompactionFuzzSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.fullCompact.smallBytes", "0")
       spark.conf.set("spark.graft.fullCompact.ratio", "0.5")
       spark.conf.set("spark.graft.maxLevels", "2")
-      // round-14: let the bounded erase purge fire mid-fuzz (bucket-local
-      // rewrites + excluded-file leases must stay invisible to semantics)
+      // let the bounded erase purge fire mid-fuzz (an overdue erase's
+      // full compaction must stay invisible to semantics)
       spark.conf.set("spark.graft.erasePurge.maxCycles", "2")
     }
     def unsetKnobs(): Unit = Seq("spark.graft.autoCompact.maxLag",
@@ -87,7 +87,8 @@ class CompactionFuzzSpec extends AnyFunSuite {
         case 0 => a.compactIncremental(T); "fold"
         case 1 => a.compactIfLagged(T, maxLag = 1); "tiered"
         case 2 if i % 3 == 0 => a.compact(T); "full"
-        case 3 => a.purgeErasedBuckets(T); "purge"
+        // a heartbeat: compacts only when the erase clock is overdue
+        case 3 => a.compactIfLagged(T, maxLag = Int.MaxValue); "heartbeat"
         case _ => "none"
       }
 

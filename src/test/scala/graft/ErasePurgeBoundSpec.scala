@@ -5,16 +5,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 GDPR bound: the physical purge of erased history no longer
-  * waits for a geometric full-compaction escalation that a slow-growing
-  * table may never reach. An erase starts a cycle clock in the manifest;
-  * once `spark.graft.erasePurge.maxCycles` maintenance cycles elapse,
-  * [[XtDb.purgeErasedBuckets]] rewrites ONLY the buckets holding erased
-  * iids (zero exchange — the reference's per-trie-partition merge,
-  * compactor/Compactor.kt + PolygonCalculator.kt:43-46) and the
-  * superseded files die after their one-cycle read lease. The pinned
-  * contract: after an erase + a BOUNDED number of maintenance cycles, no
-  * parquet file under the table root holds the erased payload. */
+/** GDPR bound: the physical purge of erased history does not wait for a
+  * geometric full-compaction escalation that a slow-growing table may
+  * never reach. An erase starts a cycle clock in the manifest; once
+  * `spark.graft.erasePurge.maxCycles` maintenance cycles elapse,
+  * [[XtDb.compactIfLagged]] runs the full [[XtDb.compact]] — the one
+  * physical purge (the reference drops erased events at compaction,
+  * PolygonCalculator.kt:43-46) — and the superseded generation is swept
+  * at the next cycle. The pinned contract: after an erase + a BOUNDED
+  * number of maintenance cycles, no parquet file under the table root
+  * holds the erased payload. */
 class ErasePurgeBoundSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -36,9 +36,9 @@ class ErasePurgeBoundSpec extends AnyFunSuite {
     }
   }
 
-  test("bucket-local purge: erased payload is physically gone from EVERY " +
-      "file within the cycle bound; untouched buckets are not rewritten; " +
-      "serving stays zero-exchange and correct") {
+  test("large table: an overdue erase takes the full compaction; the " +
+      "erased payload is physically gone from EVERY file within the cycle " +
+      "bound; serving stays zero-exchange and correct") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
     spark.conf.set("spark.graft.fullCompact.smallBytes", "0") // treat as large
@@ -52,9 +52,6 @@ class ErasePurgeBoundSpec extends AnyFunSuite {
           s"CASE WHEN id = 7 THEN '$secret' ELSE concat('row_', id) END AS data"))
       db.compact("e")
       assert(payloadFiles(db, "e", secret).nonEmpty, "payload starts on disk")
-      val baseMtimes = Option(new java.io.File(db.dataDir("e")).listFiles)
-        .toSeq.flatten.filter(f => f.isFile && f.getName.startsWith("part-"))
-        .map(f => f.getName -> f.lastModified()).toMap
 
       db.eraseDocs("e", Seq(Tuple1(7L)).toDF("_id"))
       // logical erase is immediate; physical bytes still present
@@ -71,17 +68,6 @@ class ErasePurgeBoundSpec extends AnyFunSuite {
       assert(gone >= 0 && gone <= 5,
         s"payload must be physically gone within the bound (gone=$gone): " +
           payloadFiles(db, "e", secret).mkString(", "))
-      // the generation did NOT flip (bucket-local, not a full rewrite)
-      // and untouched buckets' base files were never rewritten
-      val after = Option(new java.io.File(db.dataDir("e")).listFiles)
-        .toSeq.flatten.filter(f => f.isFile && f.getName.startsWith("part-"))
-        .map(f => f.getName -> f.lastModified()).toMap
-      val survivors = baseMtimes.keySet.intersect(after.keySet)
-      assert(survivors.nonEmpty, "untouched base buckets must survive")
-      assert(survivors.forall(k => after(k) == baseMtimes(k)),
-        "surviving base files must be byte-untouched (mtime pinned)")
-      assert(baseMtimes.keySet.diff(after.keySet).nonEmpty,
-        "the erased iid's bucket file must have been superseded+swept")
       // correctness + posture after the purge
       assert(db.asOf("e").count() === 1999L)
       assert(db.asOf("e").filter(col("data") === secret).isEmpty)
@@ -160,7 +146,7 @@ class ErasePurgeBoundSpec extends AnyFunSuite {
       assert(gone >= 0,
         s"declared-table purge must clear snapshot + log files: ${
           payloadFiles(db, "d", secret).mkString(", ")}")
-      // the snapshot keeps serving (folds re-stamped it) and is correct
+      // the snapshot keeps serving (the compaction rebuilt it), correct
       val snap = db.currentSnapshotIfValid("d")
       assert(snap.isDefined, "snapshot must keep serving through purges")
       assert(snap.get.count() === 999L)

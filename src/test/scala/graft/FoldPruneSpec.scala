@@ -11,10 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the event log, PRUNED before the relation is built (never an
   * O(event-log) read in the maintenance plane), with the changed-set
   * broadcast gated by Spark's `autoBroadcastJoinThreshold` into a shuffle
-  * semi-join past it. The purge reads only the manifest-addressed erase
-  * buckets, and a stale-watermark snapshot is folded — or, if the fold
-  * still fails, dropped until the next compaction — before the purge
-  * deletes the erase markers. */
+  * semi-join past it. A snapshot whose folds failed while an erase
+  * landed stops serving, and the overdue erase's full compaction
+  * rebuilds it without the erased row, even while the folds still fail. */
 class FoldPruneSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = GraftSession.builder(4).getOrCreate()
@@ -113,113 +112,95 @@ class FoldPruneSpec extends AnyFunSuite {
     }
   }
 
-  test("purge reads ONLY manifest-addressed erase buckets: no discovery " +
-      "scan, merged files all in erased buckets, payload physically gone") {
+  test("snapshot folds fail while the erase lands: the overdue erase " +
+      "takes the full compaction, whose rebuilt snapshot serves without " +
+      "the erased row, and no file keeps its payload") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("purge-addr")
-    val secret = "ERASE_ME_5f21"
-    db.putDocs("e", spark.range(1, 2001)
-      .selectExpr("id AS _id",
-        s"CASE WHEN id = 13 THEN '$secret' ELSE concat('r', id) END AS data"))
-    db.compact("e")
-    db.eraseDocs("e", Seq(Tuple1(13L)).toDF("_id"))
-    assert(db.compactIncremental("e"), "erase folds into a level")
-    // the manifest recorded the erase bucket at the append/fold
-    assert(db.purgeErasedBuckets("e"), "purge must run")
-    assert(EngineMetrics.lastPurgeUsedManifest,
-      "purge must take the manifest-addressed path (no discovery scan)")
-    val erasedBucket = db.events("e") // iid of id=13 is deterministic md5
-      .sparkSession.range(1).select(
-        pmod(hash(md5(lit("13"))), lit(16)).cast("int")).as[Int].head()
-    val merged = EngineMetrics.lastPurgeScannedFiles.map(bucketIdOf).toSet
-    assert(merged === Set(erasedBucket),
-      s"purge merged buckets $merged; erased id lives in $erasedBucket")
-    // physically gone after the lease sweeps (bounded cycles)
-    db.compactIncremental("e"); db.compactIncremental("e")
-    assert(payloadFiles(db, "e", secret).isEmpty,
-      "erased payload must be physically gone from every file")
-    assert(db.asOf("e").count() === 1999L)
-  }
+    spark.conf.set("spark.graft.fullCompact.smallBytes", "0") // treat as large
+    spark.conf.set("spark.graft.fullCompact.ratio", "1000.0") // never geometric
+    spark.conf.set("spark.graft.erasePurge.maxCycles", "2")
+    try {
+      val db = newDb("purge-stalewm")
+      val secret = "GDPR_SECRET_7a0c"
+      db.declareLayout("w", "k", 4)
+      db.putDocs("w", spark.range(1, 1001)
+        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
+          s"CASE WHEN id = 77 THEN '$secret' ELSE concat('r', id) END AS data"))
+      db.compact("w")
+      assert(db.currentSnapshotIfValid("w").isDefined)
 
-  test("ADVICE r14 #3 — stale snapshot watermark at purge time: the purge " +
-      "folds the erase BEFORE deleting the markers; the snapshot never " +
-      "retains the erased row") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("purge-stalewm")
-    val secret = "GDPR_SECRET_7a0c"
-    db.declareLayout("w", "k", 4)
-    db.putDocs("w", spark.range(1, 1001)
-      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
-        s"CASE WHEN id = 77 THEN '$secret' ELSE concat('r', id) END AS data"))
-    db.compact("w")
-    assert(db.currentSnapshotIfValid("w").isDefined)
-
-    // every snapshot fold FAILS (swallowed, as in prod) while the erase
-    // lands and folds — the snapshot watermark now predates the erase
-    crashAt(snapshotFold) {
-      db.eraseDocs("w", Seq(Tuple1(77L)).toDF("_id"))
-      assert(db.compactIncremental("w"))
-    }
-
-    // the purge detects watermark < max erase _system_from and folds
-    // first — the re-stamp can no longer resurrect the erased row
-    assert(db.purgeErasedBuckets("w"))
-    val snap = db.currentSnapshotIfValid("w")
-    assert(snap.isDefined, "snapshot must serve after the repaired purge")
-    assert(snap.get.filter(col("_id") === 77L).isEmpty,
-      "the erased row must NOT be retained in the snapshot")
-    assert(snap.get.count() === 999L)
-    // and the payload physically dies within the lease bound
-    db.compactIfLagged("w", 5); db.compactIfLagged("w", 5)
-    db.compactIfLagged("w", 5)
-    assert(payloadFiles(db, "w", secret).isEmpty,
-      s"erased payload files: ${payloadFiles(db, "w", secret)}")
-  }
-
-  test("ADVICE r14 #3 fallback — the fold is STILL failing at purge time: " +
-      "the snapshot is rebuilt outright; the erased row is gone either way") {
-    import spark.implicits._
-    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
-    val db = newDb("purge-rebuild")
-    val secret = "GDPR_SECRET_2e9b"
-    db.declareLayout("x", "k", 4)
-    db.putDocs("x", spark.range(1, 1001)
-      .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
-        s"CASE WHEN id = 55 THEN '$secret' ELSE concat('r', id) END AS data"))
-    db.compact("x")
-    crashAt(snapshotFold) {
-      db.eraseDocs("x", Seq(Tuple1(55L)).toDF("_id"))
-      assert(db.compactIncremental("x"))
-      // fold still failing: the purge drops the lagging snapshot instead
-      // of re-stamping a lie, and reads resolve live
-      assert(db.purgeErasedBuckets("x"))
-      assert(db.currentSnapshotIfValid("x").isEmpty,
+      // every snapshot fold FAILS (swallowed, as in prod) while the erase
+      // lands and folds — the snapshot watermark now predates the erase
+      crashAt(snapshotFold) {
+        db.eraseDocs("w", Seq(Tuple1(77L)).toDF("_id"))
+        assert(db.compactIncremental("w"))
+      }
+      assert(db.currentSnapshotIfValid("w").isEmpty,
         "a snapshot that never folded the erase must not serve")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"${db.root}/x/_snapmeta.json")),
-        "the dropped snapshot's manifest must be gone")
-      assert(db.asOf("x").filter(col("_id") === 55L).isEmpty,
-        "the erased row must not resolve")
-      assert(db.asOf("x").count() === 999L)
-    }
-    // payload physically dies within the lease bound
-    db.compactIfLagged("x", 5); db.compactIfLagged("x", 5)
-    db.compactIfLagged("x", 5)
-    assert(payloadFiles(db, "x", secret).isEmpty,
-      s"erased payload files: ${payloadFiles(db, "x", secret)}")
-    // the next compaction rebuilds the snapshot
-    db.compact("x")
-    val snap = db.currentSnapshotIfValid("x")
-    assert(snap.isDefined, "the next compaction must rebuild the snapshot")
-    assert(snap.get.filter(col("_id") === 55L).isEmpty)
-    assert(snap.get.count() === 999L)
+      assert(db.asOf("w").filter(col("_id") === 77L).isEmpty)
+
+      // the erase clock (mark + fold) is overdue: the full compaction
+      // purges and rebuilds the snapshot; the next cycle sweeps the
+      // superseded generation
+      assert(db.compactIfLagged("w", maxLag = 5))
+      val snap = db.currentSnapshotIfValid("w")
+      assert(snap.isDefined, "the compaction must rebuild the snapshot")
+      assert(snap.get.filter(col("_id") === 77L).isEmpty,
+        "the erased row must NOT be retained in the snapshot")
+      assert(snap.get.count() === 999L)
+      db.compactIfLagged("w", maxLag = 5)
+      assert(payloadFiles(db, "w", secret).isEmpty,
+        s"erased payload files: ${payloadFiles(db, "w", secret)}")
+    } finally Seq("spark.graft.fullCompact.smallBytes",
+        "spark.graft.fullCompact.ratio", "spark.graft.erasePurge.maxCycles")
+      .foreach(spark.conf.unset)
   }
 
-  test("snapshot+delta parity across UPDATE / DELETE / ERASE / key-move " +
-      "/ future-put in ONE bulk delta (resolveMode forced): byte-equal " +
-      "to the event-log resolve of the same log") {
+  test("snapshot folds still fail when the overdue erase compacts: the " +
+      "erased row never serves, and the full compaction rebuilds the " +
+      "snapshot without it, not through the failing fold") {
+    import spark.implicits._
+    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
+    spark.conf.set("spark.graft.fullCompact.smallBytes", "0") // treat as large
+    spark.conf.set("spark.graft.fullCompact.ratio", "1000.0") // never geometric
+    spark.conf.set("spark.graft.erasePurge.maxCycles", "2")
+    try {
+      val db = newDb("purge-rebuild")
+      val secret = "GDPR_SECRET_2e9b"
+      db.declareLayout("x", "k", 4)
+      db.putDocs("x", spark.range(1, 1001)
+        .selectExpr("id AS _id", "CAST(id % 10 AS INT) AS k",
+          s"CASE WHEN id = 55 THEN '$secret' ELSE concat('r', id) END AS data"))
+      db.compact("x")
+      crashAt(snapshotFold) {
+        db.eraseDocs("x", Seq(Tuple1(55L)).toDF("_id"))
+        assert(db.compactIncremental("x"))
+        assert(db.currentSnapshotIfValid("x").isEmpty,
+          "a snapshot that never folded the erase must not serve")
+        assert(db.asOf("x").filter(col("_id") === 55L).isEmpty,
+          "the erased row must not resolve")
+        assert(db.asOf("x").count() === 999L)
+        // the fold is still failing: the overdue erase's full compaction
+        // materializes the snapshot itself
+        assert(db.compactIfLagged("x", maxLag = 5))
+        val snap = db.currentSnapshotIfValid("x")
+        assert(snap.isDefined, "the compaction must rebuild the snapshot")
+        assert(snap.get.filter(col("_id") === 55L).isEmpty)
+        assert(snap.get.count() === 999L)
+      }
+      // the next cycle sweeps the superseded generation
+      db.compactIfLagged("x", maxLag = 5)
+      assert(payloadFiles(db, "x", secret).isEmpty,
+        s"erased payload files: ${payloadFiles(db, "x", secret)}")
+    } finally Seq("spark.graft.fullCompact.smallBytes",
+        "spark.graft.fullCompact.ratio", "spark.graft.erasePurge.maxCycles")
+      .foreach(spark.conf.unset)
+  }
+
+  test("fold parity across UPDATE / DELETE / ERASE / key-move / fresh " +
+      "ids / schema evolution in ONE bulk delta: equal to the event-log " +
+      "resolve of the same log") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
     val db = newDb("fold-parity")
@@ -261,36 +242,17 @@ class FoldPruneSpec extends AnyFunSuite {
     assert(got.count() === 548L)
   }
 
-  test("ADVICE r15 #4 — the erase mark starts the clock; the fold that " +
-      "carries the erase into a level records its exact buckets") {
+  test("the erase commit starts the purge clock") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
     val db = newDb("erase-observe")
     db.putDocs("o", spark.range(1, 501)
       .selectExpr("id AS _id", "concat('r', id) AS data"))
     db.compact("o") // manifest exists → the erase mark lands in it
+    assert(db.erasePendingCycles("o") === 0)
     db.eraseDocs("o", Seq(Tuple1(13L), Tuple1(250L)).toDF("_id"))
-    def evmeta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"${db.root}/o/_evmeta.json")), "UTF-8")
-    def field(pattern: String) =
-      pattern.r.findFirstMatchIn(evmeta).get.group(1)
-    assert(field(""""ecyc":(\d+)""").toInt >= 1,
+    assert(db.erasePendingCycles("o") === 1,
       "the erase commit must start the purge clock")
-    assert(field(""""ebk":\[([^\]]*)\]""").isEmpty,
-      "the erase mark carries no bucket addressing")
-    assert(db.compactIncremental("o"), "fold the erase into a level")
-    // the fold's addressing is exact: the manifest's erase buckets are
-    // the erased iids' buckets
-    val expected = Seq("13", "250").map(s =>
-      spark.range(1).select(pmod(hash(md5(lit(s))), lit(16)).cast("int"))
-        .as[Int].head()).toSet
-    val ebk = field(""""ebk":\[([^\]]*)\]""").split(",").filter(_.nonEmpty)
-      .map(_.trim.toInt).toSet
-    assert(ebk === expected,
-      s"manifest erase buckets $ebk must be $expected")
-    // and the purge takes the manifest-addressed path end to end
-    assert(db.purgeErasedBuckets("o"))
-    assert(EngineMetrics.lastPurgeUsedManifest)
     assert(db.asOf("o").count() === 498L)
   }
 
@@ -329,11 +291,9 @@ class FoldPruneSpec extends AnyFunSuite {
     assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty)
   }
 
-  test("VERDICT r16 #5 — MIXED-mode crossing: a crossed valid-time " +
-      "boundary resolves ONLY its crossed buckets via the event path " +
-      "and the rest from snapshot+delta in one fold — the resolve " +
-      "file set stays ⊆ the crossed buckets, and the snapshot equals " +
-      "the full event resolve") {
+  test("VERDICT r16 #5 — a crossed valid-time boundary and a bulk delta " +
+      "in one fold: the crossed id serves its activated value and the " +
+      "snapshot equals the full event resolve") {
     import spark.implicits._
     spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
     val db = newDb("fold-mixed")

@@ -190,6 +190,37 @@ class IidPruningSpec extends AnyFunSuite {
       s"the input was coalesced:\n$plan")
   }
 
+  test("a backlog read plans over the manifest's file list: a point " +
+      "read over 40 backlog files runs as many jobs as over 2") {
+    spark.conf.set("spark.graft.autoCompact.maxLag", "-1")
+    try {
+      val db = new XtDb(spark,
+        java.nio.file.Files.createTempDirectory("iidprune7").toString)
+      val eng = new XtSqlEngine(spark, db)
+      db.submitTx(Seq(TxOp.Put("pl",
+        spark.range(1, 2001).selectExpr("id AS _id", "id * 10 AS v"))))
+      db.compact("pl")
+      // one single-row, single-file commit per id
+      def append(ids: Range): Unit = ids.foreach(i => db.submitTx(Seq(
+        TxOp.Put("pl", spark.range(i, i + 1, 1, 1)
+          .selectExpr("id AS _id", "id * 10 AS v")))))
+      def jobsOfPointRead(): Int = EngineMetrics.during(spark) {
+        val rows = eng.sql("SELECT _id, v FROM pl WHERE _id = 42").collect()
+        assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+          Seq((42L, 420L)))
+      }._2.jobs
+      append(3001 to 3002)
+      assert(db.blockLag("pl") == 2L)
+      jobsOfPointRead() // heads adopted, warm
+      val two = jobsOfPointRead()
+      append(3003 to 3040)
+      assert(db.blockLag("pl") == 40L)
+      val forty = jobsOfPointRead()
+      assert(forty == two,
+        s"40 backlog files ran $forty jobs, 2 backlog files $two")
+    } finally spark.conf.unset("spark.graft.autoCompact.maxLag")
+  }
+
   test("point UPDATE and DELETE under a backlog read one bucket") {
     val (db, eng, _) = backlogged("iidprune6", "pd")
     eng.sql("SELECT count(*) FROM pd").collect()

@@ -22,10 +22,11 @@ class SidecarRoundTripSpec extends AnyFunSuite {
     val m = db.EvMeta(gen = 3, buckets = 32, levels = Seq("_lv1_ab", "_lv2_cd"),
       consumed = Set("part-1.parquet", "part-2.parquet"),
       retired = Seq("_lv0_ef"), lvseq = 7, eraseCycles = 2,
-      excluded = Set("_lv1_ab/part-9_00001.parquet"),
-      sweepDirs = Seq("g2_aa"),
-      eraseBuckets = Set(1, 5, 31), eraseMaxSf = 1700000000123456L)
+      sweepDirs = Seq("g2_aa"))
     db.writeEvMeta("t", m)
+    val written = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"${db.root}/t/_evmeta.json")), "UTF-8")
+    assert(written.startsWith("{\"v\":4,"), written)
     assert(db.readEvMeta("t") === Some(m))
   }
 

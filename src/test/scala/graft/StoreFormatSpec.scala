@@ -74,16 +74,32 @@ class StoreFormatSpec extends AnyFunSuite {
     assertNames("_evmeta.json")(db.asOf("t").count())
   }
 
-  test("a v2 event manifest (aligned bases in chunk dirs behind a " +
-      "`chunks` read fence) is refused, naming _evmeta.json") {
-    val db = newDb("fmt-evmeta-v2")
+  /** The `_evmeta.json` a fresh compaction of `t` writes: `"v":4`. */
+  private def compactedEvMeta(db: XtDb): (Path, String) = {
     put(db, "t", 1, 101)
     db.compact("t")
     val p = Paths.get(s"${db.root}/t/_evmeta.json")
-    val v3 = new String(Files.readAllBytes(p), "UTF-8").trim
-    assert(v3.startsWith("{\"v\":3,") && v3.endsWith("}"), v3)
-    overwrite(p, "{\"v\":2," + v3.stripPrefix("{\"v\":3,").stripSuffix("}") +
-      ",\"chunks\":[\"c0.0a1b2c3d\"]}")
+    val v4 = new String(Files.readAllBytes(p), "UTF-8").trim
+    assert(v4.startsWith("{\"v\":4,") && v4.endsWith("}"), v4)
+    (p, v4.stripPrefix("{\"v\":4,").stripSuffix("}"))
+  }
+
+  test("a v2 event manifest (aligned bases in chunk dirs behind a " +
+      "`chunks` read fence) is refused, naming _evmeta.json") {
+    val db = newDb("fmt-evmeta-v2")
+    val (p, fields) = compactedEvMeta(db)
+    overwrite(p, "{\"v\":2," + fields + ",\"chunks\":[\"c0.0a1b2c3d\"]}")
+    assertNames("_evmeta.json")(new XtDb(spark, db.root).asOf("t").count())
+  }
+
+  test("a v3 event manifest (bucket-local purge files in an `excl` " +
+      "list) is refused, naming _evmeta.json") {
+    val db = newDb("fmt-evmeta-v3")
+    val (p, fields) = compactedEvMeta(db)
+    // read as v4, the purge-superseded file would be served again
+    overwrite(p, "{\"v\":3," + fields +
+      ",\"excl\":[\"part-0_00003.c000.snappy.parquet\"]," +
+      "\"ebk\":[3],\"emsf\":0}")
     assertNames("_evmeta.json")(new XtDb(spark, db.root).asOf("t").count())
   }
 
